@@ -37,6 +37,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..logging_utils import json_logger
+
 # AWS SendMessageBatch hard limit (handler.go:23-26).
 SQS_BATCH_SIZE = 10
 
@@ -48,6 +50,8 @@ DEFAULT_MAX_ATTEMPTS = 5
 class PublishResult:
     published: int
     dead_lettered: int
+    retried: int  # entries resent after a Failed response
+    batches: int
 
 
 def serialize_json(df: DataFrame) -> DataFrame:
@@ -146,49 +150,72 @@ def publish(
     much as partition fan-out).
 
     Failure policy mirrors the reference's queue redrive
-    (template.yaml:6-16): a batch with Failed entries retries up to
-    ``max_attempts`` times (pass DEFAULT_MAX_ATTEMPTS for the reference's
-    maxReceiveCount=5); a batch that exhausts retries goes to the
-    dead-letter client when one is configured, otherwise raises -- failing
-    the Spark task, fail-fast like handler.go:219-229. Delivery is
-    at-least-once under retry, the same contract as SQS itself.
+    (template.yaml:6-16), per entry: only the entries a response reports
+    ``Failed`` are resent, up to ``max_attempts`` sends in all (pass
+    DEFAULT_MAX_ATTEMPTS for the reference's maxReceiveCount=5); an entry
+    failed with ``SenderFault`` is not resent, since the same request
+    would fail again. Entries that exhaust their attempts, and sender
+    faults, go to the dead-letter client when one is configured,
+    otherwise raise -- failing the Spark task, fail-fast like
+    handler.go:219-229. An entry reported ``Successful`` is never resent;
+    delivery is at-least-once only under Spark task retry.
 
     Counts are driver-side accumulator totals -- a scan-free analog of the
-    reference's publishedRows log (handler.go:231-239).
+    reference's publishedRows log (handler.go:231-239) -- and each run
+    logs them as one JSON event (``logging_utils.json_logger``).
     """
     serialized = serialize_json(df)
-    acc = df.sparkSession.sparkContext.accumulator(0)
-    dead = df.sparkSession.sparkContext.accumulator(0)
+    sc = df.sparkSession.sparkContext
+    acc, dead, retried, batches = (sc.accumulator(0) for _ in range(4))
 
     def send_partition(rows: Iterator) -> None:
         client = client_factory()
         dlq = dlq_client_factory() if dlq_client_factory else None
         base = uuid.uuid4().hex[:8]
 
-        def send(indexed_chunk: tuple[int, list[str]]) -> tuple[int, int]:
+        def send(
+            indexed_chunk: tuple[int, list[str]],
+        ) -> tuple[int, int, int]:
             idx, chunk = indexed_chunk
-            entries = [
+            pending = [
                 {"Id": f"{base}-{idx * batch_size + j}", "MessageBody": body}
                 for j, body in enumerate(chunk)
             ]
-            n_failed = 0
+            rejected: list[dict[str, Any]] = []
+            n_retried = 0
             for attempt in range(max_attempts):
+                if attempt:
+                    n_retried += len(pending)
+                    time.sleep(retry_backoff_s * attempt)
                 result = client.send_message_batch(
-                    QueueUrl=queue_url, Entries=entries
+                    QueueUrl=queue_url, Entries=pending
                 )
-                failed = result.get("Failed") or []
-                n_failed = len(failed)
-                if not failed:
-                    return len(entries), 0
-                if attempt + 1 < max_attempts:
-                    time.sleep(retry_backoff_s * (attempt + 1))
-            if dlq is not None:
-                dlq.send_message_batch(QueueUrl=dlq_url, Entries=entries)
-                return 0, len(entries)
-            raise RuntimeError(
-                f"failed to send {n_failed} messages in batch {idx} "
-                f"after {max_attempts} attempts"
-            )
+                failed = {
+                    f["Id"]: bool(f.get("SenderFault"))
+                    for f in result.get("Failed") or []
+                }
+                rejected += [e for e in pending if failed.get(e["Id"])]
+                pending = [
+                    e for e in pending if failed.get(e["Id"]) is False
+                ]
+                if not pending:
+                    break
+            undelivered = rejected + pending
+            n_ok = len(chunk) - len(undelivered)
+            if not undelivered:
+                return n_ok, 0, n_retried
+            if dlq is None:
+                raise RuntimeError(
+                    f"failed to send {len(undelivered)} messages in batch "
+                    f"{idx} after {max_attempts} attempts"
+                )
+            dl = dlq.send_message_batch(QueueUrl=dlq_url, Entries=undelivered)
+            if dl.get("Failed"):
+                raise RuntimeError(
+                    f"dead-letter queue rejected {len(dl['Failed'])} "
+                    f"messages of batch {idx}"
+                )
+            return n_ok, len(undelivered), n_retried
 
         bodies = (row.body for row in rows)
         # Windowed submit, NOT pool.map: map drains the whole chunk
@@ -201,9 +228,11 @@ def publish(
 
         def drain(done) -> None:
             for fut in done:
-                ok, dl = fut.result()  # re-raises -> fail-fast task abort
+                ok, dl, rt = fut.result()  # re-raises -> fail-fast abort
                 acc.add(ok)
                 dead.add(dl)
+                retried.add(rt)
+                batches.add(1)
 
         with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
             in_flight: set = set()
@@ -218,8 +247,28 @@ def publish(
                 done, _ = wait(in_flight)
                 drain(done)
 
+    t0 = time.perf_counter()
     serialized.foreachPartition(send_partition)
-    return PublishResult(published=acc.value, dead_lettered=dead.value)
+    seconds = time.perf_counter() - t0
+    result = PublishResult(
+        published=acc.value,
+        dead_lettered=dead.value,
+        retried=retried.value,
+        batches=batches.value,
+    )
+    rows = result.published + result.dead_lettered
+    json_logger(__name__).info(
+        "publish",
+        extra={
+            "rows_published": result.published,
+            "rows_dead_lettered": result.dead_lettered,
+            "entries_retried": result.retried,
+            "batches": result.batches,
+            "seconds": round(seconds, 6),
+            "rows_per_s": round(rows / seconds, 1) if seconds > 0 else 0.0,
+        },
+    )
+    return result
 
 
 def run_pipeline(

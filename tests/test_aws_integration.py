@@ -232,6 +232,60 @@ def test_publish_exhausted_retries_dead_letter_to_real_dlq(
     assert {json.loads(b)["r_regionkey"] for b in dead} == set(range(n))
 
 
+def test_publish_partial_failure_resends_only_failed_entries(
+    spark, sqs, moto_endpoint
+):
+    """Per-entry redrive over the real wire: on each partition's first
+    send, entry 0 fails retryably and entry 1 with SenderFault; the rest
+    go to the real queue. Only entry 0 is resent, entry 1 goes straight
+    to the real DLQ, and every other row lands exactly once."""
+    url = sqs.create_queue(QueueName="publish-partial")["QueueUrl"]
+    dlq_url = sqs.create_queue(QueueName="publish-partial-dlq")["QueueUrl"]
+    region = load_table(spark, SF, "region").coalesce(1)
+    n = region.count()
+    real_factory = publish.sqs_client_factory(
+        region=REGION, endpoint=moto_endpoint, **CREDS
+    )
+
+    class _PartialFirstSend:
+        def __init__(self, real):
+            self._real = real
+            self._first = True
+
+        def send_message_batch(self, QueueUrl="", Entries=None):
+            entries = Entries or []
+            failed = []
+            if self._first:
+                self._first = False
+                failed = [
+                    {"Id": e["Id"], "SenderFault": j == 1, "Code": "X"}
+                    for j, e in enumerate(entries[:2])
+                ]
+                entries = entries[2:]
+            out = self._real.send_message_batch(
+                QueueUrl=QueueUrl, Entries=entries
+            )
+            return {**out, "Failed": out.get("Failed", []) + failed}
+
+    result = publish.publish(
+        region,
+        lambda: _PartialFirstSend(real_factory()),
+        queue_url=url,
+        max_attempts=publish.DEFAULT_MAX_ATTEMPTS,
+        retry_backoff_s=0.0,
+        dlq_client_factory=real_factory,
+        dlq_url=dlq_url,
+    )
+    assert (result.published, result.dead_lettered) == (n - 1, 1)
+    assert result.retried == 1
+    bodies = _drain(sqs, url)
+    dead = _drain(sqs, dlq_url)
+    got = sorted(json.loads(b)["r_regionkey"] for b in bodies)
+    assert len(dead) == 1
+    lost = json.loads(dead[0])["r_regionkey"]
+    assert got == sorted(set(range(n)) - {lost})
+
+
 def test_redrive_policy_moves_message_after_max_receive_count(sqs):
     """The consumer-side redrive contract (template.yaml:10-12): a
     message received maxReceiveCount=5 times without deletion is moved

@@ -5,6 +5,8 @@ from __future__ import annotations
 import io
 import json
 
+import pytest
+
 from poc_parquet_publisher_spark.logging_utils import json_logger
 
 
@@ -30,3 +32,39 @@ def test_json_logger_reuse_does_not_duplicate_handlers():
     assert log1 is log2
     log1.info("once")
     assert len(buf.getvalue().splitlines()) == 1
+
+
+def test_publish_logs_one_run_event(spark, tmp_path):
+    """Each publish run emits one JSON event with its delivery counts."""
+    import logging
+
+    from poc_parquet_publisher_spark.catalog import table_path
+    from poc_parquet_publisher_spark.logging_utils import JsonFormatter
+    from poc_parquet_publisher_spark.pipeline import DirectoryQueue, publish
+    from tests.conftest import SF_SMOKE
+
+    buf = io.StringIO()
+    handler = logging.StreamHandler(buf)
+    handler.setFormatter(JsonFormatter())
+    log = json_logger("poc_parquet_publisher_spark.pipeline.publish")
+    log.addHandler(handler)
+    try:
+        region = spark.read.parquet(table_path(SF_SMOKE, "region"))
+        result = publish(
+            region, lambda: DirectoryQueue(str(tmp_path)), batch_size=2
+        )
+    finally:
+        log.removeHandler(handler)
+
+    (event,) = [json.loads(x) for x in buf.getvalue().splitlines()]
+    assert event["msg"] == "publish"
+    assert event["level"] == "INFO"
+    assert {
+        k: event[k]
+        for k in ("rows_published", "rows_dead_lettered", "entries_retried")
+    } == {"rows_published": 5, "rows_dead_lettered": 0, "entries_retried": 0}
+    assert event["batches"] == result.batches >= 3
+    assert isinstance(event["seconds"], float) and event["seconds"] > 0
+    assert event["rows_per_s"] == pytest.approx(
+        5 / event["seconds"], rel=1e-3, abs=0.1
+    )

@@ -129,6 +129,128 @@ def test_publish_dead_letters_after_exhausted_retries(spark, tmp_path):
     assert sum(consume_batch_counts(dlq_spool)) == 5
 
 
+def _spooled_ids(spool: str) -> list[str]:
+    """Every entry Id written to a DirectoryQueue spool, repeats kept."""
+    import glob
+    import os
+
+    ids = []
+    for path in glob.glob(os.path.join(spool, "*.batch.jsonl")):
+        with open(path, encoding="utf-8") as f:
+            ids += [json.loads(line)["Id"] for line in f]
+    return ids
+
+
+def test_publish_resends_only_failed_entries(spark, tmp_path):
+    """A partial failure resends only the Failed entries: no Id reported
+    Successful is sent again, so every row lands exactly once."""
+    spool = str(tmp_path / "spool")
+
+    class FirstEntryFailsOnce:
+        """Fails each batch's first entry on its first send and delivers
+        the others."""
+
+        def __init__(self):
+            import threading
+
+            self.inner = DirectoryQueue(spool)
+            self.lock = threading.Lock()
+            self.seen: set[str] = set()
+
+        def send_message_batch(self, QueueUrl="", Entries=None):
+            first = Entries[0]["Id"]
+            with self.lock:
+                fail = first not in self.seen
+                self.seen.update(e["Id"] for e in Entries)
+            ok = Entries[1:] if fail else Entries
+            if ok:
+                self.inner.send_message_batch(QueueUrl, ok)
+            failed = [{"Id": first, "SenderFault": False}] if fail else []
+            return {"Successful": [{"Id": e["Id"]} for e in ok],
+                    "Failed": failed}
+
+    orders = (
+        spark.read.parquet(table_path(SF, "orders")).limit(57).coalesce(1)
+    )
+    total = orders.count()
+    result = publish(
+        orders, FirstEntryFailsOnce, batch_size=10, max_attempts=3,
+        retry_backoff_s=0.001,
+    )
+    ids = _spooled_ids(spool)
+    assert len(ids) == len(set(ids)) == total
+    keys = [m["o_orderkey"] for m in read_messages(spool)]
+    assert sorted(keys) == sorted(r.o_orderkey for r in orders.collect())
+    assert (result.published, result.dead_lettered) == (total, 0)
+    assert result.retried == result.batches == 6
+
+
+def test_publish_dead_letters_per_entry(spark, tmp_path):
+    """A SenderFault entry goes to the DLQ after one send; an entry that
+    keeps failing goes there after max_attempts; the rest of its batch is
+    delivered once and never dead-lettered."""
+    spool = str(tmp_path / "spool")
+    attempts = str(tmp_path / "attempts")
+    dlq_spool = str(tmp_path / "dlq")
+
+    class Selective:
+        """Entry 3 of each batch is a sender fault, entry 5 always fails."""
+
+        def __init__(self):
+            self.inner = DirectoryQueue(spool)
+            self.log = DirectoryQueue(attempts)
+
+        def send_message_batch(self, QueueUrl="", Entries=None):
+            self.log.send_message_batch(QueueUrl, Entries)
+            failed, ok = [], []
+            for e in Entries:
+                j = int(e["Id"].rsplit("-", 1)[1]) % 10
+                if j in (3, 5):
+                    failed.append({"Id": e["Id"], "SenderFault": j == 3})
+                else:
+                    ok.append(e)
+            if ok:
+                self.inner.send_message_batch(QueueUrl, ok)
+            return {"Successful": [{"Id": e["Id"]} for e in ok],
+                    "Failed": failed}
+
+    orders = spark.read.parquet(table_path(SF, "orders")).limit(40)
+    result = publish(
+        orders.coalesce(1), Selective, batch_size=10, max_attempts=3,
+        dlq_client_factory=lambda: DirectoryQueue(dlq_spool),
+        retry_backoff_s=0.001,
+    )
+    from collections import Counter
+
+    tries = Counter(int(i.rsplit("-", 1)[1]) % 10
+                    for i in _spooled_ids(attempts))
+    assert tries[3] == 4  # one send per batch, never resent
+    assert tries[5] == 12  # three sends per batch
+    assert all(tries[j] == 4 for j in (0, 1, 2, 4, 6, 7, 8, 9))
+    dead = sorted(int(i.rsplit("-", 1)[1]) for i in _spooled_ids(dlq_spool))
+    assert dead == [3, 5, 13, 15, 23, 25, 33, 35]
+    delivered = _spooled_ids(spool)
+    assert len(delivered) == len(set(delivered)) == 32
+    assert (result.published, result.dead_lettered) == (32, 8)
+    assert result.retried == 8 and result.batches == 4
+
+
+def test_publish_fails_when_the_dlq_rejects(spark):
+    """An entry the dead-letter queue refuses fails the task rather than
+    being counted as dead-lettered."""
+
+    class AlwaysFailing:
+        def send_message_batch(self, QueueUrl="", Entries=None):
+            return {"Failed": [{"Id": e["Id"]} for e in Entries]}
+
+    region = spark.read.parquet(table_path(SF, "region"))
+    with pytest.raises(Exception, match="dead-letter queue rejected"):
+        publish(
+            region, AlwaysFailing, batch_size=2,
+            dlq_client_factory=AlwaysFailing, retry_backoff_s=0.0,
+        )
+
+
 def test_run_pipeline_envelope(spark, tmp_path):
     spool = str(tmp_path / "spool")
     req = {"paths": [table_path(SF, "region")]}

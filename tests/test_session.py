@@ -7,9 +7,12 @@ atexit hook that stops the active SparkSession at interpreter exit.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
 
 from poc_parquet_publisher_spark import session as sess
+from poc_parquet_publisher_spark import worker_daemon
 
 
 def test_s3a_conf_contract():
@@ -119,3 +122,98 @@ def test_stop_active_session_stops_and_tolerates_absence(monkeypatch):
         SparkSession, "getActiveSession", classmethod(lambda cls: Broken())
     )
     sess._stop_active_session()
+
+
+def test_assemble_conf_puts_package_root_on_worker_pythonpath():
+    """The daemon module imports in workers from any working directory,
+    and a caller's own PYTHONPATH entries survive the merge."""
+    key = "spark.executorEnv.PYTHONPATH"
+    conf = sess.assemble_conf()
+    assert conf[key] == sess.PACKAGE_ROOT
+    assert (
+        conf["spark.python.daemon.module"]
+        == "poc_parquet_publisher_spark.worker_daemon"
+    )
+    merged = sess.assemble_conf(
+        extra_conf={key: os.pathsep.join(["/srv/a", sess.PACKAGE_ROOT, "/b"])}
+    )
+    assert merged[key].split(os.pathsep) == [
+        sess.PACKAGE_ROOT, "/srv/a", "/b"
+    ]
+
+
+def test_worker_path_drops_spark_archives(tmp_path):
+    spark_home = tmp_path / "spark"
+    lib = spark_home / "python" / "lib"
+    site = tmp_path / "site"
+    for pkg in ("pyspark", "py4j"):
+        (site / pkg).mkdir(parents=True)
+        (site / pkg / "__init__.py").write_text("")
+    archives = [
+        str(lib / "pyspark.zip"),
+        str(lib / "py4j-0.10.9.9-src.zip"),
+        str(tmp_path / "jars" / "spark-core_2.13-4.1.2.jar"),
+    ]
+    other_zip = str(tmp_path / "python311.zip")
+    path = [str(tmp_path), *archives, other_zip, str(site)]
+
+    kept = worker_daemon.worker_path(path, str(spark_home))
+    assert kept == [str(tmp_path), other_zip, str(site)]
+    # SPARK_HOME reached through a symlink still names the same archives
+    link = tmp_path / "spark-link"
+    link.symlink_to(spark_home)
+    assert worker_daemon.worker_path(path, str(link)) == kept
+    # without SPARK_HOME only the jar is known to be Spark's
+    assert worker_daemon.worker_path(path, None) == [
+        p for p in path if not p.endswith(".jar")
+    ]
+
+
+def test_worker_path_keeps_archives_when_pyspark_lives_only_there(tmp_path):
+    """A cluster that ships pyspark only inside SPARK_HOME keeps its path."""
+    spark_home = tmp_path / "spark"
+    site = tmp_path / "site"
+    (site / "py4j").mkdir(parents=True)
+    (site / "py4j" / "__init__.py").write_text("")
+    path = [str(spark_home / "python" / "lib" / "pyspark.zip"), str(site)]
+    assert worker_daemon.worker_path(path, str(spark_home)) == path
+    # nothing to drop: the path comes back as it was
+    assert worker_daemon.worker_path([str(site)], str(spark_home)) == [
+        str(site)
+    ]
+
+
+def test_python_tasks_skip_spark_archives(spark):
+    """A Python task on the build_session session imports the installed
+    pyspark, holds no importer for a Spark archive, and pays well under
+    5 ms for the importlib.invalidate_caches() every task runs."""
+    spark_home = os.path.realpath(os.environ.get("SPARK_HOME", "/nonexistent"))
+
+    def probe(_):
+        import importlib
+        import sys
+        import time
+        import zipimport
+
+        import pyspark
+
+        from poc_parquet_publisher_spark.worker_daemon import is_spark_archive
+
+        home = os.environ.get("SPARK_HOME")
+        archived = [
+            key
+            for key, imp in sys.path_importer_cache.items()
+            if isinstance(imp, zipimport.zipimporter)
+            and is_spark_archive(imp.archive, home)
+        ]
+        t0 = time.perf_counter()
+        importlib.invalidate_caches()
+        ms = (time.perf_counter() - t0) * 1000
+        yield os.path.realpath(pyspark.__file__), archived, ms
+
+    for pyspark_file, archived, ms in (
+        spark.sparkContext.parallelize([0, 1], 2).mapPartitions(probe).collect()
+    ):
+        assert not pyspark_file.startswith(spark_home + os.sep), pyspark_file
+        assert archived == []
+        assert ms < 5, ms
