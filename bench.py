@@ -31,21 +31,15 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # Host calibration (VERDICT r07 #1): identical code measured 1.43x slower
 # across two sessions on an uncontrolled host, costing a manual re-measure.
-# Every ledger now carries a CALIBRATION block -- a pinned pure-CPU md5
-# loop, a pinned synthetic Spark probe (touches no bench data), and
-# os.getloadavg() -- timed FIRST, so cross-session medians can be compared
-# after dividing by the probe reading. REF_SPARK_PROBE_S pins the probe's
-# reading on the session that introduced it; "normalized" times are
-# raw * (REF_SPARK_PROBE_S / measured_probe_s), i.e. seconds-at-the-
-# reference-host.
-REF_SPARK_PROBE_S = 1.99  # pinned: round-8 session-1 median of 3 warm runs
-REF_CPU_MD5_S = 0.77  # same session, informational
-
-# Round-9 finding (SURVEY 4.4d): the single COLD spark probe is JIT/
-# codegen-warmup dominated and injected an 18% normalization
-# disagreement between two same-session ledgers whose raw sums agreed
-# at 1.4%. The WARM probe and cpu_md5 are the stable readings. Round-10
-# refinement: for median ledgers the estimator is the FLOOR (min) of
+# Every ledger carries a CALIBRATION block -- a pinned pure-CPU md5 loop,
+# a pinned synthetic Spark probe (touches no bench data, one cold run and
+# the median of two warm runs), and os.getloadavg() -- timed FIRST.
+#
+# Only median ledgers are normalized. Round-9 finding (SURVEY 4.4d): the
+# single COLD spark probe is JIT/codegen-warmup dominated and injected an
+# 18% normalization disagreement between two same-session ledgers whose
+# raw sums agreed at 1.4%. The WARM probe and cpu_md5 are the stable
+# readings. Round-10 refinement: the estimator is the FLOOR (min) of
 # the per-run readings, not their median -- the same contention
 # rejection the per-entry medians already apply. A median-of-3
 # calibration instants keeps one contended sample's inflation (round-10
@@ -60,15 +54,11 @@ REF_CPU_MD5_WARM_ANCHOR_S = 0.728  # round-9 per-run cpu_md5 floor
 
 
 def _pinned_host_factor(calibration: dict) -> float | None:
-    """Combined warm host factor: sqrt((warm/ref_warm) * (cpu/ref_cpu)),
-    preferring the per-run FLOOR readings when present (median ledgers).
-    >1 means this session is slower than the reference session."""
-    warm = calibration.get("spark_probe_warm_floor_s") or calibration.get(
-        "spark_probe_warm_s"
-    )
-    cpu = calibration.get("cpu_md5_floor_s") or calibration.get(
-        "cpu_md5_s"
-    )
+    """Combined warm host factor: sqrt((warm/ref_warm) * (cpu/ref_cpu))
+    over the per-run FLOOR readings of a median ledger. >1 means this
+    session is slower than the reference session."""
+    warm = calibration.get("spark_probe_warm_floor_s")
+    cpu = calibration.get("cpu_md5_floor_s")
     if not warm or not cpu:
         return None
     return round(
@@ -99,13 +89,10 @@ def _calibrate_spark(spark) -> tuple[float, float]:
     # Exercises codegen + one shuffle at the session's parallelism;
     # deterministic, zero data dependency, ~1-2 s on the reference
     # host. Returns (cold_s, warm_median_s): the FIRST run pays JIT/
-    # codegen warmup -- that is the reading every round-7/8 ledger
-    # recorded, so host_factor stays on it for cross-round
-    # continuity -- while the median of the two follow-up runs is the
-    # steady-state host speed (round-9 measured cold 3.2-4.4 s vs
-    # warm ~1.4 s on the same session: the single-cold-probe
-    # host_factor is warmup-dominated, so normalized cross-SESSION
-    # comparisons should quote the warm factor going forward).
+    # codegen warmup (the reading every round-7/8 ledger recorded),
+    # while the median of the two follow-up runs is the steady-state
+    # host speed (round-9 measured cold 3.2-4.4 s vs warm ~1.4 s on
+    # the same session).
     import statistics
 
     times = []
@@ -130,10 +117,6 @@ def calibration_block(spark) -> dict:
         "cpu_md5_s": cpu,
         "spark_probe_s": probe,
         "spark_probe_warm_s": probe_warm,
-        "ref_spark_probe_s": REF_SPARK_PROBE_S,
-        "ref_cpu_md5_s": REF_CPU_MD5_S,
-        "host_factor": round(probe / REF_SPARK_PROBE_S, 3),
-        "host_factor_warm": round(probe_warm / REF_SPARK_PROBE_S, 3),
         "loadavg": load,
     }
 
@@ -368,34 +351,7 @@ def _write_result(
         "sf": sf,
     }
     if calibration is not None:
-        scale = REF_SPARK_PROBE_S / calibration["spark_probe_s"]
         result["calibration"] = calibration
-        result["value_normalized"] = round(total * scale, 3)
-        result["queries_normalized"] = {
-            k: round(v * scale, 3) for k, v in timings.items()
-        }
-        # primary (round-10 on): warm-pinned normalization -- the cold
-        # probe's 18% warmup noise does not enter this number. FLOOR
-        # readings exist only on median ledgers (min over the session's
-        # runs); a single run's point-in-time reading is >= the floor
-        # by construction, so normalizing with it systematically reads
-        # FAST and is not comparable to median-ledger values (round-10
-        # advice) -- tag it apart instead of publishing it as the same
-        # metric.
-        pinned = _pinned_host_factor(calibration)
-        if pinned:
-            result["host_factor_pinned"] = pinned
-            if "spark_probe_warm_floor_s" in calibration:
-                result["value_normalized_warm"] = round(total / pinned, 3)
-            else:
-                result["value_normalized_warm_single_run"] = round(
-                    total / pinned, 3
-                )
-                result["value_normalized_warm_single_run_note"] = (
-                    "point-in-time calibration (no per-run floor): "
-                    "biased vs floor-pinned median ledgers; compare "
-                    "only value_normalized_warm across median ledgers"
-                )
     with open(local_path, "w") as f:
         json.dump(result, f, indent=1, sort_keys=True)
         f.write("\n")
@@ -414,7 +370,6 @@ def _write_result(
     }
     if calibration is not None:
         compact["calibration"] = calibration
-        compact["value_normalized"] = result["value_normalized"]
     print(json.dumps(compact))
 
 
@@ -468,46 +423,19 @@ def medians(n_runs: int = 3) -> None:
     }
     cals = [r["calibration"] for r in runs if r.get("calibration")]
     if cals:
+        probes = ("cpu_md5_s", "spark_probe_s", "spark_probe_warm_s")
         med_cal = {
             k: round(statistics.median(c[k] for c in cals), 3)
-            for k in (
-                "cpu_md5_s",
-                "spark_probe_s",
-                "host_factor",
-            )
+            for k in probes
         }
-        for k in ("spark_probe_warm_s", "host_factor_warm"):
-            vals = [c[k] for c in cals if k in c]
-            if vals:
-                med_cal[k] = round(statistics.median(vals), 3)
-        med_cal["ref_spark_probe_s"] = REF_SPARK_PROBE_S
         # contention-rejecting floors across the cold runs (see the
         # REF_* comment block): these drive host_factor_pinned
-        warm_vals = [
-            c["spark_probe_warm_s"] for c in cals if "spark_probe_warm_s" in c
-        ]
-        if warm_vals:
-            med_cal["spark_probe_warm_floor_s"] = min(warm_vals)
+        med_cal["spark_probe_warm_floor_s"] = min(
+            c["spark_probe_warm_s"] for c in cals
+        )
         med_cal["cpu_md5_floor_s"] = min(c["cpu_md5_s"] for c in cals)
-        med_cal["per_run"] = [
-            {
-                k: c[k]
-                for k in (
-                    "cpu_md5_s",
-                    "spark_probe_s",
-                    "spark_probe_warm_s",
-                    "loadavg",
-                )
-                if k in c
-            }
-            for c in cals
-        ]
-        scale = REF_SPARK_PROBE_S / med_cal["spark_probe_s"]
+        med_cal["per_run"] = cals
         result["calibration"] = med_cal
-        result["value_normalized"] = round(result["value"] * scale, 3)
-        result["queries_normalized"] = {
-            k: round(v * scale, 3) for k, v in med.items()
-        }
         pinned = _pinned_host_factor(med_cal)
         if pinned:
             result["host_factor_pinned"] = pinned
@@ -522,9 +450,6 @@ def medians(n_runs: int = 3) -> None:
     summary = {
         k: result[k] for k in ("metric", "value", "unit", "runs", "sf")
     }
-    if "value_normalized" in result:
-        summary["value_normalized"] = result["value_normalized"]
-        summary["host_factor"] = result["calibration"]["host_factor"]
     if "value_normalized_warm" in result:
         summary["value_normalized_warm"] = result["value_normalized_warm"]
         summary["host_factor_pinned"] = result["host_factor_pinned"]

@@ -2,8 +2,8 @@
 
 The reference treats "table = one parquet file" and interpolates file paths
 into SQL text (cmd/duckdb-record-processor/worker.go:14, handler.go:65 -- an
-injection-prone pattern). Here paths go to ``spark.read.parquet`` and tables
-register as temp views, so Spark SQL and the DataFrame API share one catalog.
+injection-prone pattern). Here paths go to ``spark.read.parquet`` and never
+into SQL text.
 
 Nanosecond-timestamp normalization: with
 ``spark.sql.legacy.parquet.nanosAsLong=true`` (see session.py), Parquet
@@ -108,16 +108,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 ),
             )
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every fixture table present in ``sf_dir`` as a temp view."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        if os.path.exists(table_path(sf_dir, name)) or sf_dir.startswith(
-            ("s3a://", "s3://")
-        ):
-            df = load_table(spark, sf_dir, name)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

@@ -51,7 +51,7 @@ def curate(
     # quality + language gates are row-local expressions: compute them
     # INLINE in one projection (no id-joins -- a join per gate would put
     # two full shuffles in front of a narrow filter)
-    n_toks = F.size(F.split(F.lower(F.col(text_col)), " ")).cast("long")
+    n_toks = F.size(text._toks(text_col)).cast("long")
     alpha = F.length(
         F.regexp_replace(F.lower(F.col(text_col)), "[^a-z]", "")
     )
@@ -232,7 +232,7 @@ def curation_funnel(
     count-distinct for the dedup stage); the 5-row funnel falls out of a
     stack() unpivot of that single row. No joins, one scan.
     """
-    n_toks = F.size(F.split(F.lower(F.col(text_col)), " ")).cast("long")
+    n_toks = F.size(text._toks(text_col)).cast("long")
     alpha = F.length(
         F.regexp_replace(F.lower(F.col(text_col)), "[^a-z]", "")
     )

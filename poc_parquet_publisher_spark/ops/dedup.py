@@ -25,17 +25,10 @@ section 2.1 end); these are the north-star extensions from BASELINE.json.
 
 from __future__ import annotations
 
-import hashlib
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _tokens(text_col: str | Column, lowercase: bool = True) -> Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    if lowercase:
-        c = F.lower(c)
-    return F.split(c, " ")
+from .text import _toks
 
 
 def exact_dedup(
@@ -63,7 +56,7 @@ def fingerprint_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """
     fp = F.md5(
         F.array_join(
-            F.array_sort(F.array_distinct(_tokens(text_col))), " "
+            F.array_sort(F.array_distinct(_toks(text_col))), " "
         )
     ).alias("fingerprint")
     return df.groupBy(fp).agg(
@@ -93,7 +86,7 @@ def shingle_arrays(
     (``minhash_banded_pairs``), which fold over the array without
     exploding it."""
     toks_df = _rebalanced(df).select(
-        F.col(id_col).alias("doc"), _tokens(text_col).alias("toks")
+        F.col(id_col).alias("doc"), _toks(text_col).alias("toks")
     )
     toks = F.col("toks")
     sh = F.array_distinct(
@@ -615,11 +608,6 @@ def duplicate_clusters(
     return labels
 
 
-def deterministic_md5_int(s: str) -> int:
-    """Driver-side helper: stable 64-bit int from a string (test support)."""
-    return int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "big", signed=False)
-
-
 def det_band_keys(sh):
     """Deterministic LSH band keys over a shingle-array column: 8
     md5-sliced minhash components (2 md5 evaluations per shingle, four
@@ -898,7 +886,7 @@ def duplicate_spans(
     The reference has no dedup surface at all (SURVEY.md section 2.4).
     """
     toks_df = _rebalanced(df).select(
-        F.col(id_col).alias("doc"), _tokens(text_col).alias("toks")
+        F.col(id_col).alias("doc"), _toks(text_col).alias("toks")
     )
     base = toks_df.select("doc", F.size("toks").alias("n_tokens"))
     toks = F.col("toks")

@@ -107,7 +107,6 @@ def decode_features(
 RESIZE_SCHEMA = (
     "media_id long, kind string, width int, height int, payload binary"
 )
-FRAME_SCHEMA = "media_id long, frame_idx int, frame_sha string"
 
 
 def resize_images(

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .text import _toks
+
 
 def pack_sequences(
     df: DataFrame,
@@ -176,7 +178,7 @@ def chunk_documents(
         raise ValueError("chunk_tokens and stride must be positive")
     toks_df = df.select(
         F.col(id_col),
-        F.split(F.lower(F.col(text_col)), " ").alias("__toks"),
+        _toks(text_col).alias("__toks"),
     )
     toks = F.col("__toks")
     n = F.size(toks).cast("long")

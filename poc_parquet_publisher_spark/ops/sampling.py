@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .text import _toks
+
 
 def _bucket(key: Column, salt: str) -> Column:
     """First 4 md5 hex chars of 'key:salt' -- uniform over 65536 values."""
@@ -489,7 +491,7 @@ def temperature_mixture(
     a broadcast 1-row aggregate -- same plan family as x38's mixture
     report (ops/text.py source_mix_stats).
     """
-    n_toks = F.size(F.split(F.lower(F.col(text_col)), " ")).cast("long")
+    n_toks = F.size(_toks(text_col)).cast("long")
     per = df.groupBy(F.col(strata_col).alias("stratum")).agg(
         F.sum(n_toks).cast("long").alias("n_tokens"),
     )

@@ -1090,7 +1090,7 @@ def line_dedup_stats(
     groupBy(doc) with a sorted collect of (pos, line) structs. Never
     pairwise, no window over the corpus.
     """
-    toks = F.split(F.lower(F.col(text_col)), " ")
+    toks = _toks(text_col)
     n_lines = F.ceil(F.size("__toks") / F.lit(line_tokens)).cast("int")
     lines = (
         df.select(F.col(id_col).alias("doc"), toks.alias("__toks"))

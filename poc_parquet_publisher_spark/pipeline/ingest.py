@@ -175,24 +175,3 @@ def json_quarantine(
         status.alias("status"),
         k.alias("k"),
     )
-
-
-def json_quarantine_sql(
-    source: str = "events",
-    id_col: str = "event_id",
-    json_col: str = "props",
-    required_path: str = "$.k",
-) -> str:
-    """DuckDB SQL mirroring ``json_quarantine``."""
-    guarded = (
-        f"CASE WHEN {json_col} IS NOT NULL AND json_valid({json_col}) "
-        f"THEN json_extract_string({json_col}, '{required_path}') "
-        f"ELSE NULL END"
-    )
-    return f"""
-SELECT {id_col},
-       CASE WHEN {guarded} IS NOT NULL THEN 'ok'
-            ELSE 'quarantined' END AS status,
-       {guarded} AS k
-FROM {source} ORDER BY {id_col}
-"""

@@ -1,758 +1,27 @@
 """Extension-query package: one module per thematic wave of the
-registry (SURVEY.md section 2.4), split round 7 from the former
-single 31,988-line queries/extensions.py. Import order below IS the
-registration order (the @register side effects fire on import), so
-the driver-window rotation in queries/__init__.py is unchanged.
+registry (SURVEY.md section 2.4). ``_WAVES`` order IS the registration
+order (the @register side effects fire on import), so the driver-window
+rotation in queries/__init__.py depends on it; never derive it from a
+directory listing.
 
-Every top-level name of the former module is re-exported, so
-`from ...queries.extensions import <anything>` keeps working.
+Any top-level name of a wave resolves on the package itself, so
+`from ...queries.extensions import <anything>` works without a
+re-export list.
 """
 
-from .foundations import (  # noqa: F401
-    _BRUTE_TOPK_ORACLE,
-    _MIX_FRACTIONS,
-    _NEARDUP_ORACLE_TMPL,
-    _PAIRS_CACHE,
-    _STOP_EN,
-    _TOKEN_BUDGETS,
-    _X03_PAIRS_CTE,
-    _X34_CONTAMINATION_ORACLE,
-    _shared_jaccard_pairs,
-    _shared_pair_counts,
-    _x140_oracle,
-    x01_dedup_exact,
-    x02_dedup_fingerprint,
-    x03_dedup_ngram_jaccard,
-    x04_dedup_minhash,
-    x05_dedup_simhash,
-    x06_simhash_neardup,
-    x07_sim_bruteforce_topk,
-    x08_sim_ann_lsh,
-    x09_embedding_neardup,
-    x100_zipf_fit,
-    x101_label_coherence,
-    x102_source_overlap,
-    x103_stream_attribution,
-    x104_pagerank,
-    x105_zorder_key,
-    x106_bm25_topk,
-    x107_event_trigrams,
-    x108_key_skew_gini,
-    x109_bpe_learn,
-    x10_text_tokens,
-    x110_conversion_latency,
-    x111_centroid_confusion,
-    x112_wau_sketch,
-    x113_scd2_intervals,
-    x114_jsonl_roundtrip_dedup,
-    x115_cluster_survivorship,
-    x116_winsorized_stats,
-    x117_user_entropy,
-    x118_salted_distinct,
-    x119_quality_ensemble,
-    x11_text_quality,
-    x120_dedup_datasheet,
-    x578_dedup_gain_curve,
-    x121_contrastive_pairs,
-    x122_padding_waste,
-    x123_fuzzy_match,
-    x124_mad_outliers,
-    x125_ab_lift,
-    x126_freshness,
-    x127_repetition_ratio,
-    x128_source_mix_kl,
-    x129_token_fertility,
-    x12_text_langid,
-    x130_embedding_outliers,
-    x131_retention_cohorts,
-    x132_idf_drift,
-    x133_prefix_dup,
-    x134_rfm_segments,
-    x135_load_profile,
-    x136_token_entropy,
-    x137_join_cardinality,
-    x138_jaccard_curve,
-    x139_session_length_dist,
-    x13_multimodal_meta,
-    x140_markov_stationary,
-    x141_event_pivot,
-    x142_cube_sales,
-    x143_stream_dedup_counts,
-    x144_bloom_prefilter,
-    x145_decay_engagement,
-    x146_split_leakage,
-    x147_corr_matrix,
-    x148_chi2_independence,
-    x149_interval_islands,
-    x14_text_rolling_fingerprint,
-    x150_bfs_reach,
-    x15_sim_ann_ivf,
-    x16_sketch_distinct,
-    x17_sketch_quantiles,
-    x18_deterministic_split,
-    x19_tfidf,
-    x20_text_scrub,
-    x21_sessionize,
-    x22_histogram,
-    x23_curate_pipeline,
-    x24_dedup_clusters,
-    x25_stratified_sample,
-    x26_boilerplate_ngrams,
-    x27_streaming_window,
-    x28_embedding_neardup_lsh,
-    x29_asof_join,
-    x30_range_join,
-    x31_repetition_scores,
-    x32_pack_sequences,
-    x33_token_budget_sample,
-    x34_contamination,
-    x35_semantic_dedup,
-    x36_weighted_sample,
-    x37_unigram_logprob,
-    x38_source_mix,
-    x39_chunk_documents,
-    x40_minhash_deterministic,
-    x41_heavy_hitters,
-    x42_shard_shuffle,
-    x43_profile_numeric,
-    x44_containment_pairs,
-    x45_duplicate_spans,
-    x46_temperature_mixture,
-    x47_vocab_coverage,
-    x48_session_window,
-    x49_pii_stats,
-    x50_snapshot_diff,
-    x51_oov_ratio,
-    x52_bigram_logprob,
-    x53_json_quarantine,
-    x54_salted_join_agg,
-    x55_referential_integrity,
-    x56_decile_report,
-    x57_topk_per_source,
-    x58_sliding_window,
-    x59_curation_funnel,
-    x60_dup_rate_by_source,
-    x61_hourly_dup_rate,
-    x62_hourly_value_percentiles,
-    x63_embedding_norm_audit,
-    x64_dataset_card,
-    x65_compression_ratio,
-    x66_embedding_pooling,
-    x67_inverted_index,
-    x68_dupgraph_degree,
-    x69_lang_margin,
-    x70_cross_source_dups,
-    x71_recency_weights,
-    x72_session_funnel,
-    x73_retention_cohorts,
-    x74_rolling_active_users,
-    x75_lsh_verified_pairs,
-    x76_copurchase_pairs,
-    x77_hourly_anomalies,
-    x78_revenue_share_in_region,
-    x79_first_digit_audit,
-    x80_top_event_per_user,
-    x81_weekly_growth,
-    x82_lead_time_histogram,
-    x83_dimension_coverage,
-    x84_ltv_deciles,
-    x85_grouped_iqr_udaf,
-    x86_vocab_growth,
-    x87_frequency_spectrum,
-    x88_bigram_entropy,
-    x89_normalize_text,
-    x90_global_rank,
-    x91_per_source_cap,
-    x92_source_calibrated_rank,
-    x93_stream_enrichment,
-    x94_embedding_quantization,
-    x95_line_dedup,
-    x96_event_transitions,
-    x97_blocklist_filter,
-    x98_bpe_pair_counts,
-    x99_charset_audit,
-)
-from .analytics import (  # noqa: F401
-    x151_rolling_revenue,
-    x152_weighted_topk_sample,
-    x153_quantile_normalize,
-    x154_mutual_info,
-    x155_date_spine_fill,
-    x156_partition_manifest,
-    x157_user_history,
-    x158_order_reconciliation,
-    x159_histogram_2d,
-    x160_csv_roundtrip_dedup,
-    x161_interevent_gaps,
-    x162_cumulative_reach,
-    x163_feature_hashing,
-    x164_split_balance,
-    x165_audience_overlap,
-    x166_time_to_convert,
-    x167_stream_latest_state,
-    x168_multimodal_fingerprint,
-    x169_scalable_median,
-    x170_top_paths,
-    x171_weighted_median,
-    x172_k_anonymity,
-    x173_novel_ngrams,
-    x174_column_profile,
-    x175_rollup_revenue,
-    x176_churn_candidates,
-    x177_ohlc_bars,
-    x178_token_pmi,
-    x179_ship_sla,
-    x180_time_weighted_avg,
-    x181_part_liveness,
-    x182_cohort_ltv,
-    x183_hhi_concentration,
-    x184_grouped_topn_array,
-    x185_daily_ledger,
-    x186_readability,
-    x187_content_checksum,
-    x188_schema_merge_audit,
-    x189_discount_elasticity,
-    x190_first_transition,
-    x191_equidepth_histogram,
-    x192_value_mix_shift,
-    x193_budget_curve,
-    x194_correlated_subquery,
-    x195_token_positions,
-    x196_lang_count_map,
-    x197_weekday_overlap,
-    x198_trend_fit,
-    x199_lateral_topn,
-    x200_null_imputation,
-    x201_pareto_skyline,
-    x202_set_operations,
-    x203_stock_ledger,
-    x204_json_nested_roundtrip,
-    x205_activity_bitmask,
-    x206_wallet_share,
-    x207_forecast_wmape,
-    x208_regex_parse,
-    x209_topk_concentration,
-    x210_triangle_count,
-    x211_locf_fill,
-    x212_burst_detection,
-    x213_time_grain_rollup,
-    x214_csv_corruption_audit,
-    x215_distinctive_terms,
-    x216_merge_upsert,
-    x217_bucketed_join,
-    x218_sql_udf,
-    x219_variant_json,
-    x220_python_datasource,
-    x221_group_by_all,
-    x222_observe_metrics,
-    x223_try_arithmetic,
-    x224_ks_test,
-    x225_business_days,
-    x226_incremental_agg_merge,
-    x227_percentile_scoring,
-    x228_embedding_dim_stats,
-    x229_jl_projection,
-    x230_heldout_perplexity,
-    x231_pipe_syntax,
-    x232_ht_estimator,
-    x233_stream_multibatch,
-    x234_seq_predictability,
-    x235_join_hints,
-    x236_bag_difference,
-    x237_filter_clause,
-    x238_values_dim,
-    x239_recursive_tree_depth,
-    x240_debounce,
-    x241_revenue_bridge,
-    x242_map_hofs,
-    x243_kcore,
-    x244_dedup_cascade,
-    x245_pit_enrichment,
-    x246_l_diversity,
-    x247_event_rle,
-)
-from .semantics import (  # noqa: F401
-    _RBO_DEN,
-    _RBO_W,
-    _X315_ORACLE,
-    _X316_ORACLE,
-    _X317_ORACLE,
-    _X318_ORACLE,
-    _X319_ORACLE,
-    _X320_ORACLE,
-    _X321_ORACLE,
-    _X322_ORACLE,
-    _X323_ORACLE,
-    _X325_ORACLE,
-    _X326_ORACLE,
-    _X327_ORACLE,
-    _X328_ORACLE,
-    _X328_POISSON_CASE,
-    _X330_ORACLE,
-    _X331_ORACLE,
-    _word_cooccurrence_edges,
-    _x295_oracle,
-    _x297_oracle,
-    _x298_oracle,
-    _x302_oracle,
-    _x307_oracle,
-    _x313_oracle,
-    _x314_oracle,
-    _x324_oracle,
-    _x329_oracle,
-    x248_rounding_semantics,
-    x249_order_backlog,
-    x250_schema_drift,
-    x251_cogroup_reconcile,
-    x252_arrow_bytes,
-    x253_udtf_shards,
-    x254_percentile_semantics,
-    x255_explode_outer,
-    x256_array_align,
-    x257_decimal_contract,
-    x258_collation_distinct,
-    x259_month_arithmetic,
-    x260_quantile_array,
-    x261_hll_native,
-    x262_orc_roundtrip,
-    x263_string_parity,
-    x264_date_parsing,
-    x265_centroid_shift,
-    x266_rank_nulls,
-    x267_higher_moments,
-    x268_id_gaps,
-    x269_str_to_map,
-    x270_from_csv,
-    x271_timezone_buckets,
-    x272_approx_top_k,
-    x273_url_parse,
-    x274_char_trigrams,
-    x275_xpath_extract,
-    x276_bounded_levenshtein,
-    x277_luhn_check,
-    x278_bitmap_distinct,
-    x279_array_parity,
-    x280_mask_pii,
-    x281_bool_aggregates,
-    x282_regex_subset,
-    x283_multi_gap_sessions,
-    x284_crosstab,
-    x285_freq_items,
-    x286_welch_ttest,
-    x287_linear_interpolation,
-    x288_seasonality_index,
-    x289_cusum_changepoint,
-    x290_autocorrelation,
-    x291_runs_test,
-    x292_ewma_halflife,
-    x293_association_rules,
-    x294_fifo_matching,
-    x295_incremental_neardup,
-    x296_editdist_neardup,
-    x297_split_leakage,
-    x298_cohens_kappa,
-    x299_applyinarrow_agg,
-    x300_nullsafe_join,
-    x301_grouping_sets,
-    x302_label_propagation,
-    x303_ab_uplift,
-    x304_rank_biased_overlap,
-    x305_kaplan_meier,
-    x306_deletion_audit,
-    x307_cluster_representative,
-    x308_mad_outliers,
-    x309_theil_sen,
-    x310_cdc_merge,
-    x311_fold_balance,
-    x312_feature_hashing,
-    x313_rrf_fusion,
-    x314_mmr_rerank,
-    x315_calibration_ece,
-    x316_rendezvous_sharding,
-    x317_retrieval_metrics,
-    x318_simpson_audit,
-    x319_woe_iv,
-    x320_jackknife_se,
-    x321_srm_guardrail,
-    x322_dedup_method_agreement,
-    x323_wilson_interval,
-    x324_textrank_keywords,
-    x325_neyman_allocation,
-    x326_vocab_estimators,
-    x327_psi_drift,
-    x328_poisson_bootstrap,
-    x329_bradley_terry,
-    x330_window_funnel,
-    x331_blocking_audit,
-    x559_rake_keywords,
-    x562_transition_reciprocity,
-    x563_burrows_delta,
-    x565_embedding_anisotropy,
-    x569_curriculum_buckets,
-    x570_shard_balance,
-    x575_ngram_overlap_curve,
-    x577_length_bias_audit,
-)
-from .evaluation import (  # noqa: F401
-    _SUPPORT2_CACHE,
-    _SUPPORT2_CTE,
-    _X332_ORACLE,
-    _X333_ORACLE,
-    _X334_ORACLE,
-    _X335_ORACLE,
-    _X335_STEM_CASE_DUCK,
-    _X335_SUFFIX_CASE_DUCK,
-    _X336_ORACLE,
-    _X337_ORACLE,
-    _X338_ORACLE,
-    _X339_ORACLE,
-    _X340_ORACLE,
-    _X341_ORACLE,
-    _X342_ORACLE,
-    _X343_ORACLE,
-    _X344_ORACLE,
-    _X346_ORACLE,
-    _X347_ORACLE,
-    _X348_ORACLE,
-    _X349_ORACLE,
-    _X350_ORACLE,
-    _X351_ORACLE,
-    _X353_ORACLE,
-    _X354_ORACLE,
-    _X355_ORACLE,
-    _X356_ORACLE,
-    _X358_ORACLE,
-    _X359_ORACLE,
-    _X360_ORACLE,
-    _X361_ORACLE,
-    _X362_ORACLE,
-    _X363_ORACLE,
-    _X365_ORACLE,
-    _X366_ORACLE,
-    _X367_ORACLE,
-    _X368_ORACLE,
-    _X370_ORACLE,
-    _X371_ORACLE,
-    _X372_ORACLE,
-    _X373_ORACLE,
-    _X374_ORACLE,
-    _X375_ORACLE,
-    _X376_ORACLE,
-    _X377_ORACLE,
-    _X378_ORACLE,
-    _X379_ORACLE,
-    _X380_ORACLE,
-    _support2_edges,
-    _sym_deg,
-    _x345_oracle,
-    _x352_oracle,
-    _x364_oracle,
-    _x369_oracle,
-    _x375_hex3_sql,
-    x332_loglik_collocations,
-    x333_mnn_alignment,
-    x334_precedence_matrix,
-    x335_stem_profile,
-    x336_fellegi_sunter,
-    x337_distinct_ngrams,
-    x338_target_encoding,
-    x339_brier_decomposition,
-    x340_wasserstein_drift,
-    x341_kmeans_step,
-    x342_lm_divergence,
-    x343_seasonal_decomposition,
-    x344_negative_sampling,
-    x345_hits_authorities,
-    x346_shuffle_mixing,
-    x347_time_leakage,
-    x348_importance_resampling,
-    x349_auc_mann_whitney,
-    x350_threshold_sweep,
-    x351_brand_modularity,
-    x352_ppr_related_terms,
-    x353_native_session_window,
-    x354_watermark_lateness,
-    x355_conformal_interval,
-    x356_isotonic_calibration,
-    x357_kendall_tau,
-    x358_cuped_adjustment,
-    x359_adamic_adar,
-    x360_clustering_coefficient,
-    x361_degree_assortativity,
-    x362_unimax_allocation,
-    x363_kruskal_wallis,
-    x364_pca_power_iteration,
-    x365_fairness_audit,
-    x366_multitouch_attribution,
-    x367_expectation_suite,
-    x368_nelson_aalen,
-    x369_ipf_raking,
-    x370_logrank_test,
-    x371_average_precision,
-    x372_embedding_js_divergence,
-    x373_join_size_estimation,
-    x374_substring_dedup_spans,
-    x375_count_min_sketch,
-    x376_prefix_filter_simjoin,
-    x377_dsir_importance,
-    x378_benjamini_hochberg,
-    x379_burrows_delta,
-    x380_bcubed_clusters,
-)
-from .stats import (  # noqa: F401
-    _X381_ORACLE,
-    _X382_ORACLE,
-    _X383_ORACLE,
-    _X384_ORACLE,
-    _X385_ORACLE,
-    _X386_ORACLE,
-    _X387_ORACLE,
-    _X388_ORACLE,
-    _X389_ORACLE,
-    _X390_ORACLE,
-    _X391_ORACLE,
-    _X392_ORACLE,
-    _X393_ORACLE,
-    _X394_ORACLE,
-    _X395_ORACLE,
-    _X396_ORACLE,
-    _X397_ORACLE,
-    _X398_ORACLE,
-    _X399_ORACLE,
-    _X400_ORACLE,
-    _X401_ORACLE,
-    _X402_ORACLE,
-    _X403_ORACLE,
-    _X404_ORACLE,
-    _X405_ORACLE,
-    _X406_ORACLE,
-    _X409_ORACLE,
-    _X410_ORACLE,
-    _X411_ORACLE,
-    _X412_ORACLE,
-    _X413_ORACLE,
-    _X414_ORACLE,
-    _X415_ORACLE,
-    _X416_ORACLE,
-    _X417_ORACLE,
-    _X418_ORACLE,
-    _X419_ORACLE,
-    _X421_ORACLE,
-    _X422_ORACLE,
-    _X424_ORACLE,
-    _X425_ORACLE,
-    _X426_ORACLE,
-    _X427_ORACLE,
-    _X428_ORACLE,
-    _X429_ORACLE,
-    _kn_score_sql,
-    _x407_oracle,
-    _x408_oracle,
-    _x420_oracle,
-    _x423_oracle,
-    x381_gopher_rules,
-    x382_spearman_rho,
-    x383_kneser_ney,
-    x384_mann_kendall,
-    x385_cmh_odds_ratio,
-    x386_qini_curve,
-    x387_cronbach_alpha,
-    x388_unpivot_melt,
-    x389_silhouette,
-    x390_mcnemar_test,
-    x391_fleiss_kappa,
-    x392_levene_test,
-    x393_anova_oneway,
-    x394_partial_correlation,
-    x395_kn_heldout_perplexity,
-    x396_term_burstiness,
-    x397_mattr_diversity,
-    x398_dedup_ppl_impact,
-    x399_holm_bonferroni,
-    x400_cliffs_delta,
-    x401_eb_shrinkage,
-    x402_transpose,
-    x403_recursive_cte,
-    x404_katz_centrality,
-    x405_logistic_newton,
-    x406_embedding_separability,
-    x407_greedy_vocab_cover,
-    x408_lsh_tuning_curve,
-    x409_kfold_auc,
-    x410_quantile_treatment_effect,
-    x411_bitemporal_asof,
-    x412_watermark_detect,
-    x413_power_mde,
-    x414_negbin_overdispersion,
-    x415_kish_ess,
-    x416_identifier_params,
-    x417_huber_location,
-    x418_diff_in_diff,
-    x419_self_retrieval_eval,
-    x420_dedup_tier_containment,
-    x421_group_sequential,
-    x422_hte_pre_segments,
-    x423_hub_removal_robustness,
-    x424_platt_scaling,
-    x425_temperature_ess_curve,
-    x426_filter_impact,
-    x427_frequent_subsequences,
-    x428_capture_recapture,
-    x429_cost_optimal_threshold,
-)
-from .inference import (  # noqa: F401
-    x430_t_closeness,
-    x431_rmst,
-    x432_meta_fixed_effect,
-    x433_cochran_armitage,
-    x434_msprt,
-    x435_propensity_stratified_att,
-    x436_theil_decomposition,
-    x437_yule_richness,
-    x438_matryoshka_recall,
-    x439_twonn_intrinsic_dim,
-    x440_dedup_saturation,
-    x441_fingerprint_uniformity,
-    x442_kfold_paired_ttest,
-    x443_ratio_delta_ci,
-    x444_hedges_g,
-    x445_brunner_munzel,
-    x446_cluster_robust_se,
-    x447_heaps_law_fit,
-    x448_ktruss,
-    x449_hamilton_apportionment,
-    x450_dunn_posthoc,
-    x451_yuen_trimmed_t,
-    x452_mase_backtest,
-    x453_binary_segmentation,
-    x454_shapley_attribution,
-    x455_powerlaw_alpha,
-    x456_session_gap_sensitivity,
-    x457_exponential_gap_test,
-    x458_hill_diversity,
-    x459_auc_confidence,
-    x460_newcombe_diff_ci,
-    x461_ccf_lag,
-    x462_repetition_decay,
-    x463_hill_tail_index,
-    x464_langid_confusion,
-    x465_source_js_pairs,
-    x466_minhash_calibration,
-    x467_tost_equivalence,
-    x468_randomized_response,
-    x469_burstiness_memory,
-    x470_duplicate_lag,
-    x471_rich_club,
-)
+from importlib import import_module
 
-from .diagnostics import (  # noqa: F401
-    x472_participation_ratio,
-    x473_krippendorff_alpha,
-    x474_weighted_jaccard,
-    x475_record_statistics,
-    x476_friedman_test,
-    x477_bayesian_ab,
-    x478_hubness_audit,
-    x479_lins_ccc,
-    x480_cramers_v,
-    x481_cochrans_q,
-    x482_zonemap_pruning,
-    x483_compaction_plan,
-    x484_durbin_watson,
-    x485_holt_backtest,
-    x486_confusion_panel,
-    x487_page_trend_test,
-    x488_turning_point_test,
-    x489_jarque_bera,
-    x490_cramer_von_mises,
-    x491_kupiec_coverage,
-    x492_hoeffding_d,
-    x493_crps_backtest,
-    x494_pinball_backtest,
-    x495_gwet_ac1,
-    x496_binning_advisor,
-    x497_survivor_regret,
-    x498_quantization_curve,
-    x499_prefix_cache_curve,
-    x500_threshold_transfer,
-    x501_ewma_control_chart,
-    x502_cascade_token_yield,
-    x503_truncation_audit,
-    x504_bland_altman,
-    x505_deming_regression,
-    x506_atkinson_index,
-    x507_bartlett_test,
-    x508_icc_oneway,
-    x509_rate_ratio_ci,
-    x510_ljung_box,
-    x511_variance_ratio,
-    x512_hurst_rs,
-    x513_concordance_panel,
-    x514_bowker_symmetry,
-    x515_breslow_day,
-    x516_fisher_exact,
-    x517_weibull_fit,
-    x518_logrank_test,
-    x519_chow_test,
-    x520_sign_test,
-    x521_wilcoxon_signed_rank,
-    x522_rerandomization_test,
-    x523_waterfill_budget,
-    x524_theils_u,
-    x525_mood_median_test,
-    x526_ansari_bradley,
-    x527_median_ci,
-    x528_cusum_squares,
-    x529_breusch_pagan,
-    x530_periodogram_scan,
-    x531_neyman_allocation,
-    x532_listagg_topk,
-    x533_chunk_boundary_loss,
-    x534_positional_density,
-    x535_deleted_interpolation,
-    x536_rrf_fusion,
-    x537_neardup_transitivity,
-    x538_cox_stuart,
-    x539_page_hinkley,
-    x540_gumbel_block_maxima,
-    x541_win_ratio,
-)
+_WAVES = ("foundations", "analytics", "semantics", "evaluation", "stats",
+          "inference", "diagnostics", "comparisons", "timeseries")
 
-from .comparisons import (  # noqa: F401
-    x542_hodges_lehmann,
-    x543_cochran_armitage,
-    x545_energy_distance,
-    x547_jonckheere_terpstra,
-    x548_quade_test,
-    x552_sobel_mediation,
-    x553_hosmer_lemeshow,
-    x557_lorenz_pietra,
-    x560_tukey_hsd,
-    x561_cucconi_test,
-    x564_spiegelhalter_z,
-    x574_anderson_darling_2s,
-    x580_ipw_stratified_ate,
-    x581_mantel_test,
-    x582_tetrachoric,
-)
+for _wave in _WAVES:
+    import_module(f"{__name__}.{_wave}")
+del _wave
 
-from .timeseries import (  # noqa: F401
-    x544_permutation_entropy,
-    x546_yule_walker_pacf,
-    x549_newey_west,
-    x550_dickey_fuller,
-    x551_granger_causality,
-    x554_moran_geary,
-    x555_sample_entropy,
-    x556_grubbs_outlier,
-    x558_spectral_summary,
-    x566_arch_lm,
-    x567_christoffersen,
-    x568_kpss_test,
-    x571_bartels_rvn,
-    x572_record_counts,
-    x573_pettitt_test,
-    x576_seasonal_mann_kendall,
-    x579_foster_stuart,
-    x583_holt_winters_weekly,
-)
+
+def __getattr__(name: str):
+    for wave in _WAVES:
+        module = import_module(f"{__name__}.{wave}")
+        if name in vars(module):
+            return vars(module)[name]
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -1,0 +1,72 @@
+"""Registry plumbing: the extension package resolves names through
+``_WAVES`` instead of a re-export list, so these checks pin what that
+list used to guarantee by hand. No Spark session is needed.
+"""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+from poc_parquet_publisher_spark.queries import (
+    REGISTRY,
+    _WINDOW_FIRST,
+    all_queries,
+    extensions,
+)
+
+pytestmark = pytest.mark.smoke
+
+all_queries()
+EXT_PREFIX = extensions.__name__ + "."
+
+
+def _extension_specs():
+    return [
+        s for s in REGISTRY.values()
+        if s.spark.__module__.startswith(EXT_PREFIX)
+    ]
+
+
+def test_every_extension_builder_resolves_on_the_package():
+    specs = _extension_specs()
+    assert len(specs) == sum(n.startswith("x") for n in REGISTRY)
+    for spec in specs:
+        fn = spec.spark
+        assert getattr(extensions, fn.__name__) is fn, spec.name
+
+
+def test_waves_cover_every_wave_file():
+    # A wave file missing from _WAVES would never be imported, so its
+    # @register entries would silently vanish from the registry.
+    files = {
+        f.removesuffix(".py")
+        for f in os.listdir(os.path.dirname(extensions.__file__))
+        if f.endswith(".py") and f != "__init__.py"
+    }
+    assert len(extensions._WAVES) == len(set(extensions._WAVES))
+    assert set(extensions._WAVES) == files
+
+
+@pytest.mark.parametrize("group", ["oracle", "rows_only"])
+def test_rotated_groups_keep_wave_order(group):
+    # Registration order is _WAVES order; the window rotation keeps it
+    # inside the oracle-backed and rows-only extension groups.
+    specs = [
+        s for s in _extension_specs()
+        if s.name not in _WINDOW_FIRST
+        and (s.oracle is None) == (group == "rows_only")
+    ]
+    ranks = [
+        extensions._WAVES.index(s.spark.__module__.removeprefix(EXT_PREFIX))
+        for s in specs
+    ]
+    assert specs
+    assert ranks == sorted(ranks)
+
+
+def test_unknown_name_raises_attribute_error():
+    with pytest.raises(AttributeError, match="x000_no_such_entry"):
+        extensions.x000_no_such_entry
+    assert not hasattr(extensions, "x000_no_such_entry")
