@@ -25,6 +25,7 @@ import json
 import os
 import re
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -147,45 +148,7 @@ def main() -> None:
             sys.exit(f"BENCH_ONLY names not in registry: {unknown}")
         queries = {n: queries[n] for n in only}
 
-    # Warm the JVM/session so q01 doesn't absorb the startup cost.
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    # Warm the Python worker pool the same way: spawn all workers and
-    # pre-import the Arrow-UDF dependencies, so the FIRST pandas-UDF
-    # query isn't charged ~30 process spawns + numpy/pandas imports
-    # (measured ~4 s at local[32] -- that cost is process startup, not
-    # engine cost, exactly like the JVM warmup above).
-    def _warm_workers(it):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-
-        yield from it
-
-    spark.range(256, numPartitions=int(spark.sparkContext.defaultParallelism)) \
-        .mapInPandas(_warm_workers, "id long").count()
-
-    # Warm the parquet datasource and streaming machinery the same way
-    # (class loading + codec init are session costs, not query costs):
-    # a 10-row parquet round-trip and a one-batch memory-sink drain over
-    # a temp table that shares NOTHING with the bench tables -- no bench
-    # data is touched, so per-query timings still include their own IO.
-    import tempfile as _tf
-
-    with _tf.TemporaryDirectory() as _wtmp:
-        spark.range(10).write.mode("overwrite").parquet(f"{_wtmp}/w.parquet")
-        warm_df = spark.read.parquet(f"{_wtmp}/w.parquet")
-        warm_df.count()
-        (
-            spark.readStream.schema(warm_df.schema)
-            .parquet(f"{_wtmp}/w.parquet")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("__warm_stream")
-            .option("checkpointLocation", f"{_wtmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination(120)
-        )
+    warm_up(spark)
 
     calibration = calibration_block(spark)
     print(f"# calibration: {json.dumps(calibration)}", file=sys.stderr)
@@ -229,8 +192,6 @@ def main() -> None:
     # Pipeline throughput (BASELINE.md "read -> to_json -> sink"): full
     # publish path against a success-returning client, so the number is
     # engine cost (scan + serialize + chunk), not fake-queue filesystem IO.
-    import tempfile
-
     from poc_parquet_publisher_spark.catalog import table_path
     from poc_parquet_publisher_spark.pipeline import publish
 
@@ -323,6 +284,48 @@ def main() -> None:
     spark.stop()
 
 
+def warm_up(spark) -> None:
+    """Pay the session's one-time start-up costs before anything is
+    timed (shared by bench.py and scripts/profile_entry.py)."""
+    # Warm the JVM/session so q01 doesn't absorb the startup cost.
+    spark.range(1000).selectExpr("sum(id)").collect()
+
+    # Warm the Python worker pool the same way: spawn all workers and
+    # pre-import the Arrow-UDF dependencies, so the FIRST pandas-UDF
+    # query isn't charged ~30 process spawns + numpy/pandas imports
+    # (measured ~4 s at local[32] -- that cost is process startup, not
+    # engine cost, exactly like the JVM warmup above).
+    def _warm_workers(it):
+        import numpy  # noqa: F401
+        import pandas  # noqa: F401
+
+        yield from it
+
+    spark.range(256, numPartitions=int(spark.sparkContext.defaultParallelism)) \
+        .mapInPandas(_warm_workers, "id long").count()
+
+    # Warm the parquet datasource and streaming machinery the same way
+    # (class loading + codec init are session costs, not query costs):
+    # a 10-row parquet round-trip and a one-batch memory-sink drain over
+    # a temp table that shares NOTHING with the bench tables -- no bench
+    # data is touched, so per-query timings still include their own IO.
+    with tempfile.TemporaryDirectory() as _wtmp:
+        spark.range(10).write.mode("overwrite").parquet(f"{_wtmp}/w.parquet")
+        warm_df = spark.read.parquet(f"{_wtmp}/w.parquet")
+        warm_df.count()
+        (
+            spark.readStream.schema(warm_df.schema)
+            .parquet(f"{_wtmp}/w.parquet")
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName("__warm_stream")
+            .option("checkpointLocation", f"{_wtmp}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination(120)
+        )
+
+
 def _write_result(
     timings: dict, sf, calibration: dict | None = None, merge: bool = False
 ) -> None:
@@ -382,8 +385,6 @@ def medians(n_runs: int = 3) -> None:
     committed ledgers come from the same session."""
     import statistics
     import subprocess
-    import tempfile
-
     here = os.path.dirname(os.path.abspath(__file__))
     runs: list[dict] = []
     with tempfile.TemporaryDirectory() as tmp:

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..scale import rebalanced
 from . import dedup, sampling, text
 
 
@@ -45,7 +46,7 @@ def curate(
     # task (measured 3.6 s -> 1.4 s at sf0.1 rebalanced). No-op at real
     # scale where splits already outnumber cores.
     scrubbed = text.scrub(
-        dedup._rebalanced(docs), id_col, text_col
+        rebalanced(docs), id_col, text_col
     ).withColumnRenamed("scrubbed", text_col)
 
     # quality + language gates are row-local expressions: compute them

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..scale import pairs_within, rebalanced
 from .text import _toks
 
 
@@ -64,19 +65,6 @@ def fingerprint_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _rebalanced(df: DataFrame) -> DataFrame:
-    """Spread a narrow input across the executor budget.
-
-    Compute-heavy per-row operators (shingling, hashing) on a small or
-    single-split file otherwise run in ONE task; at real scale the input
-    already has more splits than cores and this is a no-op.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
 def shingle_arrays(
     df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
@@ -85,7 +73,7 @@ def shingle_arrays(
     exploded postings (``shingles``) and the minhash signatures
     (``minhash_banded_pairs``), which fold over the array without
     exploding it."""
-    toks_df = _rebalanced(df).select(
+    toks_df = rebalanced(df).select(
         F.col(id_col).alias("doc"), _toks(text_col).alias("toks")
     )
     toks = F.col("toks")
@@ -188,17 +176,7 @@ def shingle_pair_counts(
         y["n_sh"].alias("n_b"),
     )
     pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    ds,
-                    lambda x, i: F.transform(
-                        F.slice(ds, i + F.lit(2), F.size(ds)),
-                        lambda y: pair(x, y),
-                    ),
-                )
-            )
-        ).alias("p")
+        F.explode(pairs_within(ds, pair)).alias("p")
     ).select("p.*")
     return pairs.groupBy("id_a", "id_b", "n_a", "n_b").agg(
         F.count(F.lit(1)).alias("inter")
@@ -273,7 +251,7 @@ def minhash_lsh_pairs(
     """
     from pyspark.ml.feature import HashingTF, MinHashLSH, NGram, Tokenizer
 
-    docs = _rebalanced(df).select(
+    docs = rebalanced(df).select(
         F.col(id_col).alias("mh_id"), F.col(text_col).alias("mh_text")
     )
     tok = Tokenizer(inputCol="mh_text", outputCol="mh_toks")
@@ -366,7 +344,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     view = "__simhash_input"
     # rebalance the (possibly single-split) input so the token explode
     # + 64 bit-contribution sums run on the core budget, not one task
-    _rebalanced(
+    rebalanced(
         df.select(
             F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
         )
@@ -688,16 +666,8 @@ def _banded_pairs_from_arrays(
     ds = F.array_sort(F.col("ds"))
     pairs = buckets.select(
         F.explode(
-            F.flatten(
-                F.transform(
-                    ds,
-                    lambda x, i: F.transform(
-                        F.slice(ds, i + F.lit(2), F.size(ds)),
-                        lambda y: F.struct(
-                            x.alias("id_a"), y.alias("id_b")
-                        ),
-                    ),
-                )
+            pairs_within(
+                ds, lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b"))
             )
         ).alias("p")
     ).select("p.*")
@@ -885,7 +855,7 @@ def duplicate_spans(
     O(total_tokens * k), the same family as the shingle-blocked passes.
     The reference has no dedup surface at all (SURVEY.md section 2.4).
     """
-    toks_df = _rebalanced(df).select(
+    toks_df = rebalanced(df).select(
         F.col(id_col).alias("doc"), _toks(text_col).alias("toks")
     )
     base = toks_df.select("doc", F.size("toks").alias("n_tokens"))
@@ -1182,16 +1152,11 @@ def source_shingle_overlap(
         .select(
             "n",
             F.explode(
-                F.flatten(
-                    F.transform(
-                        sr,
-                        lambda x, i: F.transform(
-                            F.slice(sr, i + F.lit(2), F.size(sr)),
-                            lambda y: F.struct(
-                                x.alias("src_a"), y.alias("src_b")
-                            ),
-                        ),
-                    )
+                pairs_within(
+                    sr,
+                    lambda x, y: F.struct(
+                        x.alias("src_a"), y.alias("src_b")
+                    ),
                 )
             ).alias("p"),
         )

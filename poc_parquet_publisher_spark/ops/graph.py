@@ -21,12 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..scale import pairs_within
 
-def symmetric_copurchase_edges(lineitem: DataFrame) -> DataFrame:
-    """Distinct symmetric co-purchase edges (u, v): parts appearing in
-    the same order, both directions. Pairs expand inside each order's
-    sorted item array (x76's HOF shape, ~|order|^2 with tiny orders --
-    never a corpus self-join), distinct-ed, then mirrored."""
+
+def _copurchase_pairs(lineitem: DataFrame) -> DataFrame:
+    """(u, v) with u < v for every two distinct parts in one order, one
+    row per order holding both. Pairs expand inside each order's sorted
+    item array (x76's HOF shape, ~|order|^2 with tiny orders -- never a
+    corpus self-join)."""
     # no pre-distinct: collect_set dedupes (order, part) for free inside
     # the one groupBy shuffle, where an explicit .distinct() would add a
     # second full-table exchange
@@ -34,24 +36,22 @@ def symmetric_copurchase_edges(lineitem: DataFrame) -> DataFrame:
     buckets = items.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("parts")
     )
-    ps = F.col("parts")
+    return buckets.select(
+        F.explode(
+            pairs_within(
+                F.col("parts"),
+                lambda x, y: F.struct(x.alias("u"), y.alias("v")),
+            )
+        ).alias("p")
+    ).select("p.*")
+
+
+def symmetric_copurchase_edges(lineitem: DataFrame) -> DataFrame:
+    """Distinct symmetric co-purchase edges (u, v): parts appearing in
+    the same order, both directions -- the in-order pairs, distinct-ed,
+    then mirrored."""
     pairs = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        ps,
-                        lambda x, i: F.transform(
-                            F.slice(ps, i + F.lit(2), F.size(ps)),
-                            lambda y: F.struct(
-                                x.alias("u"), y.alias("v")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.*")
+        _copurchase_pairs(lineitem)
         .distinct()
         # materialize the HALF-size asymmetric pair set once; the
         # symmetric view below is two scans of this cache, so nothing
@@ -59,6 +59,23 @@ def symmetric_copurchase_edges(lineitem: DataFrame) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     return pairs.union(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+
+def support2_edges(lineitem: DataFrame) -> DataFrame:
+    """Support>=2 co-purchase edges (u, v), u < v: part pairs that share
+    at least two orders -- the pruned graph x210's triangles, x243's
+    k-core and the x359-x361 family run on. One direction only. Lazily
+    checkpointed: the first action materializes it, and every later
+    plan over the returned frame reads the checkpoint. Each call derives
+    it anew; callers that share one across entries cache it."""
+    return (
+        _copurchase_pairs(lineitem)
+        .groupBy("u", "v")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= 2)
+        .select("u", "v")
+        .localCheckpoint(eager=False)
+    )
 
 
 def copurchase_edge_table_name(sf_dir: str) -> str:

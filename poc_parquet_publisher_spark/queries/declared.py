@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..ops.text import _toks
 from . import register
 
 
@@ -941,9 +942,7 @@ def q33_array_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     toks = F.col("toks")
     return (
-        docs.select(
-            "doc_id", F.split(F.lower("text"), " ").alias("toks")
-        )
+        docs.select("doc_id", _toks("text").alias("toks"))
         .select(
             "doc_id",
             F.size(F.filter(toks, lambda t: F.length(t) > 4))

@@ -12,8 +12,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ...catalog import load_table
-from ...scale import zorder_key_sql
+from ...scale import pairs_within, zorder_key_sql
 from ...ops import dedup, graph, sampling, similarity, text
+from ...ops.text import _toks
 from .. import register
 
 @register(
@@ -797,7 +798,7 @@ def x163_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.explode(F.split(F.lower("text"), " ")).alias("t"),
+        F.explode(_toks("text")).alias("t"),
     ).filter(F.length("t") > 0)
     idx = F.pmod(
         F.conv(F.substring(F.md5("t"), 1, 4), 16, 10).cast("long"),
@@ -915,16 +916,11 @@ def x165_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         u.select(
             F.explode(
-                F.flatten(
-                    F.transform(
-                        ts,
-                        lambda x, i: F.transform(
-                            F.slice(ts, i + F.lit(2), F.size(ts)),
-                            lambda y: F.struct(
-                                x.alias("type_a"), y.alias("type_b")
-                            ),
-                        ),
-                    )
+                pairs_within(
+                    ts,
+                    lambda x, y: F.struct(
+                        x.alias("type_a"), y.alias("type_b")
+                    ),
                 )
             ).alias("p")
         )
@@ -1734,7 +1730,7 @@ def x178_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
         docs.select(
             "doc_id",
-            F.explode(F.split(F.lower("text"), " ")).alias("t"),
+            F.explode(_toks("text")).alias("t"),
         )
         .filter(F.length("t") > 0)
         .distinct()
@@ -1753,16 +1749,9 @@ def x178_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         u.select(
             F.explode(
-                F.flatten(
-                    F.transform(
-                        ts,
-                        lambda x, i: F.transform(
-                            F.slice(ts, i + F.lit(2), F.size(ts)),
-                            lambda y: F.struct(
-                                x.alias("tok_a"), y.alias("tok_b")
-                            ),
-                        ),
-                    )
+                pairs_within(
+                    ts,
+                    lambda x, y: F.struct(x.alias("tok_a"), y.alias("tok_b")),
                 )
             ).alias("p")
         )
@@ -2883,9 +2872,7 @@ def x194_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x195_token_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    tk = docs.select(
-        "doc_id", F.split(F.lower("text"), " ").alias("toks")
-    )
+    tk = docs.select("doc_id", _toks("text").alias("toks"))
     e = tk.select(
         "doc_id",
         F.size("toks").cast("long").alias("n_toks"),
@@ -3813,36 +3800,7 @@ def x209_topk_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "broadcast-side",
 )
 def x210_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    buckets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-    )
-    ps = F.col("parts")
-    e = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        ps,
-                        lambda x, i: F.transform(
-                            F.slice(ps, i + F.lit(2), F.size(ps)),
-                            lambda y: F.struct(
-                                x.alias("u"), y.alias("v")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.*")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=False)
-    )
+    e = graph.support2_edges(load_table(spark, sf_dir, "lineitem"))
     e2 = e.select(F.col("u").alias("b2"), F.col("v").alias("c2"))
     e3 = e.select(F.col("u").alias("a3"), F.col("v").alias("c3"))
     tri = (
@@ -4190,7 +4148,7 @@ def x215_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        "lang", F.explode(F.split(F.lower("text"), " ")).alias("t")
+        "lang", F.explode(_toks("text")).alias("t")
     ).filter(F.length("t") > 0)
     c = tok.groupBy("lang", "t").agg(
         F.count(F.lit(1)).cast("long").alias("c")
@@ -5215,7 +5173,7 @@ def x230_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tk = docs.select(
         "doc_id",
         is_train.alias("is_train"),
-        F.split(F.lower("text"), " ").alias("toks"),
+        _toks("text").alias("toks"),
     )
     big = tk.select(
         "is_train",
@@ -6025,36 +5983,7 @@ def x242_map_hofs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "unrolled CTEs (x104's contract)",
 )
 def x243_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    buckets = (
-        li.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-    )
-    ps = F.col("parts")
-    e = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        ps,
-                        lambda x, i: F.transform(
-                            F.slice(ps, i + F.lit(2), F.size(ps)),
-                            lambda y: F.struct(
-                                x.alias("u"), y.alias("v")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("pr")
-        )
-        .select("pr.*")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=False)
-    )
+    e = graph.support2_edges(load_table(spark, sf_dir, "lineitem"))
     out_rows = []
     for rnd in range(1, 5):
         deg = (

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ...catalog import load_table
 from ...scale import global_row_number
 from .. import register
+from .diagnostics import _daily_revenue
 
 
 _X542_ORACLE = """
@@ -86,13 +87,7 @@ FROM m, hl
 )
 def x542_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     is_wk = F.dayofweek("day").isin(1, 7)
     wk = daily.filter(is_wk).select(
         F.col("day").alias("wk_day"), F.col("y").alias("wk_y")
@@ -696,13 +691,7 @@ def x548_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     wk = daily.select(
         F.date_trunc("week", F.col("day")).cast("date").alias("week"),
         F.expr("weekday(day)").cast("long").alias("wd"),
@@ -1832,13 +1821,7 @@ def x574_anderson_darling_2s(
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    ).select(
+    daily = _daily_revenue(orders).select(
         "day",
         "y",
         F.when(F.dayofweek("day").isin(1, 7), 1).otherwise(2).alias(
@@ -2194,13 +2177,7 @@ FROM nn, r
 )
 def x581_mantel_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     a = daily.select(F.col("day").alias("da"), F.col("y").alias("ya"))
     b = daily.select(F.col("day").alias("db"), F.col("y").alias("yb"))
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731

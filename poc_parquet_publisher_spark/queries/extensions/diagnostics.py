@@ -19,7 +19,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ...catalog import load_table
+from ...scale import pairs_within, rebalanced
+from ...ops.text import _toks
 from .. import register
+
+
+def _daily_revenue(orders: DataFrame) -> DataFrame:
+    """(day, y): revenue per order date in exact integer cents -- each
+    price floored to cents before the sum, so the cross-row sum is an
+    exact BIGINT on both engines (the oracles' ``daily`` CTE)."""
+    return orders.groupBy(
+        F.col("o_orderdate").cast("date").alias("day")
+    ).agg(
+        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
+        .cast("long")
+        .alias("y")
+    )
 
 
 _X472_ORACLE = """
@@ -422,16 +437,14 @@ ORDER BY doc_a, doc_b
 def x474_weighted_jaccard(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ...ops.dedup import _rebalanced
-
     docs = load_table(spark, sf_dir, "documents")
     # Token array bound in its own projection, trigram ARRAY bound in
     # the next, explode_outer last (the ops.dedup.shingles recipe):
     # an inlined split() re-tokenizes the document once per trigram
     # position (measured 8.9 s -> 0.6 s at sf0.1 for 260k trigrams).
-    t = _rebalanced(docs).select(
+    t = rebalanced(docs).select(
         F.col("doc_id").alias("doc"),
-        F.split(F.lower("text"), " ").alias("toks"),
+        _toks("text").alias("toks"),
     ).filter(F.size("toks") >= 3)
     toks = F.col("toks")
     tri_arr = t.select(
@@ -473,17 +486,7 @@ def x474_weighted_jaccard(
     )
     p = (
         buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        ds,
-                        lambda x, i: F.transform(
-                            F.slice(ds, i + F.lit(2), F.size(ds)),
-                            lambda y: pair(x, y),
-                        ),
-                    )
-                )
-            ).alias("p")
+            F.explode(pairs_within(ds, pair)).alias("p")
         )
         .select("p.*")
         .groupBy("doc_a", "doc_b", "t_a", "t_b")
@@ -1456,9 +1459,7 @@ def x481_cochrans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bound arrays (HOF-lambda CSE trap on the top-token transform:
     # the inlined split re-tokenizes once per distinct token -- see
     # ops/dedup.py shingles())
-    t = docs.select(
-        "text", F.split(F.lower(F.col("text")), " ").alias("__toks")
-    ).select(
+    t = docs.select("text", _toks("text").alias("__toks")).select(
         "text", "__toks", F.array_distinct("__toks").alias("__dtoks")
     )
     toks = F.col("__toks")
@@ -2348,13 +2349,7 @@ def x488_turning_point_test(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     b = daily.select(F.col("day").alias("db"), F.col("y").alias("yc"))
     a = daily.select(F.col("day").alias("da"), F.col("y").alias("yl"))
     cc = daily.select(F.col("day").alias("dc"), F.col("y").alias("yr"))
@@ -2564,13 +2559,7 @@ def x491_kupiec_coverage(
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     cal = daily.filter(F.col("day") < F.lit("1999-01-01").cast("date"))
     tst = daily.filter(
         F.col("day") >= F.lit("1999-01-01").cast("date")
@@ -2964,13 +2953,7 @@ def x493_crps_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     cal = daily.filter(
         F.col("day") < F.lit("1999-01-01").cast("date")
     ).select("y")
@@ -3676,7 +3659,7 @@ def x499_prefix_cache_curve(
     depths = spark.range(0, 4).select(
         F.expr("shiftleft(4, cast(id as int))").alias("d")
     )
-    t = docs.select(F.split(F.lower("text"), " ").alias("toks"))
+    t = docs.select(_toks("text").alias("toks"))
     p = (
         t.crossJoin(F.broadcast(depths))
         .filter(F.size("toks") >= F.col("d"))
@@ -4183,7 +4166,7 @@ def x502_cascade_token_yield(
     s0 = docs.select(
         "doc_id",
         "text",
-        F.size(F.split(F.lower("text"), " ")).cast("long").alias("tok"),
+        F.size(_toks("text")).cast("long").alias("tok"),
     )
     e = s0.groupBy(F.md5(F.lower("text")).alias("h")).agg(
         F.min("doc_id").alias("keep_id")
@@ -4194,9 +4177,7 @@ def x502_cascade_token_yield(
     f = s1.groupBy(
         F.md5(
             F.array_join(
-                F.array_sort(
-                    F.array_distinct(F.split(F.lower("text"), " "))
-                ),
+                F.array_sort(F.array_distinct(_toks("text"))),
                 " ",
             )
         ).alias("fp")
@@ -4316,9 +4297,7 @@ def x503_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         docs.select(
             "source",
-            F.size(F.split(F.lower(F.col("text")), " "))
-            .cast("long")
-            .alias("tok"),
+            F.size(_toks("text")).cast("long").alias("tok"),
         )
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -5114,13 +5093,7 @@ def x510_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     tot = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.col("y").cast("decimal(38,0)"))
@@ -5256,13 +5229,7 @@ FROM v
 )
 def x511_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    ).localCheckpoint(eager=False)
+    daily = _daily_revenue(orders).localCheckpoint(eager=False)
 
     def diffs(k: int):
         a = daily.select(F.col("day").alias("da"), F.col("y").alias("ya"))
@@ -5410,13 +5377,7 @@ def x512_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     idx = daily.select(
         "day",
         "y",
@@ -6599,13 +6560,7 @@ FROM ssrall sa
 )
 def x519_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     anchor = daily.agg(F.min("day").alias("d0"))
     ty = daily.crossJoin(F.broadcast(anchor)).select(
         F.datediff(F.col("day"), F.col("d0")).cast("long").alias("t"),
@@ -7167,9 +7122,7 @@ def x523_waterfill_budget(
 
     docs = load_table(spark, sf_dir, "documents")
     s = docs.groupBy("source").agg(
-        F.sum(F.size(F.split(F.lower(F.col("text")), " ")))
-        .cast("long")
-        .alias("sup")
+        F.sum(F.size(_toks("text"))).cast("long").alias("sup")
     )
     tot = s.agg(
         F.sum("sup").cast("long").alias("t"),
@@ -7420,9 +7373,7 @@ def x525_mood_median_test(
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "source",
-        F.size(F.split(F.lower(F.col("text")), " "))
-        .cast("long")
-        .alias("tok"),
+        F.size(_toks("text")).cast("long").alias("tok"),
     ).localCheckpoint(eager=False)
     n = d.agg(F.count(F.lit(1)).cast("long").alias("n"))
     cum = (
@@ -7706,13 +7657,7 @@ def x527_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    ).localCheckpoint(eager=False)
+    daily = _daily_revenue(orders).localCheckpoint(eager=False)
     n = daily.agg(F.count(F.lit(1)).cast("long").alias("n"))
     dom = n.select(
         "n",
@@ -7862,13 +7807,7 @@ def x528_cusum_squares(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     sq = daily.select(
         "day",
         (F.col("y").cast("decimal(38,0)") * F.col("y")).alias("y2"),
@@ -8160,13 +8099,7 @@ def x530_periodogram_scan(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     anchor = daily.agg(F.min("day").alias("d0"))
     tot = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -8303,9 +8236,7 @@ def x531_neyman_allocation(
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "source",
-        F.size(F.split(F.lower(F.col("text")), " "))
-        .cast("long")
-        .alias("tok"),
+        F.size(_toks("text")).cast("long").alias("tok"),
     )
     tokd = F.col("tok").cast("decimal(38,0)")
     g = d.groupBy("source").agg(
@@ -8487,9 +8418,7 @@ def x533_chunk_boundary_loss(
     cells = (
         docs.select(
             "source",
-            F.size(F.split(F.lower(F.col("text")), " "))
-            .cast("long")
-            .alias("tok"),
+            F.size(_toks("text")).cast("long").alias("tok"),
         )
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -8574,7 +8503,7 @@ def x534_positional_density(
     from ...ops.text import LANG_STOPWORDS
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.col("text")), " ")
+    toks = _toks("text")
     pos = (
         docs.filter(F.size(toks) >= 4)
         .select(
@@ -8903,7 +8832,7 @@ def x536_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = (
         docs.select(
             "doc_id",
-            F.explode(F.split(F.lower(F.col("text")), " ")).alias("w"),
+            F.explode(_toks("text")).alias("w"),
         )
         .filter(F.col("w").isin(*BM25_QUERY_TERMS))
         .groupBy("doc_id")
@@ -9100,13 +9029,7 @@ def x538_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     idx = daily.select(
         "y",
         (F.row_number().over(Window.orderBy("day")) - 1)

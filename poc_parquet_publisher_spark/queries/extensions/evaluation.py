@@ -12,8 +12,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ...catalog import load_table
-from ...scale import zorder_key_sql
+from ...scale import rebalanced, zorder_key_sql
 from ...ops import dedup, graph, sampling, similarity, text
+from ...ops.text import _toks
 from .. import register
 from .foundations import _STOP_EN
 from .semantics import _word_cooccurrence_edges
@@ -80,9 +81,7 @@ FROM g ORDER BY g2 DESC, tok_a, tok_b LIMIT 20
 )
 def x332_loglik_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    ts = F.filter(
-        F.split(F.lower("text"), " "), lambda t: t.rlike("^[a-z]+$")
-    )
+    ts = F.filter(_toks("text"), lambda t: t.rlike("^[a-z]+$"))
     bg = (
         docs.select(ts.alias("ts"))
         .select(
@@ -394,7 +393,7 @@ FROM s2
 def x335_stem_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        F.explode(F.split(F.lower("text"), " ")).alias("t")
+        F.explode(_toks("text")).alias("t")
     ).filter(F.col("t").rlike("^[a-z]+$"))
     t = F.col("t")
     p = (
@@ -598,9 +597,7 @@ FROM grams GROUP BY n ORDER BY n
 )
 def x337_distinct_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    ts = F.filter(
-        F.split(F.lower("text"), " "), lambda t: F.length(t) > 0
-    )
+    ts = F.filter(_toks("text"), lambda t: F.length(t) > 0)
     base = docs.select(ts.alias("ts"))
 
     def grams(n):
@@ -1168,9 +1165,7 @@ def x342_lm_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     srcs = ["src0", "src1", "src2", "src3", "src4"]
     tok = (
         docs.filter(F.col("source").isin(srcs))
-        .select(
-            "source", F.explode(F.split(F.lower("text"), " ")).alias("t")
-        )
+        .select("source", F.explode(_toks("text")).alias("t"))
         .filter(F.length("t") > 0)
     )
     cnt = tok.groupBy("source", "t").agg(
@@ -3085,36 +3080,7 @@ def _support2_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     e = _SUPPORT2_CACHE.get(key)
     if e is None:
-        li = load_table(spark, sf_dir, "lineitem")
-        buckets = (
-            li.select("l_orderkey", "l_partkey")
-            .groupBy("l_orderkey")
-            .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-        )
-        ps = F.col("parts")
-        e = (
-            buckets.select(
-                F.explode(
-                    F.flatten(
-                        F.transform(
-                            ps,
-                            lambda x, i: F.transform(
-                                F.slice(ps, i + F.lit(2), F.size(ps)),
-                                lambda y: F.struct(
-                                    x.alias("u"), y.alias("v")
-                                ),
-                            ),
-                        )
-                    )
-                ).alias("p")
-            )
-            .select("p.*")
-            .groupBy("u", "v")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") >= 2)
-            .select("u", "v")
-            .localCheckpoint(eager=False)
-        )
+        e = graph.support2_edges(load_table(spark, sf_dir, "lineitem"))
         _SUPPORT2_CACHE[key] = e
     return e
 
@@ -3833,14 +3799,12 @@ ORDER BY dim"""
 def x364_pca_power_iteration(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ...ops.dedup import _rebalanced
-
     emb = load_table(spark, sf_dir, "embeddings")
     # rebalance the single-split embeddings scan BEFORE the checkpoint:
     # the checkpointed (vec_id, i, q) frame otherwise pins ONE partition
     # and the |dims|^2 self-join expansion below it runs in one task
     # (measured 2.8 s single-task CPU at sf0.1; no-op at real scale)
-    ex = _rebalanced(emb).select(
+    ex = rebalanced(emb).select(
         "vec_id",
         F.posexplode(
             F.transform(
@@ -5822,7 +5786,7 @@ def x377_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "lang",
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("w"),
+        F.explode(_toks("text")).alias("w"),
     ).localCheckpoint(eager=False)
     lm = tok.groupBy("w").agg(
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
@@ -6136,7 +6100,7 @@ def x379_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source",
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("w"),
+        F.explode(_toks("text")).alias("w"),
     ).localCheckpoint(eager=False)
     topw = (
         tok.groupBy("w")
@@ -6286,11 +6250,7 @@ def x380_bcubed_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.md5(
             F.array_join(
-                F.array_sort(
-                    F.array_distinct(
-                        F.split(F.lower(F.col("text")), " ")
-                    )
-                ),
+                F.array_sort(F.array_distinct(_toks("text"))),
                 " ",
             )
         ).alias("c"),

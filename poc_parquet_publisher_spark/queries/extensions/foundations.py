@@ -12,8 +12,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ...catalog import load_table
-from ...scale import zorder_key_sql
+from ...scale import pairs_within, zorder_key_sql
 from ...ops import dedup, graph, sampling, similarity, text
+from ...ops.text import _toks
 from .. import register
 
 _STOP_EN = ", ".join(f"'{w}'" for w in text.LANG_STOPWORDS["en"])
@@ -715,9 +716,7 @@ def x33_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_toks = docs.select(
         "doc_id",
         "lang",
-        F.size(F.split(F.lower(F.col("text")), " "))
-        .cast("long")
-        .alias("n_toks"),
+        F.size(_toks("text")).cast("long").alias("n_toks"),
     )
     return (
         sampling.token_budget_sample(
@@ -889,9 +888,7 @@ def x32_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     with_toks = docs.select(
         "doc_id",
-        F.size(F.split(F.lower(F.col("text")), " "))
-        .cast("long")
-        .alias("n_toks"),
+        F.size(_toks("text")).cast("long").alias("n_toks"),
     )
     return packing.pack_sequences(
         with_toks, "doc_id", "n_toks", budget=512, n_buckets=16
@@ -1868,9 +1865,7 @@ def x67_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(F.split(F.lower(F.col("text")), " "))
-        ).alias("term"),
+        F.explode(F.array_distinct(_toks("text"))).alias("term"),
     )
     idx = tok.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("df"),
@@ -1977,7 +1972,7 @@ def x68_dupgraph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x69_lang_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.col("text")), " ")
+    toks = _toks("text")
     scores = [
         F.size(F.filter(toks, lambda t: t.isin(*words))).cast("long")
         for words in text.LANG_STOPWORDS.values()
@@ -2342,16 +2337,9 @@ def x76_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = F.col("parts")
     pairs = buckets.select(
         F.explode(
-            F.flatten(
-                F.transform(
-                    ps,
-                    lambda x, i: F.transform(
-                        F.slice(ps, i + F.lit(2), F.size(ps)),
-                        lambda y: F.struct(
-                            x.alias("part_a"), y.alias("part_b")
-                        ),
-                    ),
-                )
+            pairs_within(
+                ps,
+                lambda x, y: F.struct(x.alias("part_a"), y.alias("part_b")),
             )
         ).alias("p")
     ).select("p.*")
@@ -2816,9 +2804,7 @@ def x86_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     terms = docs.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(F.split(F.lower(F.col("text")), " "))
-        ).alias("term"),
+        F.explode(F.array_distinct(_toks("text"))).alias("term"),
     )
     first_seen = terms.groupBy("term").agg(
         F.min("doc_id").alias("first_doc")
@@ -2855,9 +2841,7 @@ def x86_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x87_frequency_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     c = (
-        docs.select(
-            F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
-        )
+        docs.select(F.explode(_toks("text")).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -2906,7 +2890,7 @@ def x87_frequency_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x88_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
-        F.split(F.lower(F.col("text")), " ").alias("__toks")
+        _toks("text").alias("__toks")
     ).filter(F.size("__toks") >= 2)
     toks = F.col("__toks")
     bg = t.select(
@@ -4116,7 +4100,7 @@ def x118_salted_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x119_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.col("text")), " ")
+    toks = _toks("text")
     stop = F.size(
         F.filter(toks, lambda t: t.isin(*text.LANG_STOPWORDS["en"]))
     )
@@ -4352,7 +4336,7 @@ def x121_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x122_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    n = F.size(F.split(F.lower(F.col("text")), " "))
+    n = F.size(_toks("text"))
     b = docs.select(
         n.alias("n_toks"),
         (F.floor(n / 32) * 32).cast("long").alias("bucket"),
@@ -4700,7 +4684,7 @@ def x126_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x127_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
-        "source", F.split(F.lower(F.col("text")), " ").alias("__toks")
+        "source", _toks("text").alias("__toks")
     ).filter(F.size("__toks") >= 3)
     toks = F.col("__toks")
     tri = F.transform(
@@ -5007,7 +4991,7 @@ def x132_idf_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise("B")
     d = docs.select(
         half.alias("half"),
-        F.array_distinct(F.split(F.lower(F.col("text")), " ")).alias("terms"),
+        F.array_distinct(_toks("text")).alias("terms"),
     )
     n = d.groupBy().agg(
         F.sum((F.col("half") == "A").cast("long")).alias("n_a"),
@@ -5068,9 +5052,7 @@ def x132_idf_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x133_prefix_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     fp = F.md5(
-        F.concat_ws(
-            " ", F.slice(F.split(F.lower(F.col("text")), " "), 1, 8)
-        )
+        F.concat_ws(" ", F.slice(_toks("text"), 1, 8))
     )
     return (
         docs.select("doc_id", "source", fp.alias("fp"))
@@ -5284,7 +5266,7 @@ def x136_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     tc = (
         docs.select(
             "source",
-            F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok"),
+            F.explode(_toks("text")).alias("tok"),
         )
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -6388,9 +6370,7 @@ def x578_dedup_gain_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = dedup.duplicate_clusters(pairs)
     toks = docs.select(
         "doc_id",
-        F.size(F.split(F.lower(F.col("text")), " "))
-        .cast("long")
-        .alias("n_toks"),
+        F.size(_toks("text")).cast("long").alias("n_toks"),
     )
     clus = (
         comp.join(toks, comp["node"] == toks["doc_id"])

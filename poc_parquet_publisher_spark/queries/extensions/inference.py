@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ...catalog import load_table
+from ...scale import rebalanced
+from ...ops.text import _toks
 from .. import register
 
 
@@ -1067,7 +1069,7 @@ def x436_theil_decomposition(
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "source",
-        F.size(F.split(F.lower("text"), " ")).cast("long").alias("x"),
+        F.size(_toks("text")).cast("long").alias("x"),
     ).localCheckpoint(eager=False)
     tot = d.agg(
         F.count(F.lit(1)).cast("long").alias("nn"),
@@ -1189,9 +1191,7 @@ FROM spec ORDER BY lang
 )
 def x437_yule_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "lang", F.explode(F.split(F.lower("text"), " ")).alias("w")
-    )
+    tok = docs.select("lang", F.explode(_toks("text")).alias("w"))
     f = tok.groupBy("lang", "w").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
@@ -1775,7 +1775,7 @@ def x442_kfold_paired_ttest(
     from ...ops import text
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.col("text")), " ")
+    toks = _toks("text")
     sa = F.floor(
         text.stop_ratio_column("text") * 10000 + F.lit(0.5)
     ).cast("long")
@@ -2648,8 +2648,6 @@ FROM pts p CROSS JOIN co ORDER BY p.b
 def x447_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ...ops.dedup import _rebalanced
-
     docs = load_table(spark, sf_dir, "documents")
     tot = docs.agg((F.max("doc_id") + 1).cast("long").alias("nn"))
     # bound token attribute + rebalanced scan (HOF-lambda CSE trap /
@@ -2657,10 +2655,8 @@ def x447_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exploded shingle table is checkpointed ONCE because both the
     # first-batch groupBy and the per-batch token count consume it
     t = (
-        _rebalanced(docs)
-        .select(
-            "doc_id", F.split(F.lower("text"), " ").alias("__toks")
-        )
+        rebalanced(docs)
+        .select("doc_id", _toks("text").alias("__toks"))
         .filter(F.size("__toks") >= 3)
     )
     toks = F.col("__toks")
@@ -2963,9 +2959,7 @@ def x449_hamilton_apportionment(
 
     docs = load_table(spark, sf_dir, "documents")
     w = docs.groupBy("source").agg(
-        F.sum(F.size(F.split(F.lower("text"), " ")))
-        .cast("long")
-        .alias("tokens")
+        F.sum(F.size(_toks("text"))).cast("long").alias("tokens")
     )
     tot = w.agg(F.sum("tokens").cast("long").alias("wt"))
     B = F.lit(10007)
@@ -4799,9 +4793,7 @@ def x462_repetition_decay(
     # per position and the 8-lag crossJoin replays it 8x, so an inlined
     # split() re-tokenizes 8n times per doc (HOF-lambda CSE trap -- see
     # ops/dedup.py shingles())
-    t = docs.select(
-        "lang", F.split(F.lower("text"), " ").alias("__toks")
-    )
+    t = docs.select("lang", _toks("text").alias("__toks"))
     toks = F.col("__toks")
     pairs = t.crossJoin(F.broadcast(lags)).select(
         "lang",
@@ -5182,7 +5174,7 @@ def x465_source_js_pairs(
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     c = docs.select(
-        "source", F.explode(F.split(F.lower("text"), " ")).alias("w")
+        "source", F.explode(_toks("text")).alias("w")
     ).groupBy("source", "w").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
@@ -5868,11 +5860,7 @@ def x470_duplicate_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             F.md5(
                 F.array_join(
-                    F.array_sort(
-                        F.array_distinct(
-                            F.split(F.lower("text"), " ")
-                        )
-                    ),
+                    F.array_sort(F.array_distinct(_toks("text"))),
                     " ",
                 )
             ).alias("hh"),

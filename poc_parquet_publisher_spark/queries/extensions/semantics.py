@@ -12,8 +12,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ...catalog import load_table
-from ...scale import zorder_key_sql
+from ...scale import pairs_within, rebalanced, zorder_key_sql
 from ...ops import dedup, graph, sampling, similarity, text
+from ...ops.text import _toks
 from .. import register
 from .foundations import _STOP_EN, _X03_PAIRS_CTE, _shared_jaccard_pairs
 
@@ -497,9 +498,7 @@ def x255_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     f = docs.select(
         "doc_id",
         "lang",
-        F.filter(
-            F.split(F.lower("text"), " "), lambda x: F.length(x) >= 8
-        ).alias("longs"),
+        F.filter(_toks("text"), lambda x: F.length(x) >= 8).alias("longs"),
     )
     e = f.select(
         "doc_id", "lang", F.explode_outer("longs").alias("tok")
@@ -1479,7 +1478,7 @@ def x271_timezone_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x272_approx_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(F.split(F.lower("text"), " ")).alias("tok")
+        F.explode(_toks("text")).alias("tok")
     ).filter(F.length("tok") >= 1)
     return (
         toks.agg(
@@ -1583,7 +1582,7 @@ def x274_char_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-split scan is rebalanced so the trigram explode
     # parallelizes (no-op at real scale).
     lt = (
-        dedup._rebalanced(docs)
+        rebalanced(docs)
         .select("lang", F.lower(F.col("text")).alias("__lt"))
         .filter(F.length("__lt") >= 3)
     )
@@ -1862,7 +1861,7 @@ def x279_array_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     a = docs.select(
         "lang",
-        F.slice(F.split(F.lower("text"), " "), 1, 12).alias("ar"),
+        F.slice(_toks("text"), 1, 12).alias("ar"),
     )
     ar = F.col("ar")
     fp = F.md5(
@@ -3189,9 +3188,7 @@ def x311_fold_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x312_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = (
-        docs.select(
-            F.explode(F.split(F.lower("text"), " ")).alias("token")
-        )
+        docs.select(F.explode(_toks("text")).alias("token"))
         .filter(F.col("token") != "")
         .distinct()
     )
@@ -5462,7 +5459,7 @@ def _word_cooccurrence_edges(docs: DataFrame) -> DataFrame:
     (lowercase alpha, length >= 4) -- the TextRank graph shared by
     x324 (global PageRank) and x352 (seeded personalized PageRank)."""
     ft = F.filter(
-        F.split(F.lower(F.col("text")), " "),
+        _toks("text"),
         lambda t: t.rlike("^[a-z]{4,}$"),
     )
     with_ft = docs.select(ft.alias("ft"))
@@ -5695,9 +5692,7 @@ FROM spec
 def x326_vocab_estimators(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        docs.select(
-            F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
-        )
+        docs.select(F.explode(_toks("text")).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("f"))
     )
@@ -6114,20 +6109,15 @@ def x329_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     pr = (
         bl.select(
             F.explode(
-                F.flatten(
-                    F.transform(
-                        bs,
-                        lambda x, i: F.transform(
-                            F.slice(bs, i + F.lit(2), F.size(bs)),
-                            lambda y: F.struct(
-                                x["b"].alias("i"),
-                                y["b"].alias("j"),
-                                F.when(x["c"] >= y["c"], 1)
-                                .otherwise(0)
-                                .alias("win_i"),
-                            ),
-                        ),
-                    )
+                pairs_within(
+                    bs,
+                    lambda x, y: F.struct(
+                        x["b"].alias("i"),
+                        y["b"].alias("j"),
+                        F.when(x["c"] >= y["c"], 1)
+                        .otherwise(0)
+                        .alias("win_i"),
+                    ),
                 )
             ).alias("p")
         )
@@ -6519,7 +6509,7 @@ def x559_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop = sorted(text.LANG_STOPWORDS["en"])
     tok = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.lower(F.col("text")), " ")).alias(
+        F.posexplode(_toks("text")).alias(
             "pos0", "w"
         ),
     ).select(
@@ -6796,7 +6786,7 @@ def x563_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source",
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("w"),
+        F.explode(_toks("text")).alias("w"),
     ).filter(F.col("w") != "").localCheckpoint(eager=False)
     topw = (
         tok.groupBy("w")
@@ -7122,7 +7112,7 @@ def x569_curriculum_buckets(
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("w"),
+        F.explode(_toks("text")).alias("w"),
     ).filter(F.col("w") != "").localCheckpoint(eager=False)
     topw = (
         tok.groupBy("w")
@@ -7270,9 +7260,7 @@ def x570_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "shard",
         "source",
-        F.size(F.split(F.lower(F.col("text")), " "))
-        .cast("long")
-        .alias("toks"),
+        F.size(_toks("text")).cast("long").alias("toks"),
     )
     cell = assigned.groupBy("shard", "source").agg(
         F.count(F.lit(1)).cast("long").alias("o"),
@@ -7406,7 +7394,7 @@ def x575_ngram_overlap_curve(
         F.when(
             F.col("doc_id") * 2 <= F.col("mn") + F.col("mx"), 1
         ).otherwise(2).alias("half"),
-        F.split(F.lower(F.col("text")), " ").alias("l"),
+        _toks("text").alias("l"),
     ).localCheckpoint(eager=False)
     parts = []
     for n in (1, 2, 3, 4, 5):
@@ -7536,7 +7524,7 @@ def x577_length_bias_audit(
     docs = load_table(spark, sf_dir, "documents")
     per_doc = docs.select(
         "doc_id",
-        F.split(F.lower(F.col("text")), " ").alias("l"),
+        _toks("text").alias("l"),
     ).select(
         "doc_id",
         F.size("l").cast("long").alias("toks"),

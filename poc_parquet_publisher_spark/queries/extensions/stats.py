@@ -12,8 +12,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ...catalog import load_table
-from ...scale import zorder_key_sql
+from ...scale import rebalanced, zorder_key_sql
 from ...ops import dedup, graph, sampling, similarity, text
+from ...ops.text import _toks
 from .. import register
 from .foundations import _STOP_EN
 
@@ -84,7 +85,7 @@ def x381_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "source",
         "text",
-        F.split(F.lower(F.col("text")), " ").alias("__toks"),
+        _toks("text").alias("__toks"),
     ).select(
         "source",
         "text",
@@ -318,8 +319,8 @@ def x383_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     # position) and rebalance the single-split scan so the explode runs
     # on the core budget, not one task
     t = (
-        dedup._rebalanced(docs)
-        .select(F.split(F.lower(F.col("text")), " ").alias("__toks"))
+        rebalanced(docs)
+        .select(_toks("text").alias("__toks"))
         .filter(F.size("__toks") >= 2)
     )
     toks = F.col("__toks")
@@ -958,9 +959,7 @@ def x387_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # bound arrays (HOF-lambda CSE trap on the top-token transform --
     # see x381)
-    t = docs.select(
-        "text", F.split(F.lower(F.col("text")), " ").alias("__toks")
-    ).select(
+    t = docs.select("text", _toks("text").alias("__toks")).select(
         "text", "__toks", F.array_distinct("__toks").alias("__dtoks")
     )
     toks = F.col("__toks")
@@ -1282,7 +1281,7 @@ FROM m
 )
 def x390_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.col("text")), " ")
+    toks = _toks("text")
     dtoks = F.array_distinct(toks)
     stop = list(text.LANG_STOPWORDS["en"])
     p = docs.select(
@@ -1389,9 +1388,7 @@ def x391_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # bound arrays (HOF-lambda CSE trap on the top-token transform --
     # see x381)
-    t = docs.select(
-        "text", F.split(F.lower(F.col("text")), " ").alias("__toks")
-    ).select(
+    t = docs.select("text", _toks("text").alias("__toks")).select(
         "text", "__toks", F.array_distinct("__toks").alias("__dtoks")
     )
     toks = F.col("__toks")
@@ -1925,11 +1922,11 @@ def x395_kn_heldout_perplexity(
     # single-split parallelism -- see x383); both the train and the
     # held-out branch evaluate the bigram transform over the bound array
     base = (
-        dedup._rebalanced(docs)
+        rebalanced(docs)
         .select(
             "doc_id",
             "source",
-            F.split(F.lower(F.col("text")), " ").alias("__toks"),
+            _toks("text").alias("__toks"),
         )
         .filter(F.size("__toks") >= 2)
     )
@@ -2072,7 +2069,7 @@ def x396_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     dc = (
         docs.select(
             "doc_id",
-            F.explode(F.split(F.lower(F.col("text")), " ")).alias("w"),
+            F.explode(_toks("text")).alias("w"),
         )
         .groupBy("w", "doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -2141,9 +2138,7 @@ def x397_mattr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bound token attribute: the MATTR window slices the array once
     # per window position, so an inlined split() would re-tokenize per
     # position (HOF-lambda CSE trap -- see x383)
-    t = docs.select(
-        "doc_id", F.split(F.lower(F.col("text")), " ").alias("__toks")
-    )
+    t = docs.select("doc_id", _toks("text").alias("__toks"))
     toks = F.col("__toks")
     n = F.size(toks)
     win_sum = F.aggregate(
@@ -2289,12 +2284,12 @@ def x398_dedup_ppl_impact(
     # single-split parallelism -- see x383); text stays projected for
     # the exact-dedup survivor hash below
     base = (
-        dedup._rebalanced(docs)
+        rebalanced(docs)
         .select(
             "doc_id",
             "source",
             "text",
-            F.split(F.lower(F.col("text")), " ").alias("__toks"),
+            _toks("text").alias("__toks"),
         )
         .filter(F.size("__toks") >= 2)
     )
@@ -3446,10 +3441,8 @@ def x407_greedy_vocab_cover(
     # bound token attribute + rebalanced scan (HOF-lambda CSE trap /
     # single-split parallelism -- see x383)
     t = (
-        dedup._rebalanced(docs)
-        .select(
-            "doc_id", F.split(F.lower(F.col("text")), " ").alias("__toks")
-        )
+        rebalanced(docs)
+        .select("doc_id", _toks("text").alias("__toks"))
         .filter(F.size("__toks") >= 3)
     )
     toks = F.col("__toks")
@@ -3712,8 +3705,8 @@ def x408_lsh_tuning_curve(
     # single-split scan rebalanced so the md5/min-hash work runs on the
     # full core budget instead of one task (no-op at real scale)
     t = (
-        dedup._rebalanced(docs)
-        .select(F.split(F.lower(F.col("text")), " ").alias("__toks"))
+        rebalanced(docs)
+        .select(_toks("text").alias("__toks"))
         .filter(F.size("__toks") >= 15)
     )
     toks = F.col("__toks")
@@ -4345,9 +4338,7 @@ def x412_watermark_detect(
     # bound token attribute (HOF-lambda CSE trap on the per-bigram
     # md5 transform -- see x383)
     t = (
-        docs.select(
-            "source", F.split(F.lower(F.col("text")), " ").alias("__toks")
-        )
+        docs.select("source", _toks("text").alias("__toks"))
         .filter(F.size("__toks") >= 2)
     )
     toks = F.col("__toks")
@@ -5210,10 +5201,8 @@ def x419_self_retrieval_eval(
     # rebalanced off the single-split scan so the chunk explode and the
     # per-chunk shingle transforms run on the core budget, not one task
     t = (
-        dedup._rebalanced(docs)
-        .select(
-            "doc_id", F.split(F.lower(F.col("text")), " ").alias("toks")
-        )
+        rebalanced(docs)
+        .select("doc_id", _toks("text").alias("toks"))
         .select("doc_id", "toks", F.size("toks").alias("n"))
         .localCheckpoint(eager=False)
     )
@@ -5448,11 +5437,7 @@ def x420_dedup_tier_containment(
     fp = pairs_by(
         F.md5(
             F.array_join(
-                F.array_sort(
-                    F.array_distinct(
-                        F.split(F.lower(F.col("text")), " ")
-                    )
-                ),
+                F.array_sort(F.array_distinct(_toks("text"))),
                 " ",
             )
         )
@@ -6365,9 +6350,7 @@ def x426_filter_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # bound arrays + rebalanced scan (HOF-lambda CSE trap on the
     # top-token transform -- see x381)
-    t = dedup._rebalanced(docs).select(
-        "text", F.split(F.lower(F.col("text")), " ").alias("__toks")
-    ).select(
+    t = rebalanced(docs).select("text", _toks("text").alias("__toks")).select(
         "text", "__toks", F.array_distinct("__toks").alias("__dtoks")
     )
     toks = F.col("__toks")
@@ -6655,11 +6638,7 @@ def x428_capture_recapture(
         (F.col("doc_id") % 2).alias("half"),
         F.md5(
             F.array_join(
-                F.array_sort(
-                    F.array_distinct(
-                        F.split(F.lower(F.col("text")), " ")
-                    )
-                ),
+                F.array_sort(F.array_distinct(_toks("text"))),
                 " ",
             )
         ).alias("h"),

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ...catalog import load_table
 from .. import register
+from .diagnostics import _daily_revenue
 
 
 _X544_ORACLE = """
@@ -99,13 +100,7 @@ def x544_permutation_entropy(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     a = daily.select(F.col("day").alias("d0"), F.col("y").alias("y0"))
     b = daily.select(F.col("day").alias("d1"), F.col("y").alias("y1"))
     c = daily.select(F.col("day").alias("d2"), F.col("y").alias("y2"))
@@ -249,13 +244,7 @@ def x546_yule_walker_pacf(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     tot = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.col("y").cast("decimal(38,0)"))
@@ -387,13 +376,7 @@ FROM v
 )
 def x549_newey_west(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     tot = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.col("y").cast("decimal(38,0)"))
@@ -517,13 +500,7 @@ FROM f
 )
 def x550_dickey_fuller(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     a = daily.select(F.col("day").alias("da"), F.col("y").alias("ya"))
     b = daily.select(F.col("day").alias("db"), F.col("y").alias("yb"))
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
@@ -790,13 +767,7 @@ FROM tot t, adj, den
 )
 def x554_moran_geary(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     tot = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.col("y").cast("decimal(38,0)"))
@@ -913,13 +884,7 @@ FROM base, sd, pairs
 )
 def x555_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     sd = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1065,13 +1030,7 @@ FROM g, pick
 )
 def x556_grubbs_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     tot = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.col("y").cast("decimal(38,0)"))
@@ -1233,13 +1192,7 @@ def x558_spectral_summary(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     anchor = daily.agg(F.min("day").alias("d0"))
     tot = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1401,13 +1354,7 @@ FROM c
 )
 def x566_arch_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     a = daily.select(F.col("day").alias("da"), F.col("y").alias("ya"))
     b = daily.select(F.col("day").alias("db"), F.col("y").alias("yb"))
     d = a.join(b, F.col("db") == F.date_add("da", 1)).select(
@@ -1551,13 +1498,7 @@ def x567_christoffersen(
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    ).localCheckpoint(eager=False)
+    daily = _daily_revenue(orders).localCheckpoint(eager=False)
     dom = daily.groupBy("y").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
@@ -1716,13 +1657,7 @@ def x568_kpss_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     tot = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.col("y").cast("decimal(38,0)"))
@@ -1875,13 +1810,7 @@ def x571_bartels_rvn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    ).localCheckpoint(eager=False)
+    daily = _daily_revenue(orders).localCheckpoint(eager=False)
     dom = daily.groupBy("y").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
@@ -2006,13 +1935,7 @@ def x572_record_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     wp = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -2135,13 +2058,7 @@ def x573_pettitt_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    ).localCheckpoint(eager=False)
+    daily = _daily_revenue(orders).localCheckpoint(eager=False)
     dom = daily.groupBy("y").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
@@ -2276,13 +2193,7 @@ def x576_seasonal_mann_kendall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    ).select(
+    daily = _daily_revenue(orders).select(
         "day", F.expr("weekday(day)").cast("long").alias("wd"), "y"
     ).localCheckpoint(eager=False)
     a = daily.select(
@@ -2415,13 +2326,7 @@ def x579_foster_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long"))
-        .cast("long")
-        .alias("y")
-    )
+    daily = _daily_revenue(orders)
     wp = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, -1
     )

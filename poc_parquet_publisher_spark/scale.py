@@ -17,8 +17,38 @@ fully cover:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def rebalanced(df: DataFrame) -> DataFrame:
+    """Spread a narrow input across the executor budget.
+
+    Compute-heavy per-row operators (shingling, hashing) on a small or
+    single-split file otherwise run in ONE task; at real scale the input
+    already has more splits than cores and this is a no-op.
+    """
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
+def pairs_within(arr: Column, make) -> Column:
+    """Every unordered pair of an array column's elements as one array:
+    ``make(arr[i], arr[j])`` for each i < j, in (i, j) order. The pairs
+    expand inside the row (~|arr|^2 with small arrays), never through a
+    self-join; an array of fewer than two elements, or null, gives no
+    pairs once exploded."""
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + F.lit(2), F.size(arr)),
+                lambda y: make(x, y),
+            ),
+        )
+    )
 
 
 def salted_join(
@@ -190,8 +220,10 @@ def prefix_sum(
     Nulls in ``value_col`` contribute 0 and the running total starts
     at 0, so an all-null prefix yields 0 where SQL's ``SUM() OVER``
     yields NULL -- i.e. this computes ``COALESCE(SUM(v) OVER (...),
-    0)``. The sum is computed in int64 -- callers needing float prefix
-    sums should scale to integers first (the x37/x46 DECIMAL recipe).
+    0)``. The sum is computed in int64: both passes truncate each value
+    to int64 before adding, so the result does not depend on the
+    partition count -- callers needing float prefix sums should scale
+    to integers first (the x37/x46 DECIMAL recipe).
 
     ``order_col`` may be a column name, a sort expression (e.g.
     ``F.col("score").desc()``), or a list of either -- whatever total
@@ -221,7 +253,7 @@ def prefix_sum(
         r["pid"]: r["t"] or 0
         for r in part.groupBy(
             F.spark_partition_id().alias("pid")
-        ).agg(F.sum(val_expr).alias("t")).collect()
+        ).agg(F.sum(val_expr.cast("long")).alias("t")).collect()
     }
     offsets, acc = {}, 0
     for pid in sorted(totals):

@@ -48,6 +48,7 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from bench import warm_up
     from poc_parquet_publisher_spark.queries import all_queries
     from poc_parquet_publisher_spark.session import build_session
 
@@ -69,18 +70,8 @@ def main() -> None:
     if unknown:
         sys.exit(f"not in registry: {unknown}")
 
-    # same warmups as bench.py so run 1 is comparable
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    def _warm_workers(it):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-
-        yield from it
-
-    spark.range(256, numPartitions=int(sc.defaultParallelism)).mapInPandas(
-        _warm_workers, "id long"
-    ).count()
+    # bench.py's warm-up, so run 1 is comparable
+    warm_up(spark)
 
     plans_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

@@ -9,6 +9,7 @@ import os
 
 import pytest
 
+import poc_parquet_publisher_spark
 from poc_parquet_publisher_spark.queries import (
     REGISTRY,
     _WINDOW_FIRST,
@@ -70,3 +71,29 @@ def test_unknown_name_raises_attribute_error():
     with pytest.raises(AttributeError, match="x000_no_such_entry"):
         extensions.x000_no_such_entry
     assert not hasattr(extensions, "x000_no_such_entry")
+
+
+def _read(path: str) -> str:
+    with open(path, encoding="utf-8") as fh:
+        return fh.read()
+
+
+@pytest.mark.parametrize(
+    "needle, owner",
+    [
+        ("F.split(F.lower(", os.path.join("ops", "text.py")),
+        ("i + F.lit(2), F.size(", "scale.py"),
+    ],
+)
+def test_shared_derivation_defined_once(needle, owner):
+    # The tokenizer (text._toks) and the in-array pair expansion
+    # (scale.pairs_within) feed the Spark side of every hash-checked
+    # registry entry; an inlined copy would let one copy drift.
+    root = os.path.dirname(poc_parquet_publisher_spark.__file__)
+    holders = sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, files in os.walk(root)
+        for f in files
+        if f.endswith(".py") and needle in _read(os.path.join(d, f))
+    )
+    assert holders == [owner]

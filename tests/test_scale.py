@@ -309,17 +309,45 @@ def test_prefix_sum_date_passthrough_columns(spark):
     }
     assert got == expected
 
+def test_pairs_within_order_and_short_arrays(spark):
+    """pairs_within yields every i < j pair in (i, j) order; arrays of
+    fewer than two elements, empty or null, yield nothing."""
+    df = spark.createDataFrame(
+        [(1, [1, 2, 3]), (2, [4]), (3, []), (4, None)], "id int, a array<int>"
+    )
+    pairs = scale.pairs_within(
+        F.col("a"), lambda x, y: F.struct(x.alias("x"), y.alias("y"))
+    )
+    got = (
+        df.select("id", F.explode(pairs).alias("p"))
+        .select("id", "p.x", "p.y")
+        .collect()
+    )
+    assert [tuple(r) for r in got] == [(1, 1, 2), (1, 1, 3), (1, 2, 3)]
+
+
 def test_prefix_sum_float_nan_treated_as_zero(spark):
     """A float value_col containing NaN must contribute 0 to the running
     sum (the old pandas path's fillna(0) semantics): pyarrow's cast with
     allow_float_truncate silently maps NaN to INT64_MIN, which would
-    corrupt that row and every one after it."""
-    df = spark.createDataFrame(
-        [(0, 1.0), (1, float("nan")), (2, 2.0), (3, None), (4, 3.0)],
-        "k int, v double",
-    )
-    got = {
-        (r.k, r.s)
-        for r in scale.prefix_sum(df, "k", "v", "s").select("k", "s").collect()
-    }
-    assert got == {(0, 1), (1, 1), (2, 3), (3, 3), (4, 6)}
+    corrupt that row and every one after it. Fractional values truncate
+    per value in both passes, so six rows of 0.6 sum to 0 at any
+    partition count (with exact per-partition totals a 3-way split
+    gave 0, 0, 1, 1, 2, 2)."""
+    cases = [
+        (
+            [(0, 1.0), (1, float("nan")), (2, 2.0), (3, None), (4, 3.0)],
+            None,
+            {(0, 1), (1, 1), (2, 3), (3, 3), (4, 6)},
+        ),
+        ([(k, 0.6) for k in range(6)], 3, {(k, 0) for k in range(6)}),
+    ]
+    for rows, num_partitions, expected in cases:
+        df = spark.createDataFrame(rows, "k int, v double")
+        got = {
+            (r.k, r.s)
+            for r in scale.prefix_sum(df, "k", "v", "s", num_partitions)
+            .select("k", "s")
+            .collect()
+        }
+        assert got == expected, (rows, num_partitions)
