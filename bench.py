@@ -229,7 +229,9 @@ def main() -> None:
             _NullQueue,
             checkpoint_dir=f"{tmp}/ckpt",
         )
-        q.awaitTermination(600)
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError("stream_publish drain did not finish in 600 s")
         dt = time.perf_counter() - t0
     timings["stream_publish"] = round(dt, 3)
     print(

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
@@ -47,15 +46,14 @@ def rows_for_target_bytes(
     so the estimate is stable -- the same ~10^6 rows/GB envelope the
     reference converges to by stat-polling.
     """
-    tmp = tempfile.mkdtemp(prefix="sizer-")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sizer-", ignore_cleanup_errors=True
+    ) as tmp:
         out = os.path.join(tmp, "sample.parquet")
         generate_records(spark, sample_rows).write.mode("overwrite").parquet(
             out
         )
         bytes_per_row = _dir_bytes(out) / sample_rows
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return max(1, math.ceil(target_bytes / bytes_per_row))
 
 

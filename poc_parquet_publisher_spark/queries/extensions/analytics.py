@@ -12,10 +12,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ...catalog import load_table
-from ...scale import pairs_within, zorder_key_sql
-from ...ops import dedup, graph, sampling, similarity, text
+from ...scale import pairs_within
+from ...ops import dedup, graph, sampling
 from ...ops.text import _toks
 from .. import register
+from .foundations import _events_stream
 
 @register(
     "x151_rolling_revenue",
@@ -389,7 +390,6 @@ def x155_date_spine_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "drives partition pruning and incremental-load bookkeeping",
 )
 def x156_partition_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from ...pipeline.layout import write_partitioned
@@ -397,8 +397,9 @@ def x156_partition_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.col("ts").cast("date")
     )
-    tmp = tempfile.mkdtemp(prefix="x156_layout_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="x156_layout_", ignore_cleanup_errors=True
+    ) as tmp:
         write_partitioned(
             ev, tmp, ["event_date"], sort_cols=["event_id"]
         )
@@ -414,8 +415,6 @@ def x156_partition_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("event_date")
             .localCheckpoint()  # materialize before the tree disappears
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -636,12 +635,12 @@ def x159_histogram_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gate. Shards write/read in parallel (csv sink, no collect)",
 )
 def x160_csv_roundtrip_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="x160_csv_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="x160_csv_", ignore_cleanup_errors=True
+    ) as tmp:
         (
             docs.write.mode("overwrite")
             .option("header", True)
@@ -655,8 +654,6 @@ def x160_csv_roundtrip_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = dedup.exact_dedup(back, "doc_id", "text").orderBy("h")
         out = out.localCheckpoint()  # materialize before tmp vanishes
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -1051,47 +1048,26 @@ def x166_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "total, so duplicate timestamps pick the same row cross-engine",
 )
 def x167_stream_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
     import tempfile
-    import uuid
 
-    from ...streaming.windows import _start_with_state_partitions
+    from ...streaming.windows import drain_to_memory, event_time
 
-    ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="x167_stream_")
-    sink = f"x167_sink_{uuid.uuid4().hex[:8]}"
-    try:
-        src = os.path.join(tmp, "events")
-        ev.repartition(4).write.mode("overwrite").parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(schema).parquet(src)
-        if "ts" in [f.name for f in schema.fields]:
-            stream = stream.withColumn(
-                "ts", F.col("ts").cast("timestamp")
-            )
-        latest = stream.groupBy("user_id").agg(
-            F.max_by(
-                F.struct("event_type", "value"),
-                F.struct("ts", "event_id"),
-            ).alias("latest")
+    with tempfile.TemporaryDirectory(
+        prefix="x167_stream_", ignore_cleanup_errors=True
+    ) as tmp:
+        stream = event_time(_events_stream(spark, sf_dir, tmp, 1), "ts")
+        latest = drain_to_memory(
+            stream.groupBy("user_id").agg(
+                F.max_by(
+                    F.struct("event_type", "value"),
+                    F.struct("ts", "event_id"),
+                ).alias("latest")
+            ),
+            "complete",
+            f"{tmp}/ckpt",
         )
-        writer = (
-            latest.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-        )
-        q = _start_with_state_partitions(spark, writer, 8)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("x167 stream drain did not finish in 300 s")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return (
-        spark.table(sink)
-        .select(
+        latest.select(
             F.col("latest.event_type").alias("event_type"),
             F.col("latest.value").alias("value"),
         )
@@ -2404,12 +2380,12 @@ def x187_content_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x188_schema_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="x188_schema_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="x188_schema_", ignore_cleanup_errors=True
+    ) as tmp:
         v1 = docs.select("doc_id", "text", "lang", F.lit("v1").alias("ver"))
         v2 = docs.select(
             "doc_id",
@@ -2437,8 +2413,6 @@ def x188_schema_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("ver")
             .localCheckpoint()  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -4054,7 +4028,6 @@ def x213_time_grain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "localCheckpoint before the temp dir vanishes",
 )
 def x214_csv_corruption_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
@@ -4068,8 +4041,9 @@ def x214_csv_corruption_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_chars").cast("string")
         ),
     )
-    tmp = tempfile.mkdtemp(prefix="x214_csv_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="x214_csv_", ignore_cleanup_errors=True
+    ) as tmp:
         docs.select(line.alias("value")).write.mode("overwrite").text(tmp)
         back = spark.read.schema(
             "doc_id STRING, lang STRING, n_chars_raw STRING"
@@ -4097,8 +4071,6 @@ def x214_csv_corruption_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang")
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -5344,14 +5316,18 @@ def x232_ht_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
         "file pickup order",
 )
 def x233_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="x233_files_")
-    ckpt = tempfile.mkdtemp(prefix="x233_ckpt_")
     counts: list[int] = []
-    try:
+    with (
+        tempfile.TemporaryDirectory(
+            prefix="x233_files_", ignore_cleanup_errors=True
+        ) as tmp,
+        tempfile.TemporaryDirectory(
+            prefix="x233_ckpt_", ignore_cleanup_errors=True
+        ) as ckpt,
+    ):
         for b in range(4):
             (
                 ev.filter(F.col("user_id") % 4 == b)
@@ -5389,9 +5365,6 @@ def x233_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             "n_batches BIGINT, total_rows BIGINT, batch_sizes STRING",
         ).localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return out
 
 

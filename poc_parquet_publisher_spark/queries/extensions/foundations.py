@@ -354,6 +354,21 @@ def x18_deterministic_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _events_stream(
+    spark: SparkSession, sf_dir: str, tmp: str, copies: int
+) -> DataFrame:
+    """``events`` as a file stream for the build-time drains: written
+    ``copies`` times under ``tmp`` as 4-file micros parquet (the nanos
+    physical type can't stream through a fixed schema), then opened as
+    a readStream with the schema read back from the rewrite."""
+    src = f"{tmp}/events"
+    base = load_table(spark, sf_dir, "events").repartition(4)
+    for i in range(copies):
+        base.write.mode("append" if i else "overwrite").parquet(src)
+    schema = spark.read.parquet(src).schema
+    return spark.readStream.schema(schema).parquet(src)
+
+
 @register(
     "x27_streaming_window",
     """SELECT date_trunc('hour', ts) AS window_start, event_type,
@@ -369,38 +384,20 @@ def x18_deterministic_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nanos physical type can't stream through a fixed schema)",
 )
 def x27_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
     import tempfile
-    import uuid
 
-    from ...streaming.windows import streaming_hourly_counts
+    from ...streaming.windows import drain_to_memory, windowed_event_counts
 
-    batch = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="x27_stream_")
-    sink = f"x27_sink_{uuid.uuid4().hex[:8]}"
-    try:
-        src = os.path.join(tmp, "events")
-        batch.repartition(4).write.mode("overwrite").parquet(src)
-        rebatch = spark.read.parquet(src)
-        q = streaming_hourly_counts(
-            spark,
-            src,
-            rebatch.schema,
-            os.path.join(tmp, "ckpt"),
-            sink_table=sink,
+    with tempfile.TemporaryDirectory(
+        prefix="x27_stream_", ignore_cleanup_errors=True
+    ) as tmp:
+        counts = drain_to_memory(
+            windowed_event_counts(_events_stream(spark, sf_dir, tmp, 1)),
+            "complete",
+            f"{tmp}/ckpt",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "stream drain did not finish within 300 s; "
-                "refusing to return a partially-filled sink"
-            )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return (
-        spark.table(sink)
-        .select(
+        counts.select(
             F.col("window_start").cast("timestamp_ntz").alias(
                 "window_start"
             ),
@@ -3063,40 +3060,23 @@ def x92_source_calibrated_rank(
         "contract (the x27 drain recipe: complete mode + availableNow)",
 )
 def x93_stream_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
     import tempfile
-    import uuid
 
-    from ...streaming.windows import streaming_segment_counts
+    from ...streaming.windows import drain_to_memory, enriched_segment_counts
 
-    batch = load_table(spark, sf_dir, "events")
     customer = load_table(spark, sf_dir, "customer")
-    tmp = tempfile.mkdtemp(prefix="x93_stream_")
-    sink = f"x93_sink_{uuid.uuid4().hex[:8]}"
-    try:
-        src = os.path.join(tmp, "events")
-        batch.repartition(4).write.mode("overwrite").parquet(src)
-        rebatch = spark.read.parquet(src)
-        q = streaming_segment_counts(
-            spark,
-            src,
-            rebatch.schema,
-            customer,
-            os.path.join(tmp, "ckpt"),
-            sink_table=sink,
+    with tempfile.TemporaryDirectory(
+        prefix="x93_stream_", ignore_cleanup_errors=True
+    ) as tmp:
+        counts = drain_to_memory(
+            enriched_segment_counts(
+                _events_stream(spark, sf_dir, tmp, 1), customer
+            ),
+            "complete",
+            f"{tmp}/ckpt",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "stream drain did not finish within 300 s; "
-                "refusing to return a partially-filled sink"
-            )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return (
-        spark.table(sink)
-        .select(
+        counts.select(
             F.col("window_start").cast("timestamp_ntz").alias(
                 "window_start"
             ),
@@ -3324,36 +3304,25 @@ def x102_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(streaming/windows.py view_click_attribution)",
 )
 def x103_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
     import tempfile
-    import uuid
 
-    from ...streaming.windows import streaming_attribution
+    from ...streaming.windows import drain_to_memory, view_click_attribution
 
-    batch = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="x103_stream_")
-    sink = f"x103_sink_{uuid.uuid4().hex[:8]}"
-    try:
-        src = os.path.join(tmp, "events")
-        batch.repartition(4).write.mode("overwrite").parquet(src)
-        rebatch = spark.read.parquet(src)
-        q = streaming_attribution(
-            spark,
-            src,
-            rebatch.schema,
-            os.path.join(tmp, "ckpt"),
-            sink_table=sink,
+    with tempfile.TemporaryDirectory(
+        prefix="x103_stream_", ignore_cleanup_errors=True
+    ) as tmp:
+        # one readStream forked into both join sides: a streaming
+        # self-join, append mode because inner joins emit on match
+        stream = _events_stream(spark, sf_dir, tmp, 1)
+        pairs = drain_to_memory(
+            view_click_attribution(
+                stream.filter(F.col("event_type") == "view"),
+                stream.filter(F.col("event_type") == "click"),
+            ),
+            "append",
+            f"{tmp}/ckpt",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "x103 stream drain did not finish within 300 s; "
-                "refusing to return a partially-filled sink"
-            )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.table(sink).orderBy("click_id", "view_id")
+    return pairs.orderBy("click_id", "view_id")
 
 
 @register(
@@ -3815,21 +3784,19 @@ def x113_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "read in parallel (text sink, no collect)",
 )
 def x114_jsonl_roundtrip_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from ...pipeline.layout import export_jsonl
 
     docs = load_table(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="x114_jsonl_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="x114_jsonl_", ignore_cleanup_errors=True
+    ) as tmp:
         export_jsonl(docs, tmp, max_records_per_file=5000)
         back = spark.read.schema(docs.schema).json(tmp)
         out = dedup.exact_dedup(back, "doc_id", "text").orderBy("h")
         # materialize before the temp dir disappears
         out = out.localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -5776,47 +5743,24 @@ def x142_cube_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         "watermark at scale",
 )
 def x143_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
     import tempfile
-    import uuid
 
     from ...streaming.dedup import dedup_stream
+    from ...streaming.windows import drain_to_memory
 
-    ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="x143_stream_")
-    sink = f"x143_sink_{uuid.uuid4().hex[:8]}"
-    try:
-        src = os.path.join(tmp, "events_dup")
-        base = ev.repartition(4)
-        base.write.mode("overwrite").parquet(src)
-        # second copy = every event_id duplicated across files
-        base.write.mode("append").parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(schema).parquet(src)
-        deduped = dedup_stream(stream, ["event_id"], ts_col="ts")
-        agg = deduped.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_events")
+    with tempfile.TemporaryDirectory(
+        prefix="x143_stream_", ignore_cleanup_errors=True
+    ) as tmp:
+        # two copies = every event_id duplicated across files
+        stream = _events_stream(spark, sf_dir, tmp, 2)
+        counts = drain_to_memory(
+            dedup_stream(stream, ["event_id"], ts_col="ts")
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_events")),
+            "complete",
+            f"{tmp}/ckpt",
         )
-        from ...streaming.windows import _start_with_state_partitions
-
-        writer = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-        )
-        # 8 state stores, not the session's 32: the dedup + agg state is
-        # tiny next to per-store open/commit overhead per micro-batch
-        # (x103's measured 14.5 s -> 3.9 s recipe)
-        q = _start_with_state_partitions(spark, writer, 8)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("x143 stream drain did not finish in 300 s")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.table(sink).orderBy("event_type")
+    return counts.orderBy("event_type")
 
 
 @register(

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ...catalog import load_table
-from ...scale import pairs_within, rebalanced, zorder_key_sql
+from ...scale import pairs_within, rebalanced
 from ...ops import dedup, graph, sampling, similarity, text
 from ...ops.text import _toks
 from .. import register
@@ -860,12 +860,12 @@ def x261_hll_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cannot fake a pass or a fail",
 )
 def x262_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="x262_orc_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="x262_orc_", ignore_cleanup_errors=True
+    ) as tmp:
         docs.write.mode("overwrite").orc(tmp)
         back = spark.read.schema(docs.schema).orc(tmp)
         h = F.conv(
@@ -888,8 +888,6 @@ def x262_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("source")
         )
         out = out.localCheckpoint()  # materialize before tmp vanishes
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 

@@ -12,8 +12,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ...catalog import load_table
-from ...scale import rebalanced, zorder_key_sql
-from ...ops import dedup, graph, sampling, similarity, text
+from ...scale import rebalanced
+from ...ops import dedup, graph, text
 from ...ops.text import _toks
 from .. import register
 from .foundations import _STOP_EN

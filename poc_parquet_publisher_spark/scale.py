@@ -212,7 +212,7 @@ def prefix_sum(
        parallelism, never by data size), folded into EXCLUSIVE
        cumulative offsets.
     3. Pass 2: each task adds its broadcast offset to a
-       partition-LOCAL cumulative sum via ``mapInPandas`` -- ZERO
+       partition-LOCAL cumulative sum via ``mapInArrow`` -- ZERO
        additional shuffle (the data is already range-partitioned and
        sorted; a ``Window.partitionBy(pid)`` would re-shuffle), and
        the cumsum is one vectorized Arrow-batch call.
@@ -231,8 +231,6 @@ def prefix_sum(
     unique tiebreak column) or the within-tie order is partition-
     dependent.
     """
-    import pandas as pd  # noqa: F401  (mapInPandas ships pandas frames)
-
     spark = df.sparkSession
     order = order_col if isinstance(order_col, list) else [order_col]
     n = num_partitions or int(

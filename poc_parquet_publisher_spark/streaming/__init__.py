@@ -6,19 +6,19 @@ from .dedup import dedup_stream
 from .publisher import stream_publish
 from .stateful import running_event_totals, sessionize_stateful
 from .windows import (
+    drain_to_memory,
+    event_time,
     session_event_counts,
-    streaming_hourly_counts,
-    streaming_session_counts,
     windowed_event_counts,
 )
 
 __all__ = [
     "dedup_stream",
+    "drain_to_memory",
+    "event_time",
     "running_event_totals",
     "session_event_counts",
     "sessionize_stateful",
     "stream_publish",
-    "streaming_hourly_counts",
-    "streaming_session_counts",
     "windowed_event_counts",
 ]

@@ -12,7 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampNTZType
+
+from .windows import event_time
 
 
 def dedup_stream(
@@ -20,26 +21,18 @@ def dedup_stream(
     key_cols: list[str],
     ts_col: str = "ts",
     watermark: str = "1 hour",
-    hash_text_col: str | None = None,
 ) -> DataFrame:
     """Drop duplicate rows within the watermark horizon.
 
-    ``key_cols`` identify a duplicate (e.g. event_id, or the md5 of a
-    document body -- pass ``hash_text_col`` to add a ``content_hash`` key
-    computed JVM-side). Duplicates separated by more than the watermark
-    are NOT suppressed -- bounded state is exactly that trade, matching
-    SQS's own at-least-once redelivery window.
+    ``key_cols`` identify a duplicate (e.g. event_id, or a content-hash
+    column). Duplicates separated by more than the watermark are NOT
+    suppressed -- bounded state is exactly that trade, matching SQS's
+    own at-least-once redelivery window.
     """
-    if isinstance(df.schema[ts_col].dataType, TimestampNTZType):
-        df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    keys = list(key_cols)
-    if hash_text_col is not None:
-        df = df.withColumn(
-            "content_hash", F.md5(F.lower(F.col(hash_text_col)))
-        )
-        keys.append("content_hash")
-    return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        keys
+    return (
+        event_time(df, ts_col)
+        .withWatermark(ts_col, watermark)
+        .dropDuplicatesWithinWatermark(key_cols)
     )
 
 

@@ -7,43 +7,84 @@ extension: ``groupBy(window(ts, '1 hour'))`` with a watermark so state is
 bounded (late rows past the watermark are dropped instead of growing
 state forever -- the property that keeps a continuous 100 TB/day stream's
 memory flat).
+
+Every streaming transform here and in ``dedup``/``stateful`` runs batch or
+stream on one code path; ``event_time`` prepares the watermark column and
+``drain_to_memory`` is the one drain the registry and tests run them
+through.
 """
 
 from __future__ import annotations
 
 import threading
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
+from pyspark.sql.types import TimestampNTZType
 
-# Serializes the set/start/restore dance below: the shuffle-partition conf
-# is session-global, so two threads starting streams (or one starting a
-# stream while another plans a batch query) could otherwise observe the
-# temporary value or race the restore.
+# Serializes the set/start/restore dance in drain_to_memory: the
+# shuffle-partition conf is session-global, so two threads starting
+# streams (or one starting a stream while another plans a batch query)
+# could otherwise observe the temporary value or race the restore.
 _START_LOCK = threading.Lock()
+_STATE_PARTITIONS = 8
+_DRAIN_TIMEOUT_S = 300
 
 
-def _start_with_state_partitions(
-    spark: SparkSession, writer, state_partitions: int | None
-) -> StreamingQuery:
-    """Start a streaming query with its state-store count sized to the
-    expected STATE, not the session's CPU-count shuffle default: every
-    stateful operator instantiates shuffle-partition-count state stores
-    (pinned by the checkpoint forever), and each store pays open/commit
-    overhead per micro-batch -- measured 14.5 s -> 3.4 s at sf0.1 for
-    the stream-stream join going 32 -> 8. The conf is read at query
-    START only, so it is set around .start() and restored after."""
-    if state_partitions is None:
-        return writer.start()
+def drain_to_memory(
+    frame: DataFrame, output_mode: str, checkpoint_dir: str
+) -> DataFrame:
+    """Drain a streaming ``frame`` with ``availableNow`` into a memory
+    sink under a fresh unique name and return that table; raise if the
+    drain does not finish within 300 s instead of returning a partially
+    filled sink.
+
+    The query starts with 8 shuffle partitions, not the session's
+    CPU-count default: every stateful operator instantiates
+    shuffle-partition-count state stores (pinned by the checkpoint
+    forever), and each store pays open/commit overhead per micro-batch
+    -- measured 14.5 s -> 3.4 s at sf0.1 for the stream-stream join
+    going 32 -> 8. The conf is read at query START only, so it is set
+    around ``.start()`` and restored after.
+    """
+    spark = frame.sparkSession
+    name = f"drain_{uuid.uuid4().hex}"
+    writer = (
+        frame.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
     with _START_LOCK:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(_STATE_PARTITIONS)
+        )
         try:
-            return writer.start()
+            q = writer.start()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
+    if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+        q.stop()
+        raise RuntimeError(
+            f"stream drain did not finish within {_DRAIN_TIMEOUT_S} s; "
+            "refusing to return a partially-filled sink"
+        )
+    return spark.table(name)
+
+
+def event_time(df: DataFrame, ts_col: str) -> DataFrame:
+    """``df`` with ``ts_col`` as TIMESTAMP, ready for a watermark.
+
+    Watermarks reject TIMESTAMP_NTZ (the type the nanos fixtures load
+    as); with the session zone pinned to UTC (catalog contract) the cast
+    to TIMESTAMP is value-preserving. Other types pass through.
+    """
+    if isinstance(df.schema[ts_col].dataType, TimestampNTZType):
+        return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    return df
 
 
 def windowed_event_counts(
@@ -59,17 +100,10 @@ def windowed_event_counts(
     path. The sum goes through DECIMAL: partial aggregation order differs
     between micro-batch and batch plans, and double addition is not
     associative.
-
-    Watermarks reject TIMESTAMP_NTZ (the type the nanos fixtures load
-    as); with the session zone pinned to UTC (catalog contract) the cast
-    to TIMESTAMP is value-preserving.
     """
-    from pyspark.sql.types import TimestampNTZType
-
-    if isinstance(df.schema[ts_col].dataType, TimestampNTZType):
-        df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return (
-        df.withWatermark(ts_col, watermark)
+        event_time(df, ts_col)
+        .withWatermark(ts_col, watermark)
         .groupBy(
             F.window(ts_col, window_duration).alias("w"),
             F.col("event_type"),
@@ -87,39 +121,6 @@ def windowed_event_counts(
             "sum_value",
         )
     )
-
-
-def streaming_hourly_counts(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    checkpoint_dir: str,
-    sink_table: str = "hourly_counts",
-    window_duration: str = "1 hour",
-    watermark: str = "1 hour",
-    state_partitions: int = 8,
-) -> StreamingQuery:
-    """File stream -> windowed counts -> in-memory sink (drain-and-stop).
-
-    Complete output mode: every trigger rewrites the full window table,
-    which keeps the final answer independent of how files were split into
-    micro-batches (append mode would hold back windows the watermark has
-    not passed at end-of-stream).
-    """
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    agg = windowed_event_counts(
-        stream,
-        window_duration=window_duration,
-        watermark=watermark,
-    )
-    writer = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink_table)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-    return _start_with_state_partitions(spark, writer, state_partitions)
 
 
 def session_event_counts(
@@ -146,12 +147,9 @@ def session_event_counts(
     ``gap`` starts a new session (window ends are exclusive), so the
     relational mirror must split on ``>=``, not ``>``.
     """
-    from pyspark.sql.types import TimestampNTZType
-
-    if isinstance(df.schema[ts_col].dataType, TimestampNTZType):
-        df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return (
-        df.withWatermark(ts_col, watermark)
+        event_time(df, ts_col)
+        .withWatermark(ts_col, watermark)
         .groupBy(
             F.col(key_col),
             F.session_window(F.col(ts_col), gap).alias("sw"),
@@ -164,38 +162,6 @@ def session_event_counts(
             "n_events",
         )
     )
-
-
-def streaming_session_counts(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    checkpoint_dir: str,
-    sink_table: str = "session_counts",
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    state_partitions: int = 8,
-) -> StreamingQuery:
-    """File stream -> native session windows -> in-memory sink.
-
-    Complete output mode for the same reason as the tumbling drain:
-    the final table must not depend on how files were micro-batched,
-    and append mode would hold back sessions the watermark has not
-    closed at end-of-stream.
-    """
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    agg = session_event_counts(
-        stream, key_col=key_col, gap=gap, watermark=watermark
-    )
-    writer = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink_table)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-    return _start_with_state_partitions(spark, writer, state_partitions)
 
 
 def enriched_segment_counts(
@@ -220,16 +186,13 @@ def enriched_segment_counts(
     batch no-ops/hints), so the oracle's plain SQL join hash-matches
     the drained stream -- stream == batch is the correctness contract.
     """
-    from pyspark.sql.types import TimestampNTZType
-
-    if isinstance(events.schema[ts_col].dataType, TimestampNTZType):
-        events = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     dim = customer.select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("segment"),
     )
     return (
-        events.withWatermark(ts_col, watermark)
+        event_time(events, ts_col)
+        .withWatermark(ts_col, watermark)
         .join(F.broadcast(dim), "user_id", "left")
         .groupBy(
             F.window(ts_col, window_duration).alias("w"),
@@ -258,36 +221,6 @@ def enriched_segment_counts(
     )
 
 
-def streaming_segment_counts(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    customer: DataFrame,
-    checkpoint_dir: str,
-    sink_table: str = "segment_counts",
-    window_duration: str = "1 hour",
-    watermark: str = "1 hour",
-    state_partitions: int = 8,
-) -> StreamingQuery:
-    """File stream -> broadcast dim join -> windowed counts -> memory
-    sink (complete mode + availableNow drain, the x27 contract)."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    agg = enriched_segment_counts(
-        stream,
-        customer,
-        window_duration=window_duration,
-        watermark=watermark,
-    )
-    writer = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink_table)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-    return _start_with_state_partitions(spark, writer, state_partitions)
-
-
 def view_click_attribution(
     views: DataFrame,
     clicks: DataFrame,
@@ -308,15 +241,8 @@ def view_click_attribution(
     batch inputs (withWatermark is a batch no-op), so the oracle's
     plain interval-join SQL hash-matches the drained stream.
     """
-    from pyspark.sql.types import TimestampNTZType
-
-    def _ts(df: DataFrame) -> DataFrame:
-        if isinstance(df.schema["ts"].dataType, TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-
     v = (
-        _ts(views)
+        event_time(views, "ts")
         .select(
             F.col("event_id").alias("view_id"),
             F.col("user_id").alias("v_user"),
@@ -325,7 +251,7 @@ def view_click_attribution(
         .withWatermark("v_ts", watermark)
     )
     c = (
-        _ts(clicks)
+        event_time(clicks, "ts")
         .select(
             F.col("event_id").alias("click_id"),
             F.col("user_id").alias("user_id"),
@@ -350,44 +276,3 @@ def view_click_attribution(
         ).cast("long").alias("gap_sec"),
     )
 
-
-def streaming_attribution(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    checkpoint_dir: str,
-    sink_table: str = "attribution_pairs",
-    attribution_window: str = "24 hours",
-    watermark: str = "48 hours",
-    state_partitions: int = 8,
-) -> StreamingQuery:
-    """One events file-stream forked into view/click branches (two
-    filtered views of the SAME readStream -- a streaming self-join),
-    interval-joined, appended to a memory sink, drained with
-    availableNow (the x27 contract; append mode because inner
-    stream-stream joins emit matches immediately).
-
-    ``state_partitions`` sizes the state stores: a stream-stream join
-    instantiates shuffle-partition-count state stores PER SIDE, and
-    that count is pinned by the checkpoint forever -- so it must track
-    expected STATE size (rows inside watermark + window), not cluster
-    CPU count. Oversizing is pure per-batch overhead (store open/
-    commit/snapshot x partitions; measured 14.5 s -> 3.4 s at sf0.1
-    going 32 -> 8); undersizing caps join parallelism. The conf is
-    read at query START, so it is set around .start() and restored
-    immediately after."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    pairs = view_click_attribution(
-        stream.filter(F.col("event_type") == "view"),
-        stream.filter(F.col("event_type") == "click"),
-        attribution_window=attribution_window,
-        watermark=watermark,
-    )
-    writer = (
-        pairs.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink_table)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-    return _start_with_state_partitions(spark, writer, state_partitions)

@@ -370,7 +370,7 @@ def test_stream_incremental_dedup_two_drops(spark, tmp_path):
     q = stream_incremental_dedup(
         spark, src, docs.schema, idx, out, ckpt
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
     n1 = spark.read.parquet(out).count()
     assert n1 > 0
 
@@ -381,7 +381,7 @@ def test_stream_incremental_dedup_two_drops(spark, tmp_path):
     q2 = stream_incremental_dedup(
         spark, src, docs.schema, idx, out, ckpt
     )
-    q2.awaitTermination(300)
+    assert q2.awaitTermination(300)
 
     curated = spark.read.parquet(out)
     texts = [r[0] for r in curated.select(F.lower("text")).collect()]

@@ -5,7 +5,9 @@ list used to guarantee by hand. No Spark session is needed.
 
 from __future__ import annotations
 
+import ast
 import os
+import re
 
 import pytest
 
@@ -78,22 +80,70 @@ def _read(path: str) -> str:
         return fh.read()
 
 
+def _package_sources() -> dict[str, str]:
+    """Package-relative path -> source of every package module."""
+    root = os.path.dirname(poc_parquet_publisher_spark.__file__)
+    return {
+        os.path.relpath(os.path.join(d, f), root): _read(os.path.join(d, f))
+        for d, _, files in os.walk(root)
+        for f in files
+        if f.endswith(".py")
+    }
+
+
+_WINDOWS = os.path.join("streaming", "windows.py")
+
+
 @pytest.mark.parametrize(
     "needle, owner",
     [
         ("F.split(F.lower(", os.path.join("ops", "text.py")),
         ("i + F.lit(2), F.size(", "scale.py"),
+        ('.format("memory")', _WINDOWS),
+        (".dataType, TimestampNTZType)", _WINDOWS),
     ],
 )
 def test_shared_derivation_defined_once(needle, owner):
     # The tokenizer (text._toks) and the in-array pair expansion
     # (scale.pairs_within) feed the Spark side of every hash-checked
-    # registry entry; an inlined copy would let one copy drift.
-    root = os.path.dirname(poc_parquet_publisher_spark.__file__)
+    # registry entry; an inlined copy would let one copy drift. The
+    # memory-sink drain (windows.drain_to_memory) and the watermark's
+    # NTZ cast (windows.event_time) carry every stream == batch check.
     holders = sorted(
-        os.path.relpath(os.path.join(d, f), root)
-        for d, _, files in os.walk(root)
-        for f in files
-        if f.endswith(".py") and needle in _read(os.path.join(d, f))
+        rel for rel, src in _package_sources().items() if needle in src
     )
     assert holders == [owner]
+
+
+_NOQA_F401 = re.compile(r"noqa:[^#\n]*\bF401")
+
+
+def test_package_modules_use_every_import():
+    # __init__ modules re-export by importing; everywhere else an
+    # imported name nothing reads is dead weight at import time. A
+    # deliberate re-export or side-effect import says so with
+    # ``noqa: F401`` on its line.
+    unused = []
+    for rel, src in sorted(_package_sources().items()):
+        if os.path.basename(rel) == "__init__.py":
+            continue
+        tree = ast.parse(src)
+        lines = src.splitlines()
+        loaded = {
+            n.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if getattr(node, "module", None) == "__future__":
+                continue
+            text = "\n".join(lines[node.lineno - 1 : node.end_lineno])
+            if _NOQA_F401.search(text):
+                continue
+            for alias in node.names:
+                name = alias.asname or alias.name.split(".")[0]
+                if name not in loaded:
+                    unused.append(f"{rel}:{node.lineno} {name}")
+    assert unused == []

@@ -14,9 +14,10 @@ from poc_parquet_publisher_spark.pipeline import (
 )
 from poc_parquet_publisher_spark.streaming import (
     dedup_stream,
+    drain_to_memory,
+    event_time,
     running_event_totals,
     stream_publish,
-    streaming_hourly_counts,
     windowed_event_counts,
 )
 
@@ -50,8 +51,7 @@ def test_stream_publish_counts(spark, events_dir, tmp_path):
         max_files_per_trigger=1,  # force several micro-batches
         on_batch=lambda bid, n: seen.append((bid, n)),
     )
-    q.awaitTermination(120)
-    assert not q.isActive
+    assert q.awaitTermination(120)
 
     # publisher-side: every row published exactly once across batches
     assert sum(n for _, n in seen) == total
@@ -81,17 +81,7 @@ def test_stream_dedup_drops_cross_batch_duplicates(spark, events_dir, tmp_path):
         .parquet(src)
     )
     deduped = dedup_stream(stream, ["event_id"], ts_col="ts", watermark="2 hours")
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_t")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    out = spark.table("dedup_t")
+    out = drain_to_memory(deduped, "append", ckpt)
     assert out.count() == n
     assert out.select("event_id").distinct().count() == n
 
@@ -107,18 +97,7 @@ def test_stateful_running_totals(spark, events_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)  # several micro-batches
         .parquet(src)
     )
-    q = (
-        running_event_totals(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("totals_t")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    out = spark.table("totals_t")
+    out = drain_to_memory(running_event_totals(stream), "update", ckpt)
     # per key: totals are monotone, max(total) == batch-mode count,
     # and the per-batch increments sum to that same count
     expected = {
@@ -136,71 +115,21 @@ def test_stateful_running_totals(spark, events_dir, tmp_path):
         assert len(mine) >= 2  # state really crossed micro-batches
 
 
-def test_stateful_running_totals_tws(spark, events_dir, tmp_path):
-    """transformWithStateInPandas (Spark 4 successor API): same contract
-    as test_stateful_running_totals, the counting core shared via
-    _advance_totals. Skips (with the live probe's reason) until the
-    container gains google.protobuf -- the day it appears this test
-    activates and the API is covered with zero code changes."""
-    import pytest
-
-    from poc_parquet_publisher_spark.streaming.stateful import (
-        has_transform_with_state,
-        running_event_totals_tws,
-    )
-
-    if not has_transform_with_state():
-        pytest.skip(
-            "transformWithStateInPandas needs google.protobuf "
-            "(absent in this container; applyInPandasWithState carries "
-            "the stateful surface -- SURVEY.md section 2.3)"
-        )
-
-    src, batch_df = events_dir
-    ckpt = str(tmp_path / "ckpt")
-    stream = (
-        spark.readStream.schema(batch_df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        running_event_totals_tws(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("totals_tws_t")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-
-    out = spark.table("totals_tws_t")
-    expected = {
-        r.event_type: r.n
-        for r in batch_df.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    rows = out.collect()
-    assert {r.event_type for r in rows} == set(expected)
-    for key, n in expected.items():
-        mine = [r for r in rows if r.event_type == key]
-        assert max(r.running_total for r in mine) == n
-        assert sum(r.batch_rows for r in mine) == n
-
-
 def test_streaming_windows_match_batch(spark, events_dir, tmp_path):
     src, batch_df = events_dir
     ckpt = str(tmp_path / "ckpt")
 
-    q = streaming_hourly_counts(
-        spark, src, batch_df.schema, ckpt, sink_table="hourly_t"
+    drained = drain_to_memory(
+        windowed_event_counts(
+            spark.readStream.schema(batch_df.schema).parquet(src)
+        ),
+        "complete",
+        ckpt,
     )
-    q.awaitTermination(120)
 
     stream_rows = {
         (r.window_start, r.event_type): (r.n_events, r.sum_value)
-        for r in spark.table("hourly_t").collect()
+        for r in drained.collect()
     }
     batch_rows = {
         (r.window_start, r.event_type): (r.n_events, r.sum_value)
@@ -215,22 +144,22 @@ def test_streaming_sessions_match_batch(spark, events_dir, tmp_path):
     drained session table must equal the batch answer regardless of how
     files were micro-batched -- the merge-across-micro-batches case is
     exactly what distinguishes session state from tumbling windows."""
-    from poc_parquet_publisher_spark.streaming import (
-        session_event_counts,
-        streaming_session_counts,
-    )
+    from poc_parquet_publisher_spark.streaming import session_event_counts
 
     src, batch_df = events_dir
     ckpt = str(tmp_path / "ckpt-sessions")
 
-    q = streaming_session_counts(
-        spark, src, batch_df.schema, ckpt, sink_table="sessions_t"
+    drained = drain_to_memory(
+        session_event_counts(
+            spark.readStream.schema(batch_df.schema).parquet(src)
+        ),
+        "complete",
+        ckpt,
     )
-    q.awaitTermination(120)
 
     stream_rows = {
         (r.user_id, r.session_start): (r.session_end, r.n_events)
-        for r in spark.table("sessions_t").collect()
+        for r in drained.collect()
     }
     batch_rows = {
         (r.user_id, r.session_start): (r.session_end, r.n_events)
@@ -274,7 +203,7 @@ def test_streaming_quarantine_routes_both_ways(spark, events_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     expected = {
         r.status: r.n
@@ -296,7 +225,7 @@ def test_streaming_sliding_windows_match_batch(spark, events_dir, tmp_path):
 
     def sliding(df):
         return (
-            df.withColumn("ts", F.col("ts").cast("timestamp"))
+            event_time(df, "ts")
             .withWatermark("ts", "1 hour")
             .groupBy(
                 F.window("ts", "1 hour", "30 minutes").alias("w"),
@@ -310,20 +239,15 @@ def test_streaming_sliding_windows_match_batch(spark, events_dir, tmp_path):
             )
         )
 
-    q = (
-        sliding(spark.readStream.schema(batch_df.schema).parquet(src))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sliding_t")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drained = drain_to_memory(
+        sliding(spark.readStream.schema(batch_df.schema).parquet(src)),
+        "complete",
+        ckpt,
     )
-    q.awaitTermination(120)
 
     stream_rows = {
         (r.window_start, r.event_type): r.n_events
-        for r in spark.table("sliding_t").collect()
+        for r in drained.collect()
     }
     batch_rows = {
         (r.window_start, r.event_type): r.n_events
@@ -347,21 +271,16 @@ def test_stateful_sessionize_matches_batch(spark, events_dir, tmp_path):
     src, batch_df = events_dir
     ckpt = str(tmp_path / "ckpt-stateful-sessions")
 
-    out = sessionize_stateful(
-        spark.readStream.schema(batch_df.schema).parquet(src)
+    drained = drain_to_memory(
+        sessionize_stateful(
+            spark.readStream.schema(batch_df.schema).parquet(src)
+        ),
+        "append",
+        ckpt,
     )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stateful_sessions_t")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     emitted = {
         (r.user_id, r.session_start): (r.session_end, r.n_events)
-        for r in spark.table("stateful_sessions_t").collect()
+        for r in drained.collect()
     }
 
     # batch reference: x21's lag method (gap STRICTLY > 30 min)
@@ -413,24 +332,26 @@ def test_streaming_attribution_matches_batch(spark, events_dir, tmp_path):
     hold state across micro-batches (a view in batch 1 matching a
     click in batch 3 is the case that distinguishes this from a
     stream-static join)."""
-    from pyspark.sql import functions as F
-
     from poc_parquet_publisher_spark.streaming.windows import (
-        streaming_attribution,
         view_click_attribution,
     )
 
     src, batch_df = events_dir
     ckpt = str(tmp_path / "ckpt-attr")
 
-    q = streaming_attribution(
-        spark, src, batch_df.schema, ckpt, sink_table="attr_t"
+    stream = spark.readStream.schema(batch_df.schema).parquet(src)
+    drained = drain_to_memory(
+        view_click_attribution(
+            stream.filter(F.col("event_type") == "view"),
+            stream.filter(F.col("event_type") == "click"),
+        ),
+        "append",
+        ckpt,
     )
-    q.awaitTermination(120)
 
     stream_rows = {
         (r.click_id, r.view_id): (r.user_id, r.gap_sec)
-        for r in spark.table("attr_t").collect()
+        for r in drained.collect()
     }
     batch_pairs = view_click_attribution(
         batch_df.filter(F.col("event_type") == "view"),
@@ -509,8 +430,7 @@ def test_checkpoint_recovery_no_dupes_no_loss(spark, events_dir, tmp_path):
         checkpoint_dir=ckpt,
         max_files_per_trigger=1,
     )
-    q2.awaitTermination(120)
-    assert not q2.isActive
+    assert q2.awaitTermination(120)
 
     counts = consume_batch_counts(spool)
     assert sum(counts) == total  # no loss, and batch 0 NOT replayed
