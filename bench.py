@@ -311,20 +311,20 @@ def warm_up(spark) -> None:
     # a 10-row parquet round-trip and a one-batch memory-sink drain over
     # a temp table that shares NOTHING with the bench tables -- no bench
     # data is touched, so per-query timings still include their own IO.
+    # The drain is the registry's own, which stops the query and raises
+    # if it does not finish.
+    from poc_parquet_publisher_spark.streaming.windows import drain_to_memory
+
     with tempfile.TemporaryDirectory() as _wtmp:
         spark.range(10).write.mode("overwrite").parquet(f"{_wtmp}/w.parquet")
         warm_df = spark.read.parquet(f"{_wtmp}/w.parquet")
         warm_df.count()
-        (
-            spark.readStream.schema(warm_df.schema)
-            .parquet(f"{_wtmp}/w.parquet")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("__warm_stream")
-            .option("checkpointLocation", f"{_wtmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination(120)
+        drain_to_memory(
+            spark.readStream.schema(warm_df.schema).parquet(
+                f"{_wtmp}/w.parquet"
+            ),
+            "append",
+            f"{_wtmp}/ckpt",
         )
 
 

@@ -6,7 +6,8 @@ This package re-expresses that capability Spark-first:
 
 - ``session``   : SparkSession bootstrap (UTC, AQE, nanos-timestamp handling,
                   s3a endpoint override -- reference duckdb.go:18-39).
-- ``catalog``   : table loading/normalization over the parquet fixtures.
+- ``catalog``   : the one Parquet read (``read_parquet``) and the fixture
+                  tables.
 - ``queries``   : the DECLARED QUERY SET (SURVEY.md section 2.2, Q01-Q28)
                   plus LLM-pipeline extension queries, each paired with a
                   DuckDB oracle SQL string.

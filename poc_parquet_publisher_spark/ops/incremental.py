@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import read_parquet
+
 
 def _index_exists(spark: SparkSession, index_path: str) -> bool:
     from ..pipeline.layout import _fs_for
@@ -55,7 +57,7 @@ def incremental_dedup(
     keep = hashed.groupBy("__h").agg(F.min(id_col).alias(id_col))
     fresh = hashed.join(keep, ["__h", id_col], "left_semi")
     if _index_exists(spark, index_path):
-        seen = spark.read.parquet(index_path)
+        seen = read_parquet(spark, index_path)
         fresh = fresh.join(seen, fresh["__h"] == seen["h"], "left_anti")
     if update_index:
         # materialize before the append: the survivors' plan reads the
@@ -200,7 +202,7 @@ def incremental_neardup_dedup(
     )
     drops = within
     if _index_exists(spark, index_path):
-        idx = spark.read.parquet(index_path)
+        idx = read_parquet(spark, index_path)
         drops = drops.union(
             neardup_matches(sigs, idx, threshold, max_docs_per_band)
             .select("new_id")
@@ -238,7 +240,7 @@ def _compact_index(
     if not files:
         raise ValueError(f"no index data files under {index_path}")
     total_bytes = sum(sz for _p, sz in files)
-    idx = spark.read.parquet(index_path).dropDuplicates(dedup_cols)
+    idx = read_parquet(spark, index_path).dropDuplicates(dedup_cols)
     if keep is not None:
         idx = idx.filter(keep)
     # pin before the swap: the plan reads the very path being rewritten

@@ -9,8 +9,8 @@ Reference behavior being rebuilt:
   non-starter, and a direct scan keeps predicate pushdown and split
   planning against the object store.
 - the multi-file loop (handler.go:118) -- replaced by one
-  ``spark.read.parquet(*paths)`` over all files, so Spark plans splits
-  across the whole file set instead of processing files serially.
+  ``catalog.read_parquet`` over all files, so Spark plans splits across
+  the whole file set instead of processing files serially.
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import ensure_session_confs
+from ..catalog import read_parquet
 
 
 def resolve_paths(bucket: str | None, paths: list[str]) -> list[str]:
@@ -38,9 +38,8 @@ def resolve_paths(bucket: str | None, paths: list[str]) -> list[str]:
 
 def read_request(spark: SparkSession, request: dict) -> DataFrame:
     """{bucket, paths[]} -> DataFrame over every requested parquet file."""
-    ensure_session_confs(spark)
     uris = resolve_paths(request.get("bucket"), list(request.get("paths", [])))
-    return spark.read.parquet(*uris)
+    return read_parquet(spark, uris)
 
 
 def s3_client_factory(
@@ -139,8 +138,7 @@ def read_request_staged(
         with open(local_path, "wb") as f:
             shutil.copyfileobj(body, f)
         local_paths.append(local_path)
-    ensure_session_confs(spark)
-    return spark.read.parquet(*local_paths), tmp
+    return read_parquet(spark, local_paths), tmp
 
 
 def json_quarantine(

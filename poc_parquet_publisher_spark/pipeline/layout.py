@@ -31,6 +31,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import read_parquet
+from .publish import serialize_json
+
 
 def _fs_for(spark: SparkSession, path: str):
     """(FileSystem, Path) for ``path`` via the Hadoop FileSystem API, so
@@ -157,7 +160,7 @@ def compact(
         raise ValueError(f"no parquet data files under {path}")
     total_bytes = sum(sz for _p, sz in files)
     n_out = max(1, math.ceil(total_bytes / target_file_bytes))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
 
     n_rows = df.count()
     bytes_per_row = max(1.0, total_bytes / max(1, n_rows))
@@ -202,21 +205,18 @@ def export_jsonl(
     compression: str | None = None,
 ) -> int:
     """Export a corpus as JSON-Lines shards -- the interchange format
-    every tokenizer/training loader ingests. One row per line via
-    ``to_json(struct(*))`` (the same serialization the publish leg uses,
-    pipeline/publish.py serialize_json), written with Spark's text sink
-    so shard count == task count and ``maxRecordsPerFile`` bounds shard
-    size -- the 100 TB posture: no driver-side iteration, no collect,
-    shards land in parallel on any Hadoop scheme (file:, hdfs:, s3a:).
+    every tokenizer/training loader ingests. One row per line via the
+    publish leg's serialization (pipeline/publish.py serialize_json),
+    written with Spark's text sink so shard count == task count and
+    ``maxRecordsPerFile`` bounds shard size -- the 100 TB posture: no
+    driver-side iteration, no collect, shards land in parallel on any
+    Hadoop scheme (file:, hdfs:, s3a:).
 
     Returns the number of shard files written. ``compression`` accepts
     the text-sink codecs ('gzip', 'snappy', ...) for wire-friendly
     shards.
     """
-    writer = (
-        df.select(F.to_json(F.struct(*df.columns)).alias("value"))
-        .write.mode("overwrite")
-    )
+    writer = serialize_json(df).write.mode("overwrite")
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     if compression:

@@ -59,9 +59,13 @@ def serialize_json(df: DataFrame) -> DataFrame:
 
     Mirrors json.Marshal per record (handler.go:54); nested structs and
     arrays serialize recursively, matching the struct-tag JSON shape of
-    internal/models/record.go.
+    internal/models/record.go. Timestamps keep all six fraction digits, as
+    json.Marshal keeps full precision; Spark's default writes three and
+    drops the microseconds.
     """
-    return df.select(F.to_json(F.struct(*df.columns)).alias("body"))
+    fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
+    opts = {"timestampFormat": fmt + "XXX", "timestampNTZFormat": fmt}
+    return df.select(F.to_json(F.struct(*df.columns), opts).alias("body"))
 
 
 class DirectoryQueue:

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ...catalog import load_table
+from ...catalog import load_table, read_parquet
 from ...scale import pairs_within
 from ...ops import dedup, graph, sampling
 from ...ops.text import _toks
@@ -403,7 +403,7 @@ def x156_partition_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_partitioned(
             ev, tmp, ["event_date"], sort_cols=["event_id"]
         )
-        back = spark.read.parquet(tmp)
+        back = read_parquet(spark, tmp)
         out = (
             back.groupBy("event_date")
             .agg(

@@ -8344,9 +8344,6 @@ GROUP BY 1 ORDER BY 1
         "groupBy over <= 5k rows",
 )
 def x532_listagg_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ...catalog import ensure_session_confs
-
-    ensure_session_confs(spark)
     orders = load_table(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("x532_orders")
     return spark.sql(

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ...catalog import load_table
+from ...catalog import load_table, read_parquet
 from ...scale import pairs_within, zorder_key_sql
 from ...ops import dedup, graph, sampling, similarity, text
 from ...ops.text import _toks
@@ -358,14 +358,13 @@ def _events_stream(
     spark: SparkSession, sf_dir: str, tmp: str, copies: int
 ) -> DataFrame:
     """``events`` as a file stream for the build-time drains: written
-    ``copies`` times under ``tmp`` as 4-file micros parquet (the nanos
-    physical type can't stream through a fixed schema), then opened as
-    a readStream with the schema read back from the rewrite."""
+    ``copies`` times under ``tmp`` as 4-file parquet, then opened as a
+    readStream with the schema read back from the rewrite."""
     src = f"{tmp}/events"
     base = load_table(spark, sf_dir, "events").repartition(4)
     for i in range(copies):
         base.write.mode("append" if i else "overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = read_parquet(spark, src).schema
     return spark.readStream.schema(schema).parquet(src)
 
 

@@ -281,15 +281,21 @@ def x251_cogroup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", ub
     )
 
+    def empty(**dtypes) -> pd.DataFrame:
+        # a one-sided group: typed columns on a named int64 user index, so
+        # the merge, outer join and fillna below never see object columns
+        index = pd.Index([], dtype="int64", name="user_id")
+        return pd.DataFrame(index=index, columns=list(dtypes)).astype(dtypes)
+
     def reconcile(key, vdf: pd.DataFrame, pdf: pd.DataFrame) -> pd.DataFrame:
         va = (
             vdf.groupby("user_id")["ts"].agg(nv="count", first_view="min")
             if len(vdf)
-            else pd.DataFrame(columns=["nv", "first_view"])
+            else empty(nv="int64", first_view=pdf["ts"].dtype)
         )
         if len(pdf):
             pj = pdf.merge(
-                va["first_view"] if len(va) else va,
+                va["first_view"],
                 how="left",
                 left_on="user_id",
                 right_index=True,
@@ -301,10 +307,8 @@ def x251_cogroup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 np=("ts", "count"), blind=("blind", "sum")
             )
         else:
-            pa = pd.DataFrame(columns=["np", "blind"])
-        out = va.drop(columns=["first_view"], errors="ignore").join(
-            pa, how="outer"
-        )
+            pa = empty(np="int64", blind="int64")
+        out = va[["nv"]].join(pa, how="outer")
         out = out.fillna(0).astype("int64").reset_index()
         return out[["user_id", "nv", "np", "blind"]]
 

@@ -20,10 +20,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-# The driver fixtures store events.ts as Parquet TIMESTAMP(NANOS), which the
+# The fixtures store every timestamp as TIMESTAMP(MICROS), but files from
+# outside (pyarrow's default writer) may hold TIMESTAMP(NANOS), which the
 # stock reader rejects ([PARQUET_TYPE_ILLEGAL]). nanosAsLong loads such
-# columns as raw nanosecond longs; catalog.load_table converts them to
-# TIMESTAMP_NTZ (micros) to match DuckDB's naive-timestamp read.
+# columns as raw nanosecond longs; catalog.read_parquet, the one Parquet
+# read, casts them to the type of their microsecond twin.
 _BASE_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",

@@ -36,9 +36,10 @@ def drain_to_memory(
     frame: DataFrame, output_mode: str, checkpoint_dir: str
 ) -> DataFrame:
     """Drain a streaming ``frame`` with ``availableNow`` into a memory
-    sink under a fresh unique name and return that table; raise if the
-    drain does not finish within 300 s instead of returning a partially
-    filled sink.
+    sink under a fresh unique name and return a materialized copy of it;
+    raise if the drain does not finish within 300 s instead of returning
+    a partially filled sink. The sink's view is dropped, so its rows
+    live only as long as the returned frame.
 
     The query starts with 8 shuffle partitions, not the session's
     CPU-count default: every stateful operator instantiates
@@ -72,15 +73,17 @@ def drain_to_memory(
             f"stream drain did not finish within {_DRAIN_TIMEOUT_S} s; "
             "refusing to return a partially-filled sink"
         )
-    return spark.table(name)
+    out = spark.table(name).localCheckpoint()
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def event_time(df: DataFrame, ts_col: str) -> DataFrame:
     """``df`` with ``ts_col`` as TIMESTAMP, ready for a watermark.
 
-    Watermarks reject TIMESTAMP_NTZ (the type the nanos fixtures load
-    as); with the session zone pinned to UTC (catalog contract) the cast
-    to TIMESTAMP is value-preserving. Other types pass through.
+    Watermarks reject TIMESTAMP_NTZ (the type naive Parquet timestamps
+    load as); with the session zone pinned to UTC (catalog contract) the
+    cast to TIMESTAMP is value-preserving. Other types pass through.
     """
     if isinstance(df.schema[ts_col].dataType, TimestampNTZType):
         return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))

@@ -10508,3 +10508,33 @@ def test_x568_lrv_floor_cross_engine_identical(spark, tmp_path):
     )
     stats = [v for v in row.asDict().values() if isinstance(v, float)]
     assert stats and all(math.isfinite(v) for v in stats), row
+
+
+@pytest.mark.parametrize("only", ["view", "purchase"])
+def test_x251_one_sided_groups(spark, tmp_path, only):
+    """events holding only views (every cogroup group lacks purchases)
+    or only purchases (every group lacks views, so every purchase is
+    blind): exact rows from a pure-Python replay, and the DuckDB oracle
+    agrees."""
+    from collections import Counter
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from poc_parquet_publisher_spark import queries as qmod
+
+    ev = pq.read_table(f"{SF}/events.parquet")
+    ev = ev.filter(pc.equal(ev["event_type"], only))
+    pq.write_table(ev, tmp_path / "events.parquet")
+    per_user = Counter(ev["user_id"].to_pylist())
+    if only == "view":
+        want = [(0, len(per_user), 0, ev.num_rows)]
+    else:
+        by_n = Counter(per_user.values())
+        want = [(k, by_n[k], k * by_n[k], 0) for k in sorted(by_n)]
+
+    qmod.all_queries()
+    got = qmod.REGISTRY["x251_cogroup_reconcile"].spark(spark, str(tmp_path))
+    assert [tuple(r) for r in got.collect()] == want
+    out = _degenerate_compare(spark, tmp_path, "x251_cogroup_reconcile")
+    assert out["match"], out

@@ -260,20 +260,22 @@ def test_run_pipeline_envelope(spark, tmp_path):
 
 
 def test_queue_roundtrip_as_dataframe(spark, tmp_path):
-    """rows -> to_json -> queue -> from_json -> rows: full fidelity."""
+    """rows -> to_json -> queue -> from_json -> rows: full fidelity,
+    down to the microseconds of events.ts."""
     from poc_parquet_publisher_spark.pipeline.consumer import (
         messages_as_dataframe,
     )
 
-    spool = str(tmp_path / "spool")
-    orders = spark.read.parquet(table_path(SF, "orders")).limit(50)
-    publish(orders, lambda: DirectoryQueue(spool))
+    for table in ("orders", "events"):
+        spool = str(tmp_path / table)
+        rows = spark.read.parquet(table_path(SF, table)).limit(50)
+        publish(rows, lambda: DirectoryQueue(spool))
 
-    back = messages_as_dataframe(spark, spool, orders.schema)
-    assert back.schema.simpleString() == orders.schema.simpleString()
-    src = {tuple(r) for r in orders.collect()}
-    out = {tuple(r) for r in back.collect()}
-    assert out == src
+        back = messages_as_dataframe(spark, spool, rows.schema)
+        assert back.schema.simpleString() == rows.schema.simpleString()
+        src = {tuple(r) for r in rows.collect()}
+        out = {tuple(r) for r in back.collect()}
+        assert out == src, table
 
 
 def test_serialize_json_nested(spark):

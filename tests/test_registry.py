@@ -101,6 +101,7 @@ _WINDOWS = os.path.join("streaming", "windows.py")
         ("i + F.lit(2), F.size(", "scale.py"),
         ('.format("memory")', _WINDOWS),
         (".dataType, TimestampNTZType)", _WINDOWS),
+        ("read.parquet(", "catalog.py"),
     ],
 )
 def test_shared_derivation_defined_once(needle, owner):
@@ -109,6 +110,8 @@ def test_shared_derivation_defined_once(needle, owner):
     # registry entry; an inlined copy would let one copy drift. The
     # memory-sink drain (windows.drain_to_memory) and the watermark's
     # NTZ cast (windows.event_time) carry every stream == batch check.
+    # Every Parquet read goes through catalog.read_parquet, so tables and
+    # requests share one schema rule and one nanosecond rule.
     holders = sorted(
         rel for rel, src in _package_sources().items() if needle in src
     )

@@ -26,9 +26,10 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def events_dir(spark, tmp_path_factory):
-    """Events re-materialized as micros-timestamp parquet: the fixture's
-    TIMESTAMP(NANOS) physical type needs the nanosAsLong conf + catalog
-    normalization, which a streaming schema can't express directly."""
+    """Events re-materialized as a 4-file parquet directory, the shape a
+    file stream reads in several micro-batches. The fixture already
+    stores ts as TIMESTAMP(MICROS); nanosecond files from outside go
+    through catalog.read_parquet, never straight into a stream."""
     out = tmp_path_factory.mktemp("stream") / "events"
     df = load_table(spark, SF, "events").repartition(4)
     df.write.mode("overwrite").parquet(str(out))
@@ -137,6 +138,19 @@ def test_streaming_windows_match_batch(spark, events_dir, tmp_path):
     }
     assert stream_rows == batch_rows
     assert len(batch_rows) > 0
+
+
+def test_drains_release_their_memory_tables(spark):
+    """Each drain's sink view is dropped once its rows are copied out, so
+    repeated registry builds leave no memory table behind."""
+    from poc_parquet_publisher_spark.queries import REGISTRY, all_queries
+
+    all_queries()
+    build = REGISTRY["x27_streaming_window"].spark
+    counts = [build(spark, SF).count() for _ in range(3)]
+    assert counts[0] > 0 and len(set(counts)) == 1
+    names = [t.name for t in spark.catalog.listTables()]
+    assert not [n for n in names if n.startswith("drain_")]
 
 
 def test_streaming_sessions_match_batch(spark, events_dir, tmp_path):
