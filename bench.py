@@ -6,17 +6,19 @@ JSON line:
     {"metric": "...", "value": <total_sec>, "unit": "sec",
      "queries": {"q01_count": sec, ...}, "sf": 0.1}
 
-Each query is timed to a terminal action. Queries returning full tables are
-counted (the driver-side collect cost is not the engine's scan/agg cost);
-LIMIT-ed queries are collected.
+Each entry is timed as two ``telemetry.phase`` blocks: the builder call,
+then ``count()`` (the driver-side collect cost is not the engine's
+scan/agg cost). ``queries[name]`` is their sum.
 
 The full per-entry map is persisted to $BENCH_OUT (default
-BENCH_LOCAL.json). ``python bench.py --medians [N]`` instead runs N
-(default 3) COLD subprocess runs (fresh JVM each -- iterative plans are
-warm-cache sensitive, see .claude/skills/verify) and writes the
-per-entry MEDIAN map to BENCH_MEDIANS.json, so round-over-round diffs
-compare medians instead of single-run noise (sub-2 s entries drift
-1.5-3x run-to-run with byte-identical code).
+BENCH_LOCAL.json), with an ``entries`` map that splits each registry
+entry into build and execution seconds and jobs plus the CPU seconds,
+shuffle writes and spills of both phases. ``python bench.py --medians
+[N]`` instead runs N (default 3) COLD subprocess runs (fresh JVM each --
+iterative plans are warm-cache sensitive, see .claude/skills/verify)
+and writes the per-entry MEDIAN map to BENCH_MEDIANS.json, so
+round-over-round diffs compare medians instead of single-run noise
+(sub-2 s entries drift 1.5-3x run-to-run with byte-identical code).
 """
 
 from __future__ import annotations
@@ -129,6 +131,7 @@ def main() -> None:
 
     from poc_parquet_publisher_spark.queries import all_queries
     from poc_parquet_publisher_spark.session import build_session
+    from poc_parquet_publisher_spark.telemetry import phase
 
     # explicit heap: the 1g default intermittently OOMs the 3x
     # calibration probe (32 concurrent partial-distinct hash aggs);
@@ -176,34 +179,46 @@ def main() -> None:
             file=sys.stderr,
         )
 
+    entries: dict[str, dict] = {}
     for name, fn in sorted(queries.items()):
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        # count() forces the full plan; collect() only for bounded outputs
-        df.count()
-        timings[name] = round(time.perf_counter() - t0, 3)
+        with phase(spark) as build:
+            df = fn(spark, sf_dir)
+        with phase(spark) as execute:
+            df.count()
+        timings[name] = round(build.seconds + execute.seconds, 3)
+        entries[name] = {
+            "build_s": round(build.seconds, 3),
+            "exec_s": round(execute.seconds, 3),
+            "build_jobs": build.jobs,
+            "exec_jobs": execute.jobs,
+            "cpu_s": round(build.cpu_s + execute.cpu_s, 3),
+            "shuffle_mb": round(build.shuffle_mb + execute.shuffle_mb, 3),
+            "spill_mb": round(build.spill_mb + execute.spill_mb, 3),
+        }
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
 
     if only:
-        _write_result(timings, sf, calibration, merge=True)
+        _write_result(timings, entries, sf, calibration, merge=True)
         spark.stop()
         return
 
     # Pipeline throughput (BASELINE.md "read -> to_json -> sink"): full
-    # publish path against a success-returning client, so the number is
-    # engine cost (scan + serialize + chunk), not fake-queue filesystem IO.
-    from poc_parquet_publisher_spark.catalog import table_path
+    # publish path, footer read included, against a success-returning
+    # client, so the number is engine cost (read + scan + serialize +
+    # chunk), not fake-queue filesystem IO.
+    from poc_parquet_publisher_spark.catalog import load_table, read_parquet
     from poc_parquet_publisher_spark.pipeline import publish
 
     class _NullQueue:
         def send_message_batch(self, QueueUrl="", Entries=None):
             return {"Failed": []}
 
-    orders = spark.read.parquet(table_path(sf_dir, "orders"))
-    n_rows = orders.count()
     t0 = time.perf_counter()
-    assert publish(orders, _NullQueue).published == n_rows
+    orders = load_table(spark, sf_dir, "orders")
+    published = publish(orders, _NullQueue).published
     dt = time.perf_counter() - t0
+    n_rows = orders.count()
+    assert published == n_rows
     timings["pipeline_publish"] = round(dt, 3)
     pipeline_rows_s = round(n_rows / dt)
     print(
@@ -220,12 +235,11 @@ def main() -> None:
     with tempfile.TemporaryDirectory() as tmp:
         src = f"{tmp}/orders_stream"
         orders.repartition(8).write.mode("overwrite").parquet(src)
-        stream_src = spark.read.parquet(src)
         t0 = time.perf_counter()
         q = stream_publish(
             spark,
             src,
-            stream_src.schema,
+            read_parquet(spark, src).schema,
             _NullQueue,
             checkpoint_dir=f"{tmp}/ckpt",
         )
@@ -282,7 +296,7 @@ def main() -> None:
         file=sys.stderr,
     )
 
-    _write_result(timings, sf, calibration)
+    _write_result(timings, entries, sf, calibration)
     spark.stop()
 
 
@@ -329,7 +343,11 @@ def warm_up(spark) -> None:
 
 
 def _write_result(
-    timings: dict, sf, calibration: dict | None = None, merge: bool = False
+    timings: dict,
+    entries: dict,
+    sf,
+    calibration: dict | None = None,
+    merge: bool = False,
 ) -> None:
     # The driver captures only the TAIL of stdout, so a single giant
     # JSON line truncates FRONT-first and parses as null every round
@@ -344,15 +362,15 @@ def _write_result(
     if merge and os.path.exists(local_path):
         with open(local_path) as f:
             prior = json.load(f)
-        merged = dict(prior.get("queries", {}))
-        merged.update(timings)
-        timings = merged
+        timings = {**prior.get("queries", {}), **timings}
+        entries = {**prior.get("entries", {}), **entries}
     total = round(sum(timings.values()), 3)
     result = {
         "metric": "registry_queries_total_wall_clock",
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "entries": entries,
         "sf": sf,
     }
     if calibration is not None:
@@ -381,7 +399,8 @@ def _write_result(
 def medians(n_runs: int = 3) -> None:
     """Run ``n_runs`` cold bench subprocesses and write the per-entry
     median map to BENCH_MEDIANS.json (same shape as BENCH_LOCAL.json,
-    plus per-entry spread so >1.5x single-run drift is visible as
+    each ``entries`` field the median of its own per-run values, plus
+    per-entry spread so >1.5x single-run drift is visible as
     measurement noise instead of needing manual code-diff exoneration).
     The LAST run's BENCH_LOCAL.json is left in place, so the two
     committed ledgers come from the same session."""
@@ -415,11 +434,19 @@ def medians(n_runs: int = 3) -> None:
         )
         med[name] = round(statistics.median(vals), 3)
         spread[name] = [vals[0], vals[-1]]
+    entries = {}
+    for name in sorted(set().union(*(r["entries"] for r in runs))):
+        per_run = [r["entries"][name] for r in runs if name in r["entries"]]
+        entries[name] = {
+            field: round(statistics.median(e[field] for e in per_run), 3)
+            for field in per_run[0]
+        }
     result = {
         "metric": "registry_queries_total_wall_clock_median",
         "value": round(sum(med.values()), 3),
         "unit": "sec",
         "queries": med,
+        "entries": entries,
         "spread_min_max": spread,
         "runs": n_runs,
         "sf": runs[-1].get("sf"),

@@ -100,11 +100,6 @@ def read_request_staged(
     deployment this leg exists for); on a cluster, use ``read_request``.
     Guarded loudly rather than failing opaquely at scan time.
 
-    API BREAK (round 11): this function previously returned the bare
-    DataFrame; it now returns ``(df, staging_dir)``. External callers
-    written against the old signature will get a tuple and fail at
-    first use -- unpack the pair and take ownership of the directory.
-
     Returns ``(df, staging_dir)``. The CALLER owns ``staging_dir`` and
     must delete it once the DataFrame is fully consumed -- Spark reads
     lazily, so this function cannot clean up, and with ``temp_dir=None``

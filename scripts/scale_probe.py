@@ -27,9 +27,9 @@ Run: python scripts/scale_probe.py          (~15 min at local[32])
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -180,61 +180,32 @@ def amplify(spark, copies: int, out_dir: str) -> None:
             )
 
     if _needs("embeddings"):
-        # copy j circularly rotates each vector by j positions: norms
-        # and all WITHIN-copy pairwise distances are exactly preserved
-        # (rotation is an isometry applied uniformly), while cross-copy
-        # cosine falls to chance level -- verbatim copies would give
-        # every vector (copies-1) exact twins and blow the x28 LSH
-        # candidate set up quadratically in copies, an artifact the
-        # real "10x more vectors" workload does not have
-        em = spark.read.parquet(f"{BASE}/embeddings.parquet")
-        dim = 64
-        parts = []
-        for j in range(copies):
-            c = em.withColumn(
-                "vec_id", F.col("vec_id") + F.lit(j * SHIFT)
-            )
-            if j > 0:
-                c = c.withColumn(
-                    "embedding",
-                    F.expr(
-                        f"concat(slice(embedding, {j + 1}, {dim - j}), "
-                        f"slice(embedding, 1, {j}))"
-                    ),
-                )
-            parts.append(c)
-        _write_amped(parts, f"{out_dir}/embeddings.parquet")
+        _write_amped(
+            _rotated_embeddings(spark, copies),
+            f"{out_dir}/embeddings.parquet",
+        )
 
 
-XCAP_PROTOCOL = (
-    "fresh process per (mode, point); sole Spark workload on the host; "
-    "min-of-4 timed runs in-process; recall measured once per point"
-)
+def _rotated_embeddings(spark, copies: int) -> list:
+    """``copies`` images of the sf0.1 embeddings with disjoint vec_ids.
 
-# (sf label, copies). Past 63 copies the rotation isometry alone runs
-# out of distinct images (copies must stay < dim), so copy j composes
-# rotation (j % 63 + 1 positions for j > 0 within its sign group) with
-# a SIGN-FLIP pattern (negate odd dimensions for j >= 63): negating a
-# fixed dimension subset is a per-coordinate reflection -- norms and
-# every within-copy inner product are exactly preserved (sum s_d^2
-# u_d v_d = u.v), while cross-group similarity drops to chance just
-# like cross-rotation similarity does.
-XCAP_SCALES: dict[str, int] = {"1.0": 10, "2.0": 20, "4.0": 40, "8.0": 80}
-
-
-def _xcap_amplify(spark, sf: str, copies: int) -> str:
+    Copy j circularly rotates each vector by ``j % 63`` positions and,
+    for j >= 63, also negates the odd dimensions (the rotation alone
+    runs out of distinct images at the 64-dim width). Both maps are
+    isometries applied uniformly, so norms and every WITHIN-copy inner
+    product are exactly preserved while cross-copy cosine falls to
+    chance level -- verbatim copies would give every vector (copies-1)
+    exact twins and blow the x28 LSH candidate set up quadratically in
+    copies, an artifact the real "10x more vectors" workload does not
+    have.
+    """
     from pyspark.sql import functions as F
 
     dim = 64
-    d = os.path.join(SCRATCH, f"xcap_sf{sf}")
-    out = f"{d}/embeddings.parquet"
-    if os.path.exists(f"{out}/_SUCCESS"):
-        return d
-    os.makedirs(d, exist_ok=True)
     em = spark.read.parquet(f"{BASE}/embeddings.parquet")
     parts = []
     for j in range(copies):
-        rot, flip = j % 63, j >= 63
+        rot, flip = j % (dim - 1), j >= dim - 1
         c = em.withColumn("vec_id", F.col("vec_id") + F.lit(j * SHIFT))
         if rot > 0:
             c = c.withColumn(
@@ -253,56 +224,69 @@ def _xcap_amplify(spark, sf: str, copies: int) -> str:
                 ),
             )
         parts.append(c)
-    _write_amped(parts, out)
-    return d
+    return parts
 
 
-def _dump_stage_diag(spark) -> None:
-    """Top stages by executor run time with shuffle/spill/GC columns,
-    via the UI REST API (requires spark.ui.enabled=true)."""
-    import urllib.request
+# The blocked-MNN tier's planted-correspondence workload: b is a under
+# deterministic ~2% directional jitter (planted cos ~0.978), offset by
+# PLANTED_OFF so a true pair is (x, x + PLANTED_OFF).
+PLANTED_OFF = 10**9
 
-    try:
-        base = spark.sparkContext.uiWebUrl
-        apps = json.load(
-            urllib.request.urlopen(f"{base}/api/v1/applications")
-        )
-        app_id = apps[0]["id"]
-        stages = json.load(
-            urllib.request.urlopen(
-                f"{base}/api/v1/applications/{app_id}/stages"
-                "?status=complete"
-            )
-        )
-    except Exception as exc:  # diag only -- never fail the probe
-        print(f"# diag unavailable: {exc}", file=sys.stderr)
-        return
-    stages.sort(key=lambda s: -s.get("executorRunTime", 0))
-    print(
-        "# stage  runTime_s  gc_s  shufRead_MB  shufWrite_MB  "
-        "memSpill_MB  diskSpill_MB  name",
-        file=sys.stderr,
+
+def planted_sides(spark, sf_dir: str):
+    from pyspark.sql import functions as F
+
+    from poc_parquet_publisher_spark.catalog import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    a = emb.select("vec_id", "embedding")
+    b = emb.select(
+        (F.col("vec_id") + F.lit(PLANTED_OFF)).alias("vec_id"),
+        F.expr(
+            "transform(embedding, (x, d) -> cast(x * (1.0 + 0.3 "
+            "* sin(vec_id * 97 + d * 131)) as float))"
+        ).alias("embedding"),
     )
-    for s in stages[:14]:
-        print(
-            f"# {s['stageId']:>5}  "
-            f"{s.get('executorRunTime', 0) / 1e3:>8.1f}  "
-            f"{s.get('jvmGcTime', 0) / 1e3:>4.1f}  "
-            f"{s.get('shuffleReadBytes', 0) / 1e6:>10.1f}  "
-            f"{s.get('shuffleWriteBytes', 0) / 1e6:>11.1f}  "
-            f"{s.get('memoryBytesSpilled', 0) / 1e6:>10.1f}  "
-            f"{s.get('diskBytesSpilled', 0) / 1e6:>11.1f}  "
-            f"{s.get('name', '')[:48]}",
-            file=sys.stderr,
-        )
+    return a, b
+
+
+def _loglog_slope(times: dict) -> float:
+    """Least-squares slope of log t vs log sf over ``{sf: seconds}``."""
+    pts = sorted((float(s), t) for s, t in times.items())
+    xs = [math.log10(s) for s, _ in pts]
+    ys = [math.log10(max(t, 1e-3)) for _, t in pts]
+    mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
+    return sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / sum(
+        (x - mx) ** 2 for x in xs
+    )
+
+
+XCAP_PROTOCOL = (
+    "fresh process per (mode, point); sole Spark workload on the host; "
+    "min-of-4 timed runs in-process; recall measured once per point"
+)
+
+# (sf, copies) of main's ladder over the sf0.1 tables.
+SCALES = ((0.1, 1), (0.3, 3), (1.0, 10))
+
+# (sf label, copies); 80 copies pass the 63 rotations, see
+# _rotated_embeddings.
+XCAP_SCALES: dict[str, int] = {"1.0": 10, "2.0": 20, "4.0": 40, "8.0": 80}
+
+
+def _xcap_amplify(spark, sf: str, copies: int) -> str:
+    d = os.path.join(SCRATCH, f"xcap_sf{sf}")
+    out = f"{d}/embeddings.parquet"
+    if not os.path.exists(f"{out}/_SUCCESS"):
+        os.makedirs(d, exist_ok=True)
+        _write_amped(_rotated_embeddings(spark, copies), out)
+    return d
 
 
 def _merge_probe_row(row_name: str, updates: dict) -> dict:
     """Merge per-point cells into SCALE_PROBE.json's row, recomputing
     the overall and last-doubling exponents from whatever points the
     row then holds."""
-    import math
-
     probe_path = os.path.join(ROOT, "SCALE_PROBE.json")
     merged = {}
     if os.path.exists(probe_path):
@@ -316,16 +300,9 @@ def _merge_probe_row(row_name: str, updates: dict) -> dict:
             row[key] = cell
     times = row.get("seconds_by_sf", {})
     if len(times) >= 2:
+        row["exponent"] = round(_loglog_slope(times), 2)
         pts = sorted((float(s), t) for s, t in times.items())
-        xs = [math.log10(s) for s, _ in pts]
-        ys = [math.log10(max(t, 1e-3)) for _, t in pts]
-        mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
-        row["exponent"] = round(
-            sum((x - mx) * (y - my) for x, y in zip(xs, ys))
-            / sum((x - mx) ** 2 for x in xs),
-            2,
-        )
-        (x0, t0), (x1, t1) = pts[-2], pts[-1]
+        (x0, t0), (x1, t1) = pts[-2:]
         row["last_doubling_exponent"] = round(
             math.log(t1 / t0) / math.log(x1 / x0), 2
         )
@@ -361,21 +338,23 @@ def xcap_main() -> None:
     - XCAP_FIT_ONLY=1         time the quantizer FIT alone (derivation
                               count + centroid fit, no candidate join)
                               into the ..._fit_only row
-    - XCAP_DIAG=1             enable the Spark UI and dump top-stage
-                              shuffle/spill/GC metrics + the executed
-                              join strategies after the last run
+
+    Every timed pass also prints its executor CPU, shuffle writes and
+    spills (telemetry.phase).
     """
     from pyspark.sql import functions as F
 
+    from bench import warm_up
+    from poc_parquet_publisher_spark.catalog import load_table
     from poc_parquet_publisher_spark.ops import similarity
     from poc_parquet_publisher_spark.session import build_session
+    from poc_parquet_publisher_spark.telemetry import phase
 
-    diag = os.environ.get("XCAP_DIAG") == "1"
-    extra = {"spark.driver.memory": "24g"}
-    if diag:
-        extra["spark.ui.enabled"] = "true"
-    spark = build_session(app_name="scale_probe_xcap", extra_conf=extra)
-    spark.range(1000).selectExpr("sum(id)").collect()
+    spark = build_session(
+        app_name="scale_probe_xcap",
+        extra_conf={"spark.driver.memory": "24g"},
+    )
+    warm_up(spark)
 
     want = os.environ.get("XCAP_POINTS")
     points = [p for p in (want.split(",") if want else XCAP_SCALES)]
@@ -383,7 +362,6 @@ def xcap_main() -> None:
         (sf, _xcap_amplify(spark, sf, XCAP_SCALES[sf])) for sf in points
     ]
 
-    off = 10**9
     # XCAP_FIXED_PROBE=4 pins n_probe (n_centroids still derived):
     # separates pure DATA scaling (block populations constant, so the
     # candidate join is linear at fixed probes) from the deliberate
@@ -402,18 +380,6 @@ def xcap_main() -> None:
     do_recall = (
         os.environ.get("XCAP_RECALL", "1") == "1" and not fit_only
     )
-
-    def planted_sides(sf_dir):
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        a = emb.select("vec_id", "embedding")
-        b = emb.select(
-            (F.col("vec_id") + F.lit(off)).alias("vec_id"),
-            F.expr(
-                "transform(embedding, (x, d) -> cast(x * (1.0 + 0.3 "
-                "* sin(vec_id * 97 + d * 131)) as float))"
-            ).alias("embedding"),
-        )
-        return a, b
 
     def run_mnn(a, b):
         return similarity.mnn_align_blocked(
@@ -447,19 +413,17 @@ def xcap_main() -> None:
                 union, "__side_id", "embedding", n_c, 42, 8
             )
 
-    last_df = None
     if not recall_only:
         for sf, sf_dir in scales:
             best: float | None = None
             for pass_no in range(passes):
-                a, b = planted_sides(sf_dir)
-                t0 = time.perf_counter()
-                if fit_only:
-                    run_fit(a, b)
-                else:
-                    last_df = run_mnn(a, b)
-                    last_df.count()
-                dt = round(time.perf_counter() - t0, 3)
+                a, b = planted_sides(spark, sf_dir)
+                with phase(spark) as ph:
+                    if fit_only:
+                        run_fit(a, b)
+                    else:
+                        run_mnn(a, b).count()
+                dt = round(ph.seconds, 3)
                 # a re-run REPLACES any stale cell from an earlier
                 # process (pass 0 writes dt, later passes the min)
                 best = dt if best is None else min(best, dt)
@@ -467,36 +431,20 @@ def xcap_main() -> None:
                     row_name, {"seconds_by_sf": {sf: best}}
                 )
                 print(
-                    f"# pass{pass_no} xcap sf{sf} {dt:.1f}s",
+                    f"# pass{pass_no} xcap sf{sf} {dt:.1f}s "
+                    f"cpu {ph.cpu_s:.1f}s shuffle {ph.shuffle_mb:.0f}MB "
+                    f"spill {ph.spill_mb:.0f}MB",
                     file=sys.stderr,
                 )
-        if diag:
-            if last_df is not None:
-                plan = (
-                    last_df._jdf.queryExecution()
-                    .executedPlan()
-                    .toString()
-                )
-                joins = [
-                    ln.strip()[:100]
-                    for ln in plan.splitlines()
-                    if "Join" in ln or "Exchange" in ln
-                ]
-                print("# executed joins/exchanges:", file=sys.stderr)
-                for j in joins:
-                    print(f"#   {j}", file=sys.stderr)
-            _dump_stage_diag(spark)
 
     if do_recall:
         for sf, sf_dir in scales:
-            a, b = planted_sides(sf_dir)
+            a, b = planted_sides(spark, sf_dir)
             pairs = {
                 (r["a_id"], r["b_id"]) for r in run_mnn(a, b).collect()
             }
-            n = spark.read.parquet(
-                f"{sf_dir}/embeddings.parquet"
-            ).count()
-            planted = sum(1 for x, y in pairs if y - off == x)
+            n = load_table(spark, sf_dir, "embeddings").count()
+            planted = sum(1 for x, y in pairs if y - PLANTED_OFF == x)
             derived = list(similarity.ivf_params_for(2 * n))
             if fixed_probe:
                 derived[1] = fixed_probe
@@ -520,10 +468,12 @@ def xcap_main() -> None:
 
 
 def main() -> None:
+    from bench import warm_up
     from poc_parquet_publisher_spark.catalog import load_table
-    from poc_parquet_publisher_spark.ops import graph
+    from poc_parquet_publisher_spark.ops import graph, similarity
     from poc_parquet_publisher_spark.queries import all_queries
     from poc_parquet_publisher_spark.session import build_session
+    from poc_parquet_publisher_spark.telemetry import phase
 
     # sf1 is 10x the bench scale; the default 1g driver heap OOMs in the
     # parquet writer during edge derivation (single-JVM local mode, the
@@ -532,7 +482,7 @@ def main() -> None:
         app_name="scale_probe",
         extra_conf={"spark.driver.memory": "24g"},
     )
-    spark.range(1000).selectExpr("sum(id)").collect()
+    warm_up(spark)
 
     # layout parity: the driver's sf0.1 tables are SINGLE parquet files
     # (1-way scan parallelism), the amplified tables are 32 -- timing
@@ -540,7 +490,7 @@ def main() -> None:
     # md5-bound x408 measured 3.6x FASTER at 3x the data that way). The
     # 0.1 point is therefore a 1-copy rewrite through the same writer.
     scales: list[tuple[float, str]] = []
-    for sf, copies in ((0.1, 1), (0.3, 3), (1.0, 10)):
+    for sf, copies in SCALES:
         d = os.path.join(SCRATCH, f"sf{sf}")
         print(f"# amplifying {copies}x -> {d}", file=sys.stderr)
         amplify(spark, copies, d)
@@ -549,34 +499,18 @@ def main() -> None:
     queries = dict(all_queries())
 
     # mnn_align_blocked is an op tier, not a registry entry; probe it on
-    # the PLANTED-CORRESPONDENCE workload (a_side = amplified embeddings,
-    # b_side = the same vectors under deterministic ~2% directional
-    # jitter, planted cos ~0.978). This is the workload the tier's
-    # contract is about: true pairs ABOVE the max-of-noise ceiling. The
-    # rotation-amplified fixture itself is near-uniform in 64-dim, so at
-    # sf1.0 92% of its exact MNN pairs are cross-copy max-of-noise
-    # artifacts (sims ~0.47 vs a ~0.46 noise ceiling over 9k candidates)
-    # -- unrecoverable by ANY sub-quadratic method, and absent from real
-    # aligned corpora. Fixture-recall decay documented in SURVEY 4.4d.
-    _MNN_OFF = 10**9
-
+    # the PLANTED-CORRESPONDENCE workload (planted_sides). This is the
+    # workload the tier's contract is about: true pairs ABOVE the
+    # max-of-noise ceiling. The rotation-amplified fixture itself is
+    # near-uniform in 64-dim, so at sf1.0 92% of its exact MNN pairs are
+    # cross-copy max-of-noise artifacts (sims ~0.47 vs a ~0.46 noise
+    # ceiling over 9k candidates) -- unrecoverable by ANY sub-quadratic
+    # method, and absent from real aligned corpora. Fixture-recall decay
+    # documented in SURVEY 4.4d.
     def _mnn_planted_head(spark_, sf_dir):
-        from pyspark.sql import functions as F
-
-        from poc_parquet_publisher_spark.ops import similarity
-
-        emb = load_table(spark_, sf_dir, "embeddings")
-        a = emb.select("vec_id", "embedding")
-        b = emb.select(
-            (F.col("vec_id") + F.lit(_MNN_OFF)).alias("vec_id"),
-            F.expr(
-                "transform(embedding, (x, d) -> cast(x * (1.0 + 0.3 "
-                "* sin(vec_id * 97 + d * 131)) as float))"
-            ).alias("embedding"),
-        )
         # derived (n_centroids, n_probe): ivf_params_for keeps block
         # population constant, the schedule the exponent is about
-        return similarity.mnn_align_blocked(a, b)
+        return similarity.mnn_align_blocked(*planted_sides(spark_, sf_dir))
 
     queries["mnn_align_blocked"] = _mnn_planted_head
 
@@ -593,13 +527,13 @@ def main() -> None:
     # once, timed separately (same split as bench.py)
     if "x104_pagerank" in heads:
         for sf, sf_dir in scales:
-            t0 = time.perf_counter()
-            graph.persist_copurchase_edges(
-                spark,
-                load_table(spark, sf_dir, "lineitem"),
-                graph.copurchase_edge_table_name(sf_dir),
-            )
-            dt = time.perf_counter() - t0
+            with phase(spark) as ph:
+                graph.persist_copurchase_edges(
+                    spark,
+                    load_table(spark, sf_dir, "lineitem"),
+                    graph.copurchase_edge_table_name(sf_dir),
+                )
+            dt = ph.seconds
             results.setdefault("x104_edge_derivation", {})[str(sf)] = round(
                 dt, 3
             )
@@ -613,9 +547,9 @@ def main() -> None:
     for pass_no in range(3):
         for sf, sf_dir in scales:
             for name in heads:
-                t0 = time.perf_counter()
-                queries[name](spark, sf_dir).count()
-                dt = round(time.perf_counter() - t0, 3)
+                with phase(spark) as ph:
+                    queries[name](spark, sf_dir).count()
+                dt = round(ph.seconds, 3)
                 cell = results.setdefault(name, {})
                 cell[str(sf)] = min(cell.get(str(sf), dt), dt)
                 print(
@@ -633,30 +567,17 @@ def main() -> None:
                 for r in _mnn_planted_head(spark, sf_dir).collect()
             }
             n = load_table(spark, sf_dir, "embeddings").count()
-            planted = sum(1 for x, y in pairs if y - _MNN_OFF == x)
+            planted = sum(1 for x, y in pairs if y - PLANTED_OFF == x)
             mnn_recall[str(sf)] = round(planted / n, 3)
             print(
                 f"# sf{sf} mnn planted recall {planted}/{n}",
                 file=sys.stderr,
             )
 
-    # least-squares slope of log t vs log sf
-    import math
-
     out = {}
     for name, times in results.items():
-        pts = sorted((float(s), t) for s, t in times.items())
-        xs = [math.log10(s) for s, _ in pts]
-        ys = [math.log10(max(t, 1e-3)) for _, t in pts]
-        n = len(xs)
-        mx, my = sum(xs) / n, sum(ys) / n
-        slope = sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / sum(
-            (x - mx) ** 2 for x in xs
-        )
-        out[name] = {
-            "seconds_by_sf": {str(s): t for s, t in pts},
-            "exponent": round(slope, 2),
-        }
+        slope = _loglog_slope(times)
+        out[name] = {"seconds_by_sf": times, "exponent": round(slope, 2)}
         if name == "mnn_align_blocked" and mnn_recall:
             out[name]["planted_recall_by_sf"] = mnn_recall
         print(f"{name}: exponent {slope:.2f}  {out[name]['seconds_by_sf']}")

@@ -61,6 +61,29 @@ def test_bench_artifact_times_every_entry():
     assert not missing, f"BENCH_LOCAL.json missing timings: {missing}"
 
 
+_ENTRY_FIELDS = {
+    "build_s", "exec_s", "build_jobs", "exec_jobs",
+    "cpu_s", "shuffle_mb", "spill_mb",
+}
+
+
+@pytest.mark.parametrize("path", ["BENCH_LOCAL.json", "BENCH_MEDIANS.json"])
+def test_bench_artifact_splits_every_entry(path):
+    # bench.py times each entry as a build phase and an execution phase
+    # (telemetry.phase); queries[name] is their sum.
+    with open(os.path.join(ROOT, path)) as f:
+        d = json.load(f)
+    entries = d["entries"]
+    assert sorted(set(REGISTRY) - set(entries)) == []
+    for name in REGISTRY:
+        e = entries[name]
+        assert set(e) == _ENTRY_FIELDS, name
+        assert min(e.values()) >= 0, name
+        if path == "BENCH_LOCAL.json":
+            total = e["build_s"] + e["exec_s"]
+            assert abs(total - d["queries"][name]) <= 0.002, name
+
+
 def test_survey_inventory_covers_every_extension():
     """SURVEY.md section 2.4 is the judge's line-by-line checklist: every
     registered x-entry must have a table row, and no row may outlive

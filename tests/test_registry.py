@@ -150,3 +150,46 @@ def test_package_modules_use_every_import():
                 if name not in loaded:
                     unused.append(f"{rel}:{node.lineno} {name}")
     assert unused == []
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_tools_measure_without_the_spark_ui():
+    # bench.py and the scripts measure through telemetry.phase, which
+    # reads the status store with the UI off; none of them turns the UI
+    # on or reads its REST API.
+    scripts = os.path.join(_REPO, "scripts")
+    paths = [os.path.join(_REPO, "bench.py")] + [
+        os.path.join(scripts, f) for f in sorted(os.listdir(scripts))
+    ]
+    offenders = [
+        f"{os.path.relpath(path, _REPO)}: {needle}"
+        for path in paths
+        for needle in ("api/v1", "urllib", "spark.ui.enabled")
+        if needle in _read(path)
+    ]
+    assert offenders == []
+
+
+def test_engine_does_not_import_telemetry():
+    # telemetry is the tools' instrument; the engine packages and the
+    # benchmark (perfbench measures the program from outside) stay
+    # free of it.
+    engine = ("pipeline", "queries", "ops", "streaming")
+    sources = [
+        src for rel, src in _package_sources().items()
+        if rel.split(os.sep)[0] in engine
+    ]
+    perfbench = os.path.join(_REPO, "perfbench")
+    sources += [
+        _read(os.path.join(d, f))
+        for d, _, files in os.walk(perfbench)
+        for f in files
+        if f.endswith(".py")
+    ]
+    imports_telemetry = re.compile(
+        r"^\s*(from|import)\s[^\n]*\btelemetry\b", re.MULTILINE
+    )
+    assert sources
+    assert not [src for src in sources if imports_telemetry.search(src)]
