@@ -36,43 +36,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # across two sessions on an uncontrolled host, costing a manual re-measure.
 # Every ledger carries a CALIBRATION block -- a pinned pure-CPU md5 loop,
 # a pinned synthetic Spark probe (touches no bench data, one cold run and
-# the median of two warm runs), and os.getloadavg() -- timed FIRST.
-#
-# Only median ledgers are normalized. Round-9 finding (SURVEY 4.4d): the
-# single COLD spark probe is JIT/codegen-warmup dominated and injected an
-# 18% normalization disagreement between two same-session ledgers whose
-# raw sums agreed at 1.4%. The WARM probe and cpu_md5 are the stable
-# readings. Round-10 refinement: the estimator is the FLOOR (min) of
-# the per-run readings, not their median -- the same contention
-# rejection the per-entry medians already apply. A median-of-3
-# calibration instants keeps one contended sample's inflation (round-10
-# measured per-run warm probes 1.83/0.79/1.17 in a ledger whose
-# per-entry medians had already discarded that run's inflation), while
-# the floor is the uncontended host speed: the two round-10 ledgers'
-# raw sums disagree 5.2% (real contention) but their FLOOR-normalized
-# sums agree at 0.15%. References pinned as the floors of the round-9
-# closing ledger's per-run readings.
-REF_SPARK_PROBE_WARM_S = 0.864  # round-9 per-run warm floor
-REF_CPU_MD5_WARM_ANCHOR_S = 0.728  # round-9 per-run cpu_md5 floor
-
-
-def _pinned_host_factor(calibration: dict) -> float | None:
-    """Combined warm host factor: sqrt((warm/ref_warm) * (cpu/ref_cpu))
-    over the per-run FLOOR readings of a median ledger. >1 means this
-    session is slower than the reference session."""
-    warm = calibration.get("spark_probe_warm_floor_s")
-    cpu = calibration.get("cpu_md5_floor_s")
-    if not warm or not cpu:
-        return None
-    return round(
-        (
-            (warm / REF_SPARK_PROBE_WARM_S)
-            * (cpu / REF_CPU_MD5_WARM_ANCHOR_S)
-        )
-        ** 0.5,
-        3,
-    )
-
+# the median of two warm runs), and os.getloadavg() -- timed FIRST. The
+# readings are host facts, not a divisor: the Spark probe's 32 partitions
+# make its time scale with the core count, while the registry total is
+# bound by per-entry fixed overhead, so dividing one by the other turned
+# a 4-core 545.5 s into 219.8 s. Compare raw totals on one host and state
+# its core count.
 CAL_CPU_ITERS = 300_000
 
 
@@ -267,7 +236,7 @@ def main() -> None:
         spark, n=media_n, payload_bytes=1024
     ).localCheckpoint()
     t0 = time.perf_counter()
-    n_feat = multimodal.decode_features(media, dim=8).count()
+    n_feat = multimodal.decode_features(media).count()
     n_resized = multimodal.resize_images(media).count()
     n_frames = multimodal.sample_frames(media, every_ms=60_000).count()
     dt = time.perf_counter() - t0
@@ -458,32 +427,14 @@ def medians(n_runs: int = 3) -> None:
             k: round(statistics.median(c[k] for c in cals), 3)
             for k in probes
         }
-        # contention-rejecting floors across the cold runs (see the
-        # REF_* comment block): these drive host_factor_pinned
-        med_cal["spark_probe_warm_floor_s"] = min(
-            c["spark_probe_warm_s"] for c in cals
-        )
-        med_cal["cpu_md5_floor_s"] = min(c["cpu_md5_s"] for c in cals)
         med_cal["per_run"] = cals
         result["calibration"] = med_cal
-        pinned = _pinned_host_factor(med_cal)
-        if pinned:
-            result["host_factor_pinned"] = pinned
-            result["value_normalized_warm"] = round(
-                result["value"] / pinned, 3
-            )
     with open(os.path.join(here, "BENCH_MEDIANS.json"), "w") as f:
         json.dump(result, f, indent=1, sort_keys=True)
         f.write("\n")
-    # print raw AND host-normalized side by side (round-8 verdict task:
-    # cross-session closing comparisons are stated in normalized terms)
-    summary = {
+    print(json.dumps({
         k: result[k] for k in ("metric", "value", "unit", "runs", "sf")
-    }
-    if "value_normalized_warm" in result:
-        summary["value_normalized_warm"] = result["value_normalized_warm"]
-        summary["host_factor_pinned"] = result["host_factor_pinned"]
-    print(json.dumps(summary))
+    }))
 
 
 if __name__ == "__main__":

@@ -20,16 +20,16 @@ from ..scale import rebalanced
 from . import dedup, sampling, text
 
 
+CURATE_LANGUAGES = ("en",)
+CURATE_MAX_TOKENS = 1_000_000
+CURATE_MIN_ALPHA_RATIO = 0.05
+CURATE_MIN_TOKENS = 5
+CURATE_NEAR_DUP_JACCARD = 0.8
+CURATE_TEST_FRACTION = 0.05
+
+
 def curate(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 5,
-    max_tokens: int = 1_000_000,
-    min_alpha_ratio: float = 0.05,
-    languages: tuple[str, ...] = ("en",),
-    near_dup_jaccard: float = 0.8,
-    test_fraction: float = 0.05,
+    docs: DataFrame, languages: tuple[str, ...] = CURATE_LANGUAGES
 ) -> DataFrame:
     """Returns (id, scrubbed text, pred_lang, split) for surviving docs.
 
@@ -46,26 +46,24 @@ def curate(
     # task (measured 3.6 s -> 1.4 s at sf0.1 rebalanced). No-op at real
     # scale where splits already outnumber cores.
     scrubbed = text.scrub(
-        rebalanced(docs), id_col, text_col
-    ).withColumnRenamed("scrubbed", text_col)
+        rebalanced(docs), "doc_id", "text"
+    ).withColumnRenamed("scrubbed", "text")
 
     # quality + language gates are row-local expressions: compute them
     # INLINE in one projection (no id-joins -- a join per gate would put
     # two full shuffles in front of a narrow filter)
-    n_toks = F.size(text._toks(text_col)).cast("long")
-    alpha = F.length(
-        F.regexp_replace(F.lower(F.col(text_col)), "[^a-z]", "")
-    )
-    alpha_ratio = alpha.cast("double") / F.length(text_col).cast("double")
+    n_toks = F.size(text._toks("text")).cast("long")
+    alpha = F.length(F.regexp_replace(F.lower(F.col("text")), "[^a-z]", ""))
+    alpha_ratio = alpha.cast("double") / F.length("text").cast("double")
     kept = (
-        scrubbed.withColumn("pred_lang", text.lang_pred_column(text_col))
+        scrubbed.withColumn("pred_lang", text.lang_pred_column("text"))
         .filter(
-            (n_toks >= min_tokens)
-            & (n_toks <= max_tokens)
-            & (alpha_ratio >= min_alpha_ratio)
+            (n_toks >= CURATE_MIN_TOKENS)
+            & (n_toks <= CURATE_MAX_TOKENS)
+            & (alpha_ratio >= CURATE_MIN_ALPHA_RATIO)
             & F.col("pred_lang").isin(*languages)
         )
-        .select(id_col, text_col, "pred_lang")
+        .select("doc_id", "text", "pred_lang")
         # the gated corpus feeds three consumers (pair generation, the
         # exact-dedup probe, the final anti-join); materialize it once
         # instead of re-running scrub+gates per consumer. At cluster
@@ -81,13 +79,13 @@ def curate(
     # stage count, not this join -- and strictly worse under skew: a
     # heavily-duplicated text serializes into one window partition,
     # while the agg's map-side combine + AQE skew-join absorb it.
-    survivors = dedup.exact_dedup(kept, id_col, text_col).select(
-        F.col("keep_id").alias(id_col)
+    survivors = dedup.exact_dedup(kept, "doc_id", "text").select(
+        F.col("keep_id").alias("doc_id")
     )
     # the exactly-deduped corpus feeds TWO consumers (the near-dup pair
     # derivation and the final anti-join): without its own checkpoint
     # the md5-groupBy + semi-join replay once per consumer
-    kept = kept.join(survivors, id_col, "left_semi").localCheckpoint(
+    kept = kept.join(survivors, "doc_id", "left_semi").localCheckpoint(
         eager=False
     )
 
@@ -96,30 +94,21 @@ def curate(
     # per-pair dropping is wrong under chains: dropping b of (a,b) and
     # (b,c) leaves both a and c alive even though a~b~c.)
     pairs = dedup.ngram_jaccard_pairs(
-        kept, id_col, text_col, k=3, threshold=near_dup_jaccard
+        kept, "doc_id", "text", threshold=CURATE_NEAR_DUP_JACCARD
     )
     drop = (
         dedup.duplicate_clusters(pairs)
         .filter(F.col("node") != F.col("rep"))
-        .select(F.col("node").alias(id_col))
+        .select(F.col("node").alias("doc_id"))
     )
-    kept = kept.join(drop, id_col, "left_anti")
+    kept = kept.join(drop, "doc_id", "left_anti")
 
     return sampling.deterministic_split(
-        kept, id_col, test_fraction=test_fraction
+        kept, "doc_id", test_fraction=CURATE_TEST_FRACTION
     )
 
 
-def curate_oracle_sql(
-    source: str = "documents",
-    id_col: str = "doc_id",
-    min_tokens: int = 5,
-    max_tokens: int = 1_000_000,
-    min_alpha_ratio: float = 0.05,
-    languages: tuple[str, ...] = ("en",),
-    near_dup_jaccard: float = 0.8,
-    test_fraction: float = 0.05,
-) -> str:
+def curate_oracle_sql() -> str:
     """One DuckDB query reproducing ``curate`` end to end, composed from
     the SAME stage oracles that are individually hash-verified (x20
     scrub, x12 lang-id ladder, x01 exact dedup, x03 pair CTE, x24
@@ -148,29 +137,29 @@ def curate_oracle_sql(
         )
         whens.append(f"WHEN {conds} THEN '{lang}'")
     lang_case = f"CASE {' '.join(whens)} ELSE '{langs[-1]}' END"
-    lang_list = ", ".join(f"'{lang}'" for lang in languages)
+    lang_list = ", ".join(f"'{lang}'" for lang in CURATE_LANGUAGES)
 
-    thr_hex = sampling._threshold_hex(test_fraction)
+    thr_hex = sampling._threshold_hex(CURATE_TEST_FRACTION)
 
     return f"""
 WITH RECURSIVE scrubbed AS (
-  SELECT {id_col}, {expr} AS text FROM {source}
+  SELECT doc_id, {expr} AS text FROM documents
 ), langed AS (
-  SELECT {id_col}, text, {lang_case} AS pred_lang
-  FROM (SELECT {id_col}, text, {', '.join(score_cols)} FROM scrubbed)
+  SELECT doc_id, text, {lang_case} AS pred_lang
+  FROM (SELECT doc_id, text, {', '.join(score_cols)} FROM scrubbed)
 ), gated AS (
-  SELECT {id_col}, text, pred_lang FROM langed
-  WHERE len(string_split(lower(text), ' ')) BETWEEN {min_tokens}
-        AND {max_tokens}
+  SELECT doc_id, text, pred_lang FROM langed
+  WHERE len(string_split(lower(text), ' ')) BETWEEN {CURATE_MIN_TOKENS}
+        AND {CURATE_MAX_TOKENS}
     AND CAST(strlen(regexp_replace(lower(text), '[^a-z]', '', 'g'))
-             AS DOUBLE) / strlen(text) >= {min_alpha_ratio}
+             AS DOUBLE) / strlen(text) >= {CURATE_MIN_ALPHA_RATIO}
     AND pred_lang IN ({lang_list})
 ), surv AS (
-  SELECT MIN({id_col}) AS {id_col} FROM gated GROUP BY md5(lower(text))
+  SELECT MIN(doc_id) AS doc_id FROM gated GROUP BY md5(lower(text))
 ), ded AS (
-  SELECT g.* FROM gated g JOIN surv USING ({id_col})
+  SELECT g.* FROM gated g JOIN surv USING (doc_id)
 ), sh_t AS (
-  SELECT {id_col} AS doc_id,
+  SELECT doc_id AS doc_id,
          list_distinct(list_transform(
            range(1, len(string_split(lower(text), ' ')) - 1),
            i -> array_to_string(
@@ -189,7 +178,7 @@ WITH RECURSIVE scrubbed AS (
 ), pairs AS (
   SELECT id_a, id_b FROM p
   WHERE ROUND(CAST(inter AS DOUBLE) / (n_a + n_b - inter), 4)
-        >= {near_dup_jaccard}
+        >= {CURATE_NEAR_DUP_JACCARD}
 ), edges AS (
   SELECT id_a AS u, id_b AS v FROM pairs
   UNION
@@ -201,26 +190,24 @@ WITH RECURSIVE scrubbed AS (
 ), reps AS (
   SELECT node, MIN(lbl) AS rep FROM walk GROUP BY node
 ), drops AS (
-  SELECT node AS {id_col} FROM reps WHERE node != rep
+  SELECT node AS doc_id FROM reps WHERE node != rep
 )
-SELECT d.{id_col}, d.text, d.pred_lang,
-       CASE WHEN substr(md5(concat(CAST(d.{id_col} AS VARCHAR),
+SELECT d.doc_id, d.text, d.pred_lang,
+       CASE WHEN substr(md5(concat(CAST(d.doc_id AS VARCHAR),
                  ':split')), 1, 4) < '{thr_hex}'
             THEN 'test' ELSE 'train' END AS split
 FROM ded d
-WHERE d.{id_col} NOT IN (SELECT {id_col} FROM drops)
-ORDER BY d.{id_col}
+WHERE d.doc_id NOT IN (SELECT doc_id FROM drops)
+ORDER BY d.doc_id
 """
 
 
-def curation_funnel(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 20,
-    min_alpha_ratio: float = 0.5,
-    languages: tuple[str, ...] = ("en", "es"),
-) -> DataFrame:
+FUNNEL_LANGUAGES = ("en", "es")
+FUNNEL_MIN_ALPHA_RATIO = 0.5
+FUNNEL_MIN_TOKENS = 20
+
+
+def curation_funnel(docs: DataFrame) -> DataFrame:
     """Curation funnel: documents surviving each successive gate
     (input -> length -> +alpha -> +language -> +exact-dedup) -- the
     observability table every curation run publishes (where did the
@@ -233,15 +220,13 @@ def curation_funnel(
     count-distinct for the dedup stage); the 5-row funnel falls out of a
     stack() unpivot of that single row. No joins, one scan.
     """
-    n_toks = F.size(text._toks(text_col)).cast("long")
-    alpha = F.length(
-        F.regexp_replace(F.lower(F.col(text_col)), "[^a-z]", "")
-    )
-    alpha_ratio = alpha.cast("double") / F.length(text_col).cast("double")
-    g1 = n_toks >= min_tokens
-    g2 = g1 & (alpha_ratio >= min_alpha_ratio)
-    g3 = g2 & text.lang_pred_column(text_col).isin(*languages)
-    h = F.md5(F.lower(F.col(text_col)))
+    n_toks = F.size(text._toks("text")).cast("long")
+    alpha = F.length(F.regexp_replace(F.lower(F.col("text")), "[^a-z]", ""))
+    alpha_ratio = alpha.cast("double") / F.length("text").cast("double")
+    g1 = n_toks >= FUNNEL_MIN_TOKENS
+    g2 = g1 & (alpha_ratio >= FUNNEL_MIN_ALPHA_RATIO)
+    g3 = g2 & text.lang_pred_column("text").isin(*FUNNEL_LANGUAGES)
+    h = F.md5(F.lower(F.col("text")))
     agg = docs.agg(
         F.count(F.lit(1)).cast("long").alias("s0"),
         F.sum(g1.cast("long")).cast("long").alias("s1"),
@@ -262,13 +247,7 @@ def curation_funnel(
     )
 
 
-def curation_funnel_oracle_sql(
-    source: str = "documents",
-    text_col: str = "text",
-    min_tokens: int = 20,
-    min_alpha_ratio: float = 0.5,
-    languages: tuple[str, ...] = ("en", "es"),
-) -> str:
+def curation_funnel_oracle_sql() -> str:
     """DuckDB SQL mirroring ``curation_funnel``."""
     langs = list(text.LANG_STOPWORDS)
     score_cols = []
@@ -285,19 +264,19 @@ def curation_funnel_oracle_sql(
         )
         whens.append(f"WHEN {conds} THEN '{lang}'")
     lang_case = f"CASE {' '.join(whens)} ELSE '{langs[-1]}' END"
-    lang_list = ", ".join(f"'{lang}'" for lang in languages)
+    lang_list = ", ".join(f"'{lang}'" for lang in FUNNEL_LANGUAGES)
     return f"""
 WITH scored AS (
-  SELECT {text_col} AS text, {', '.join(score_cols)} FROM {source}
+  SELECT text AS text, {', '.join(score_cols)} FROM documents
 ), flags AS (
   SELECT text,
-         (len(string_split(lower(text), ' ')) >= {min_tokens}) AS g1,
-         (len(string_split(lower(text), ' ')) >= {min_tokens}
+         (len(string_split(lower(text), ' ')) >= {FUNNEL_MIN_TOKENS}) AS g1,
+         (len(string_split(lower(text), ' ')) >= {FUNNEL_MIN_TOKENS}
           AND CAST(strlen(regexp_replace(lower(text), '[^a-z]', '', 'g'))
-                   AS DOUBLE) / strlen(text) >= {min_alpha_ratio}) AS g2,
-         (len(string_split(lower(text), ' ')) >= {min_tokens}
+                   AS DOUBLE) / strlen(text) >= {FUNNEL_MIN_ALPHA_RATIO}) AS g2,
+         (len(string_split(lower(text), ' ')) >= {FUNNEL_MIN_TOKENS}
           AND CAST(strlen(regexp_replace(lower(text), '[^a-z]', '', 'g'))
-                   AS DOUBLE) / strlen(text) >= {min_alpha_ratio}
+                   AS DOUBLE) / strlen(text) >= {FUNNEL_MIN_ALPHA_RATIO}
           AND {lang_case} IN ({lang_list})) AS g3
   FROM scored
 ), agg AS (

@@ -32,16 +32,14 @@ from ..scale import pairs_within, rebalanced
 from .text import _toks
 
 
-def exact_dedup(
-    df: DataFrame, id_col: str, text_col: str, normalize: bool = True
-) -> DataFrame:
+def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Group identical texts; keep the smallest id as the survivor.
 
-    Returns one row per distinct text: (h, keep_id, dup_cnt).
+    Returns one row per distinct text, case-folded: (h, keep_id,
+    dup_cnt).
     """
-    key = F.lower(F.col(text_col)) if normalize else F.col(text_col)
     return (
-        df.groupBy(F.md5(key).alias("h"))
+        df.groupBy(F.md5(F.lower(F.col(text_col))).alias("h"))
         .agg(
             F.min(id_col).alias("keep_id"),
             F.count(F.lit(1)).alias("dup_cnt"),
@@ -65,12 +63,13 @@ def fingerprint_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def shingle_arrays(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3
-) -> DataFrame:
-    """Per-document distinct k-token shingle ARRAYS -> (doc, sh); docs
-    shorter than ``k`` tokens are dropped. The array form feeds both the
-    exploded postings (``shingles``) and the minhash signatures
+SHINGLE_K = 3
+
+
+def shingle_arrays(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-document distinct ``SHINGLE_K``-token shingle ARRAYS -> (doc,
+    sh); shorter docs are dropped. The array form feeds both the exploded
+    postings (``shingles``) and the minhash signatures
     (``minhash_banded_pairs``), which fold over the array without
     exploding it."""
     toks_df = rebalanced(df).select(
@@ -79,18 +78,18 @@ def shingle_arrays(
     toks = F.col("toks")
     sh = F.array_distinct(
         F.transform(
-            F.sequence(F.lit(0), F.size(toks) - k),
+            F.sequence(F.lit(0), F.size(toks) - SHINGLE_K),
             lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j + 1) for j in range(k)]
+                " ", *[F.element_at(toks, i + j + 1) for j in range(SHINGLE_K)]
             ),
         )
     )
-    return toks_df.filter(F.size(toks) >= k).select("doc", sh.alias("sh"))
+    return toks_df.filter(F.size(toks) >= SHINGLE_K).select(
+        "doc", sh.alias("sh")
+    )
 
 
-def shingles(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3
-) -> DataFrame:
+def shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Distinct k-token shingles per document -> (id, shingle), plus the
     per-document shingle count as ``n_sh`` (needed for Jaccard).
 
@@ -103,9 +102,10 @@ def shingles(
     # explode_outer, NOT explode: for inner generates the optimizer infers
     # a size(sh) > 0 filter and pushes it below the repartition, inlining
     # the whole shingle expression into a pre-shuffle filter that runs on
-    # the raw (possibly single-partition) input. The size(toks) >= k guard
-    # already makes the array non-empty, so outer == inner here.
-    return shingle_arrays(df, id_col, text_col, k).select(
+    # the raw (possibly single-partition) input. The size(toks) >=
+    # SHINGLE_K guard already makes the array non-empty, so outer ==
+    # inner here.
+    return shingle_arrays(df, id_col, text_col).select(
         "doc",
         F.size("sh").alias("n_sh"),
         F.explode_outer("sh").alias("shingle"),
@@ -116,15 +116,13 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
     threshold: float = 0.5,
-    max_docs_per_shingle: int | None = 1000,
 ) -> DataFrame:
     """Near-duplicate pairs by k-gram shingle Jaccard, via shingle blocking.
 
     Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold,
     jaccard rounded to 4 decimals. Only pairs sharing >= 1 shingle are ever
-    formed; ``max_docs_per_shingle`` drops stop-shingles whose blocks would
+    formed; ``MAX_DOCS_PER_SHINGLE`` drops stop-shingles whose blocks would
     explode quadratically.
 
     One wide shuffle: groupBy(shingle) collects each block's (doc, n_sh)
@@ -134,40 +132,35 @@ def ngram_jaccard_pairs(
     hot-shingle aggregation pass; here the cap is a free size(ds) filter
     on the already-grouped row (12.5 s -> ~4 s at sf0.1).
     """
-    inter = shingle_pair_counts(
-        df, id_col, text_col, k, max_docs_per_shingle
+    return score_pair_counts_jaccard(
+        shingle_pair_counts(df, id_col, text_col),
+        threshold,
     )
-    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-    return (
-        inter.withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+
+
+MAX_DOCS_PER_SHINGLE = 1000
 
 
 def shingle_pair_counts(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
-    max_docs_per_shingle: int | None = 1000,
 ) -> DataFrame:
     """The UNSCORED shingle-blocked pair stage every set-overlap
     near-dup measure shares: (id_a, id_b, n_a, n_b, inter) for every
     doc pair sharing >= 1 k-shingle, id_a < id_b. ``ngram_jaccard_pairs``
-    divides by the union, ``containment_pairs`` by the min -- the
+    divides by the union, ``score_pair_counts_containment`` by the min -- the
     expensive part (shingles -> postings groupBy -> in-bucket HOF pair
     expansion -> pair-count groupBy) is identical, so callers running
     several measures derive this once (the registry caches and
     localCheckpoints it per (table, k))."""
-    sh = shingles(df, id_col, text_col, k)
+    sh = shingles(df, id_col, text_col)
     buckets = (
         sh.groupBy("shingle")
         .agg(F.collect_list(F.struct("doc", "n_sh")).alias("ds"))
         .filter(F.size("ds") >= 2)
+        .filter(F.size("ds") <= MAX_DOCS_PER_SHINGLE)
     )
-    if max_docs_per_shingle is not None:
-        buckets = buckets.filter(F.size("ds") <= max_docs_per_shingle)
     ds = F.array_sort(F.col("ds"))  # sorts by first struct field = doc id
     pair = lambda x, y: F.struct(  # noqa: E731
         x["doc"].alias("id_a"),
@@ -188,7 +181,6 @@ def contamination_scores(
     benchmark: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
 ) -> DataFrame:
     """Benchmark-contamination scores: for each document, the fraction of
     its distinct k-gram shingles that also occur anywhere in ``benchmark``
@@ -204,9 +196,9 @@ def contamination_scores(
     groupBy(doc), never shuffled on the shingle, and the benchmark is
     never collected to the driver.
     """
-    doc_sh = shingles(df, id_col, text_col, k)
+    doc_sh = shingles(df, id_col, text_col)
     bench_sh = (
-        shingles(benchmark, id_col, text_col, k)
+        shingles(benchmark, id_col, text_col)
         .select("shingle")
         .distinct()
     )
@@ -229,16 +221,7 @@ def contamination_scores(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hash_tables: int = 8,
-    jaccard_distance_threshold: float = 0.5,
-    vocab_size: int = 1 << 18,
-    seed: int = 42,
-    shingle_k: int = 3,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """MinHash+LSH near-dup pairs via pyspark.ml (banded signature join).
 
     Features are k-token shingles (not bare tokens: with a small shared
@@ -255,11 +238,11 @@ def minhash_lsh_pairs(
         F.col(id_col).alias("mh_id"), F.col(text_col).alias("mh_text")
     )
     tok = Tokenizer(inputCol="mh_text", outputCol="mh_toks")
-    ng = NGram(n=shingle_k, inputCol="mh_toks", outputCol="mh_shingles")
+    ng = NGram(n=3, inputCol="mh_toks", outputCol="mh_shingles")
     tf = HashingTF(
         inputCol="mh_shingles",
         outputCol="mh_vec",
-        numFeatures=vocab_size,
+        numFeatures=1 << 18,
         binary=True,
     )
     feats = tf.transform(ng.transform(tok.transform(docs))).filter(
@@ -267,12 +250,10 @@ def minhash_lsh_pairs(
         F.size("mh_shingles") > 0
     )
     mh = MinHashLSH(
-        inputCol="mh_vec", outputCol="mh_sig", numHashTables=num_hash_tables, seed=seed
+        inputCol="mh_vec", outputCol="mh_sig", numHashTables=8, seed=42
     )
     model = mh.fit(feats)
-    pairs = model.approxSimilarityJoin(
-        feats, feats, jaccard_distance_threshold, distCol="dist"
-    )
+    pairs = model.approxSimilarityJoin(feats, feats, 0.5, distCol="dist")
     return (
         pairs.select(
             F.col("datasetA.mh_id").alias("id_a"),
@@ -338,25 +319,26 @@ def simhash_sql(dialect: str, source: str = "documents") -> str:
     )
 
 
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """DataFrame wrapper: registers ``df`` and runs the Spark-dialect SQL."""
     spark = df.sparkSession
     view = "__simhash_input"
     # rebalance the (possibly single-split) input so the token explode
     # + 64 bit-contribution sums run on the core budget, not one task
     rebalanced(
-        df.select(
-            F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-        )
+        df.select("doc_id", "text")
     ).createOrReplaceTempView(view)
     return spark.sql(simhash_sql("spark", source=view))
 
 
+SIMHASH_BAND_BITS = 16
+SIMHASH_MAX_DOCS_PER_BAND = 500
+SIMHASH_MAX_HAMMING = 3
+
+
 def simhash_hamming_pairs(
     sim_df: DataFrame,
-    max_hamming: int = 3,
-    band_bits: int = 16,
-    max_docs_per_band: int | None = 500,
+    max_docs_per_band: int | None = SIMHASH_MAX_DOCS_PER_BAND,
 ) -> DataFrame:
     """Near-dup candidates from 64-bit simhash bitstrings.
 
@@ -370,7 +352,7 @@ def simhash_hamming_pairs(
     simhashes -- the guard keeps candidate generation linear-ish).
     Output: (id_a, id_b, hamming) with hamming <= max_hamming.
     """
-    n_bands = 64 // band_bits
+    n_bands = 64 // SIMHASH_BAND_BITS
     # checkpoint the packed signatures ONCE: both sides of the band
     # self-join (and the hot-band guard) consume this frame, and without
     # it each consumer re-runs the full simhash derivation (explode +
@@ -390,7 +372,11 @@ def simhash_hamming_pairs(
                 *[
                     F.concat(
                         F.lit(f"{i}:"),
-                        F.substring("simhash", i * band_bits + 1, band_bits),
+                        F.substring(
+                            "simhash",
+                            i * SIMHASH_BAND_BITS + 1,
+                            SIMHASH_BAND_BITS,
+                        ),
                     )
                     for i in range(n_bands)
                 ]
@@ -428,7 +414,7 @@ def simhash_hamming_pairs(
         a.join(b, "band")
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("id_a", "id_b", "hamming")
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -436,9 +422,6 @@ def simhash_hamming_pairs(
 
 def duplicate_clusters(
     pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
     small_graph_edges: int | None = 1_000_000,
 ) -> DataFrame:
     """Transitive duplicate clusters from near-dup pairs: (node, rep).
@@ -484,10 +467,10 @@ def duplicate_clusters(
             F.explode(
                 F.array(
                     F.struct(
-                        F.col(id_a).alias("u"), F.col(id_b).alias("v")
+                        F.col("id_a").alias("u"), F.col("id_b").alias("v")
                     ),
                     F.struct(
-                        F.col(id_b).alias("u"), F.col(id_a).alias("v")
+                        F.col("id_b").alias("u"), F.col("id_a").alias("v")
                     ),
                 )
             ).alias("e")
@@ -553,7 +536,7 @@ def duplicate_clusters(
         ).collect()[0][0]
 
     prev_sum = None
-    for _ in range(max_iter):
+    for _ in range(25):
         neighbor = edges.join(
             labels, edges["v"] == labels["node"]
         ).select(F.col("u").alias("node"), "rep")
@@ -617,7 +600,6 @@ def minhash_banded_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
     max_docs_per_band: int | None = 1000,
 ) -> DataFrame:
     """Deterministic MinHash-LSH candidate pairs, oracle-verifiable.
@@ -642,7 +624,7 @@ def minhash_banded_pairs(
     ``max_docs_per_band`` caps degenerate bands.
     """
     return _banded_pairs_from_arrays(
-        shingle_arrays(df, id_col, text_col, k), max_docs_per_band
+        shingle_arrays(df, id_col, text_col), max_docs_per_band
     )
 
 
@@ -676,11 +658,9 @@ def _banded_pairs_from_arrays(
     )
 
 
-def minhash_banded_pairs_oracle_sql(
-    source: str = "documents", id_col: str = "doc_id", k: int = 3
-) -> str:
+def minhash_banded_pairs_oracle_sql(source: str = "documents") -> str:
     """DuckDB SQL mirroring ``minhash_banded_pairs`` exactly (same md5
-    slices, same bands). ``k`` is fixed at 3 in the CTE below."""
+    slices, same bands), with the 3-token shingles spelled out below."""
     sig_cols = ", ".join(
         f"list_min(list_transform(sh, s -> substr(md5('{salt}:' || s), "
         f"{off}, 8))) AS s{4 * salt + i}"
@@ -694,7 +674,7 @@ def minhash_banded_pairs_oracle_sql(
     )
     return f"""
 WITH t AS (
-  SELECT {id_col} AS doc,
+  SELECT doc_id AS doc,
          list_distinct(list_transform(
            range(1, len(string_split(lower(text), ' ')) - 1),
            i -> array_to_string(
@@ -715,13 +695,7 @@ GROUP BY 1, 2
 ORDER BY id_a, id_b
 """
 
-
-def simhash_pairs_oracle_sql(
-    source: str = "documents",
-    max_hamming: int = 3,
-    band_bits: int = 16,
-    max_docs_per_band: int | None = 500,
-) -> str:
+def simhash_pairs_oracle_sql() -> str:
     """DuckDB SQL mirroring ``simhash_hamming_pairs`` over
     ``simhash_sql``'s output -- the banded candidates AND the Hamming
     filter are plain SQL (band substrings self-joined, Hamming counted
@@ -730,28 +704,25 @@ def simhash_pairs_oracle_sql(
     round 4's "assumed un-hit" shortcut broke at sf0.1, where natural
     band values exceed 500 docs and the engines diverged by 16k pairs.
     """
-    n_bands = 64 // band_bits
-    inner = simhash_sql("duckdb", source=source)
+    n_bands = 64 // SIMHASH_BAND_BITS
+    inner = simhash_sql("duckdb", source="documents")
     inner = inner.rsplit("ORDER BY doc_id", 1)[0]
     bands = ", ".join(
-        f"'{i}:' || substr(simhash, {i * band_bits + 1}, {band_bits})"
+        f"'{i}:' || substr(simhash, {i * SIMHASH_BAND_BITS + 1}, "
+        f"{SIMHASH_BAND_BITS})"
         for i in range(n_bands)
     )
     ham = (
         "CAST(len(list_filter(range(1, 65), "
         "i -> substr(sa, i, 1) != substr(sb, i, 1))) AS INT)"
     )
-    cap = (
-        f"""
+    cap = f"""
 bandf AS (
   SELECT * FROM band WHERE band NOT IN (
     SELECT band FROM band GROUP BY band
-    HAVING count(*) > {max_docs_per_band}
+    HAVING count(*) > {SIMHASH_MAX_DOCS_PER_BAND}
   )
 ),"""
-        if max_docs_per_band is not None
-        else "\nbandf AS (SELECT * FROM band),"
-    )
     return f"""
 WITH sim AS ({inner}),
 band AS (
@@ -765,39 +736,9 @@ cand AS (
 )
 SELECT id_a, id_b, {ham} AS hamming
 FROM cand
-WHERE {ham} <= {max_hamming}
+WHERE {ham} <= {SIMHASH_MAX_HAMMING}
 ORDER BY id_a, id_b
 """
-
-
-def containment_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    threshold: float = 0.8,
-    max_docs_per_shingle: int | None = 1000,
-) -> DataFrame:
-    """Near-duplicate pairs by shingle CONTAINMENT: inter / min(|A|,|B|).
-
-    The asymmetric complement of ``ngram_jaccard_pairs``: a short doc
-    quoted wholesale inside a long one scores near 1.0 here but low on
-    Jaccard (the union is dominated by the long doc) -- the standard
-    second pass in web dedup for quote/include/boilerplate containment.
-    Identical plan shape to the Jaccard pass (the shared
-    ``shingle_pair_counts`` stage); only the final ratio differs.
-    Output: (id_a, id_b, containment), id_a < id_b, rounded to 4,
-    >= threshold.
-    """
-    inter = shingle_pair_counts(
-        df, id_col, text_col, k, max_docs_per_shingle
-    )
-    cont = F.col("inter") / F.least(F.col("n_a"), F.col("n_b"))
-    return (
-        inter.withColumn("containment", F.round(cont, 4))
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "containment")
-    )
 
 
 def score_pair_counts_jaccard(
@@ -827,8 +768,11 @@ def score_pair_counts_containment(
     )
 
 
+SPAN_K = 5
+
+
 def duplicate_spans(
-    df: DataFrame, id_col: str, text_col: str, k: int = 5
+    df: DataFrame, id_col: str, text_col: str, k: int = SPAN_K
 ) -> DataFrame:
     """Exact duplicate-SPAN detection (substring-dedup signal).
 
@@ -909,46 +853,40 @@ def duplicate_spans(
         )
     )
 
-
-def duplicate_spans_oracle_sql(
-    source: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-) -> str:
+def duplicate_spans_oracle_sql() -> str:
     """DuckDB SQL mirroring ``duplicate_spans`` (1-based positions; only
     counts are exposed, so the index base is irrelevant)."""
     return f"""
 WITH t AS (
-  SELECT {id_col}, string_split(lower({text_col}), ' ') AS toks
-  FROM {source}
+  SELECT doc_id, string_split(lower(text), ' ') AS toks
+  FROM documents
 ), base AS (
-  SELECT {id_col}, len(toks) AS n_tokens FROM t
+  SELECT doc_id, len(toks) AS n_tokens FROM t
 ), w AS (
-  SELECT {id_col}, unnest(range(1, len(toks) - {k} + 2)) AS start, toks
-  FROM t WHERE len(toks) >= {k}
+  SELECT doc_id, unnest(range(1, len(toks) - {SPAN_K} + 2)) AS start, toks
+  FROM t WHERE len(toks) >= {SPAN_K}
 ), w2 AS (
-  SELECT {id_col}, start,
-         array_to_string(toks[start:start + {k} - 1], ' ') AS win
+  SELECT doc_id, start,
+         array_to_string(toks[start:start + {SPAN_K} - 1], ' ') AS win
   FROM w
 ), d AS (
-  SELECT {id_col}, start FROM (
-    SELECT {id_col}, start, count(*) OVER (PARTITION BY win) AS cnt
+  SELECT doc_id, start FROM (
+    SELECT doc_id, start, count(*) OVER (PARTITION BY win) AS cnt
     FROM w2
   ) WHERE cnt >= 2
 ), p AS (
-  SELECT DISTINCT {id_col}, pos FROM (
-    SELECT {id_col}, unnest(range(start, start + {k})) AS pos FROM d
+  SELECT DISTINCT doc_id, pos FROM (
+    SELECT doc_id, unnest(range(start, start + {SPAN_K})) AS pos FROM d
   )
 ), c AS (
-  SELECT {id_col}, count(*) AS dup_tokens FROM p GROUP BY 1
+  SELECT doc_id, count(*) AS dup_tokens FROM p GROUP BY 1
 )
-SELECT base.{id_col}, base.n_tokens,
+SELECT base.doc_id, base.n_tokens,
        CAST(COALESCE(c.dup_tokens, 0) AS BIGINT) AS dup_tokens,
        ROUND(CAST(COALESCE(c.dup_tokens, 0) AS DOUBLE) / base.n_tokens, 4)
            AS dup_frac
-FROM base LEFT JOIN c USING ({id_col})
-ORDER BY base.{id_col}
+FROM base LEFT JOIN c USING (doc_id)
+ORDER BY base.doc_id
 """
 
 
@@ -985,7 +923,6 @@ def lsh_verified_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
     """The complete LSH-then-verify near-dup pipeline in one operator:
@@ -1009,7 +946,7 @@ def lsh_verified_pairs(
     # reverted -- the arrays are ~3x the text volume, and writing them
     # to the block store cost more than the two extra (fully parallel)
     # derivations it saved (cold medians 4.4 s -> 5.1 s at sf0.1).
-    arrs = shingle_arrays(df, id_col, text_col, k)
+    arrs = shingle_arrays(df, id_col, text_col)
     cand = _banded_pairs_from_arrays(arrs)
     a = arrs.select(F.col("doc").alias("id_a"), F.col("sh").alias("sh_a"))
     b = arrs.select(F.col("doc").alias("id_b"), F.col("sh").alias("sh_b"))
@@ -1025,12 +962,7 @@ def lsh_verified_pairs(
     )
 
 
-def lsh_verified_pairs_oracle_sql(
-    source: str = "documents",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    text_col: str = "text",
-) -> str:
+def lsh_verified_pairs_oracle_sql(threshold: float = 0.5) -> str:
     """DuckDB SQL mirroring ``lsh_verified_pairs`` (x40's banding CTEs
     plus a list_intersect verify join; k fixed at 3).
 
@@ -1053,14 +985,14 @@ def lsh_verified_pairs_oracle_sql(
     )
     return f"""
 WITH t AS (
-  SELECT {id_col} AS doc,
+  SELECT doc_id AS doc,
          list_distinct(list_transform(
-           range(1, len(string_split(lower({text_col}), ' ')) - 1),
+           range(1, len(string_split(lower(text), ' ')) - 1),
            i -> array_to_string(
-                  (string_split(lower({text_col}), ' '))[i:i+2], ' ')
+                  (string_split(lower(text), ' '))[i:i+2], ' ')
          )) AS sh
-  FROM {source}
-  WHERE len(string_split(lower({text_col}), ' ')) >= 3
+  FROM documents
+  WHERE len(string_split(lower(text), ' ')) >= 3
 ), sg AS (
   SELECT doc, {sig_cols} FROM t
 ), b AS (
@@ -1090,7 +1022,6 @@ def source_shingle_overlap(
     df: DataFrame,
     source_col: str,
     text_col: str,
-    k: int = 3,
 ) -> DataFrame:
     """Source-level shingle-set Jaccard matrix: for every pair of
     sources, the overlap of their DISTINCT k-token shingle sets. Two
@@ -1109,13 +1040,13 @@ def source_shingle_overlap(
     source-pair-sized after the partial aggregation. No all-pairs
     anything.
     """
-    sa = shingle_arrays(df, source_col, text_col, k)
+    sa = shingle_arrays(df, source_col, text_col)
     # explode_outer, NOT explode (the shingles() recipe): for inner
     # generates the optimizer infers a size(sh) > 0 filter and pushes it
     # below shingle_arrays' rebalance, re-inlining the WHOLE shingle
     # expression into a pre-shuffle filter on the raw single-split scan
     # (measured: a 4.4 s single-task stage at sf0.1 -- the entry's
-    # dominant cost). size(toks) >= k already guarantees non-empty
+    # dominant cost). size(toks) >= SHINGLE_K already guarantees non-empty
     # arrays, so outer == inner here.
     ss = sa.select(
         F.col("doc").alias("src"), F.explode_outer("sh").alias("shingle")
@@ -1184,24 +1115,19 @@ def source_shingle_overlap(
     )
 
 
-def source_shingle_overlap_sql(
-    source: str = "documents",
-    source_col: str = "source",
-    text_col: str = "text",
-    k: int = 3,
-) -> str:
+def source_shingle_overlap_sql() -> str:
     """DuckDB SQL mirroring ``source_shingle_overlap`` (x03's shingle
     formula keyed by source)."""
-    toks = f"string_split(lower({text_col}), ' ')"
+    toks = "string_split(lower(text), ' ')"
     return f"""
 WITH t AS (
-  SELECT {source_col} AS src,
+  SELECT source AS src,
          list_transform(
-           range(1, len({toks}) - {k - 2}),
-           i -> array_to_string(({toks})[i:i+{k - 1}], ' ')
+           range(1, len({toks}) - {SHINGLE_K - 2}),
+           i -> array_to_string(({toks})[i:i+{SHINGLE_K - 1}], ' ')
          ) AS sh
-  FROM {source}
-  WHERE len({toks}) >= {k}
+  FROM documents
+  WHERE len({toks}) >= {SHINGLE_K}
 ), ss AS (
   SELECT DISTINCT src, unnest(sh) AS shingle FROM t
 ), per AS (

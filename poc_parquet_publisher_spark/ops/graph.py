@@ -88,32 +88,27 @@ def copurchase_edge_table_name(sf_dir: str) -> str:
     return "x104_edges_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
 
 
-def persist_copurchase_edges(
-    spark, lineitem: DataFrame, table: str, n_buckets: int | None = None
-) -> None:
+def persist_copurchase_edges(spark, lineitem: DataFrame, table: str) -> None:
     """Materialize the symmetric edge list as a bucketed warehouse table
-    (bucketed+sorted on the join key ``u``): a real deployment derives
+    (bucketed+sorted on the join key ``u``, one bucket per shuffle
+    partition): a real deployment derives
     the graph once and amortizes it across every rank/degree/analytics
     run -- PageRank's per-iteration join then reads bucket-aligned
     edges with no edge-side exchange. In-session, x104 pays the
     derivation every call unless this table exists."""
     from .. import scale
 
-    if n_buckets is None:
-        n_buckets = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     edges = symmetric_copurchase_edges(lineitem)
     scale.write_bucketed(edges, table, "u", n_buckets=n_buckets)
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 3,
-    damping: float = 0.85,
-    materialize: bool = True,
-) -> DataFrame:
-    """PageRank over a symmetric edge list, fixed ``iterations`` power
+DAMPING = 0.85
+PAGERANK_ITERATIONS = 3
+
+
+def pagerank(edges: DataFrame) -> DataFrame:
+    """PageRank over a symmetric edge list, fixed ``PAGERANK_ITERATIONS`` power
     steps. Output: (node, rank) for every node, rank rounded to 12.
 
     Scale shape: NOTHING collects to the driver -- the node count rides
@@ -125,20 +120,17 @@ def pagerank(
     a symmetric graph every node has degree >= 1, so there is no
     dangling-mass term.
     """
-    # Materialize the edge list ONCE: it feeds every iteration's join,
-    # and without a checkpoint each round re-derives it from source
-    # (measured 12.6 s -> ~5 s at sf0.1). In production the edge list
-    # is a table; localCheckpoint is the in-session equivalent. Pass
-    # materialize=False when the input is already cached/checkpointed
-    # (symmetric_copurchase_edges checkpoints its half-size pair set).
-    if materialize:
-        edges = edges.localCheckpoint(eager=False)
+    # The edge list feeds every iteration's join: callers pass it
+    # materialized ONCE (a table, or a localCheckpoint -- without one
+    # each round re-derives it from source, measured 12.6 s -> ~5 s at
+    # sf0.1; symmetric_copurchase_edges checkpoints its half-size pair
+    # set).
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     ncnt = deg.agg(F.count(F.lit(1)).alias("n"))
     nodes = deg.crossJoin(F.broadcast(ncnt))
-    base = 1.0 - damping
+    base = 1.0 - DAMPING
     rank = nodes.withColumn("r", F.lit(1.0) / F.col("n"))
-    for _ in range(iterations):
+    for _ in range(PAGERANK_ITERATIONS):
         # shuffle_hash, NOT broadcast: the rank table is node-sized, so
         # at scale it can never broadcast -- and in local mode AQE's
         # eager broadcast of the 3 chained iteration sub-plans exhausts
@@ -162,7 +154,7 @@ def pagerank(
                 "n",
                 F.round(
                     F.lit(base) / F.col("n")
-                    + F.lit(damping)
+                    + F.lit(DAMPING)
                     * F.coalesce(F.col("s").cast("double"), F.lit(0.0)),
                     12,
                 ).alias("r"),
@@ -171,9 +163,7 @@ def pagerank(
     return rank.select(F.col("u").alias("node"), F.col("r").alias("rank"))
 
 
-def pagerank_copurchase_sql(
-    iterations: int = 3, damping: float = 0.85, top_k: int = 20
-) -> str:
+def pagerank_copurchase_sql() -> str:
     """DuckDB SQL replaying ``pagerank(symmetric_copurchase_edges(...))``
     as chained CTEs -- one pair of CTEs per iteration, same round-12 /
     DECIMAL(28,12) accumulation, same double update arithmetic.
@@ -190,18 +180,12 @@ def pagerank_copurchase_sql(
     ]
     return pagerank_sql_over_edges(
         edge_ctes,
-        iterations=iterations,
-        damping=damping,
-        top_k=top_k,
         node_select="CAST(u AS BIGINT) AS node",
     )
 
 
 def pagerank_sql_over_edges(
     edge_ctes: list[str],
-    iterations: int = 3,
-    damping: float = 0.85,
-    top_k: int = 20,
     node_select: str = "u AS node",
 ) -> str:
     """DuckDB SQL replaying ``pagerank`` over caller-supplied CTEs that
@@ -210,14 +194,14 @@ def pagerank_sql_over_edges(
     ``pagerank_copurchase_sql``, parameterized so non-copurchase graphs
     (x324's word co-occurrence TextRank) replay through one proven
     template."""
-    base = 1.0 - damping
+    base = 1.0 - DAMPING
     ctes = list(edge_ctes) + [
         "deg AS (SELECT u, count(*) AS deg FROM edges GROUP BY u)",
         "nn AS (SELECT count(*) AS n FROM deg)",
         "r0 AS (SELECT u, deg, CAST(1.0 AS DOUBLE) / (SELECT n FROM nn)"
         " AS r FROM deg)",
     ]
-    for i in range(iterations):
+    for i in range(PAGERANK_ITERATIONS):
         ctes.append(
             f"""c{i + 1} AS (
   SELECT e.v AS u,
@@ -229,7 +213,7 @@ def pagerank_sql_over_edges(
             f"""r{i + 1} AS (
   SELECT d.u, d.deg,
          ROUND(CAST({base!r} AS DOUBLE) / (SELECT n FROM nn) +
-               CAST({damping!r} AS DOUBLE) *
+               CAST({DAMPING!r} AS DOUBLE) *
                COALESCE(CAST(c{i + 1}.s AS DOUBLE),
                         CAST(0.0 AS DOUBLE)), 12) AS r
   FROM deg d LEFT JOIN c{i + 1} ON d.u = c{i + 1}.u
@@ -240,14 +224,17 @@ def pagerank_sql_over_edges(
         + ",\n".join(ctes)
         + f"""
 SELECT {node_select}, ROUND(r, 8) AS rank
-FROM r{iterations}
-ORDER BY r DESC, u LIMIT {top_k}"""
+FROM r{PAGERANK_ITERATIONS}
+ORDER BY r DESC, u LIMIT 20"""
     )
 
 
-def label_propagation(edges: DataFrame, iterations: int = 2) -> DataFrame:
+LPA_ITERATIONS = 2
+
+
+def label_propagation(edges: DataFrame) -> DataFrame:
     """Synchronous label-propagation communities (LPA), fixed
-    ``iterations`` rounds: every node starts as its own label; each
+    ``LPA_ITERATIONS`` rounds: every node starts as its own label; each
     round a node adopts its neighbors' MOST FREQUENT label, ties broken
     by the smallest label -- deterministic, so oracle-replayable
     (classic async LPA is order-dependent; the synchronous fixed-round
@@ -270,7 +257,7 @@ def label_propagation(edges: DataFrame, iterations: int = 2) -> DataFrame:
         .withColumn("lab", F.col("node"))
         .localCheckpoint(eager=False)
     )
-    for _ in range(iterations):
+    for _ in range(LPA_ITERATIONS):
         nb = (
             edges.join(
                 labels.select(
@@ -293,18 +280,16 @@ def label_propagation(edges: DataFrame, iterations: int = 2) -> DataFrame:
     return labels
 
 
-def lpa_copurchase_sql(
-    iterations: int = 2, part_mod: int = 4
-) -> str:
+def lpa_copurchase_sql() -> str:
     """DuckDB SQL replaying ``label_propagation`` over the
     ``l_partkey % part_mod = 0`` co-purchase subgraph: per round one
     neighbor-label count CTE, one per-node max CTE, one argmax CTE
     (max count, then min label) -- all MATERIALIZED (chained-CTE
     re-inline defense). Final output: community sizes."""
     ctes = [
-        f"""items AS MATERIALIZED (
+        """items AS MATERIALIZED (
   SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-  WHERE l_partkey % {part_mod} = 0
+  WHERE l_partkey % 4 = 0
 )""",
         """p AS MATERIALIZED (
   SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
@@ -316,7 +301,7 @@ def lpa_copurchase_sql(
         "l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS lab "
         "FROM edges)",
     ]
-    for i in range(iterations):
+    for i in range(LPA_ITERATIONS):
         ctes.append(
             f"""n{i + 1} AS MATERIALIZED (
   SELECT e.u, l.lab, count(*) AS c
@@ -343,15 +328,18 @@ def lpa_copurchase_sql(
 SELECT CAST(lab AS BIGINT) AS community,
        CAST(count(*) AS BIGINT) AS n_nodes,
        CAST(MIN(node) AS BIGINT) AS rep
-FROM l{iterations}
+FROM l{LPA_ITERATIONS}
 GROUP BY lab
 ORDER BY n_nodes DESC, community"""
     )
 
 
-def bfs_levels(edges: DataFrame, hops: int = 3) -> DataFrame:
+BFS_HOPS = 3
+
+
+def bfs_levels(edges: DataFrame) -> DataFrame:
     """Breadth-first reachability from the minimum node id, fixed
-    ``hops`` rounds. Output: one row per level 0..hops with the count
+    ``BFS_HOPS`` rounds. Output: one row per level 0..BFS_HOPS with the count
     of nodes FIRST reached at that distance (empty levels report 0).
 
     The other canonical Pregel workload next to ``pagerank``: per hop
@@ -365,7 +353,7 @@ def bfs_levels(edges: DataFrame, hops: int = 3) -> DataFrame:
     seed = edges.agg(F.min("u").alias("node"))
     visited = seed.localCheckpoint(eager=False)
     frontiers = [visited]
-    for _ in range(hops):
+    for _ in range(BFS_HOPS):
         prev = frontiers[-1]
         # shuffle_hash, NOT broadcast: frontier and visited sets are
         # node-sized -- a broadcast that fits the seed hop OOMs the
@@ -394,7 +382,7 @@ def bfs_levels(edges: DataFrame, hops: int = 3) -> DataFrame:
     return levels
 
 
-def bfs_copurchase_sql(hops: int = 3) -> str:
+def bfs_copurchase_sql() -> str:
     """DuckDB SQL replaying ``bfs_levels(symmetric_copurchase_edges(...))``
     as chained CTEs: one frontier CTE per hop, NOT-IN against every
     prior level (the visited set), counts unioned per level."""
@@ -408,7 +396,7 @@ def bfs_copurchase_sql(hops: int = 3) -> str:
         "edges AS (SELECT u, v FROM p UNION ALL SELECT v, u FROM p)",
         "f0 AS (SELECT MIN(u) AS node FROM edges)",
     ]
-    for h in range(1, hops + 1):
+    for h in range(1, BFS_HOPS + 1):
         not_in = " AND ".join(
             f"e.v NOT IN (SELECT node FROM f{i})" for i in range(h)
         )
@@ -421,7 +409,7 @@ def bfs_copurchase_sql(hops: int = 3) -> str:
         )
     counts = "\n  UNION ALL ".join(
         f"SELECT {h} AS dist, count(*) AS n FROM f{h}"
-        for h in range(hops + 1)
+        for h in range(BFS_HOPS + 1)
     )
     return (
         "WITH "
@@ -435,13 +423,7 @@ FROM lv ORDER BY dist"""
     )
 
 
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iterations: int = 3,
-    damping: float = 0.85,
-    materialize: bool = True,
-) -> DataFrame:
+def personalized_pagerank(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """Personalized PageRank (random walk with restart to a SEED
     distribution) over a symmetric edge list: ``seeds`` is (u, w) with
     weights summing to 1; non-seed nodes get 0 teleport mass, so rank
@@ -449,16 +431,15 @@ def personalized_pagerank(
     related-items primitive vanilla :func:`pagerank` cannot express.
     Same scale shape as pagerank: node-sized state, one edge-keyed
     shuffle_hash join + destination groupBy per iteration, round-12
-    DECIMAL contributions."""
-    if materialize:
-        edges = edges.localCheckpoint(eager=False)
+    DECIMAL contributions. ``edges`` comes materialized, as for
+    :func:`pagerank`."""
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    base = 1.0 - damping
+    base = 1.0 - DAMPING
     nodes = deg.join(seeds.select("u", "w"), "u", "left").select(
         "u", "deg", F.coalesce(F.col("w"), F.lit(0.0)).alias("w")
     )
     rank = nodes.withColumn("r", F.col("w"))
-    for _ in range(iterations):
+    for _ in range(PAGERANK_ITERATIONS):
         contrib = edges.join(
             rank.select("u", "deg", "r").hint("shuffle_hash"), "u"
         ).select(
@@ -476,7 +457,7 @@ def personalized_pagerank(
                 "w",
                 F.round(
                     F.lit(base) * F.col("w")
-                    + F.lit(damping)
+                    + F.lit(DAMPING)
                     * F.coalesce(F.col("s").cast("double"), F.lit(0.0)),
                     12,
                 ).alias("r"),
@@ -485,20 +466,13 @@ def personalized_pagerank(
     return rank.select(F.col("u").alias("node"), F.col("r").alias("rank"))
 
 
-def ppr_sql_over_edges(
-    edge_ctes: list[str],
-    seed_cte: str,
-    iterations: int = 3,
-    damping: float = 0.85,
-    top_k: int = 20,
-    node_select: str = "u AS node",
-) -> str:
+def ppr_sql_over_edges(edge_ctes: list[str], seed_cte: str) -> str:
     """DuckDB SQL replaying :func:`personalized_pagerank`: callers
     supply CTEs ending in ``edges(u, v)`` (symmetric) plus ``seed_cte``
     defining ``seeds(u, w)`` (weights summing to 1). Same round-12 /
     DECIMAL(28,12) chain as ``pagerank_sql_over_edges`` with the
     teleport mass redirected to the seed vector."""
-    base = 1.0 - damping
+    base = 1.0 - DAMPING
     ctes = list(edge_ctes) + [
         "deg AS (SELECT u, count(*) AS deg FROM edges GROUP BY u)",
         seed_cte,
@@ -508,7 +482,7 @@ def ppr_sql_over_edges(
 )""",
         "r0 AS (SELECT u, deg, w, w AS r FROM nw)",
     ]
-    for i in range(iterations):
+    for i in range(PAGERANK_ITERATIONS):
         ctes.append(
             f"""c{i + 1} AS (
   SELECT e.v AS u,
@@ -520,7 +494,7 @@ def ppr_sql_over_edges(
             f"""r{i + 1} AS (
   SELECT n.u, n.deg, n.w,
          ROUND(CAST({base!r} AS DOUBLE) * n.w +
-               CAST({damping!r} AS DOUBLE) *
+               CAST({DAMPING!r} AS DOUBLE) *
                COALESCE(CAST(c{i + 1}.s AS DOUBLE),
                         CAST(0.0 AS DOUBLE)), 12) AS r
   FROM nw n LEFT JOIN c{i + 1} ON n.u = c{i + 1}.u
@@ -530,9 +504,9 @@ def ppr_sql_over_edges(
         "WITH "
         + ",\n".join(ctes)
         + f"""
-SELECT {node_select},
+SELECT u AS token,
        CASE WHEN w > 0 THEN 1 ELSE 0 END AS is_seed,
        ROUND(r, 8) AS rank
-FROM r{iterations}
-ORDER BY r DESC, u LIMIT {top_k}"""
+FROM r{PAGERANK_ITERATIONS}
+ORDER BY r DESC, u LIMIT 20"""
     )

@@ -39,8 +39,6 @@ def _index_exists(spark: SparkSession, index_path: str) -> bool:
 def incremental_dedup(
     batch: DataFrame,
     index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     update_index: bool = True,
 ) -> DataFrame:
     """Rows of ``batch`` not seen in any prior batch (by normalized text
@@ -51,11 +49,11 @@ def incremental_dedup(
     Returns the surviving rows with their ``__h`` hash column dropped.
     """
     spark = batch.sparkSession
-    h = F.md5(F.lower(F.col(text_col))).alias("__h")
+    h = F.md5(F.lower(F.col("text"))).alias("__h")
     hashed = batch.withColumn("__h", h)
     # within-batch: min id per hash survives (same rule as exact_dedup)
-    keep = hashed.groupBy("__h").agg(F.min(id_col).alias(id_col))
-    fresh = hashed.join(keep, ["__h", id_col], "left_semi")
+    keep = hashed.groupBy("__h").agg(F.min("doc_id").alias("doc_id"))
+    fresh = hashed.join(keep, ["__h", "doc_id"], "left_semi")
     if _index_exists(spark, index_path):
         seen = read_parquet(spark, index_path)
         fresh = fresh.join(seen, fresh["__h"] == seen["h"], "left_anti")
@@ -70,12 +68,7 @@ def incremental_dedup(
     return fresh.drop("__h")
 
 
-def neardup_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
+def neardup_signatures(df: DataFrame) -> DataFrame:
     """Per-document near-dup index row: deterministic MinHash band keys
     (4 strings, ``ops/dedup.py det_band_keys`` -- the SAME math as x40's
     ``minhash_banded_pairs``, so batch and index hash identically) plus
@@ -83,7 +76,7 @@ def neardup_signatures(
     shingle) for the exact-Jaccard verify step.
 
     Output: (doc, shh: array<string>, bands: array<string>). Docs
-    shorter than ``k`` tokens carry no signature (no row) -- near-dup
+    shorter than 3 tokens carry no signature (no row) -- near-dup
     semantics need at least one shingle; pair with ``incremental_dedup``
     for exact-hash coverage of short docs.
 
@@ -96,7 +89,7 @@ def neardup_signatures(
     """
     from .dedup import det_band_keys, shingle_arrays
 
-    arrs = shingle_arrays(df, id_col, text_col, k)
+    arrs = shingle_arrays(df, "doc_id", "text")
     sh = F.col("sh")
     shh = F.transform(sh, lambda s: F.substring(F.md5(s), 1, 16))
     return arrs.select(
@@ -160,14 +153,13 @@ def neardup_matches(
     ).filter(F.col("jaccard") >= threshold)
 
 
+NEARDUP_MAX_DOCS_PER_BAND = 1000
+NEARDUP_THRESHOLD = 0.7
+
+
 def incremental_neardup_dedup(
     batch: DataFrame,
     index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    threshold: float = 0.7,
-    max_docs_per_band: int | None = 1000,
     update_index: bool = True,
 ) -> DataFrame:
     """Cross-batch NEAR-duplicate dedup: rows of ``batch`` that are not
@@ -183,7 +175,7 @@ def incremental_neardup_dedup(
     Within-batch rule: a doc is dropped when it verifies against ANY
     smaller-id batch doc (pairwise-minimal survivors -- the cluster's
     global minimum always survives; the same keep-one approximation as
-    x244's cascade). Docs shorter than ``k`` tokens have no shingles,
+    x244's cascade). Docs shorter than 3 tokens have no shingles,
     always survive, and are not indexed (see ``neardup_signatures``).
 
     Idempotent re-runs: a re-ingested batch re-matches its own indexed
@@ -194,9 +186,11 @@ def incremental_neardup_dedup(
     Returns the surviving rows of ``batch``.
     """
     spark = batch.sparkSession
-    sigs = neardup_signatures(batch, id_col, text_col, k).localCheckpoint()
+    sigs = neardup_signatures(batch).localCheckpoint()
     within = (
-        neardup_matches(sigs, sigs, threshold, max_docs_per_band)
+        neardup_matches(
+            sigs, sigs, NEARDUP_THRESHOLD, NEARDUP_MAX_DOCS_PER_BAND
+        )
         .filter(F.col("old_id") < F.col("new_id"))
         .select("new_id")
     )
@@ -204,7 +198,9 @@ def incremental_neardup_dedup(
     if _index_exists(spark, index_path):
         idx = read_parquet(spark, index_path)
         drops = drops.union(
-            neardup_matches(sigs, idx, threshold, max_docs_per_band)
+            neardup_matches(
+                sigs, idx, NEARDUP_THRESHOLD, NEARDUP_MAX_DOCS_PER_BAND
+            )
             .select("new_id")
         )
     # drop ids are candidate-bounded (small); materialize so neither the
@@ -212,7 +208,7 @@ def incremental_neardup_dedup(
     # while we append to it
     drops = drops.distinct().localCheckpoint()
     survivors = batch.join(
-        drops, batch[id_col] == drops["new_id"], "left_anti"
+        drops, batch["doc_id"] == drops["new_id"], "left_anti"
     )
     if update_index:
         surv_sigs = sigs.join(
@@ -301,20 +297,15 @@ def compact_hash_index(
     return _compact_index(spark, index_path, ["h"], None, target_file_bytes)
 
 
-def incremental_neardup_oracle_sql(
-    source: str = "documents",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-    max_docs_per_band: int = 1000,
-) -> str:
+def incremental_neardup_oracle_sql() -> str:
     """DuckDB SQL replaying the full two-batch incremental near-dup
     flow (x295): batch 1 (``doc_id % 5 < 3``) self-dedups, its
     survivors become the index; batch 2 probes the index AND itself.
     Same md5 slices / bands / hashed-shingle Jaccard as the Spark side
     (k fixed at 3), hot-band cap mirrored on each probe's INDEX side.
     """
-    thr = threshold
-    cap = max_docs_per_band
+    thr = NEARDUP_THRESHOLD
+    cap = NEARDUP_MAX_DOCS_PER_BAND
     sig_cols = ", ".join(
         f"list_min(list_transform(sh, s -> substr(md5('{salt}:' || s), "
         f"{off}, 8))) AS s{4 * salt + i}"
@@ -336,24 +327,24 @@ def incremental_neardup_oracle_sql(
     )
     return f"""
 WITH t1 AS MATERIALIZED (
-  SELECT {id_col} AS doc,
+  SELECT doc_id AS doc,
          list_distinct(list_transform(
            range(1, len(string_split(lower(text), ' ')) - 1),
            i -> array_to_string(
                   (string_split(lower(text), ' '))[i:i+2], ' ')
          )) AS sh
-  FROM {source}
-  WHERE {id_col} % 5 < 3
+  FROM documents
+  WHERE doc_id % 5 < 3
     AND len(string_split(lower(text), ' ')) >= 3
 ), t2 AS MATERIALIZED (
-  SELECT {id_col} AS doc,
+  SELECT doc_id AS doc,
          list_distinct(list_transform(
            range(1, len(string_split(lower(text), ' ')) - 1),
            i -> array_to_string(
                   (string_split(lower(text), ' '))[i:i+2], ' ')
          )) AS sh
-  FROM {source}
-  WHERE {id_col} % 5 >= 3
+  FROM documents
+  WHERE doc_id % 5 >= 3
     AND len(string_split(lower(text), ' ')) >= 3
 ), g1 AS MATERIALIZED (
   SELECT doc, list_transform(sh, s -> substr(md5(s), 1, 16)) AS shh,
@@ -413,15 +404,15 @@ hot2 AS (
   JOIN surv1 po ON po.doc = c.old_id
   WHERE {jac} >= {thr}
 )
-SELECT d.{id_col},
-       CASE WHEN d.{id_col} IN (SELECT new_id FROM drop2x)
+SELECT d.doc_id,
+       CASE WHEN d.doc_id IN (SELECT new_id FROM drop2x)
               THEN 'neardup_prior'
-            WHEN d.{id_col} IN (SELECT new_id FROM drop2w)
+            WHEN d.doc_id IN (SELECT new_id FROM drop2w)
               THEN 'neardup_batch'
             ELSE 'fresh' END AS status
-FROM {source} d
-WHERE d.{id_col} % 5 >= 3
-ORDER BY d.{id_col}
+FROM documents d
+WHERE d.doc_id % 5 >= 3
+ORDER BY d.doc_id
 """
 
 

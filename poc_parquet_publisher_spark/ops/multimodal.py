@@ -2,7 +2,7 @@
 metadata.
 
 The container has no image/audio codecs, so the decode kernels are STUBS
-(deterministic fakes / NotImplementedError) -- but the Spark-side plumbing
+(deterministic fakes) -- but the Spark-side plumbing
 is real and tested: schema contracts, Arrow-batched mapInPandas UDF
 signatures, partition sizing for fat binary rows.
 
@@ -52,35 +52,27 @@ FEATURE_SCHEMA = (
 )
 
 
-def attach_binary_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def attach_binary_metadata(df: DataFrame) -> DataFrame:
     """Typed metadata over an opaque binary column -- pure JVM expressions."""
     return df.withColumn(
-        "byte_len", F.octet_length(payload_col).cast("long")
-    ).withColumn("sha256", F.sha2(F.col(payload_col), 256))
+        "byte_len", F.octet_length("payload").cast("long")
+    ).withColumn("sha256", F.sha2(F.col("payload"), 256))
 
 
-def _fake_decode_features(payload: bytes, dim: int = 8) -> list[float]:
+def _fake_decode_features(payload: bytes) -> list[float]:
     """Deterministic fake 'decoder': derives a feature vector from the
     payload digest. Stands in for image-decode/resize/frame-sample until a
     codec library is available."""
     digest = hashlib.sha256(payload).digest()
-    return [digest[i] / 255.0 for i in range(dim)]
+    return [digest[i] / 255.0 for i in range(8)]
 
 
-def decode_features(
-    df: DataFrame, dim: int = 8, real_codecs: bool = False
-) -> DataFrame:
+def decode_features(df: DataFrame) -> DataFrame:
     """Arrow-batched decode/feature-extract over binary payloads.
 
-    With ``real_codecs=True`` this would dispatch to PIL/librosa/pyav --
-    none of which exist in this container, so it raises NotImplementedError
-    (the deterministic fake keeps the distributed plumbing testable).
+    A PIL/librosa/pyav decoder would replace ``_fake_decode_features``;
+    the deterministic fake keeps the distributed plumbing testable.
     """
-    if real_codecs:
-        raise NotImplementedError(
-            "image/audio codecs are not available in this environment; "
-            "plug PIL/librosa/pyav into _fake_decode_features's slot"
-        )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -95,7 +87,7 @@ def decode_features(
                         lambda b: hashlib.sha256(b or b"").hexdigest()
                     ),
                     "feature": pdf["payload"].map(
-                        lambda b: _fake_decode_features(b or b"", dim)
+                        lambda b: _fake_decode_features(b or b"")
                     ),
                 }
             )
@@ -110,20 +102,15 @@ RESIZE_SCHEMA = (
 
 
 def resize_images(
-    df: DataFrame, width: int = 32, height: int = 32, real_codecs: bool = False
+    df: DataFrame, width: int = 32, height: int = 32
 ) -> DataFrame:
-    """Resize stub over image payloads (same mapInPandas plumbing the real
-    kernel would use; PIL slot marked by ``real_codecs``).
+    """Resize stub over image payloads (same mapInPandas plumbing a real
+    PIL kernel would use).
 
     The fake "resize" emits a deterministic byte stream of exactly
     width*height bytes derived from the payload digest, so output size
     contracts (the thing partition sizing depends on) are honest.
     """
-    if real_codecs:
-        raise NotImplementedError(
-            "no image codec in this environment; plug PIL.Image.resize here"
-        )
-
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         target = width * height
         for pdf in it:
@@ -146,13 +133,11 @@ def resize_images(
     return df.mapInPandas(batches, schema=RESIZE_SCHEMA)
 
 
-def sample_frames(
-    df: DataFrame, every_ms: int = 1000, real_codecs: bool = False
-) -> DataFrame:
+def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame-sampling stub over video payloads: one output row per sampled
     frame (media_id, frame_idx, frame_sha), frame count driven by the
     TYPED METADATA (meta.duration_ms), so the plan never decodes payloads
-    it won't sample. The pyav decode slot is ``real_codecs``.
+    it won't sample.
 
     The stub kernel (frame_sha = sha256(payload || frame_idx_be32)) is pure
     JVM: explode(sequence(0, n_frames-1)) fans out frame rows and
@@ -161,11 +146,6 @@ def sample_frames(
     the metadata-driven fan-out (never decoding frames it won't sample)
     stays the same.
     """
-    if real_codecs:
-        raise NotImplementedError(
-            "no video codec in this environment; plug pyav frame seek here"
-        )
-
     n_frames = F.greatest(
         F.lit(1).cast("long"),
         (F.coalesce(F.col("meta.duration_ms"), F.lit(0)) / every_ms).cast(

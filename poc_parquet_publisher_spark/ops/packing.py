@@ -36,7 +36,6 @@ def pack_sequences(
     token_col: str,
     budget: int,
     n_buckets: int = 64,
-    salt: str = "pack",
 ) -> DataFrame:
     """Assign every doc to a training sequence of <= ``budget`` tokens.
 
@@ -54,7 +53,7 @@ def pack_sequences(
     bucket = (
         F.conv(
             F.substring(
-                F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f":{salt}"))),
+                F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":pack"))),
                 1,
                 8,
             ),
@@ -156,13 +155,11 @@ def chunk_oversize(
     ).filter(F.col("n_tokens") > 0)
 
 
-def chunk_documents(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    chunk_tokens: int = 64,
-    stride: int = 48,
-) -> DataFrame:
+CHUNK_TOKENS = 64
+STRIDE = 48
+
+
+def chunk_documents(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Split documents into overlapping token-window chunks -- the
     context-window preprocessing step (RAG indexing, long-doc training):
     chunk i covers tokens [i*stride, i*stride + chunk_tokens); the final
@@ -174,8 +171,6 @@ def chunk_documents(
     explode (sequence + slice + array_join), no shuffle, no Python, and
     bit-identical across engines (no floats anywhere).
     """
-    if chunk_tokens <= 0 or stride <= 0:
-        raise ValueError("chunk_tokens and stride must be positive")
     toks_df = df.select(
         F.col(id_col),
         _toks(text_col).alias("__toks"),
@@ -185,13 +180,9 @@ def chunk_documents(
     # 1 + ceil((n - chunk) / stride) starts, minimum 1
     n_starts = F.lit(1) + F.greatest(
         F.lit(0).cast("long"),
-        F.ceil((n - chunk_tokens) / F.lit(stride).cast("double")).cast(
-            "long"
-        ),
+        F.ceil((n - CHUNK_TOKENS) / F.lit(STRIDE).cast("double")).cast("long"),
     )
-    chunk = F.slice(
-        toks, F.col("chunk_idx") * stride + 1, chunk_tokens
-    )
+    chunk = F.slice(toks, F.col("chunk_idx") * STRIDE + 1, CHUNK_TOKENS)
     return (
         toks_df.select(
             F.col(id_col),
@@ -210,34 +201,29 @@ def chunk_documents(
     )
 
 
-def chunk_documents_oracle_sql(
-    source: str = "documents",
-    id_col: str = "doc_id",
-    chunk_tokens: int = 64,
-    stride: int = 48,
-) -> str:
+def chunk_documents_oracle_sql() -> str:
     """DuckDB SQL mirroring ``chunk_documents`` (1-based inclusive list
     slicing; integer-only arithmetic keeps both engines bit-identical)."""
     return f"""
 WITH t AS (
-  SELECT {id_col}, string_split(lower(text), ' ') AS toks,
+  SELECT doc_id, string_split(lower(text), ' ') AS toks,
          len(string_split(lower(text), ' ')) AS n
-  FROM {source}
+  FROM documents
 ), s AS (
-  SELECT {id_col}, toks,
+  SELECT doc_id, toks,
          unnest(range(0, 1 + greatest(0,
-             CAST(ceil(CAST(n - {chunk_tokens} AS DOUBLE)
-                       / {stride}) AS BIGINT)))) AS chunk_idx
+             CAST(ceil(CAST(n - {CHUNK_TOKENS} AS DOUBLE)
+                       / {STRIDE}) AS BIGINT)))) AS chunk_idx
   FROM t
 ), c AS (
-  SELECT {id_col}, chunk_idx,
-         toks[chunk_idx * {stride} + 1 :
-              chunk_idx * {stride} + {chunk_tokens}] AS chunk
+  SELECT doc_id, chunk_idx,
+         toks[chunk_idx * {STRIDE} + 1 :
+              chunk_idx * {STRIDE} + {CHUNK_TOKENS}] AS chunk
   FROM s
 )
-SELECT {id_col}, CAST(chunk_idx AS BIGINT) AS chunk_idx,
+SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
        CAST(len(chunk) AS BIGINT) AS n_chunk_toks,
        array_to_string(chunk, ' ') AS chunk_text
 FROM c WHERE len(chunk) > 0
-ORDER BY {id_col}, chunk_idx
+ORDER BY doc_id, chunk_idx
 """

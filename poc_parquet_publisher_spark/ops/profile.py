@@ -112,9 +112,10 @@ def referential_integrity(
     return out
 
 
-def decile_report(
-    df: DataFrame, value_col: str, n_buckets: int = 10
-) -> DataFrame:
+N_BUCKETS = 10
+
+
+def decile_report(df: DataFrame, value_col: str) -> DataFrame:
     """Distribution report: bucket rows by the EXACT interpolated
     quantile thresholds of ``value_col`` (deciles by default) and report
     per-bucket counts and value ranges -- the calibration table behind
@@ -131,7 +132,7 @@ def decile_report(
     quantile_cont bit-for-bit (the q30 precedent), so thresholds -- and
     therefore bucket boundaries -- are hash-stable cross-engine.
     """
-    probs = [i / n_buckets for i in range(1, n_buckets)]
+    probs = [i / N_BUCKETS for i in range(1, N_BUCKETS)]
     # round-6 thresholds before the bucket comparison: the engines'
     # quantile interpolation formulas can differ by 1 ulp, flipping
     # v > t exactly where a data value IS the threshold (the x119
@@ -167,11 +168,10 @@ def decile_report(
 def decile_report_oracle_sql(
     source: str = "documents",
     value_col: str = "n_chars",
-    n_buckets: int = 10,
 ) -> str:
     """DuckDB SQL mirroring ``decile_report`` (quantile_cont array)."""
     probs = ", ".join(
-        str(i / n_buckets) for i in range(1, n_buckets)
+        str(i / N_BUCKETS) for i in range(1, N_BUCKETS)
     )
     return f"""
 WITH thr AS (

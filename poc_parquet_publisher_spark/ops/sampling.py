@@ -62,13 +62,15 @@ def deterministic_split(
     )
 
 
+STRATIFIED_SALT = "stratified"
+
+
 def stratified_sample(
     df: DataFrame,
     key_col: str,
     strata_col: str,
     fractions: dict[str, float],
     default_fraction: float = 0.0,
-    salt: str = "stratified",
 ) -> DataFrame:
     """Keep each row with its stratum's rate, deterministically by key.
 
@@ -79,7 +81,7 @@ def stratified_sample(
     A narrow filter: the per-stratum threshold folds into one CASE
     expression, no join, no shuffle, no RNG state.
     """
-    bucket = _bucket(F.col(key_col), salt)
+    bucket = _bucket(F.col(key_col), STRATIFIED_SALT)
     thr = None
     for stratum, frac in sorted(fractions.items()):
         t = F.lit(_threshold_hex(frac))
@@ -96,6 +98,9 @@ def stratified_sample(
     return df.filter(bucket < thr)
 
 
+BUDGET_SALT = "budget"
+
+
 def token_budget_sample(
     df: DataFrame,
     key_col: str,
@@ -103,7 +108,6 @@ def token_budget_sample(
     token_col: str,
     budgets: dict[str, int],
     default_budget: int = 0,
-    salt: str = "budget",
     presample_rate: float | dict[str, float] | None = None,
 ) -> DataFrame:
     """Keep rows per stratum until a TOKEN budget is met (not a row
@@ -142,7 +146,7 @@ def token_budget_sample(
             "token_budget_sample emits a 'cum_tokens' output column; "
             "rename the input column of that name first"
         )
-    bucket = _bucket(F.col(key_col), salt)
+    bucket = _bucket(F.col(key_col), BUDGET_SALT)
     if presample_rate is not None:
         rates = (
             presample_rate
@@ -188,12 +192,14 @@ def token_budget_sample(
     )
 
 
+WEIGHTED_SALT = "weighted"
+
+
 def weighted_sample(
     df: DataFrame,
     key_col: str,
     weight_col: str,
     n: int,
-    salt: str = "weighted",
 ) -> DataFrame:
     """Deterministic weighted priority sample: keep the ``n`` rows with
     the smallest ``u / w`` where ``u`` is a 32-bit uniform derived from
@@ -212,7 +218,9 @@ def weighted_sample(
     u = F.conv(
         F.substring(
             F.md5(
-                F.concat(F.col(key_col).cast("string"), F.lit(f":{salt}"))
+                F.concat(
+                    F.col(key_col).cast("string"), F.lit(f":{WEIGHTED_SALT}")
+                )
             ),
             1,
             8,
@@ -234,8 +242,6 @@ def weighted_sample_sql(
     key_col: str,
     weight_col: str,
     n: int,
-    salt: str = "weighted",
-    extra_cols: str = "",
 ) -> str:
     """The same priority sample as DuckDB SQL (hex->int spelled
     ``CAST(concat('0x', ...) AS BIGINT)``; Spark's spelling is
@@ -243,15 +249,15 @@ def weighted_sample_sql(
     division-only key keeps the float priorities bit-identical)."""
     u = (
         f"CAST(CAST(concat('0x', substr(md5(concat(CAST({key_col} AS "
-        f"VARCHAR), ':{salt}')), 1, 8)) AS BIGINT) AS DOUBLE)"
+        f"VARCHAR), ':{WEIGHTED_SALT}')), 1, 8)) AS BIGINT) AS DOUBLE)"
     )
     return f"""
 WITH t AS (
-  SELECT {key_col}, {weight_col},{extra_cols}
+  SELECT {key_col}, {weight_col},
          {u} / CAST({weight_col} AS DOUBLE) AS pri
   FROM {source} WHERE {weight_col} > 0
 )
-SELECT {key_col}, {weight_col},{extra_cols} ROUND(pri, 4) AS priority
+SELECT {key_col}, {weight_col}, ROUND(pri, 4) AS priority
 FROM t ORDER BY pri, {key_col} LIMIT {n}
 """
 
@@ -262,8 +268,6 @@ def token_budget_sample_sql(
     strata_col: str,
     token_expr: str,
     budgets: dict[str, int],
-    default_budget: int = 0,
-    salt: str = "budget",
 ) -> str:
     """The same token-budget capping as portable SQL (DuckDB oracle).
 
@@ -274,12 +278,12 @@ def token_budget_sample_sql(
         f"WHEN {strata_col} = '{s}' THEN {int(b)}"
         for s, b in sorted(budgets.items())
     )
-    case = f"CASE {whens} ELSE {int(default_budget)} END"
+    case = f"CASE {whens} ELSE 1000 END"
     return f"""
 WITH t AS (
   SELECT {key_col}, {strata_col},
          CAST({token_expr} AS BIGINT) AS n_toks,
-         substr(md5(concat(CAST({key_col} AS VARCHAR), ':{salt}')), 1, 4)
+         substr(md5(concat(CAST({key_col} AS VARCHAR), ':{BUDGET_SALT}')), 1, 4)
              AS b
   FROM {source}
 ), c AS (
@@ -303,7 +307,6 @@ def stratified_sample_sql(
     strata_col: str,
     fractions: dict[str, float],
     default_fraction: float = 0.0,
-    salt: str = "stratified",
 ) -> str:
     """The same per-stratum thresholding as SQL text (common dialect)."""
     whens = " ".join(
@@ -313,26 +316,23 @@ def stratified_sample_sql(
     case = f"CASE {whens} ELSE '{_threshold_hex(default_fraction)}' END"
     return (
         f"SELECT * FROM {source} WHERE substr(md5(concat(CAST({key_col} "
-        f"AS VARCHAR), ':{salt}')), 1, 4) < {case}"
+        f"AS VARCHAR), ':{STRATIFIED_SALT}')), 1, 4) < {case}"
     )
 
 
-def split_sql(
-    dialect: str,
-    source: str,
-    key_col: str,
-    test_fraction: float = 0.25,
-    salt: str = "split",
-) -> str:
+def split_sql(dialect: str, source: str, key_col: str) -> str:
     """The same assignment as SQL text; 'spark' and 'duckdb' differ only
     in the substring function name (md5/concat/casts are common)."""
     substr = {"spark": "substr", "duckdb": "substr"}[dialect]
-    thr = _threshold_hex(test_fraction)
+    thr = _threshold_hex(0.25)
     return (
         f"SELECT {key_col}, CASE WHEN {substr}(md5(concat(CAST({key_col} "
-        f"AS VARCHAR), ':{salt}')), 1, 4) < '{thr}' THEN 'test' ELSE "
+        f"AS VARCHAR), ':split')), 1, 4) < '{thr}' THEN 'test' ELSE "
         f"'train' END AS split FROM {source} ORDER BY {key_col}"
     )
+
+
+CAP_SALT = "cap"
 
 
 def per_group_cap(
@@ -340,7 +340,6 @@ def per_group_cap(
     key_col: str,
     group_col: str,
     n: int,
-    salt: str = "cap",
 ) -> DataFrame:
     """Keep at most ``n`` rows per group, chosen deterministically: the
     anti-domination guard every curation run applies per domain/source
@@ -368,7 +367,7 @@ def per_group_cap(
             "the input column of that name first"
         )
     order_key = F.md5(
-        F.concat(F.col(key_col).cast("string"), F.lit(f":{salt}"))
+        F.concat(F.col(key_col).cast("string"), F.lit(f":{CAP_SALT}"))
     )
     w = Window.partitionBy(group_col).orderBy(order_key, F.col(key_col))
     return (
@@ -382,7 +381,6 @@ def per_group_cap_sql(
     key_col: str,
     group_col: str,
     n: int,
-    salt: str = "cap",
 ) -> str:
     """The same per-group cap as DuckDB SQL (shard_shuffle's pattern)."""
     return f"""
@@ -390,7 +388,7 @@ WITH t AS (
   SELECT *,
          CAST(row_number() OVER (
            PARTITION BY {group_col}
-           ORDER BY md5(concat(CAST({key_col} AS VARCHAR), ':{salt}')),
+           ORDER BY md5(concat(CAST({key_col} AS VARCHAR), ':{CAP_SALT}')),
                     {key_col}
          ) AS BIGINT) AS cap_rank
   FROM {source}
@@ -399,12 +397,10 @@ SELECT * FROM t WHERE cap_rank <= {n}
 """
 
 
-def shard_shuffle(
-    df: DataFrame,
-    key_col: str,
-    n_shards: int,
-    salt: str = "shuffle",
-) -> DataFrame:
+SHUFFLE_SALT = "shuffle"
+
+
+def shard_shuffle(df: DataFrame, key_col: str, n_shards: int) -> DataFrame:
     """Deterministic global shuffle into training shards: every row gets
     (shard, pos) where ``shard`` is an md5 bucket of the key and ``pos``
     the row's rank within its shard by a SECOND independent md5 -- the
@@ -422,7 +418,10 @@ def shard_shuffle(
         F.conv(
             F.substring(
                 F.md5(
-                    F.concat(F.col(key_col).cast("string"), F.lit(f":{salt}"))
+                    F.concat(
+                        F.col(key_col).cast("string"),
+                        F.lit(f":{SHUFFLE_SALT}"),
+                    )
                 ),
                 1,
                 8,
@@ -433,7 +432,7 @@ def shard_shuffle(
         % n_shards
     ).cast("int")
     order_key = F.md5(
-        F.concat(F.col(key_col).cast("string"), F.lit(f":{salt}:ord"))
+        F.concat(F.col(key_col).cast("string"), F.lit(f":{SHUFFLE_SALT}:ord"))
     )
     from pyspark.sql.window import Window
 
@@ -444,20 +443,15 @@ def shard_shuffle(
     )
 
 
-def shard_shuffle_sql(
-    source: str,
-    key_col: str,
-    n_shards: int,
-    salt: str = "shuffle",
-) -> str:
+def shard_shuffle_sql(source: str, key_col: str, n_shards: int) -> str:
     """The same shard shuffle as DuckDB SQL."""
     return f"""
 WITH t AS (
   SELECT {key_col},
          CAST(CAST(concat('0x', substr(md5(concat(CAST({key_col} AS
-              VARCHAR), ':{salt}')), 1, 8)) AS BIGINT) % {n_shards}
+              VARCHAR), ':{SHUFFLE_SALT}')), 1, 8)) AS BIGINT) % {n_shards}
               AS INT) AS shard,
-         md5(concat(CAST({key_col} AS VARCHAR), ':{salt}:ord')) AS ord
+         md5(concat(CAST({key_col} AS VARCHAR), ':{SHUFFLE_SALT}:ord')) AS ord
   FROM {source}
 )
 SELECT {key_col}, shard,
@@ -467,11 +461,13 @@ FROM t ORDER BY {key_col}
 """
 
 
+MIXTURE_SCALE = 1_000_000
+
+
 def temperature_mixture(
     df: DataFrame,
     strata_col: str,
     text_col: str,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Temperature-scaled mixture schedule at T=2 (alpha = 1/2): per
     stratum, the resampled token share w_i = sqrt(n_i) / sum_j sqrt(n_j)
@@ -481,7 +477,7 @@ def temperature_mixture(
     IEEE sqrt is correctly rounded in every engine while pow() is not,
     keeping this entry oracle-hash-exact; other alphas swap in pow at
     the cost of the hashed tier. sqrt values are floor-scaled to
-    integers (x ``scale``) before summing so the denominator is an
+    integers (x ``MIXTURE_SCALE``) before summing so the denominator is an
     exact integer sum, order-independent under Spark's nondeterministic
     shuffle order.
 
@@ -495,7 +491,7 @@ def temperature_mixture(
     per = df.groupBy(F.col(strata_col).alias("stratum")).agg(
         F.sum(n_toks).cast("long").alias("n_tokens"),
     )
-    q = F.floor(F.sqrt(F.col("n_tokens").cast("double")) * scale).cast(
+    q = F.floor(F.sqrt(F.col("n_tokens").cast("double")) * MIXTURE_SCALE).cast(
         "long"
     )
     per = per.withColumn("q", q)
@@ -517,22 +513,17 @@ def temperature_mixture(
     )
 
 
-def temperature_mixture_sql(
-    source: str = "documents",
-    strata_col: str = "source",
-    text_col: str = "text",
-    scale: int = 1_000_000,
-) -> str:
+def temperature_mixture_sql() -> str:
     """DuckDB SQL mirroring ``temperature_mixture``."""
     return f"""
 WITH per AS (
-  SELECT {strata_col} AS stratum,
-         CAST(SUM(len(string_split(lower({text_col}), ' '))) AS BIGINT)
+  SELECT source AS stratum,
+         CAST(SUM(len(string_split(lower(text), ' '))) AS BIGINT)
              AS n_tokens
-  FROM {source} GROUP BY 1
+  FROM documents GROUP BY 1
 ), q AS (
   SELECT stratum, n_tokens,
-         CAST(FLOOR(SQRT(CAST(n_tokens AS DOUBLE)) * {scale}) AS BIGINT)
+         CAST(FLOOR(SQRT(CAST(n_tokens AS DOUBLE)) * {MIXTURE_SCALE}) AS BIGINT)
              AS q
   FROM per
 ), tot AS (

@@ -132,8 +132,6 @@ def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 3,
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, rank, sim).
@@ -143,7 +141,7 @@ def brute_force_topk(
     O(k * n_batches * n_queries) rows, not |corpus| * |queries|.
     """
     spark = corpus.sparkSession
-    q_ids, q_mat = _normalized_matrix(queries, id_col, vec_col)
+    q_ids, q_mat = _normalized_matrix(queries, "vec_id", "embedding")
     if len(q_ids) == 0:
         return _empty_result(
             corpus, "query_id long, neighbor_id long, rank long, sim double"
@@ -155,8 +153,8 @@ def brute_force_topk(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            c_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             c_norms = np.linalg.norm(c_mat, axis=1, keepdims=True)
             c_norms[c_norms == 0.0] = 1.0
             sims = (c_mat / c_norms) @ mat_q.T  # |batch| x |queries|
@@ -182,7 +180,7 @@ def brute_force_topk(
                 {"query_id": out_q, "neighbor_id": out_c, "sim_raw": out_s}
             )
 
-    partial = corpus.select(id_col, vec_col).mapInPandas(
+    partial = corpus.select("vec_id", "embedding").mapInPandas(
         score, schema="query_id long, neighbor_id long, sim_raw double"
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -200,12 +198,7 @@ def brute_force_topk(
     )
 
 
-def cosine_neardup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
+def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.95) -> DataFrame:
     """All pairs (id_a < id_b) with round(cosine, 4) >= threshold.
 
     Exact tier: the corpus snapshot is broadcast once and every Arrow
@@ -215,7 +208,7 @@ def cosine_neardup_pairs(
     candidates, no broadcast of the corpus, sub-quadratic).
     """
     spark = df.sparkSession
-    ids, mat = _normalized_matrix(df, id_col, vec_col)
+    ids, mat = _normalized_matrix(df, "vec_id", "embedding")
     if len(ids) == 0:
         return _empty_result(df, "id_a long, id_b long, sim double")
     bc = spark.sparkContext.broadcast((ids, mat))
@@ -225,8 +218,8 @@ def cosine_neardup_pairs(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            b_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            b_mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            b_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             b_norms = np.linalg.norm(b_mat, axis=1, keepdims=True)
             b_norms[b_norms == 0.0] = 1.0
             sims = np.round((b_mat / b_norms) @ all_mat.T, 4)
@@ -242,18 +235,18 @@ def cosine_neardup_pairs(
                 }
             )
 
-    return df.select(id_col, vec_col).mapInPandas(
+    return df.select("vec_id", "embedding").mapInPandas(
         score, schema="id_a long, id_b long, sim double"
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
+def _hyperplanes(dim: int, n_planes: int) -> np.ndarray:
     """Deterministic pseudo-Gaussian hyperplanes from md5 (reproducible
     across sessions and task retries, unlike rand())."""
     planes = np.empty((n_planes, dim), dtype=np.float64)
     for p in range(n_planes):
         for d in range(dim):
-            h = hashlib.md5(f"{seed}:{p}:{d}".encode()).digest()
+            h = hashlib.md5(f"42:{p}:{d}".encode()).digest()
             u1 = (int.from_bytes(h[:8], "big") + 1) / (2**64 + 2)
             u2 = (int.from_bytes(h[8:], "big") + 1) / (2**64 + 2)
             planes[p, d] = math.sqrt(-2 * math.log(u1)) * math.cos(
@@ -268,12 +261,11 @@ def lsh_signature(
     vec_col: str,
     dim: int,
     n_planes: int = 16,
-    seed: int = 42,
 ) -> DataFrame:
     """Random-hyperplane signature: (id, sig bitstring of n_planes chars).
     One numpy matmul per Arrow batch -- a narrow map, no shuffle."""
     spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(_hyperplanes(dim, n_planes, seed))
+    bc = spark.sparkContext.broadcast(_hyperplanes(dim, n_planes))
 
     def sig(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         planes = bc.value
@@ -291,6 +283,9 @@ def lsh_signature(
     )
 
 
+MAX_TRAIN = 4096
+
+
 def _fit_centroids_on_sample(
     corpus: DataFrame,
     id_col: str,
@@ -298,12 +293,11 @@ def _fit_centroids_on_sample(
     n_centroids: int,
     seed: int,
     max_iter: int,
-    max_train: int = 4096,
 ) -> np.ndarray:
     """Deterministic Lloyd k-means on a bounded, key-hashed sample.
 
     The FAISS posture: a coarse quantizer is TRAINED on a sample (here
-    the ``max_train`` smallest md5(id) rows -- a TakeOrdered, one pass,
+    the ``MAX_TRAIN`` smallest md5(id) rows -- a TakeOrdered, one pass,
     no full shuffle, stable under retries/partitioning) and only
     ASSIGNMENT touches the full corpus. Replaces a pyspark.ml fit whose
     ``max_iter`` passes over all rows are pure overhead for rough
@@ -315,10 +309,10 @@ def _fit_centroids_on_sample(
     callers at that scale must route to ``_fit_hier_centroids`` (as
     ``mnn_align_blocked`` does past ``_FLAT_CENTROID_CAP``).
     """
-    if n_centroids * 4 > max_train:
+    if n_centroids * 4 > MAX_TRAIN:
         raise ValueError(
             f"flat quantizer cannot train {n_centroids} centroids from "
-            f"a {max_train}-row sample (>= 4 rows/centroid needed); "
+            f"a {MAX_TRAIN}-row sample (>= 4 rows/centroid needed); "
             "use the two-level _fit_hier_centroids tier"
         )
     sample = (
@@ -326,7 +320,7 @@ def _fit_centroids_on_sample(
             F.md5(F.col(id_col).cast("string")).alias("__r"), vec_col
         )
         .orderBy("__r")
-        .limit(max_train)
+        .limit(MAX_TRAIN)
         .collect()
     )
     mat = np.stack([np.asarray(r[vec_col]) for r in sample]).astype(
@@ -349,17 +343,7 @@ def _fit_centroids_on_sample(
     return _lloyd(mat, n_centroids, max_iter)
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    max_iter: int = 8,
-) -> DataFrame:
+def ivf_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF-flat approximate top-k: coarse k-means quantizer + probed scan.
 
     The scale shape: the quantizer trains on a bounded sample
@@ -367,7 +351,7 @@ def ivf_topk(
     nearest centroid in ONE narrow mapInPandas pass with the tiny
     centroid matrix broadcast (at 100 TB this assignment is written
     alongside the embeddings and reused), each query probes only its
-    ``n_probe`` nearest centroids, and candidates come from an equi-join
+    4 nearest centroids, and candidates come from an equi-join
     on centroid id -- the corpus is hash-partitioned by cluster,
     scanning ~n_probe/n_centroids of it per query instead of all of it.
     Scoring is the same candidate->vector equi-join as lsh_topk, so like
@@ -375,7 +359,7 @@ def ivf_topk(
     """
     spark = corpus.sparkSession
     raw_centers = _fit_centroids_on_sample(
-        corpus, id_col, vec_col, n_centroids, seed, max_iter
+        corpus, "vec_id", "embedding", 16, 42, 8
     )
     bc_centers = spark.sparkContext.broadcast(raw_centers)
 
@@ -385,16 +369,16 @@ def ivf_topk(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             d2 = (m**2).sum(axis=1, keepdims=True) - 2.0 * (m @ c.T) + c_sq
             yield pd.DataFrame(
                 {
-                    "c_id": pdf[id_col],
+                    "c_id": pdf["vec_id"],
                     "centroid": d2.argmin(axis=1).astype(np.int32),
                 }
             )
 
-    assigned = corpus.select(id_col, vec_col).mapInPandas(
+    assigned = corpus.select("vec_id", "embedding").mapInPandas(
         assign, schema="c_id long, centroid int"
     )
 
@@ -402,13 +386,13 @@ def ivf_topk(
     c_norms[c_norms == 0.0] = 1.0
     centers = raw_centers / c_norms
 
-    q_ids, q_mat = _normalized_matrix(queries, id_col, vec_col)
+    q_ids, q_mat = _normalized_matrix(queries, "vec_id", "embedding")
     if len(q_ids) == 0:
         return _empty_result(
             corpus, "query_id long, neighbor_id long, rank long, sim double"
         )
     # per-query probe list: n_probe nearest centroids by cosine
-    probe_idx = np.argsort(-(q_mat @ centers.T), axis=1)[:, :n_probe]
+    probe_idx = np.argsort(-(q_mat @ centers.T), axis=1)[:, :4]
     probes = spark.createDataFrame(
         [
             (int(qid), int(c))
@@ -427,22 +411,16 @@ def ivf_topk(
     )
 
     scored = _score_candidates_against_queries(
-        cand, corpus, id_col, vec_col, q_ids, q_mat
+        cand, corpus, "vec_id", "embedding", q_ids, q_mat
     )
-    return _ranked_topk(scored, k)
+    return _ranked_topk(scored, 3)
 
 
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    k: int = 3,
-    n_planes: int = 16,
-    n_bands: int = 4,
-    seed: int = 42,
-) -> DataFrame:
+LSH_TOPK_BANDS = 4
+LSH_TOPK_PLANES = 16
+
+
+def lsh_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Approximate top-k: candidates share >= 1 LSH band, scored exactly.
 
     Candidate generation is an equi-join on (band_idx : band_bits) -- the
@@ -451,12 +429,12 @@ def lsh_topk(
     broadcasts only the query matrix (exact cosine, numpy per Arrow
     batch). Raising n_bands raises recall; n_planes shrinks buckets.
     """
-    band_w = n_planes // n_bands
+    band_w = LSH_TOPK_PLANES // LSH_TOPK_BANDS
 
     def banded(df: DataFrame, out_id: str) -> DataFrame:
-        s = lsh_signature(df, id_col, vec_col, dim, n_planes, seed)
+        s = lsh_signature(df, "vec_id", "embedding", 64, LSH_TOPK_PLANES)
         return s.select(
-            F.col(id_col).alias(out_id),
+            F.col("vec_id").alias(out_id),
             F.explode(
                 F.array(
                     *[
@@ -464,7 +442,7 @@ def lsh_topk(
                             F.lit(f"{i}:"),
                             F.substring("sig", i * band_w + 1, band_w),
                         )
-                        for i in range(n_bands)
+                        for i in range(LSH_TOPK_BANDS)
                     ]
                 )
             ).alias("band"),
@@ -478,15 +456,15 @@ def lsh_topk(
         .distinct()
     )
 
-    q_ids, q_mat = _normalized_matrix(queries, id_col, vec_col)
+    q_ids, q_mat = _normalized_matrix(queries, "vec_id", "embedding")
     if len(q_ids) == 0:
         return _empty_result(
             corpus, "query_id long, neighbor_id long, rank long, sim double"
         )
     scored = _score_candidates_against_queries(
-        cand, corpus, id_col, vec_col, q_ids, q_mat
+        cand, corpus, "vec_id", "embedding", q_ids, q_mat
     )
-    return _ranked_topk(scored, k)
+    return _ranked_topk(scored, 3)
 
 
 #: Largest centroid count the FLAT quantizer can train (>= 4 rows per
@@ -495,12 +473,7 @@ def lsh_topk(
 _FLAT_CENTROID_CAP = 1024
 
 
-def ivf_params_for(
-    n: int,
-    block_target: int = 64,
-    n_probe: int = 4,
-    max_centroids: int = _FLAT_CENTROID_CAP,
-) -> tuple[int, int]:
+def ivf_params_for(n: int) -> tuple[int, int]:
     """Deployment schedule for the IVF-blocked tiers' (n_centroids,
     n_probe) -- the x28 playbook (lsh_params_for) applied to IVF.
 
@@ -516,7 +489,7 @@ def ivf_params_for(
     Centroid assignment is n * n_centroids * dim of dense BLAS flops --
     the cheap term at any probe-able scale.
 
-    The returned count is NOT capped at ``max_centroids``: past it
+    The returned count is NOT capped at ``_FLAT_CENTROID_CAP``: past it
     (n > max_centroids * block_target, ~65k vectors) a flat quantizer
     can no longer train (>= 4 rows per centroid from a 4096-row
     sample), so ``mnn_align_blocked`` routes to the TWO-LEVEL
@@ -535,13 +508,11 @@ def ivf_params_for(
     stay n_probe * block_target * n = O(n log n), the quasi-linear
     toll every sub-quadratic ANN pays to hold recall as cells shrink.
     """
-    n_centroids = int(
-        min(max_centroids * max_centroids, max(8, n // block_target))
-    )
-    if n_centroids > max_centroids:
-        n_probe = n_probe + 2 * math.ceil(
-            math.log2(n_centroids / max_centroids)
-        )
+    cap = _FLAT_CENTROID_CAP
+    n_centroids = int(min(cap * cap, max(8, n // 64)))
+    n_probe = 4
+    if n_centroids > cap:
+        n_probe += 2 * math.ceil(math.log2(n_centroids / cap))
     return n_centroids, min(n_probe, n_centroids)
 
 
@@ -585,7 +556,6 @@ def _fit_hier_centroids(
     n_total: int,
     seed: int,
     max_iter: int,
-    max_centroids: int = _FLAT_CENTROID_CAP,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Two-level coarse quantizer for block counts past the flat
     trainable cap -- the scale route ``ivf_params_for``'s schedule
@@ -598,7 +568,7 @@ def _fit_hier_centroids(
     ``applyInPandas`` over a per-cell sample (the ``per_cell_cap``
     smallest-md5 rows of each cell -- a keyed window, one shuffle by
     cell, no driver collect of corpus rows). Both T and S stay <=
-    ``max_centroids``, so each stage trains on >= 4 rows per centroid
+    ``_FLAT_CENTROID_CAP``, so each stage trains on >= 4 rows per centroid
     exactly like the flat tier; total blocks reach max_centroids^2
     before a third level would be needed. The only driver materializa-
     tion is the (T x S x dim) centroid table itself -- the same object
@@ -612,21 +582,20 @@ def _fit_hier_centroids(
     duplicate centers are inert: assignment tie-breaks by block index
     deterministically.
     """
-    # mirror the flat tier's fail-loud posture: past max_centroids^2
+    # mirror the flat tier's fail-loud posture: past _FLAT_CENTROID_CAP^2
     # blocks BOTH stages would need to exceed their trainable cap --
     # third-level territory per the docstring, not a silent clamp that
     # lets block populations grow unnoticed
-    if n_total > max_centroids * max_centroids:
+    cap = _FLAT_CENTROID_CAP
+    if n_total > cap * cap:
         raise ValueError(
             f"two-level quantizer cannot honor {n_total} blocks "
-            f"(cap {max_centroids}^2 = {max_centroids * max_centroids}); "
+            f"(cap {cap}^2 = {cap * cap}); "
             "a deployment at that scale adds a third level rather than "
             "growing per-stage samples"
         )
-    n_top = max(2, min(max_centroids, int(math.ceil(math.sqrt(n_total)))))
-    n_sub = max(
-        1, min(max_centroids, int(math.ceil(n_total / n_top)))
-    )
+    n_top = max(2, min(cap, int(math.ceil(math.sqrt(n_total)))))
+    n_sub = max(1, min(cap, int(math.ceil(n_total / n_top))))
     top_raw = _fit_centroids_on_sample(
         corpus, id_col, vec_col, n_top, seed, max_iter
     )
@@ -712,7 +681,6 @@ def lsh_params_for(
     n: int,
     threshold: float,
     target_recall: float = 0.9,
-    target_bucket: int = 256,
 ) -> tuple[int, int]:
     """Deployment schedule for ``lsh_neardup_pairs``' (n_planes, n_bands).
 
@@ -730,7 +698,7 @@ def lsh_params_for(
     """
     import math
 
-    band_w = max(2, math.ceil(math.log2(max(2.0, n / target_bucket))))
+    band_w = max(2, math.ceil(math.log2(max(2.0, n / 256))))
     p1 = 1.0 - math.acos(threshold) / math.pi
     p_band = p1 ** band_w
     n_bands = max(
@@ -744,13 +712,8 @@ def lsh_params_for(
 
 def lsh_neardup_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    threshold: float = 0.95,
     n_planes: int = 16,
     n_bands: int = 8,
-    seed: int = 42,
 ) -> DataFrame:
     """Scale-tier near-dup pairs: (id_a < id_b, round(cosine,4) >= thr).
 
@@ -765,7 +728,7 @@ def lsh_neardup_pairs(
     raise n_bands (or lower n_planes) to push recall up.
     """
     band_w = n_planes // n_bands
-    sig = lsh_signature(df, id_col, vec_col, dim, n_planes, seed)
+    sig = lsh_signature(df, "vec_id", "embedding", 64, n_planes)
     bands = [
         F.concat(
             F.lit(f"{i}:"), F.substring("sig", i * band_w + 1, band_w)
@@ -773,7 +736,7 @@ def lsh_neardup_pairs(
         for i in range(n_bands)
     ]
     banded = sig.select(
-        F.col(id_col).alias("id"), F.explode(F.array(*bands)).alias("band")
+        F.col("vec_id").alias("id"), F.explode(F.array(*bands)).alias("band")
     ).localCheckpoint(eager=False)
     # ^ the banded signatures feed BOTH sides of the self-join: without
     # the checkpoint the Python (mapInPandas) signature stage runs twice
@@ -785,7 +748,9 @@ def lsh_neardup_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    vecs = df.select(F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v"))
+    vecs = df.select(
+        F.col("vec_id").alias("__vid"), F.col("embedding").alias("__v")
+    )
     pairs = cand.join(
         vecs.select(
             F.col("__vid").alias("id_a"), F.col("__v").alias("__vec_a")
@@ -812,7 +777,7 @@ def lsh_neardup_pairs(
             out = pd.DataFrame(
                 {"id_a": pdf["id_a"], "id_b": pdf["id_b"], "sim": sims}
             )
-            yield out[out["sim"] >= threshold]
+            yield out[out["sim"] >= 0.4]
 
     return pairs.select("id_a", "id_b", "__vec_a", "__vec_b").mapInPandas(
         score, schema="id_a long, id_b long, sim double"
@@ -821,12 +786,8 @@ def lsh_neardup_pairs(
 
 def semantic_dedup(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     n_centroids: int = 16,
-    seed: int = 42,
-    max_iter: int = 8,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public):
     cluster embeddings with a coarse k-means quantizer, then WITHIN each
@@ -851,7 +812,7 @@ def semantic_dedup(
     """
     spark = corpus.sparkSession
     raw_centers = _fit_centroids_on_sample(
-        corpus, id_col, vec_col, n_centroids, seed, max_iter
+        corpus, "vec_id", "embedding", n_centroids, 42, 8
     )
     bc_centers = spark.sparkContext.broadcast(raw_centers)
 
@@ -861,17 +822,17 @@ def semantic_dedup(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             d2 = (m**2).sum(axis=1, keepdims=True) - 2.0 * (m @ c.T) + c_sq
             yield pd.DataFrame(
                 {
-                    "id": pdf[id_col],
+                    "id": pdf["vec_id"],
                     "centroid": d2.argmin(axis=1).astype(np.int32),
-                    "vec": pdf[vec_col],
+                    "vec": pdf["embedding"],
                 }
             )
 
-    assigned = corpus.select(id_col, vec_col).mapInPandas(
+    assigned = corpus.select("vec_id", "embedding").mapInPandas(
         assign, schema="id long, centroid int, vec array<float>"
     )
 
@@ -895,11 +856,7 @@ def semantic_dedup(
     )
 
 
-def mean_pool_embeddings(
-    df: DataFrame,
-    group_col: str,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def mean_pool_embeddings(df: DataFrame, group_col: str) -> DataFrame:
     """Mean-pool vectors per group: the chunk->document pooling step of
     every embedding pipeline (per-chunk encoder outputs averaged into
     one document vector before indexing/dedup).
@@ -923,7 +880,7 @@ def mean_pool_embeddings(
         F.col(group_col).alias("grp"),
         F.posexplode(
             F.transform(
-                F.col(vec_col),
+                F.col("embedding"),
                 lambda x: F.round(x.cast("double"), 7).cast(
                     "decimal(28,7)"
                 ),
@@ -957,11 +914,7 @@ def mean_pool_embeddings(
     )
 
 
-def quantize_embeddings_int8(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_embeddings_int8(df: DataFrame) -> DataFrame:
     """Per-vector symmetric int8 quantization -- the 4x memory/IO
     reduction every large-scale ANN index applies before storing or
     shipping vectors (float32 -> int8 with one scale per vector).
@@ -982,16 +935,14 @@ def quantize_embeddings_int8(
     Scale shape: a narrow per-row expression pipeline (transform /
     array_max HOFs, all JVM) -- no shuffle, no Python, scan speed.
     """
-    e = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    with_max = df.select(
-        F.col(id_col), e.alias("__e")
-    ).withColumn(
+    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    with_max = df.select(F.col("vec_id"), e.alias("__e")).withColumn(
         "__maxabs",
         F.array_max(F.transform(F.col("__e"), lambda x: F.abs(x))),
     ).filter(F.col("__maxabs") > 0)
     scale = F.col("__maxabs") / F.lit(127.0)
     return with_max.select(
-        id_col,
+        "vec_id",
         F.floor(scale * F.lit(10_000_000.0)).cast("long").alias(
             "scale_e7"
         ),
@@ -1007,35 +958,27 @@ def quantize_embeddings_int8(
     )
 
 
-def quantize_embeddings_int8_oracle_sql(
-    source: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
+def quantize_embeddings_int8_oracle_sql() -> str:
     """DuckDB SQL mirroring ``quantize_embeddings_int8`` exactly (same
     floor-based formula -- see the no-round() note there)."""
-    return f"""
+    return """
 WITH v AS (
-  SELECT {id_col}, CAST({vec_col} AS DOUBLE[]) AS e FROM {source}
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
 ), m AS (
-  SELECT {id_col}, e,
+  SELECT vec_id, e,
          list_max(list_transform(e, x -> abs(x))) AS maxabs
   FROM v
 )
-SELECT {id_col},
+SELECT vec_id,
        CAST(FLOOR(maxabs / 127 * 10000000) AS BIGINT) AS scale_e7,
        array_to_string(list_transform(e, x ->
          CAST(CAST(FLOOR(x / (maxabs / 127) + 0.5) AS BIGINT)
               AS VARCHAR)), ',') AS codes
-FROM m WHERE maxabs > 0 ORDER BY {id_col}
+FROM m WHERE maxabs > 0 ORDER BY vec_id
 """
 
 
-def label_centroid_coherence(
-    df: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def label_centroid_coherence(df: DataFrame) -> DataFrame:
     """Per-label embedding coherence audit: cosine of every vector to
     its label's mean centroid, reported as (n_vecs, mean_cos, min_cos)
     per label. Low mean = an incoherent class (mislabeled feed); a low
@@ -1050,10 +993,10 @@ def label_centroid_coherence(
     (x66), cosines round to 6 then accumulate in DECIMAL, division in
     DOUBLE (x37's recipe).
     """
-    cent = mean_pool_embeddings(df, label_col, vec_col).select(
-        F.col(label_col), F.col("pooled")
+    cent = mean_pool_embeddings(df, "label").select(
+        F.col("label"), F.col("pooled")
     )
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     c = F.col("pooled")
     dot = F.aggregate(
         F.zip_with(v, c, lambda a, b: a * b),
@@ -1076,11 +1019,11 @@ def label_centroid_coherence(
     )
     den = nv * nc
     cos = F.when(den != 0, dot / den)
-    scored = df.join(F.broadcast(cent), label_col).select(
-        F.col(label_col),
+    scored = df.join(F.broadcast(cent), "label").select(
+        F.col("label"),
         F.round(cos, 6).cast("decimal(18,6)").alias("cos6"),
     )
-    return scored.groupBy(label_col).agg(
+    return scored.groupBy("label").agg(
         F.count(F.lit(1)).cast("long").alias("n_vecs"),
         F.round(
             F.sum("cos6").cast("double") / F.count("cos6"), 4
@@ -1089,19 +1032,15 @@ def label_centroid_coherence(
     )
 
 
-def label_centroid_coherence_sql(
-    source: str = "embeddings",
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> str:
+def label_centroid_coherence_sql() -> str:
     """DuckDB SQL mirroring ``label_centroid_coherence`` (x66's pooling
     CTEs + x63's list_dot_product, same round-6-then-DECIMAL cosine)."""
-    return f"""
+    return """
 WITH raw AS (
-  SELECT {label_col} AS lbl,
-         unnest(range(1, len({vec_col}) + 1)) AS pos,
-         unnest(CAST({vec_col} AS DOUBLE[])) AS dval
-  FROM {source}
+  SELECT label AS lbl,
+         unnest(range(1, len(embedding) + 1)) AS pos,
+         unnest(CAST(embedding AS DOUBLE[])) AS dval
+  FROM embeddings
 ), e AS (
   SELECT lbl, pos, CAST(ROUND(dval, 7) AS DECIMAL(28,7)) AS val
   FROM raw
@@ -1113,34 +1052,32 @@ WITH raw AS (
   SELECT lbl, list(mean_val ORDER BY pos) AS pooled
   FROM per GROUP BY lbl
 ), scored AS (
-  SELECT s.{label_col} AS {label_col},
+  SELECT s.label AS label,
          CAST(ROUND(
-           list_dot_product(CAST(s.{vec_col} AS DOUBLE[]), cent.pooled) /
-           NULLIF(sqrt(list_dot_product(CAST(s.{vec_col} AS DOUBLE[]),
-                                        CAST(s.{vec_col} AS DOUBLE[]))) *
+           list_dot_product(CAST(s.embedding AS DOUBLE[]), cent.pooled) /
+           NULLIF(sqrt(list_dot_product(CAST(s.embedding AS DOUBLE[]),
+                                        CAST(s.embedding AS DOUBLE[]))) *
                   sqrt(list_dot_product(cent.pooled, cent.pooled)), 0),
            6) AS DECIMAL(18,6)) AS cos6
-  FROM {source} s JOIN cent ON s.{label_col} = cent.lbl
+  FROM embeddings s JOIN cent ON s.label = cent.lbl
 )
-SELECT {label_col},
+SELECT label,
        CAST(count(*) AS BIGINT) AS n_vecs,
        ROUND(CAST(SUM(cos6) AS DOUBLE) / count(cos6), 4) AS mean_cos,
        ROUND(CAST(MIN(cos6) AS DOUBLE), 4) AS min_cos
-FROM scored GROUP BY {label_col} ORDER BY {label_col}
+FROM scored GROUP BY label ORDER BY label
 """
 
 
 def pairwise_sims(
     stream_side: DataFrame,
     broadcast_side: DataFrame,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     stream_id_out: str = "b_id",
     broadcast_id_out: str = "a_id",
-    round_to: int = 6,
 ) -> DataFrame:
     """ALL pairwise cosine similarities between a streamed side and a
-    broadcast side, rounded to ``round_to``: (broadcast_id, stream_id,
+    broadcast side, rounded to 6 places: (broadcast_id, stream_id,
     sim). The dense-linear-algebra fast path -- one BLAS matmul per
     Arrow batch -- replacing a JVM zip_with/aggregate fold that pays
     per-element HOF evaluation on every pair (measured ~7x slower at
@@ -1151,7 +1088,7 @@ def pairwise_sims(
     off the last ulp (numpy pairwise summation vs a SQL oracle's
     sequential fold agree far inside round-6)."""
     spark = stream_side.sparkSession
-    b_ids, b_mat = _normalized_matrix(broadcast_side, id_col, vec_col)
+    b_ids, b_mat = _normalized_matrix(broadcast_side, "vec_id", vec_col)
     if len(b_ids) == 0:
         return _empty_result(
             stream_side,
@@ -1164,12 +1101,12 @@ def pairwise_sims(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            s_ids = pdf[id_col].to_numpy(dtype=np.int64)
+            s_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             s_mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             s_norms = np.linalg.norm(s_mat, axis=1, keepdims=True)
             s_norms[s_norms == 0.0] = 1.0
             sims = np.round(
-                (s_mat / s_norms) @ mat_b.T, round_to
+                (s_mat / s_norms) @ mat_b.T, 6
             )  # |batch| x |broadcast|
             n_s, n_b = sims.shape
             yield pd.DataFrame(
@@ -1180,7 +1117,7 @@ def pairwise_sims(
                 }
             )
 
-    return stream_side.select(id_col, vec_col).mapInPandas(
+    return stream_side.select("vec_id", vec_col).mapInPandas(
         score,
         schema=f"{broadcast_id_out} long, {stream_id_out} long, sim double",
     )

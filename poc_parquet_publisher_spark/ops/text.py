@@ -130,7 +130,7 @@ def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return scored.withColumn("pred_lang", pred)
 
 
-def lang_id_oracle_sql(source: str = "documents", id_col: str = "doc_id") -> str:
+def lang_id_oracle_sql() -> str:
     """DuckDB SQL mirroring ``lang_id`` exactly (same CASE ladder)."""
     langs = list(LANG_STOPWORDS)
     score_cols = []
@@ -148,29 +148,40 @@ def lang_id_oracle_sql(source: str = "documents", id_col: str = "doc_id") -> str
         whens.append(f"WHEN {conds} THEN '{lang}'")
     case = f"CASE {' '.join(whens)} ELSE '{langs[-1]}' END AS pred_lang"
     return (
-        f"SELECT {id_col}, {', '.join(f'score_{lang}' for lang in langs)}, {case} "
-        f"FROM (SELECT {id_col}, {', '.join(score_cols)} FROM {source}) "
-        f"ORDER BY {id_col}"
+        f"SELECT doc_id, {', '.join(f'score_{lang}' for lang in langs)}, "
+        f"{case} "
+        f"FROM (SELECT doc_id, {', '.join(score_cols)} FROM documents) "
+        "ORDER BY doc_id"
     )
 
 
+FINGERPRINT_WINDOW = 8
+
+
 def rolling_fingerprint(
-    df: DataFrame, id_col: str, text_col: str, window: int = 8
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Per-document rolling-hash fingerprint (winnowing-style).
 
-    md5 each ``window``-token shingle, keep the per-document minimum hash
-    as the document fingerprint (a 1-sample winnow). Expression-only.
+    md5 each ``FINGERPRINT_WINDOW``-token shingle, keep the per-document
+    minimum hash as the document fingerprint (a 1-sample winnow).
+    Expression-only.
     Tokens are bound as an attribute before the transform so split() runs
     once per row, not once per shingle position (the HOF-lambda CSE trap;
     see ops/dedup.py shingles()).
     """
     toks = F.col("__toks")
     sh = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - window, F.lit(0))),
+        F.sequence(
+            F.lit(0), F.greatest(F.size(toks) - FINGERPRINT_WINDOW, F.lit(0))
+        ),
         lambda i: F.md5(
             F.concat_ws(
-                " ", *[F.element_at(toks, i + j + 1) for j in range(window)]
+                " ",
+                *[
+                    F.element_at(toks, i + j + 1)
+                    for j in range(FINGERPRINT_WINDOW)
+                ],
             )
         ),
     )
@@ -183,9 +194,7 @@ def rolling_fingerprint(
     )
 
 
-def rolling_fingerprint_oracle_sql(
-    source: str = "documents", id_col: str = "doc_id", window: int = 8
-) -> str:
+def rolling_fingerprint_oracle_sql() -> str:
     """DuckDB SQL mirroring ``rolling_fingerprint``.
 
     Spark's concat_ws skips the nulls element_at yields past the array
@@ -193,12 +202,12 @@ def rolling_fingerprint_oracle_sql(
     text for documents shorter than the window either way.
     """
     return (
-        f"WITH t AS (SELECT {id_col}, string_split(lower(text), ' ') AS toks"
-        f" FROM {source}) "
-        f"SELECT {id_col}, list_min(list_transform("
-        f"range(1, greatest(len(toks) - {window} + 1, 1) + 1), "
-        f"i -> md5(array_to_string(toks[i:i+{window - 1}], ' ')))) "
-        f"AS min_shingle_hash FROM t ORDER BY {id_col}"
+        "WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks"
+        " FROM documents) "
+        "SELECT doc_id, list_min(list_transform("
+        f"range(1, greatest(len(toks) - {FINGERPRINT_WINDOW} + 1, 1) + 1), "
+        f"i -> md5(array_to_string(toks[i:i+{FINGERPRINT_WINDOW - 1}], ' ')))) "
+        "AS min_shingle_hash FROM t ORDER BY doc_id"
     )
 
 
@@ -230,27 +239,25 @@ def scrub(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def scrub_oracle_sql(source: str = "documents", id_col: str = "doc_id") -> str:
+def scrub_oracle_sql() -> str:
     """DuckDB SQL mirroring ``scrub`` (regexp_replace with the 'g' flag)."""
     expr = "text"
     for pat, repl in SCRUB_PATTERNS:
         sql_pat = pat.replace("'", "''")
         expr = f"regexp_replace({expr}, '{sql_pat}', '{repl}', 'g')"
     return (
-        f"SELECT {id_col}, {expr} AS scrubbed, "
+        f"SELECT doc_id, {expr} AS scrubbed, "
         f"CAST(len(string_split_regex({expr}, '<URL>|<EMAIL>|<PHONE>')) - 1 "
         f"AS BIGINT) AS n_redactions "
-        f"FROM {source} ORDER BY {id_col}"
+        "FROM documents ORDER BY doc_id"
     )
 
 
-def boilerplate_ngrams(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    min_docs: int = 3,
-) -> DataFrame:
+BOILERPLATE_K = 3
+BOILERPLATE_MIN_DOCS = 3
+
+
+def boilerplate_ngrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """k-gram shingles shared by >= min_docs documents: the corpus
     boilerplate profile (headers, footers, templates) that curation
     pipelines strip before training.
@@ -263,36 +270,31 @@ def boilerplate_ngrams(
     """
     from . import dedup
 
-    sh = dedup.shingles(df, id_col, text_col, k)
+    sh = dedup.shingles(df, id_col, text_col)
     return (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= BOILERPLATE_MIN_DOCS)
         .orderBy(F.desc("n_docs"), "shingle")
     )
 
 
-def boilerplate_ngrams_oracle_sql(
-    source: str = "documents",
-    id_col: str = "doc_id",
-    k: int = 3,
-    min_docs: int = 3,
-) -> str:
+def boilerplate_ngrams_oracle_sql() -> str:
     """DuckDB SQL mirroring ``boilerplate_ngrams`` (same shingle spec as
     the x03 jaccard oracle)."""
     return f"""
 WITH t AS (
-  SELECT {id_col},
+  SELECT doc_id,
          list_distinct(list_transform(
-           range(1, len(string_split(lower(text), ' ')) - {k - 2}),
+           range(1, len(string_split(lower(text), ' ')) - {BOILERPLATE_K - 2}),
            i -> array_to_string(
-                  (string_split(lower(text), ' '))[i:i+{k - 1}], ' ')
+                  (string_split(lower(text), ' '))[i:i+{BOILERPLATE_K - 1}], ' ')
          )) AS sh
-  FROM {source}
-  WHERE len(string_split(lower(text), ' ')) >= {k}
-), e AS (SELECT {id_col}, unnest(sh) AS shingle FROM t)
+  FROM documents
+  WHERE len(string_split(lower(text), ' ')) >= {BOILERPLATE_K}
+), e AS (SELECT doc_id, unnest(sh) AS shingle FROM t)
 SELECT shingle, count(*) AS n_docs FROM e
-GROUP BY shingle HAVING count(*) >= {min_docs}
+GROUP BY shingle HAVING count(*) >= {BOILERPLATE_MIN_DOCS}
 ORDER BY n_docs DESC, shingle
 """
 
@@ -358,45 +360,41 @@ def repetition_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def repetition_scores_oracle_sql(
-    source: str = "documents", id_col: str = "doc_id"
-) -> str:
+def repetition_scores_oracle_sql() -> str:
     """DuckDB SQL mirroring ``repetition_scores`` (same tokenization as
     the x02/x03 oracles; 1-based inclusive list slices)."""
-    return f"""
+    return """
 WITH t AS (
-  SELECT {id_col}, string_split(lower(text), ' ') AS toks FROM {source}
+  SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents
 ), base AS (
-  SELECT {id_col}, len(toks) AS n_toks,
+  SELECT doc_id, len(toks) AS n_toks,
          len(list_distinct(toks)) AS n_distinct
   FROM t
 ), g AS (
-  SELECT {id_col},
+  SELECT doc_id,
          unnest(list_transform(range(1, len(toks)),
                 i -> array_to_string(toks[i:i+1], ' '))) AS gram
   FROM t WHERE len(toks) >= 2
 ), gc AS (
-  SELECT {id_col}, gram, count(*) AS c FROM g GROUP BY 1, 2
+  SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2
 ), agg AS (
-  SELECT {id_col}, max(c) AS max_c, sum(c) AS tot FROM gc GROUP BY 1
+  SELECT doc_id, max(c) AS max_c, sum(c) AS tot FROM gc GROUP BY 1
 )
-SELECT b.{id_col},
+SELECT b.doc_id,
        ROUND(1.0 - CAST(n_distinct AS DOUBLE) / n_toks, 4)
            AS dup_token_ratio,
        ROUND(COALESCE(CAST(max_c AS DOUBLE) / tot, 0.0), 4)
            AS top_bigram_ratio
-FROM base b LEFT JOIN agg USING ({id_col})
-ORDER BY b.{id_col}
+FROM base b LEFT JOIN agg USING (doc_id)
+ORDER BY b.doc_id
 """
 
 
-def tf_idf(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_df: int = 2,
-    top_terms_per_doc: int = 5,
-) -> DataFrame:
+TFIDF_MIN_DF = 2
+TFIDF_TOP_TERMS = 5
+
+
+def tf_idf(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Top TF-IDF terms per document: (doc, term, tf, df_cnt, tfidf).
 
     Shape at scale: explode to (doc, term, tf) -- one groupBy; document
@@ -419,9 +417,11 @@ def tf_idf(
         F.explode(_toks(text_col)).alias("term"),
     ).filter(F.col("term") != "")
     tf = terms.groupBy("doc", "term").agg(F.count(F.lit(1)).alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_cnt"))
-    if min_df > 1:
-        dfreq = dfreq.filter(F.col("df_cnt") >= min_df)
+    dfreq = (
+        tf.groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df_cnt"))
+        .filter(F.col("df_cnt") >= TFIDF_MIN_DF)
+    )
     scored = (
         tf.join(dfreq, "term")
         .crossJoin(F.broadcast(n_docs))
@@ -438,32 +438,27 @@ def tf_idf(
     )
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= top_terms_per_doc)
+        .filter(F.col("rnk") <= TFIDF_TOP_TERMS)
         .select("doc", "term", "tf", "df_cnt", "tfidf", "rnk")
     )
 
 
-def tf_idf_oracle_sql(
-    source: str = "documents",
-    id_col: str = "doc_id",
-    min_df: int = 2,
-    top_terms_per_doc: int = 5,
-) -> str:
+def tf_idf_oracle_sql() -> str:
     """DuckDB SQL mirroring ``tf_idf`` (N inlined as a scalar subquery)."""
     return f"""
 WITH terms AS (
-  SELECT {id_col} AS doc,
+  SELECT doc_id AS doc,
          unnest(string_split(lower(text), ' ')) AS term
-  FROM {source}
+  FROM documents
 ), tf AS (
   SELECT doc, term, count(*) AS tf FROM terms WHERE term != ''
   GROUP BY doc, term
 ), dfreq AS (
   SELECT term, count(*) AS df_cnt FROM tf GROUP BY term
-  HAVING count(*) >= {min_df}
+  HAVING count(*) >= {TFIDF_MIN_DF}
 ), scored AS (
   SELECT tf.doc, tf.term, tf.tf, dfreq.df_cnt,
-         ROUND(tf.tf * ln((SELECT CAST(count(*) AS DOUBLE) FROM {source})
+         ROUND(tf.tf * ln((SELECT CAST(count(*) AS DOUBLE) FROM documents)
                           / dfreq.df_cnt), 4) AS tfidf
   FROM tf JOIN dfreq USING (term)
 ), ranked AS (
@@ -473,7 +468,7 @@ WITH terms AS (
   FROM scored
 )
 SELECT doc, term, tf, df_cnt, tfidf FROM ranked
-WHERE rnk <= {top_terms_per_doc}
+WHERE rnk <= {TFIDF_TOP_TERMS}
 ORDER BY doc, rnk
 """
 
@@ -533,16 +528,14 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def unigram_logprob_oracle_sql(
-    source: str = "documents", id_col: str = "doc_id"
-) -> str:
+def unigram_logprob_oracle_sql() -> str:
     """DuckDB SQL mirroring ``unigram_logprob`` (total inlined as a
     scalar subquery; the same round-then-DECIMAL accumulation)."""
-    return f"""
+    return """
 WITH terms AS (
-  SELECT {id_col} AS doc,
+  SELECT doc_id AS doc,
          unnest(string_split(lower(text), ' ')) AS term
-  FROM {source}
+  FROM documents
 ), t AS (
   SELECT doc, term FROM terms WHERE term != ''
 ), doc_tf AS (
@@ -603,18 +596,14 @@ def source_mix_stats(
     )
 
 
-def source_mix_stats_oracle_sql(
-    source: str = "documents",
-    strata_col: str = "source",
-    id_col: str = "doc_id",
-) -> str:
+def source_mix_stats_oracle_sql() -> str:
     """DuckDB SQL mirroring ``source_mix_stats``."""
-    return f"""
+    return """
 WITH per AS (
-  SELECT {strata_col} AS stratum, count(*) AS n_docs,
+  SELECT source AS stratum, count(*) AS n_docs,
          CAST(SUM(len(string_split(lower(text), ' '))) AS BIGINT)
              AS n_tokens
-  FROM {source} GROUP BY 1
+  FROM documents GROUP BY 1
 ), tot AS (
   SELECT CAST(SUM(n_tokens) AS DOUBLE) AS total_tokens,
          CAST(count(*) AS DOUBLE) AS n_strata
@@ -628,8 +617,11 @@ ORDER BY stratum
 """
 
 
+VOCAB_TOP_N = 100
+
+
 def vocab_coverage(
-    df: DataFrame, text_col: str, top_n: int = 100
+    df: DataFrame, text_col: str, top_n: int = VOCAB_TOP_N
 ) -> DataFrame:
     """Vocabulary coverage curve: the ``top_n`` most frequent tokens with
     rank and CUMULATIVE corpus-coverage fraction -- the first artifact of
@@ -677,14 +669,12 @@ def vocab_coverage(
     )
 
 
-def vocab_coverage_sql(
-    source: str = "documents", text_col: str = "text", top_n: int = 100
-) -> str:
+def vocab_coverage_sql() -> str:
     """DuckDB SQL mirroring ``vocab_coverage``."""
     return f"""
 WITH tok AS (
-  SELECT unnest(string_split(lower({text_col}), ' ')) AS term
-  FROM {source}
+  SELECT unnest(string_split(lower(text), ' ')) AS term
+  FROM documents
 ), c AS (
   SELECT term, count(*) AS cnt FROM tok GROUP BY 1
 ), tot AS (
@@ -693,7 +683,7 @@ WITH tok AS (
   SELECT term, cnt,
          CAST(row_number() OVER (ORDER BY cnt DESC, term) AS INT)
              AS rank
-  FROM c ORDER BY cnt DESC, term LIMIT {top_n}
+  FROM c ORDER BY cnt DESC, term LIMIT {VOCAB_TOP_N}
 )
 SELECT rank, term, cnt,
        ROUND(CAST(SUM(cnt) OVER (ORDER BY rank ROWS BETWEEN UNBOUNDED
@@ -732,39 +722,35 @@ def pii_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def pii_stats_sql(
-    source: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
+def pii_stats_sql() -> str:
     """DuckDB SQL mirroring ``pii_stats`` (regexp_extract_all lengths)."""
     url_pat, email_pat, phone_pat = (
         p.replace("'", "''") for p, _ in SCRUB_PATTERNS
     )
     masked_url = (
-        f"regexp_replace({text_col}, '{url_pat}', '<URL>', 'g')"
+        f"regexp_replace(text, '{url_pat}', '<URL>', 'g')"
     )
     masked_email = (
         f"regexp_replace({masked_url}, '{email_pat}', '<EMAIL>', 'g')"
     )
     return f"""
-SELECT {id_col},
-       CAST(len(regexp_extract_all({text_col}, '{url_pat}')) AS BIGINT)
+SELECT doc_id,
+       CAST(len(regexp_extract_all(text, '{url_pat}')) AS BIGINT)
            AS n_url,
        CAST(len(regexp_extract_all({masked_url}, '{email_pat}'))
            AS BIGINT) AS n_email,
        CAST(len(regexp_extract_all({masked_email}, '{phone_pat}'))
            AS BIGINT) AS n_phone,
-       CAST(len(regexp_extract_all({text_col}, '{url_pat}'))
+       CAST(len(regexp_extract_all(text, '{url_pat}'))
             + len(regexp_extract_all({masked_url}, '{email_pat}'))
             + len(regexp_extract_all({masked_email}, '{phone_pat}'))
            AS BIGINT) AS n_pii
-FROM {source} ORDER BY {id_col}
+FROM documents ORDER BY doc_id
 """
 
 
 def oov_ratio(
-    df: DataFrame, id_col: str, text_col: str, top_n: int = 100
+    df: DataFrame, id_col: str, text_col: str, top_n: int = VOCAB_TOP_N
 ) -> DataFrame:
     """Per-document out-of-vocabulary ratio against the corpus's own
     top-``top_n`` vocabulary -- the quality signal behind OOV filtering
@@ -809,31 +795,26 @@ def oov_ratio(
     )
 
 
-def oov_ratio_sql(
-    source: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    top_n: int = 100,
-) -> str:
+def oov_ratio_sql() -> str:
     """DuckDB SQL mirroring ``oov_ratio``."""
     return f"""
 WITH tok AS (
-  SELECT {id_col}, unnest(string_split(lower({text_col}), ' ')) AS term
-  FROM {source}
+  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
+  FROM documents
 ), c AS (
   SELECT term, count(*) AS cnt FROM tok GROUP BY 1
 ), vocab AS (
-  SELECT term FROM c ORDER BY cnt DESC, term LIMIT {top_n}
+  SELECT term FROM c ORDER BY cnt DESC, term LIMIT {VOCAB_TOP_N}
 ), per AS (
-  SELECT t.{id_col}, count(*) AS n_tokens,
+  SELECT t.doc_id, count(*) AS n_tokens,
          CAST(SUM(CASE WHEN v.term IS NULL THEN 1 ELSE 0 END) AS BIGINT)
              AS n_oov
   FROM tok t LEFT JOIN vocab v USING (term)
   GROUP BY 1
 )
-SELECT {id_col}, n_tokens, n_oov,
+SELECT doc_id, n_tokens, n_oov,
        ROUND(CAST(n_oov AS DOUBLE) / n_tokens, 4) AS oov_ratio
-FROM per ORDER BY {id_col}
+FROM per ORDER BY doc_id
 """
 
 
@@ -903,17 +884,13 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def bigram_logprob_oracle_sql(
-    source: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
+def bigram_logprob_oracle_sql() -> str:
     """DuckDB SQL mirroring ``bigram_logprob``."""
-    return f"""
+    return """
 WITH t AS (
-  SELECT {id_col} AS doc, string_split(lower({text_col}), ' ') AS toks
-  FROM {source}
-  WHERE len(string_split(lower({text_col}), ' ')) >= 2
+  SELECT doc_id AS doc, string_split(lower(text), ' ') AS toks
+  FROM documents
+  WHERE len(string_split(lower(text), ' ')) >= 2
 ), bg AS (
   SELECT doc,
          unnest(list_transform(
@@ -935,7 +912,7 @@ WITH t AS (
               AS DECIMAL(18,6)) AS logp
   FROM big JOIN ctx USING (w1)
 )
-SELECT doc AS {id_col}, CAST(SUM(c_db) AS BIGINT) AS n_bigrams,
+SELECT doc AS doc_id, CAST(SUM(c_db) AS BIGINT) AS n_bigrams,
        ROUND(CAST(SUM(CAST(c_db AS DECIMAL(18,0)) * logp) AS DOUBLE)
              / CAST(SUM(c_db) AS BIGINT), 4) AS mean_logp
 FROM doc_bf JOIN bg_logp USING (bg)
@@ -943,7 +920,7 @@ GROUP BY doc ORDER BY doc
 """
 
 
-def dataset_card(df: DataFrame, text_col: str = "text") -> DataFrame:
+def dataset_card(df: DataFrame) -> DataFrame:
     """One-row dataset-card summary: the corpus-level numbers a data
     card / datasheet reports (doc and token counts, language and source
     cardinality, exact duplicate rate, mean doc length) -- the roll-up
@@ -952,8 +929,8 @@ def dataset_card(df: DataFrame, text_col: str = "text") -> DataFrame:
     Scale shape: ONE aggregate pass over one scan; count-distincts are
     two-phase partial aggs; no joins.
     """
-    n_toks = F.size(_toks(text_col)).cast("long")
-    h = F.md5(F.lower(F.col(text_col)))
+    n_toks = F.size(_toks("text")).cast("long")
+    h = F.md5(F.lower(F.col("text")))
     return df.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(n_toks).cast("long").alias("n_tokens"),
@@ -969,9 +946,7 @@ def dataset_card(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def compression_ratio(
-    df: DataFrame, id_col: str, text_col: str, level: int = 6
-) -> DataFrame:
+def compression_ratio(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document zlib compression ratio (compressed/raw bytes): the
     classic repetitive-junk detector -- templated or looping text
     compresses far below prose, catching degenerate documents that
@@ -993,7 +968,7 @@ def compression_ratio(
             if t is None or len(t) == 0:
                 return None
             raw = t.encode("utf-8")
-            return round(len(zlib.compress(raw, level)) / len(raw), 4)
+            return round(len(zlib.compress(raw, 6)) / len(raw), 4)
 
         return texts.map(one)
 
@@ -1040,38 +1015,34 @@ def normalize_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def normalize_text_sql(
-    source: str, id_col: str = "doc_id", text_col: str = "text"
-) -> str:
+def normalize_text_sql(source: str) -> str:
     """DuckDB SQL mirroring ``normalize_text`` ('g' flag; DuckDB's RE2
     anchors ^/$ behave the same on single-line strings)."""
-    expr = text_col
+    expr = "text"
     for pat, repl in NORMALIZE_PATTERNS:
         # DuckDB single-quoted strings are escape-free: the backslash
         # sequences reach RE2 verbatim, exactly like Spark's Java regex
         sql_pat = pat.replace("'", "''")
         expr = f"regexp_replace({expr}, '{sql_pat}', '{repl}', 'g')"
     return (
-        f"SELECT {id_col}, {expr} AS normalized, "
-        f"({expr} != {text_col}) AS changed "
-        f"FROM {source} ORDER BY {id_col}"
+        f"SELECT doc_id, {expr} AS normalized, "
+        f"({expr} != text) AS changed "
+        f"FROM {source} ORDER BY doc_id"
     )
 
 
-def line_dedup_stats(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    line_tokens: int = 8,
-    min_docs: int = 3,
-) -> DataFrame:
+LINE_MIN_DOCS = 3
+LINE_TOKENS = 8
+
+
+def line_dedup_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """C4-style LINE deduplication stats: mark every line occurring in
-    >= ``min_docs`` DISTINCT documents as boilerplate (the "remove any
+    >= ``LINE_MIN_DOCS`` DISTINCT documents as boilerplate (the "remove any
     line appearing three or more times" rule that strips headers,
     cookie banners, and navigation chrome exact doc-level dedup never
     sees), and report per document how much survives.
 
-    Lines here are fixed ``line_tokens``-token windows (the corpus
+    Lines here are fixed ``LINE_TOKENS``-token windows (the corpus
     fixture is single-line, so structural lines are derived
     deterministically from token positions -- on real data pass the
     text pre-split on '\\n' through the same counting).
@@ -1091,7 +1062,7 @@ def line_dedup_stats(
     pairwise, no window over the corpus.
     """
     toks = _toks(text_col)
-    n_lines = F.ceil(F.size("__toks") / F.lit(line_tokens)).cast("int")
+    n_lines = F.ceil(F.size("__toks") / F.lit(LINE_TOKENS)).cast("int")
     lines = (
         df.select(F.col(id_col).alias("doc"), toks.alias("__toks"))
         .select(
@@ -1107,8 +1078,8 @@ def line_dedup_stats(
             F.array_join(
                 F.slice(
                     F.col("__toks"),
-                    F.col("__i") * line_tokens + 1,
-                    line_tokens,
+                    F.col("__i") * LINE_TOKENS + 1,
+                    LINE_TOKENS,
                 ),
                 " ",
             ).alias("line"),
@@ -1117,7 +1088,7 @@ def line_dedup_stats(
     boiler = (
         lines.groupBy("line")
         .agg(F.count_distinct("doc").alias("df"))
-        .filter(F.col("df") >= min_docs)
+        .filter(F.col("df") >= LINE_MIN_DOCS)
         .select("line")
     )
     marked = lines.join(
@@ -1155,20 +1126,14 @@ def line_dedup_stats(
     )
 
 
-def line_dedup_stats_sql(
-    source: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    line_tokens: int = 8,
-    min_docs: int = 3,
-) -> str:
+def line_dedup_stats_sql() -> str:
     """DuckDB SQL mirroring ``line_dedup_stats`` (same fixed-window
     lines, same >= min_docs distinct-doc rule, same kept-text md5)."""
-    lt = line_tokens
+    lt = LINE_TOKENS
     return f"""
 WITH t AS (
-  SELECT {id_col} AS doc, string_split(lower({text_col}), ' ') AS toks
-  FROM {source}
+  SELECT doc_id AS doc, string_split(lower(text), ' ') AS toks
+  FROM documents
 ), i AS (
   SELECT doc, toks,
          unnest(range(0, CAST(ceil(len(toks) / {lt}.0) AS BIGINT)))
@@ -1181,18 +1146,18 @@ WITH t AS (
   FROM i
 ), b AS (
   SELECT line FROM l GROUP BY line
-  HAVING count(DISTINCT doc) >= {min_docs}
+  HAVING count(DISTINCT doc) >= {LINE_MIN_DOCS}
 ), m AS (
   SELECT l.doc, l.pos, l.line, (b.line IS NOT NULL) AS is_boiler
   FROM l LEFT JOIN b ON l.line = b.line
 )
-SELECT doc AS {id_col},
+SELECT doc AS doc_id,
        CAST(count(*) AS BIGINT) AS n_lines,
        CAST(SUM(CASE WHEN is_boiler THEN 1 ELSE 0 END) AS BIGINT)
            AS n_dropped,
        md5(COALESCE(string_agg(CASE WHEN NOT is_boiler THEN line END,
                                ' ' ORDER BY pos), '')) AS kept_hash
-FROM m GROUP BY doc ORDER BY {id_col}
+FROM m GROUP BY doc ORDER BY doc_id
 """
 
 
@@ -1210,7 +1175,6 @@ def blocklist_stats(
     df: DataFrame,
     source_col: str,
     text_col: str,
-    terms: tuple[str, ...] = BLOCKLIST_TERMS,
 ) -> DataFrame:
     """Per-source blocklist filtering stats (the C4 bad-words gate).
 
@@ -1221,7 +1185,9 @@ def blocklist_stats(
     narrow expressions + one small groupBy: parquet-scan speed at 100 TB.
     """
     toks = _toks(text_col)
-    hits = F.size(F.filter(toks, lambda t: t.isin(*terms))).cast("long")
+    hits = F.size(F.filter(toks, lambda t: t.isin(*BLOCKLIST_TERMS))).cast(
+        "long"
+    )
     per_doc = df.select(F.col(source_col).alias("source"), hits.alias("n_hits"))
     n_docs = F.count(F.lit(1)).cast("long")
     n_flagged = F.sum((F.col("n_hits") > 0).cast("long")).cast("long")
@@ -1237,20 +1203,15 @@ def blocklist_stats(
     )
 
 
-def blocklist_stats_sql(
-    source: str = "documents",
-    source_col: str = "source",
-    text_col: str = "text",
-    terms: tuple[str, ...] = BLOCKLIST_TERMS,
-) -> str:
+def blocklist_stats_sql() -> str:
     """DuckDB SQL mirroring ``blocklist_stats``."""
-    inlist = ", ".join(f"'{t}'" for t in terms)
+    inlist = ", ".join(f"'{t}'" for t in BLOCKLIST_TERMS)
     return f"""
 WITH d AS (
-  SELECT {source_col} AS source,
-         len(list_filter(string_split(lower({text_col}), ' '),
+  SELECT source AS source,
+         len(list_filter(string_split(lower(text), ' '),
                          t -> t IN ({inlist}))) AS n_hits
-  FROM {source}
+  FROM documents
 )
 SELECT source,
        CAST(count(*) AS BIGINT) AS n_docs,
@@ -1268,8 +1229,11 @@ FROM d GROUP BY source ORDER BY source
 # ---------------------------------------------------------------------------
 
 
+BPE_PAIR_TOP_K = 50
+
+
 def bpe_pair_counts(
-    df: DataFrame, text_col: str, top_k: int = 50
+    df: DataFrame, text_col: str, top_k: int = BPE_PAIR_TOP_K
 ) -> DataFrame:
     """Corpus-frequency-weighted adjacent character-pair counts -- the
     first merge-selection step of BPE tokenizer training (the most
@@ -1305,15 +1269,13 @@ def bpe_pair_counts(
     )
 
 
-def bpe_pair_counts_sql(
-    source: str = "documents", text_col: str = "text", top_k: int = 50
-) -> str:
+def bpe_pair_counts_sql() -> str:
     """DuckDB SQL mirroring ``bpe_pair_counts``."""
     return f"""
 WITH w AS (
   SELECT w, count(*) AS cnt FROM (
-    SELECT unnest(string_split(lower({text_col}), ' ')) AS w
-    FROM {source}
+    SELECT unnest(string_split(lower(text), ' ')) AS w
+    FROM documents
   ) WHERE len(w) >= 2 AND regexp_full_match(w, '[a-z]+')
   GROUP BY w
 ), p AS (
@@ -1323,7 +1285,7 @@ WITH w AS (
   FROM w
 )
 SELECT pair, CAST(SUM(cnt) AS BIGINT) AS n
-FROM p GROUP BY pair ORDER BY n DESC, pair LIMIT {top_k}
+FROM p GROUP BY pair ORDER BY n DESC, pair LIMIT {BPE_PAIR_TOP_K}
 """
 
 
@@ -1372,23 +1334,19 @@ def charset_audit(
     )
 
 
-def charset_audit_sql(
-    source: str = "documents",
-    source_col: str = "source",
-    text_col: str = "text",
-) -> str:
+def charset_audit_sql() -> str:
     """DuckDB SQL mirroring ``charset_audit`` (RE2 accepts the same
     \\x / \\x{{}} escapes as the Java patterns)."""
-    return f"""
+    return """
 WITH d AS (
-  SELECT {source_col} AS source,
-         len({text_col}) AS n_chars,
-         len(regexp_extract_all({text_col}, '[^\\x00-\\x7f]')) AS non_ascii,
-         len(regexp_extract_all({text_col},
+  SELECT source AS source,
+         len(text) AS n_chars,
+         len(regexp_extract_all(text, '[^\\x00-\\x7f]')) AS non_ascii,
+         len(regexp_extract_all(text,
              '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]')) AS control,
-         len(regexp_extract_all({text_col}, '\\x{{fffd}}')) AS replacement,
-         len(regexp_extract_all({text_col}, '\\s')) AS ws
-  FROM {source}
+         len(regexp_extract_all(text, '\\x{fffd}')) AS replacement,
+         len(regexp_extract_all(text, '\\s')) AS ws
+  FROM documents
 )
 SELECT source,
        CAST(count(*) AS BIGINT) AS n_docs,
@@ -1406,7 +1364,12 @@ FROM d GROUP BY source ORDER BY source
 # ---------------------------------------------------------------------------
 
 
-def zipf_fit(df: DataFrame, text_col: str, top_k: int = 100) -> DataFrame:
+ZIPF_TOP_K = 100
+
+
+def zipf_fit(
+    df: DataFrame, text_col: str, top_k: int = ZIPF_TOP_K
+) -> DataFrame:
     """Least-squares slope of ln(freq) vs ln(rank) over the top-k terms
     -- the Zipf diagnostic (natural corpora fit slope ~= -1; synthetic
     or templated corpora flatten toward 0, single-domain crawls steepen).
@@ -1459,17 +1422,15 @@ def zipf_fit(df: DataFrame, text_col: str, top_k: int = 100) -> DataFrame:
     )
 
 
-def zipf_fit_sql(
-    source: str = "documents", text_col: str = "text", top_k: int = 100
-) -> str:
+def zipf_fit_sql() -> str:
     """DuckDB SQL mirroring ``zipf_fit`` (same round-log-then-DECIMAL
     accumulation, same closed-form division order)."""
     return f"""
 WITH terms AS (
   SELECT term, count(*) AS cnt FROM (
-    SELECT unnest(string_split(lower({text_col}), ' ')) AS term
-    FROM {source}
-  ) GROUP BY term ORDER BY cnt DESC, term LIMIT {top_k}
+    SELECT unnest(string_split(lower(text), ' ')) AS term
+    FROM documents
+  ) GROUP BY term ORDER BY cnt DESC, term LIMIT {ZIPF_TOP_K}
 ), ranked AS (
   SELECT cnt, row_number() OVER (ORDER BY cnt DESC, term) AS rank
   FROM terms
@@ -1501,13 +1462,10 @@ FROM sums
 BM25_QUERY_TERMS: tuple[str, ...] = ("spark", "join", "stream")
 
 
-def bm25_topk(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    terms: tuple[str, ...] = BM25_QUERY_TERMS,
-    top_k: int = 20,
-) -> DataFrame:
+BM25_TOP_K = 20
+
+
+def bm25_topk(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Okapi BM25 top-k documents for a fixed query (k1=1.2, b=0.75) --
     the lexical retrieval baseline every RAG pipeline starts from, and
     the hard-negative miner for embedding training.
@@ -1535,7 +1493,7 @@ def bm25_topk(
         df.select(
             F.col(id_col).alias("doc"), F.explode(toks).alias("term")
         )
-        .filter(F.col("term").isin(*terms))
+        .filter(F.col("term").isin(*BM25_QUERY_TERMS))
         .groupBy("doc", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
@@ -1585,33 +1543,27 @@ def bm25_topk(
         .agg(F.round(F.sum("c").cast("double"), 4).alias("bm25"))
         .select(F.col("doc").alias(id_col), "bm25")
         .orderBy(F.desc("bm25"), id_col)
-        .limit(top_k)
+        .limit(BM25_TOP_K)
     )
 
 
-def bm25_topk_sql(
-    source: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    terms: tuple[str, ...] = BM25_QUERY_TERMS,
-    top_k: int = 20,
-) -> str:
+def bm25_topk_sql() -> str:
     """DuckDB SQL mirroring ``bm25_topk`` operation-for-operation."""
-    inlist = ", ".join(f"'{t}'" for t in terms)
+    inlist = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)
     return f"""
 WITH lens AS (
-  SELECT {id_col} AS doc,
-         len(string_split(lower({text_col}), ' ')) AS len_d
-  FROM {source}
+  SELECT doc_id AS doc,
+         len(string_split(lower(text), ' ')) AS len_d
+  FROM documents
 ), corpus AS (
   SELECT count(*) AS n_docs,
          CAST(SUM(len_d) AS DOUBLE) / count(*) AS avgdl
   FROM lens
 ), tf AS (
   SELECT doc, term, count(*) AS tf FROM (
-    SELECT {id_col} AS doc,
-           unnest(string_split(lower({text_col}), ' ')) AS term
-    FROM {source}
+    SELECT doc_id AS doc,
+           unnest(string_split(lower(text), ' ')) AS term
+    FROM documents
   ) WHERE term IN ({inlist})
   GROUP BY doc, term
 ), dfreq AS (
@@ -1633,9 +1585,9 @@ WITH lens AS (
               AS DECIMAL(18,8)) AS c
   FROM tf JOIN idf USING (term) JOIN lens ON lens.doc = tf.doc
 )
-SELECT doc AS {id_col}, ROUND(CAST(SUM(c) AS DOUBLE), 4) AS bm25
+SELECT doc AS doc_id, ROUND(CAST(SUM(c) AS DOUBLE), 4) AS bm25
 FROM contrib GROUP BY doc
-ORDER BY bm25 DESC, {id_col} LIMIT {top_k}
+ORDER BY bm25 DESC, doc_id LIMIT {BM25_TOP_K}
 """
 
 
@@ -1644,10 +1596,11 @@ ORDER BY bm25 DESC, {id_col} LIMIT {top_k}
 # ---------------------------------------------------------------------------
 
 
-def bpe_learn_merges(
-    df: DataFrame, text_col: str, iterations: int = 3
-) -> DataFrame:
-    """Learn the first ``iterations`` BPE merge rules -- x98 run to its
+BPE_MERGES = 3
+
+
+def bpe_learn_merges(df: DataFrame, text_col: str) -> DataFrame:
+    """Learn the first ``BPE_MERGES`` BPE merge rules -- x98 run to its
     logical conclusion: each round counts corpus-frequency-weighted
     adjacent symbol pairs, picks the argmax (ties lexicographic), and
     REWRITES every word with the merge applied before the next round.
@@ -1686,7 +1639,7 @@ def bpe_learn_merges(
 
     merges = []
     cur = seqd
-    for it in range(1, iterations + 1):
+    for it in range(1, BPE_MERGES + 1):
         toks = F.split(F.col("seq"), " ")
         # Single-symbol rows must be dropped BEFORE the explode: sequence(1, 0)
         # yields [1, 0], so the lambda would index element_at(toks, 0). Filtering
@@ -1731,25 +1684,23 @@ def bpe_learn_merges(
     return out
 
 
-def bpe_learn_merges_sql(
-    source: str = "documents", text_col: str = "text", iterations: int = 3
-) -> str:
+def bpe_learn_merges_sql() -> str:
     """DuckDB SQL replaying ``bpe_learn_merges`` as chained CTEs (same
     wrapped-symbol encoding, same replace semantics, same tiebreak)."""
     ctes = [
-        f"""w0 AS (
+        """w0 AS (
   SELECT cnt,
          trim(regexp_replace(w, '(.)', '<\\1> ', 'g')) AS seq
   FROM (
     SELECT w, count(*) AS cnt FROM (
-      SELECT unnest(string_split(lower({text_col}), ' ')) AS w
-      FROM {source}
+      SELECT unnest(string_split(lower(text), ' ')) AS w
+      FROM documents
     ) WHERE len(w) >= 2 AND regexp_full_match(w, '[a-z]+')
     GROUP BY w
   )
 )"""
     ]
-    for it in range(1, iterations + 1):
+    for it in range(1, BPE_MERGES + 1):
         prev = f"w{it - 1}"
         ctes.append(
             f"""m{it} AS (
@@ -1769,7 +1720,7 @@ def bpe_learn_merges_sql(
   GROUP BY pair ORDER BY n DESC, pair LIMIT 1
 )"""
         )
-        if it < iterations:
+        if it < BPE_MERGES:
             ctes.append(
                 f"""w{it} AS (
   SELECT cnt,
@@ -1780,6 +1731,6 @@ def bpe_learn_merges_sql(
             )
     union = "\nUNION ALL\n".join(
         f"SELECT it, pair, merged, n FROM m{i}"
-        for i in range(1, iterations + 1)
+        for i in range(1, BPE_MERGES + 1)
     )
     return "WITH " + ",\n".join(ctes) + "\n" + union + "\nORDER BY it"

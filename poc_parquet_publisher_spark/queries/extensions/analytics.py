@@ -1120,8 +1120,8 @@ def x167_stream_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "payload was built from, so one corrupted, reordered, or "
         "truncated byte in the binary transfer cascades into a hash "
         "mismatch. This is x13's metadata surface plus the actual "
-        "binary data path; the codec slots stay gated "
-        "(multimodal.py real_codecs) until libraries exist",
+        "binary data path; the decode kernels stay deterministic "
+        "fakes (multimodal.py) until codec libraries exist",
 )
 def x168_multimodal_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ...ops import multimodal
@@ -1400,7 +1400,7 @@ def x172_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x173_novel_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     mx = docs.agg(F.max("doc_id").alias("mx"))
-    sh = dedup.shingles(docs, "doc_id", "text", k=3).select("doc", "shingle")
+    sh = dedup.shingles(docs, "doc_id", "text").select("doc", "shingle")
     b = (
         sh.crossJoin(F.broadcast(mx))
         .select(
@@ -6052,7 +6052,7 @@ def x244_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     s2 = s1.join(
         f.select(F.col("keep_id").alias("doc_id")), "doc_id", "leftsemi"
     )
-    sh = dedup.simhash(s2, "doc_id", "text")
+    sh = dedup.simhash(s2)
     n0 = s0.agg(F.count(F.lit(1)).cast("long").alias("n0"))
     n1 = e.agg(F.count(F.lit(1)).cast("long").alias("n1"))
     n2 = f.agg(F.count(F.lit(1)).cast("long").alias("n2"))

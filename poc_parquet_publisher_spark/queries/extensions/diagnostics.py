@@ -1089,9 +1089,7 @@ def x478_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ...ops import similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
-    topk = similarity.brute_force_topk(
-        emb, emb, "vec_id", "embedding", k=10
-    )
+    topk = similarity.brute_force_topk(emb, emb, k=10)
     ind = (
         emb.select("vec_id")
         .join(
@@ -8818,7 +8816,7 @@ def x536_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ...ops.text import BM25_QUERY_TERMS
 
     docs = load_table(spark, sf_dir, "documents")
-    b = text_ops.bm25_topk(docs, "doc_id", "text", top_k=20)
+    b = text_ops.bm25_topk(docs, "doc_id", "text")
     r1 = b.select(
         "doc_id",
         F.row_number()

@@ -226,9 +226,7 @@ def x333_mnn_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     a_side = emb.filter(F.col("label") < 5)
     b_side = emb.filter(F.col("label") >= 5)
-    s = similarity.pairwise_sims(
-        b_side, a_side, id_col="vec_id", vec_col="embedding"
-    )
+    s = similarity.pairwise_sims(b_side, a_side, vec_col="embedding")
     wa = Window.partitionBy("a_id").orderBy(F.desc("sim"), "b_id")
     wb = Window.partitionBy("b_id").orderBy(F.desc("sim"), "a_id")
     r = s.withColumn("rn_a", F.row_number().over(wa)).withColumn(
@@ -1460,7 +1458,7 @@ def x344_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _x345_oracle(iterations: int = 2, top_k: int = 20) -> str:
+def _x345_oracle() -> str:
     ctes = [
         """ed AS MATERIALIZED (
   SELECT DISTINCT o.o_custkey AS u, l.l_partkey AS p
@@ -1469,7 +1467,7 @@ def _x345_oracle(iterations: int = 2, top_k: int = 20) -> str:
         "h0 AS MATERIALIZED (SELECT u, CAST(1.0 AS DOUBLE) AS h "
         "FROM (SELECT DISTINCT u FROM ed))",
     ]
-    for t in range(1, iterations + 1):
+    for t in range(1, 2 + 1):
         ctes.append(
             f"""ar{t} AS MATERIALIZED (
   SELECT ed.p, SUM(CAST(ROUND(h.h, 12) AS DECIMAL(28,12))) AS s
@@ -1499,10 +1497,10 @@ def _x345_oracle(iterations: int = 2, top_k: int = 20) -> str:
     return (
         "WITH "
         + ",\n".join(ctes)
-        + f"""
+        + """
 SELECT CAST(p AS BIGINT) AS part_id, ROUND(a, 8) AS authority
-FROM a{iterations}
-ORDER BY a DESC, p LIMIT {top_k}"""
+FROM a2
+ORDER BY a DESC, p LIMIT 20"""
     )
 
 
@@ -2288,10 +2286,7 @@ def _x352_oracle() -> str:
         "(SELECT u, count(*) AS dg FROM edges GROUP BY u "
         "ORDER BY dg DESC, u LIMIT 5))"
     )
-    return graph.ppr_sql_over_edges(
-        edge_ctes, seed_cte, iterations=3, top_k=20,
-        node_select="u AS token",
-    )
+    return graph.ppr_sql_over_edges(edge_ctes, seed_cte)
 
 
 @register(
@@ -2320,9 +2315,7 @@ def x352_ppr_related_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(5)
         .select("u", F.lit(0.2).cast("double").alias("w"))
     )
-    pr = graph.personalized_pagerank(
-        edges, seeds, iterations=3, damping=0.85, materialize=False
-    )
+    pr = graph.personalized_pagerank(edges, seeds)
     return (
         pr.join(seeds.select("u", F.lit(1).alias("s")),
                 pr.node == F.col("u"), "left")
@@ -5620,7 +5613,7 @@ def x376_prefix_filter_simjoin(
     # rarity sort and both verify sides all derive from this -- without
     # it the shingle expression re-evaluates per consumer
     dt = (
-        dedup.shingle_arrays(docs, "doc_id", "text", k=3)
+        dedup.shingle_arrays(docs, "doc_id", "text")
         .select(F.col("doc").alias("doc_id"), F.col("sh").alias("toks"))
         .localCheckpoint(eager=False)
     )

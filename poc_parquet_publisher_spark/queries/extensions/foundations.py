@@ -13,7 +13,16 @@ from pyspark.sql import functions as F
 
 from ...catalog import load_table, read_parquet
 from ...scale import pairs_within, zorder_key_sql
-from ...ops import dedup, graph, sampling, similarity, text
+from ...ops import (
+    curate,
+    dedup,
+    graph,
+    packing,
+    profile,
+    sampling,
+    similarity,
+    text,
+)
 from ...ops.text import _toks
 from .. import register
 
@@ -60,25 +69,21 @@ def x02_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PAIRS_CACHE: dict[tuple, DataFrame] = {}
 
 
-def _shared_pair_counts(
-    spark: SparkSession, sf_dir: str, k: int = 3
-) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, k)
+def _shared_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    key = (spark.sparkContext.applicationId, sf_dir, 3)
     counts = _PAIRS_CACHE.get(key)
     if counts is None:
         docs = load_table(spark, sf_dir, "documents")
         counts = dedup.shingle_pair_counts(
-            docs, "doc_id", "text", k=k
+            docs, "doc_id", "text"
         ).localCheckpoint(eager=False)
         _PAIRS_CACHE[key] = counts
     return counts
 
 
-def _shared_jaccard_pairs(
-    spark: SparkSession, sf_dir: str, k: int = 3, threshold: float = 0.5
-) -> DataFrame:
+def _shared_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.score_pair_counts_jaccard(
-        _shared_pair_counts(spark, sf_dir, k), threshold
+        _shared_pair_counts(spark, sf_dir), 0.5
     )
 
 
@@ -174,7 +179,7 @@ def x03_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x05_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.simhash(docs, "doc_id", "text")
+    return dedup.simhash(docs)
 
 
 _BRUTE_TOPK_ORACLE = """
@@ -209,7 +214,7 @@ def x07_sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
     return (
-        similarity.brute_force_topk(emb, q, "vec_id", "embedding", k=3)
+        similarity.brute_force_topk(emb, q, k=3)
         .withColumnRenamed("rank", "rnk")
         .orderBy("query_id", "rnk")
     )
@@ -240,7 +245,7 @@ ORDER BY id_a, id_b
 def x09_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.cosine_neardup_pairs(
-        emb, "vec_id", "embedding", threshold=0.4
+        emb, threshold=0.4
     ).orderBy("id_a", "id_b")
 
 
@@ -283,7 +288,7 @@ def x11_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x12_text_langid",
-    text.lang_id_oracle_sql("documents", "doc_id"),
+    text.lang_id_oracle_sql(),
     doc="stopword-vote language ID; tie-break ladder reproduced verbatim "
         "in the generated oracle SQL",
 )
@@ -294,7 +299,7 @@ def x12_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x14_text_rolling_fingerprint",
-    text.rolling_fingerprint_oracle_sql("documents", "doc_id", window=8),
+    text.rolling_fingerprint_oracle_sql(),
     doc="winnowing-style rolling fingerprint: min md5 over 8-token "
         "shingles, expression-only (narrow, codegen); oracle generated "
         "in the DuckDB dialect from the same spec",
@@ -303,15 +308,12 @@ def x14_text_rolling_fingerprint(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return text.rolling_fingerprint(docs, "doc_id", "text", window=8).orderBy(
-        "doc_id"
-    )
+    return text.rolling_fingerprint(docs, "doc_id", "text").orderBy("doc_id")
 
 
 @register(
     "x19_tfidf",
-    text.tf_idf_oracle_sql("documents", "doc_id", min_df=2,
-                           top_terms_per_doc=5),
+    text.tf_idf_oracle_sql(),
     doc="top-5 TF-IDF terms per document: two groupBys sharing the term "
         "shuffle key + a hash join back on the small aggregated term "
         "table; widest intermediate is one row per distinct (doc, term)",
@@ -319,7 +321,7 @@ def x14_text_rolling_fingerprint(
 def x19_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
-        text.tf_idf(docs, "doc_id", "text", min_df=2, top_terms_per_doc=5)
+        text.tf_idf(docs, "doc_id", "text")
         .select("doc", "term", "tf", "df_cnt", "tfidf")
         .orderBy("doc", "rnk")
         .drop("rnk")
@@ -328,7 +330,7 @@ def x19_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x20_text_scrub",
-    text.scrub_oracle_sql("documents", "doc_id"),
+    text.scrub_oracle_sql(),
     doc="PII/URL scrubbing: chained regexp_replace to typed placeholders "
         "(<URL>/<EMAIL>/<PHONE>), codegen-only; DuckDB oracle needs the "
         "'g' flag for replace-all parity",
@@ -340,7 +342,7 @@ def x20_text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x18_deterministic_split",
-    sampling.split_sql("duckdb", "documents", "doc_id", 0.25),
+    sampling.split_sql("duckdb", "documents", "doc_id"),
     doc="content-keyed train/test assignment: md5-bucket thresholding, a "
         "pure function of the key -- stable under retries, repartitioning, "
         "and engines (unlike df.sample), hash-verified row by row",
@@ -410,8 +412,7 @@ def x27_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x26_boilerplate_ngrams",
-    text.boilerplate_ngrams_oracle_sql("documents", "doc_id", k=3,
-                                       min_docs=3),
+    text.boilerplate_ngrams_oracle_sql(),
     doc="boilerplate profile: 3-gram shingles shared by >= 3 documents "
         "(headers/templates curation strips). Per-doc distinct shingles "
         "make count(*) the document frequency -- one partial+final "
@@ -419,7 +420,7 @@ def x27_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x26_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return text.boilerplate_ngrams(docs, "doc_id", "text", k=3, min_docs=3)
+    return text.boilerplate_ngrams(docs, "doc_id", "text")
 
 
 _MIX_FRACTIONS = {"es": 0.75, "zh": 0.25}
@@ -676,7 +677,7 @@ def x30_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x31_repetition_scores",
-    text.repetition_scores_oracle_sql("documents", "doc_id"),
+    text.repetition_scores_oracle_sql(),
     doc="within-document repetition (Gopher-style gates): duplicate-"
         "token ratio (narrow, scan-speed) + modal-bigram mass (explode "
         "-> two hash-groupBys on the doc key -> join back to the narrow "
@@ -699,7 +700,6 @@ _TOKEN_BUDGETS = {"es": 5000, "zh": 2000}
         "lang",
         "len(string_split(lower(text), ' '))",
         _TOKEN_BUDGETS,
-        default_budget=1000,
     ),
     doc="token-budget data mixing: each language keeps rows in "
         "deterministic md5(key) order until its TOKEN cap (not row "
@@ -733,14 +733,13 @@ def x33_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x04_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", num_hash_tables=8,
-        jaccard_distance_threshold=0.5,
+        docs, "doc_id", "text",
     ).orderBy("id_a", "id_b")
 
 
 @register(
     "x06_simhash_neardup",
-    dedup.simhash_pairs_oracle_sql("documents", max_hamming=3),
+    dedup.simhash_pairs_oracle_sql(),
     doc="simhash near-dup pairs via 16-bit banding (pigeonhole: hamming<=3 "
         "pairs share a band) -- equi-join, no cross join. Oracle: the "
         "x05 simhash SQL + band self-join + per-bit Hamming, all plain "
@@ -749,10 +748,8 @@ def x04_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x06_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    sim = dedup.simhash(docs, "doc_id", "text")
-    return dedup.simhash_hamming_pairs(sim, max_hamming=3).orderBy(
-        "id_a", "id_b"
-    )
+    sim = dedup.simhash(docs)
+    return dedup.simhash_hamming_pairs(sim).orderBy("id_a", "id_b")
 
 
 @register(
@@ -768,9 +765,7 @@ def x08_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
     return (
-        similarity.lsh_topk(
-            emb, q, "vec_id", "embedding", dim=64, k=3, n_planes=16, n_bands=4
-        )
+        similarity.lsh_topk(emb, q)
         .withColumnRenamed("rank", "rnk")
         .orderBy("query_id", "rnk")
     )
@@ -789,9 +784,7 @@ def x15_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
     return (
-        similarity.ivf_topk(
-            emb, q, "vec_id", "embedding", k=3, n_centroids=16, n_probe=4
-        )
+        similarity.ivf_topk(emb, q)
         .withColumnRenamed("rank", "rnk")
         .orderBy("query_id", "rnk")
     )
@@ -827,8 +820,7 @@ def x28_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.count(), threshold=0.4, target_recall=0.95
     )
     return similarity.lsh_neardup_pairs(
-        emb, "vec_id", "embedding", dim=64, threshold=0.4,
-        n_planes=n_planes, n_bands=n_bands,
+        emb, n_planes=n_planes, n_bands=n_bands,
     ).orderBy("id_a", "id_b")
 
 
@@ -879,8 +871,6 @@ def x17_sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "globally unique with zero coordination",
 )
 def x32_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ...ops import packing
-
     docs = load_table(spark, sf_dir, "documents")
     with_toks = docs.select(
         "doc_id",
@@ -893,9 +883,7 @@ def x32_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x23_curate_pipeline",
-    __import__(
-        "poc_parquet_publisher_spark.ops.curate", fromlist=["curate"]
-    ).curate_oracle_sql("documents", "doc_id"),
+    curate.curate_oracle_sql(),
     doc="end-to-end corpus curation: scrub -> quality/language gates -> "
         "exact dedup -> near-dup removal -> deterministic split, narrow "
         "filters first so the only expensive stage (the shingle join) "
@@ -906,10 +894,8 @@ def x32_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         "invariants in tests",
 )
 def x23_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ...ops import curate
-
     docs = load_table(spark, sf_dir, "documents")
-    return curate.curate(docs, "doc_id", "text").orderBy("doc_id")
+    return curate.curate(docs).orderBy("doc_id")
 
 
 # x34's oracle mirrors x03's k=3 shingle CTE; the benchmark is the
@@ -957,7 +943,7 @@ def x34_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 25 == 0)
     return dedup.contamination_scores(
-        docs, bench, "doc_id", "text", k=3
+        docs, bench, "doc_id", "text"
     ).orderBy("doc")
 
 
@@ -973,7 +959,7 @@ def x34_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x35_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.semantic_dedup(
-        emb, "vec_id", "embedding", threshold=0.4, n_centroids=8
+        emb, threshold=0.4, n_centroids=8
     ).orderBy("id")
 
 
@@ -998,7 +984,7 @@ def x36_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x37_unigram_logprob",
-    text.unigram_logprob_oracle_sql("documents", "doc_id"),
+    text.unigram_logprob_oracle_sql(),
     doc="per-doc mean unigram log10-prob under the corpus's own unigram "
         "LM (cheap fluency proxy, ancestor of perplexity filtering): "
         "two groupBys + a join on the aggregated term table, DECIMAL-"
@@ -1011,7 +997,7 @@ def x37_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x38_source_mix",
-    text.source_mix_stats_oracle_sql("documents", "source"),
+    text.source_mix_stats_oracle_sql(),
     doc="mixture report per source: doc/token counts, token share, and "
         "the uniform-target reweight factor -- the bookkeeping half of "
         "data mixing (enforcement = stratified/token-budget samplers); "
@@ -1024,26 +1010,22 @@ def x38_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x39_chunk_documents",
-    __import__(
-        "poc_parquet_publisher_spark.ops.packing", fromlist=["packing"]
-    ).chunk_documents_oracle_sql("documents", "doc_id", 64, 48),
+    packing.chunk_documents_oracle_sql(),
     doc="overlapping token-window chunking (RAG / long-doc context "
         "prep): chunk i = tokens [i*48, i*48+64); narrow explode of "
         "integer-arithmetic windows, no shuffle, no Python, "
         "bit-identical cross-engine",
 )
 def x39_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ...ops import packing
-
     docs = load_table(spark, sf_dir, "documents")
     return packing.chunk_documents(
-        docs, "doc_id", "text", chunk_tokens=64, stride=48
+        docs, "doc_id", "text"
     ).orderBy("doc_id", "chunk_idx")
 
 
 @register(
     "x40_minhash_deterministic",
-    dedup.minhash_banded_pairs_oracle_sql("documents", "doc_id"),
+    dedup.minhash_banded_pairs_oracle_sql("documents"),
     doc="deterministic MinHash-LSH: 8 md5-sliced minhash components "
         "(2 digests/shingle), 4 bands of 2, candidates = docs sharing "
         "a band -- unlike pyspark.ml's x04 the hashes are "
@@ -1053,7 +1035,7 @@ def x39_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x40_minhash_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.minhash_banded_pairs(docs, "doc_id", "text", k=3).orderBy(
+    return dedup.minhash_banded_pairs(docs, "doc_id", "text").orderBy(
         "id_a", "id_b"
     )
 
@@ -1073,7 +1055,7 @@ def x41_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ... import scale
 
     li = load_table(spark, sf_dir, "lineitem")
-    return scale.heavy_hitters(li, "l_suppkey", n=20)
+    return scale.heavy_hitters(li, "l_suppkey")
 
 
 @register(
@@ -1095,9 +1077,7 @@ def x42_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x43_profile_numeric",
-    __import__(
-        "poc_parquet_publisher_spark.ops.profile", fromlist=["profile"]
-    ).profile_numeric_oracle_sql(
+    profile.profile_numeric_oracle_sql(
         "orders", ["o_custkey", "o_orderkey", "o_totalprice"]
     ),
     doc="column profiling (the ANALYZE/Deequ pass): nulls, exact "
@@ -1106,8 +1086,6 @@ def x42_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         "accumulated. At 100 TB swap exact distinct for x16's HLL++",
 )
 def x43_profile_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ...ops import profile
-
     orders = load_table(spark, sf_dir, "orders")
     return profile.profile_numeric(
         orders, ["o_custkey", "o_orderkey", "o_totalprice"]
@@ -1153,7 +1131,7 @@ def x44_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x45_duplicate_spans",
-    dedup.duplicate_spans_oracle_sql("documents", "doc_id", "text", k=5),
+    dedup.duplicate_spans_oracle_sql(),
     doc="exact duplicate-span detection (Lee et al. 2022 substring-dedup "
         "signal): per-doc fraction of token positions covered by a "
         "5-token window occurring >= 2 times corpus-wide; positional "
@@ -1171,7 +1149,7 @@ def x45_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x46_temperature_mixture",
-    sampling.temperature_mixture_sql("documents", "source", "text"),
+    sampling.temperature_mixture_sql(),
     doc="temperature-scaled mixture schedule at T=2 (w_i ~ sqrt(share)): "
         "the multilingual/multi-source upweight-the-tail sampling plan; "
         "alpha=1/2 keeps it oracle-hash-exact (IEEE sqrt is correctly "
@@ -1187,7 +1165,7 @@ def x46_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x47_vocab_coverage",
-    text.vocab_coverage_sql("documents", "text", top_n=100),
+    text.vocab_coverage_sql(),
     doc="vocabulary coverage curve: top-100 tokens with cumulative "
         "corpus-coverage fraction (tokenizer/vocab construction); "
         "explode + hash-groupBy + TakeOrdered; the only window runs "
@@ -1234,14 +1212,12 @@ def x48_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ...streaming.windows import session_event_counts
 
     events = load_table(spark, sf_dir, "events")
-    return session_event_counts(
-        events, key_col="user_id", ts_col="ts", gap="30 minutes"
-    ).orderBy("user_id", "session_start")
+    return session_event_counts(events).orderBy("user_id", "session_start")
 
 
 @register(
     "x49_pii_stats",
-    text.pii_stats_sql("documents", "doc_id", "text"),
+    text.pii_stats_sql(),
     doc="per-doc PII counts by type (the audit half of the privacy "
         "pass; x20 scrub is the enforcement half): counts mirror the "
         "scrub's progressive masking order so n_pii == n_redactions "
@@ -1300,7 +1276,7 @@ def x50_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x51_oov_ratio",
-    text.oov_ratio_sql("documents", "doc_id", "text", top_n=100),
+    text.oov_ratio_sql(),
     doc="per-doc out-of-vocabulary ratio vs the corpus's own top-100 "
         "vocab (OOV filtering; the measurement side of x47's coverage "
         "curve): vocab is a TakeOrdered broadcast, the token stream "
@@ -1315,7 +1291,7 @@ def x51_oov_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x52_bigram_logprob",
-    text.bigram_logprob_oracle_sql("documents", "doc_id", "text"),
+    text.bigram_logprob_oracle_sql(),
     doc="per-doc mean bigram conditional log10-prob under the corpus's "
         "own bigram model (one order above x37's unigram proxy: junk "
         "SEQUENCES of individually-common tokens score low); context "
@@ -1437,8 +1413,6 @@ def x54_salted_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "silently drop rows",
 )
 def x55_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ...ops import profile
-
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -1460,9 +1434,7 @@ def x55_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x56_decile_report",
-    __import__(
-        "poc_parquet_publisher_spark.ops.profile", fromlist=["profile"]
-    ).decile_report_oracle_sql("documents", "n_chars"),
+    profile.decile_report_oracle_sql("documents", "n_chars"),
     doc="distribution calibration report: bucket docs by the EXACT "
         "interpolated decile thresholds of n_chars (Spark percentile == "
         "DuckDB quantile_cont bit-for-bit, the q30 precedent), report "
@@ -1472,8 +1444,6 @@ def x55_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "At 100 TB swap percentile_approx (x17) for the exact agg",
 )
 def x56_decile_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ...ops import profile
-
     docs = load_table(spark, sf_dir, "documents")
     return profile.decile_report(docs, "n_chars").orderBy("bucket")
 
@@ -1557,9 +1527,7 @@ def x58_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x59_curation_funnel",
-    __import__(
-        "poc_parquet_publisher_spark.ops.curate", fromlist=["curate"]
-    ).curation_funnel_oracle_sql("documents"),
+    curate.curation_funnel_oracle_sql(),
     doc="curation funnel: docs surviving each successive gate (input -> "
         "length -> +alpha -> +language -> +exact-dedup) -- the "
         "observability table behind x23's pipeline; gate booleans fold "
@@ -1567,8 +1535,6 @@ def x58_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "count-distinct), the 5-row funnel is a stack() unpivot",
 )
 def x59_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ...ops import curate
-
     docs = load_table(spark, sf_dir, "documents")
     return curate.curation_funnel(docs).orderBy("stage")
 
@@ -1762,7 +1728,7 @@ def x63_embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x64_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return text.dataset_card(docs, "text")
+    return text.dataset_card(docs)
 
 
 @register(
@@ -1818,9 +1784,7 @@ def x66_embedding_pooling(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         (F.col("vec_id") % 50).alias("vec_group"), "embedding"
     )
-    pooled = similarity.mean_pool_embeddings(
-        emb, "vec_group", "embedding"
-    )
+    pooled = similarity.mean_pool_embeddings(emb, "vec_group")
     return pooled.select(
         "vec_group",
         "n_vecs",
@@ -2288,7 +2252,7 @@ def x74_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x75_lsh_verified_pairs",
-    dedup.lsh_verified_pairs_oracle_sql("documents", "doc_id", 0.5),
+    dedup.lsh_verified_pairs_oracle_sql(0.5),
     doc="the complete LSH-then-verify pipeline in one entry: x40's "
         "deterministic banded candidates rescored with EXACT per-pair "
         "Jaccard via shingle-array intersection (two id equi-joins, no "
@@ -2298,7 +2262,7 @@ def x74_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x75_lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.lsh_verified_pairs(
-        docs, "doc_id", "text", k=3, threshold=0.5
+        docs, "doc_id", "text", threshold=0.5
     ).orderBy("id_a", "id_b")
 
 
@@ -2708,9 +2672,7 @@ def x83_dimension_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x84_ltv_deciles",
-    __import__(
-        "poc_parquet_publisher_spark.ops.profile", fromlist=["profile"]
-    ).decile_report_oracle_sql(
+    profile.decile_report_oracle_sql(
         "(SELECT o_custkey, ROUND(CAST(SUM(CAST(o_totalprice AS "
         "DECIMAL(30,8))) AS DOUBLE), 4) AS ltv FROM orders "
         "GROUP BY o_custkey) AS t",
@@ -2722,8 +2684,6 @@ def x83_dimension_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the aggregate runs once, thresholds broadcast",
 )
 def x84_ltv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ...ops import profile
-
     orders = load_table(spark, sf_dir, "orders")
     ltv = orders.groupBy("o_custkey").agg(
         F.round(
@@ -2751,8 +2711,6 @@ def x84_ltv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mapInPandas, applyInPandas, applyInPandasWithState, UDAF",
 )
 def x85_grouped_iqr_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ...ops import profile
-
     ev = load_table(spark, sf_dir, "events")
     iqr = profile.iqr_udaf()
     return (
@@ -3089,9 +3047,7 @@ def x93_stream_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x94_embedding_quantization",
-    similarity.quantize_embeddings_int8_oracle_sql(
-        "embeddings", "vec_id", "embedding"
-    ),
+    similarity.quantize_embeddings_int8_oracle_sql(),
     doc="per-vector symmetric int8 quantization (the 4x memory/IO "
         "shrink before storing/shipping an ANN index): floor-based "
         "code formula and floor-scaled integer scale make every step "
@@ -3104,14 +3060,12 @@ def x94_embedding_quantization(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.quantize_embeddings_int8(
-        emb, "vec_id", "embedding"
-    ).orderBy("vec_id")
+    return similarity.quantize_embeddings_int8(emb).orderBy("vec_id")
 
 
 @register(
     "x95_line_dedup",
-    text.line_dedup_stats_sql("documents", "doc_id", "text", 8, 3),
+    text.line_dedup_stats_sql(),
     doc="C4-style line deduplication stats: fixed 8-token lines "
         "occurring in >= 3 DISTINCT docs are boilerplate (the rule "
         "that strips headers/banners doc-level dedup never sees); "
@@ -3122,9 +3076,7 @@ def x94_embedding_quantization(
 )
 def x95_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return text.line_dedup_stats(
-        docs, "doc_id", "text", line_tokens=8, min_docs=3
-    ).orderBy("doc_id")
+    return text.line_dedup_stats(docs, "doc_id", "text").orderBy("doc_id")
 
 
 @register(
@@ -3182,7 +3134,7 @@ def x96_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x97_blocklist_filter",
-    text.blocklist_stats_sql("documents", "source", "text"),
+    text.blocklist_stats_sql(),
     doc="C4-style bad-words document gate, reported per source: docs "
         "containing >= 1 blocked term would be dropped; drop rate + "
         "total hits isolate which feed carries the junk. Inline term "
@@ -3197,7 +3149,7 @@ def x97_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x98_bpe_pair_counts",
-    text.bpe_pair_counts_sql("documents", "text", 50),
+    text.bpe_pair_counts_sql(),
     doc="BPE tokenizer training, iteration one: corpus-frequency-"
         "weighted adjacent character-pair counts (the argmax pair "
         "becomes the first merge rule). Token counts collapse the "
@@ -3213,7 +3165,7 @@ def x98_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x99_charset_audit",
-    text.charset_audit_sql("documents", "source", "text"),
+    text.charset_audit_sql(),
     doc="per-source encoding-health audit: non-ASCII / C0-control / "
         "U+FFFD-replacement character counts and whitespace ratio -- "
         "the mojibake detector that catches a broken decoder feed "
@@ -3229,7 +3181,7 @@ def x99_charset_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x100_zipf_fit",
-    text.zipf_fit_sql("documents", "text", 100),
+    text.zipf_fit_sql(),
     doc="Zipf log-log least-squares fit over the top-100 term "
         "frequency curve (natural corpora: slope ~= -1; templated or "
         "synthetic corpora flatten) -- the one-row corpus-health "
@@ -3245,9 +3197,7 @@ def x100_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x101_label_coherence",
-    similarity.label_centroid_coherence_sql(
-        "embeddings", "label", "embedding"
-    ),
+    similarity.label_centroid_coherence_sql(),
     doc="per-label embedding coherence audit: cosine of every vector "
         "to its label's mean centroid (mean + min per label) -- low "
         "mean = incoherent class, low min = outlier rows; the "
@@ -3259,14 +3209,12 @@ def x100_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x101_label_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.label_centroid_coherence(
-        emb, "label", "embedding"
-    ).orderBy("label")
+    return similarity.label_centroid_coherence(emb).orderBy("label")
 
 
 @register(
     "x102_source_overlap",
-    dedup.source_shingle_overlap_sql("documents", "source", "text", 3),
+    dedup.source_shingle_overlap_sql(),
     doc="source-level shingle-set Jaccard matrix (mirror/syndication "
         "feed detection BEFORE mixing weights are set -- the corpus "
         "complement of x70's per-doc cross-source pairs): distinct "
@@ -3277,7 +3225,7 @@ def x101_label_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x102_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.source_shingle_overlap(docs, "source", "text", 3).orderBy(
+    return dedup.source_shingle_overlap(docs, "source", "text").orderBy(
         "src_a", "src_b"
     )
 
@@ -3326,7 +3274,7 @@ def x103_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x104_pagerank",
-    graph.pagerank_copurchase_sql(iterations=3, damping=0.85, top_k=20),
+    graph.pagerank_copurchase_sql(),
     doc="fixed-depth PageRank (3 power iterations, d=0.85) over the "
         "symmetric co-purchase part graph -- the iterative-algorithm "
         "shape (GraphX/Pregel) as a declarative plan: per iteration ONE "
@@ -3349,9 +3297,7 @@ def x104_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         li = load_table(spark, sf_dir, "lineitem")
         edges = graph.symmetric_copurchase_edges(li)
-    pr = graph.pagerank(
-        edges, iterations=3, damping=0.85, materialize=False
-    )
+    pr = graph.pagerank(edges)
     return (
         pr.select(
             F.col("node").cast("long").alias("node"),
@@ -3367,7 +3313,7 @@ def x104_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""WITH z AS (
          SELECT l_orderkey, l_linenumber,
                 l_orderkey % 256 AS px, l_partkey % 256 AS sx,
-                {zorder_key_sql(['(l_orderkey % 256)', '(l_partkey % 256)'], 8)} AS zkey
+                {zorder_key_sql(['(l_orderkey % 256)', '(l_partkey % 256)'])} AS zkey
          FROM lineitem
        )
        SELECT CAST(zkey AS BIGINT) AS zkey,
@@ -3396,7 +3342,7 @@ def x105_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_orderkey") % 256).alias("px"),
         (F.col("l_partkey") % 256).alias("sx"),
     )
-    z = li.withColumn("zkey", scale.zorder_key(["px", "sx"], 8))
+    z = li.withColumn("zkey", scale.zorder_key(["px", "sx"]))
     return (
         z.groupBy("zkey")
         .agg(
@@ -3415,7 +3361,7 @@ def x105_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x106_bm25_topk",
-    text.bm25_topk_sql("documents", "doc_id", "text"),
+    text.bm25_topk_sql(),
     doc="Okapi BM25 top-20 for a fixed lexical query (k1=1.2, b=0.75) "
         "-- the retrieval baseline every RAG pipeline starts from and "
         "the hard-negative miner for embedding training. Postings "
@@ -3427,7 +3373,7 @@ def x105_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x106_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return text.bm25_topk(docs, "doc_id", "text", top_k=20)
+    return text.bm25_topk(docs, "doc_id", "text")
 
 
 @register(
@@ -3522,7 +3468,7 @@ def x108_key_skew_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x109_bpe_learn",
-    text.bpe_learn_merges_sql("documents", "text", 3),
+    text.bpe_learn_merges_sql(),
     doc="BPE tokenizer training, iterations 1-3 (x98 run to its "
         "logical conclusion): per round, argmax adjacent-symbol pair "
         "(lexicographic tiebreak) then every word REWRITTEN with the "
@@ -3536,7 +3482,7 @@ def x108_key_skew_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x109_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return text.bpe_learn_merges(docs, "text", iterations=3).orderBy("it")
+    return text.bpe_learn_merges(docs, "text").orderBy("it")
 
 
 @register(
@@ -3644,7 +3590,7 @@ def x110_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x111_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = similarity.mean_pool_embeddings(emb, "label", "embedding").select(
+    cent = similarity.mean_pool_embeddings(emb, "label").select(
         F.col("label").alias("lbl"), F.col("pooled").alias("c")
     )
 
@@ -5412,7 +5358,7 @@ def x137_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x138_jaccard_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    counts = _shared_pair_counts(spark, sf_dir, k=3)
+    counts = _shared_pair_counts(spark, sf_dir)
     jac = F.round(
         F.col("inter")
         / (F.col("n_a") + F.col("n_b") - F.col("inter")),
@@ -5753,7 +5699,7 @@ def x143_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # two copies = every event_id duplicated across files
         stream = _events_stream(spark, sf_dir, tmp, 2)
         counts = drain_to_memory(
-            dedup_stream(stream, ["event_id"], ts_col="ts")
+            dedup_stream(stream, ["event_id"])
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).cast("long").alias("n_events")),
             "complete",
@@ -6220,7 +6166,7 @@ def x149_interval_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x150_bfs_reach",
-    graph.bfs_copurchase_sql(3),
+    graph.bfs_copurchase_sql(),
     doc="3-hop breadth-first reachability from the minimum-id node of "
         "the co-purchase graph: per-level first-reached node counts -- "
         "the other canonical Pregel workload next to x104's PageRank "
@@ -6240,7 +6186,7 @@ def x150_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         li = load_table(spark, sf_dir, "lineitem")
         edges = graph.symmetric_copurchase_edges(li)
-    return graph.bfs_levels(edges, hops=3)
+    return graph.bfs_levels(edges)
 
 
 @register(

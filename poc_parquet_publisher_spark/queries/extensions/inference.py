@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ...catalog import load_table
+from ...ops import graph
 from ...scale import rebalanced
 from ...ops.text import _toks
 from .. import register
@@ -1302,11 +1303,9 @@ def x438_matryoshka_recall(
         sims = similarity.pairwise_sims(
             t,
             q,
-            id_col="vec_id",
             vec_col="v",
             stream_id_out="neighbor_id",
             broadcast_id_out="query_id",
-            round_to=6,
         ).filter(F.col("query_id") != F.col("neighbor_id"))
         parts.append(sims.withColumn("dim", F.lit(d)))
     allsims = parts[0]
@@ -1421,11 +1420,9 @@ def x439_twonn_intrinsic_dim(
     sims = similarity.pairwise_sims(
         emb,
         emb,
-        id_col="vec_id",
         vec_col="embedding",
         stream_id_out="other_id",
         broadcast_id_out="pid",
-        round_to=6,
     ).filter(F.col("pid") != F.col("other_id"))
     w = Window.partitionBy("pid").orderBy(F.desc("sim"))
     p = (
@@ -2836,22 +2833,7 @@ SELECT * FROM (
         "groupBy",
 )
 def x448_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    b = items.select(
-        F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb")
-    )
-    e = (
-        items.join(b, items["l_orderkey"] == b["k"])
-        .filter(F.col("l_partkey") < F.col("pb"))
-        .groupBy(
-            F.col("l_partkey").alias("u"), F.col("pb").alias("v")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("u", "v")
-        .localCheckpoint()
-    )
+    e = graph.support2_edges(load_table(spark, sf_dir, "lineitem"))
     rows = []
     for rnd in range(3):
         e2 = e.select(F.col("u").alias("b2"), F.col("v").alias("c2"))
@@ -3964,21 +3946,7 @@ FROM fit
         "the x210 edge construction + one degree groupBy",
 )
 def x455_powerlaw_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    b = items.select(
-        F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb")
-    )
-    e = (
-        items.join(b, items["l_orderkey"] == b["k"])
-        .filter(F.col("l_partkey") < F.col("pb"))
-        .groupBy(
-            F.col("l_partkey").alias("u"), F.col("pb").alias("v")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("u", "v")
-    )
+    e = graph.support2_edges(load_table(spark, sf_dir, "lineitem"))
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -4971,7 +4939,7 @@ def x463_hill_tail_index(
 def _x464_oracle() -> str:
     from ...ops.text import lang_id_oracle_sql
 
-    pred = lang_id_oracle_sql("documents", "doc_id")
+    pred = lang_id_oracle_sql()
     return f"""
 WITH pred AS ({pred}),
 j AS (
@@ -5334,7 +5302,7 @@ def x466_minhash_calibration(
     from ...ops.dedup import shingle_arrays
 
     docs = load_table(spark, sf_dir, "documents")
-    arrs = shingle_arrays(docs, "doc_id", "text", 3)
+    arrs = shingle_arrays(docs, "doc_id", "text")
 
     def _sliced_hash(salt: int, off: int):
         return lambda s: F.substring(
@@ -5980,22 +5948,7 @@ ORDER BY c.k
         "fan-out); clubs with < 2 nodes are dropped (phi undefined)",
 )
 def x471_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    b = items.select(
-        F.col("l_orderkey").alias("k2"), F.col("l_partkey").alias("pb")
-    )
-    e = (
-        items.join(b, items["l_orderkey"] == b["k2"])
-        .filter(F.col("l_partkey") < F.col("pb"))
-        .groupBy(
-            F.col("l_partkey").alias("u"), F.col("pb").alias("v")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=False)
-    )
+    e = graph.support2_edges(load_table(spark, sf_dir, "lineitem"))
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))

@@ -3712,7 +3712,7 @@ def x305_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _x302_oracle() -> str:
-    return graph.lpa_copurchase_sql(iterations=2, part_mod=4)
+    return graph.lpa_copurchase_sql()
 
 
 @register(
@@ -3736,7 +3736,7 @@ def x302_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey") % 4 == 0
     )
     edges = graph.symmetric_copurchase_edges(li)
-    labels = graph.label_propagation(edges, iterations=2)
+    labels = graph.label_propagation(edges)
     return (
         labels.groupBy(F.col("lab").alias("community"))
         .agg(
@@ -4160,7 +4160,7 @@ def x301_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _x313_oracle() -> str:
-    bm = text.bm25_topk_sql("documents", "doc_id", "text", top_k=20)
+    bm = text.bm25_topk_sql()
     return f"""
 WITH bm AS MATERIALIZED ({bm}),
 lexr AS (
@@ -4220,15 +4220,13 @@ def x313_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    lex = text.bm25_topk(docs, "doc_id", "text", top_k=20)
+    lex = text.bm25_topk(docs, "doc_id", "text")
     w = Window.orderBy(F.desc("bm25"), "doc_id")  # 20-row frame
     lexr = lex.select(
         "doc_id", F.row_number().over(w).cast("long").alias("r_lex")
     )
     q = emb.filter(F.col("vec_id") == 0)
-    semr = similarity.brute_force_topk(
-        emb, q, "vec_id", "embedding", k=20
-    ).select(
+    semr = similarity.brute_force_topk(emb, q, k=20).select(
         F.col("neighbor_id").alias("doc_id"), F.col("rank").alias("r_sem")
     )
     zero = F.lit(0).cast("decimal(12,8)")
@@ -4335,9 +4333,7 @@ ORDER BY query_id
 def x317_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
-    ranked = similarity.brute_force_topk(
-        emb, q, "vec_id", "embedding", k=10
-    )
+    ranked = similarity.brute_force_topk(emb, q, k=10)
     lab = emb.select("vec_id", "label")
     rel = (
         ranked.join(
@@ -4500,7 +4496,7 @@ FROM ({finals}) ORDER BY pick_order
 def x314_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0)
-    topk = similarity.brute_force_topk(emb, q, "vec_id", "embedding", k=20)
+    topk = similarity.brute_force_topk(emb, q, k=20)
     scale_s = lambda c: F.floor(c * 10000 + F.lit(0.5)).cast(  # noqa: E731
         "long"
     )
@@ -4511,7 +4507,7 @@ def x314_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.select(F.col("doc").alias("vec_id")), "vec_id"
     ).select("vec_id", "embedding")
     half = similarity.cosine_neardup_pairs(
-        cand_emb, "vec_id", "embedding", threshold=-1.0
+        cand_emb, threshold=-1.0
     ).select("id_a", "id_b", scale_s(F.col("sim")).alias("sim_s"))
     sym = half.union(
         half.select(
@@ -5509,9 +5505,7 @@ def _x324_oracle() -> str:
 )""",
         "edges AS (SELECT u, v FROM pr UNION ALL SELECT v, u FROM pr)",
     ]
-    return graph.pagerank_sql_over_edges(
-        edge_ctes, iterations=3, top_k=20, node_select="u AS token"
-    )
+    return graph.pagerank_sql_over_edges(edge_ctes, node_select="u AS token")
 
 
 @register(
@@ -5534,8 +5528,8 @@ def _x324_oracle() -> str:
 )
 def x324_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    edges = _word_cooccurrence_edges(docs)
-    pr = graph.pagerank(edges, iterations=3, damping=0.85)
+    edges = _word_cooccurrence_edges(docs).localCheckpoint(eager=False)
+    pr = graph.pagerank(edges)
     return (
         pr.select(
             F.col("node").alias("token"), F.round("rank", 8).alias("rank")
@@ -5997,7 +5991,7 @@ def x328_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _x329_oracle(iterations: int = 3) -> str:
+def _x329_oracle() -> str:
     ctes = [
         """ob AS MATERIALIZED (
   SELECT l.l_orderkey AS ok, p.p_brand AS b,
@@ -6025,7 +6019,7 @@ def _x329_oracle(iterations: int = 3) -> str:
 )""",
         "s0 AS MATERIALIZED (SELECT b, CAST(0.04 AS DOUBLE) AS s FROM wt)",
     ]
-    for t in range(1, iterations + 1):
+    for t in range(1, 3 + 1):
         ctes.append(
             f"""d{t} AS MATERIALIZED (
   SELECT sm.i AS b,
@@ -6052,9 +6046,9 @@ def _x329_oracle(iterations: int = 3) -> str:
     return (
         "WITH "
         + ",\n".join(ctes)
-        + f"""
+        + """
 SELECT w.b AS brand, w.n_matches, w.wins, ROUND(s.s, 8) AS strength
-FROM wt w JOIN s{iterations} s ON w.b = s.b
+FROM wt w JOIN s3 s ON w.b = s.b
 ORDER BY s.s DESC, w.b"""
     )
 

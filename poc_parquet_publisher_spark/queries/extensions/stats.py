@@ -3338,7 +3338,7 @@ def x406_embedding_separability(
     )
 
 
-def _x407_oracle(rounds: int = 8, top_words: int = 200) -> str:
+def _x407_oracle() -> str:
     """DuckDB SQL replaying the greedy vocab cover: universe = top-N
     corpus words, each round picks the doc adding the most uncovered
     words (ties -> min doc_id). Chained CTEs all MATERIALIZED."""
@@ -3350,17 +3350,17 @@ def _x407_oracle(rounds: int = 8, top_words: int = 200) -> str:
   FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks
         FROM documents WHERE len(string_split(lower(text), ' ')) >= 3)
 )""",
-        f"""uni AS MATERIALIZED (
+        """uni AS MATERIALIZED (
   SELECT w FROM (
     SELECT w, count(*) AS c FROM sh GROUP BY 1
-  ) ORDER BY c DESC, w LIMIT {top_words}
+  ) ORDER BY c DESC, w LIMIT 200
 )""",
         """pairs AS MATERIALIZED (
   SELECT DISTINCT t.doc_id, t.w FROM sh t JOIN uni u ON t.w = u.w
 )""",
     ]
     sel: list[str] = []
-    for i in range(1, rounds + 1):
+    for i in range(1, 8 + 1):
         prev_cov = (
             "SELECT w FROM pairs WHERE doc_id IN ("
             + ", ".join(f"(SELECT doc_id FROM {s})" for s in sel)
@@ -3382,7 +3382,7 @@ def _x407_oracle(rounds: int = 8, top_words: int = 200) -> str:
         sel.append(f"pick{i}")
     rounds_sql = " UNION ALL ".join(
         f"SELECT {i} AS round, doc_id, gain FROM pick{i}"
-        for i in range(1, rounds + 1)
+        for i in range(1, 8 + 1)
     )
     return (
         "WITH "
@@ -5354,9 +5354,7 @@ def _x420_oracle() -> str:
         "SELECT doc_id + 1000000, text FROM documents "
         "WHERE doc_id % 13 = 0)"
     )
-    band = dedup.minhash_banded_pairs_oracle_sql(
-        source=f"{corpus} s", id_col="doc_id"
-    )
+    band = dedup.minhash_banded_pairs_oracle_sql(source=f"{corpus} s")
     return f"""
 WITH bands AS MATERIALIZED ({band}),
 corpus AS MATERIALIZED (SELECT * FROM {corpus} c),
@@ -5443,7 +5441,7 @@ def x420_dedup_tier_containment(
         )
     ).localCheckpoint(eager=False)
     bands = dedup.minhash_banded_pairs(
-        corpus, "doc_id", "text", k=3, max_docs_per_band=None
+        corpus, "doc_id", "text", max_docs_per_band=None
     ).select("id_a", "id_b").localCheckpoint(eager=False)
     n_ex = ex.count()
     n_fp = fp.count()
@@ -5807,7 +5805,7 @@ def x422_hte_pre_segments(
     ).orderBy("segment")
 
 
-def _x423_oracle(hops: int = 3) -> str:
+def _x423_oracle() -> str:
     """Two chained BFS replays (full vs hub-ablated co-purchase
     subgraph), CTEs MATERIALIZED."""
     def bfs_chain(prefix: str, edges: str) -> tuple[list[str], str]:
@@ -5815,7 +5813,7 @@ def _x423_oracle(hops: int = 3) -> str:
             f"{prefix}f0 AS MATERIALIZED "
             f"(SELECT MIN(u) AS node FROM {edges})"
         ]
-        for h in range(1, hops + 1):
+        for h in range(1, 3 + 1):
             visited = " UNION ALL ".join(
                 f"SELECT node FROM {prefix}f{i}" for i in range(h)
             )
@@ -5829,7 +5827,7 @@ def _x423_oracle(hops: int = 3) -> str:
         counts = " UNION ALL ".join(
             f"SELECT {i} AS level, CAST(count(*) AS BIGINT) AS n "
             f"FROM {prefix}f{i}"
-            for i in range(hops + 1)
+            for i in range(3 + 1)
         )
         return ctes, counts
 
@@ -5905,11 +5903,11 @@ def x423_hub_removal_robustness(
     edges2 = edges.filter(
         ~F.col("u").isin(*hubs) & ~F.col("v").isin(*hubs)
     ).localCheckpoint(eager=False)
-    full = graph.bfs_levels(edges, hops=3).select(
+    full = graph.bfs_levels(edges).select(
         F.col("dist").alias("level"),
         F.col("n_nodes").alias("reached_full"),
     )
-    abl = graph.bfs_levels(edges2, hops=3).select(
+    abl = graph.bfs_levels(edges2).select(
         F.col("dist").alias("level"),
         F.col("n_nodes").alias("reached_ablated"),
     )

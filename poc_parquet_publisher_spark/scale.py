@@ -51,13 +51,15 @@ def pairs_within(arr: Column, make) -> Column:
     )
 
 
+SALT_SEED = 7
+
+
 def salted_join(
     big: DataFrame,
     small: DataFrame,
     on: str,
     n_salts: int = 16,
     how: str = "inner",
-    seed: int = 7,
     salt_col: str | None = None,
 ) -> DataFrame:
     """Equi-join with the big side's hot keys spread over ``n_salts`` tasks.
@@ -89,9 +91,11 @@ def salted_join(
                 "salt_col must not be the join key: hash(on) sends every "
                 "row of a hot key to the same salt, defeating the spread"
             )
-        salt_expr = F.pmod(F.hash(F.col(salt_col), F.lit(seed)), F.lit(n_salts))
+        salt_expr = F.pmod(
+            F.hash(F.col(salt_col), F.lit(SALT_SEED)), F.lit(n_salts)
+        )
     else:
-        salt_expr = (F.rand(seed) * n_salts).cast("int")
+        salt_expr = (F.rand(SALT_SEED) * n_salts).cast("int")
     salted_big = big.withColumn("__salt", salt_expr)
     salted_small = small.withColumn(
         "__salt",
@@ -102,14 +106,10 @@ def salted_join(
 
 
 def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort: bool = True,
-    mode: str = "overwrite",
+    df: DataFrame, table: str, bucket_col: str, n_buckets: int = 32
 ) -> None:
-    """Persist ``df`` bucketed (and sorted) by the join key.
+    """Persist ``df`` bucketed and sorted by the join key, replacing
+    any table of that name.
 
     Two tables written with the SAME (bucket_col domain, n_buckets) join
     with zero Exchange: each task merge-joins bucket i of both sides.
@@ -117,20 +117,19 @@ def write_bucketed(
     bare write.parquet -- parquet files alone carry no bucket metadata.
     """
     spark = df.sparkSession
-    if mode == "overwrite":
-        # A managed-table LOCATION can outlive the (in-memory) catalog
-        # entry across sessions; saveAsTable then fails with
-        # LOCATION_ALREADY_EXISTS even though the table is "new" to
-        # this catalog. Drop both the entry and any stale directory.
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        loc = f"{warehouse.rstrip('/')}/{table.lower()}"
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(loc)
-        fs = p.getFileSystem(hconf)
-        if fs.exists(p):
-            fs.delete(p, True)
+    # A managed-table LOCATION can outlive the (in-memory) catalog
+    # entry across sessions; saveAsTable then fails with
+    # LOCATION_ALREADY_EXISTS even though the table is "new" to this
+    # catalog. Drop both the entry and any stale directory.
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    loc = f"{warehouse.rstrip('/')}/{table.lower()}"
+    jvm = spark.sparkContext._jvm
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    p = jvm.org.apache.hadoop.fs.Path(loc)
+    fs = p.getFileSystem(hconf)
+    if fs.exists(p):
+        fs.delete(p, True)
     # One file per bucket: without the repartition, EVERY writer task
     # emits a file for every bucket it sees -- a 32-partition input
     # yields up to 32 x n_buckets tiny files, and every later scan of
@@ -140,25 +139,24 @@ def write_bucketed(
     # this adds is keyed identically to the bucket spec, so the write
     # itself is what a bucketed shuffle would do anyway (guide section 6
     # small-files; section 2.4 shared partitioning).
-    writer = df.repartition(n_buckets, bucket_col).write.bucketBy(
-        n_buckets, bucket_col
+    (
+        df.repartition(n_buckets, bucket_col)
+        .write.bucketBy(n_buckets, bucket_col)
+        .sortBy(bucket_col)
+        .mode("overwrite")
+        .format("parquet")
+        .saveAsTable(table)
     )
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.mode(mode).format("parquet").saveAsTable(table)
 
 
 def bucketed_join(
     spark: SparkSession, left_table: str, right_table: str, on: str,
-    how: str = "inner",
 ) -> DataFrame:
     """Join two same-bucketed catalog tables (shuffle-free by layout)."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
+    return spark.table(left_table).join(spark.table(right_table), on, "inner")
 
 
-def heavy_hitters(
-    df, col: str, n: int = 20
-):
+def heavy_hitters(df, col: str):
     """Exact top-n heaviest keys of a column with counts and frequency
     share -- the skew diagnostic that decides whether a join needs
     ``salted_join`` or AQE skew handling (a key holding >> 1/tasks of
@@ -183,7 +181,7 @@ def heavy_hitters(
             F.round(F.col("cnt") / F.col("__total"), 4).alias("share"),
         )
         .orderBy(F.col("cnt").desc(), F.col("key"))
-        .limit(n)
+        .limit(20)
     )
 
 
@@ -306,10 +304,7 @@ def prefix_sum(
 
 
 def global_row_number(
-    df: DataFrame,
-    order_col,
-    out_col: str = "rn",
-    num_partitions: int | None = None,
+    df: DataFrame, order_col, out_col: str = "rn"
 ) -> DataFrame:
     """Global 1-based ``ROW_NUMBER() OVER (ORDER BY ...)`` without a
     global sort: ``Window.orderBy`` ranking plans as ``Exchange
@@ -328,11 +323,7 @@ def global_row_number(
             "rename conflicting input columns first"
         )
     return prefix_sum(
-        df.withColumn(tmp, F.lit(1)),
-        order_col,
-        tmp,
-        out_col,
-        num_partitions,
+        df.withColumn(tmp, F.lit(1)), order_col, tmp, out_col
     ).drop(tmp)
 
 
@@ -343,9 +334,12 @@ def global_row_number(
 from .pipeline.layout import write_partitioned  # noqa: E402, F401
 
 
-def zorder_key(cols: list[str], bits: int = 8) -> F.Column:
+ZORDER_BITS = 8
+
+
+def zorder_key(cols: list[str]) -> F.Column:
     """Morton (Z-order) interleaved key over non-negative integer
-    columns, each truncated to ``bits`` bits -- the multi-dimensional
+    columns, each truncated to ``ZORDER_BITS`` bits -- the multi-dimensional
     clustering key behind Delta/Iceberg OPTIMIZE ZORDER BY.
 
     Sorting (repartitionByRange + sortWithinPartitions) on this key
@@ -354,11 +348,11 @@ def zorder_key(cols: list[str], bits: int = 8) -> F.Column:
     filter on any subset of the dimensions -- a single-column sort only
     prunes its leading column. Pure bitwise expression (shift/and/or),
     JVM-side, codegen; callers bucket raw values first (modulo or
-    quantile rank) so inputs fit ``bits``.
+    quantile rank) so inputs fit ``ZORDER_BITS``.
     """
     n = len(cols)
     key = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(ZORDER_BITS):
         for j, c in enumerate(cols):
             bit = F.shiftright(F.col(c).cast("long"), b).bitwiseAND(
                 F.lit(1)
@@ -369,12 +363,12 @@ def zorder_key(cols: list[str], bits: int = 8) -> F.Column:
     return key
 
 
-def zorder_key_sql(cols: list[str], bits: int = 8) -> str:
+def zorder_key_sql(cols: list[str]) -> str:
     """The same Morton key as a SQL expression (DuckDB / ANSI bitwise
     operators) for oracle mirroring."""
     n = len(cols)
     parts = []
-    for b in range(bits):
+    for b in range(ZORDER_BITS):
         for j, c in enumerate(cols):
             parts.append(
                 f"((({c} >> {b}) & 1) << {b * n + j})"

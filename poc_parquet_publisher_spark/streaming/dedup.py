@@ -19,7 +19,6 @@ from .windows import event_time
 def dedup_stream(
     df: DataFrame,
     key_cols: list[str],
-    ts_col: str = "ts",
     watermark: str = "1 hour",
 ) -> DataFrame:
     """Drop duplicate rows within the watermark horizon.
@@ -30,8 +29,8 @@ def dedup_stream(
     own at-least-once redelivery window.
     """
     return (
-        event_time(df, ts_col)
-        .withWatermark(ts_col, watermark)
+        event_time(df, "ts")
+        .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(key_cols)
     )
 
@@ -62,10 +61,6 @@ def stream_incremental_dedup(
     index_path: str,
     out_dir: str,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    compact_threshold_files: int | None = 64,
-    max_files_per_trigger: int | None = None,
 ):
     """Continuous ingest with UNBOUNDED dedup lookback: each micro-batch
     anti-joins the persistent hash index (ops/incremental.py) and
@@ -86,11 +81,9 @@ def stream_incremental_dedup(
     hashes and emit NOTHING -- silently losing the batch.
 
     Lifecycle: every micro-batch appends one index generation; when the
-    index data-file count exceeds ``compact_threshold_files`` the sink
-    runs ``compact_hash_index`` inline (probe-preserving rewrite), so a
+    index data-file count exceeds 64 the sink runs
+    ``compact_hash_index`` inline (probe-preserving rewrite), so a
     long-running stream keeps file count bounded without an operator.
-    ``None`` disables. ``max_files_per_trigger`` caps source files per
-    micro-batch (test/backfill pacing).
     """
     from ..ops.incremental import compact_hash_index, incremental_dedup
 
@@ -98,23 +91,17 @@ def stream_incremental_dedup(
         fresh = incremental_dedup(
             batch_df,
             index_path,
-            id_col=id_col,
-            text_col=text_col,
             update_index=False,
         ).localCheckpoint()  # pin: the plan reads the index we append to
         fresh.write.mode("append").parquet(out_dir)
         fresh.select(
-            F.md5(F.lower(F.col(text_col))).alias("h")
+            F.md5(F.lower(F.col("text"))).alias("h")
         ).write.mode("append").parquet(index_path)
-        _maybe_compact(
-            spark, index_path, compact_threshold_files, compact_hash_index
-        )
+        _maybe_compact(spark, index_path, 64, compact_hash_index)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return (
-        reader.parquet(source_dir)
+        spark.readStream.schema(schema)
+        .parquet(source_dir)
         .writeStream.foreachBatch(_sink)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -129,9 +116,6 @@ def stream_incremental_neardup(
     index_path: str,
     out_dir: str,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.7,
     compact_threshold_files: int | None = 64,
     max_files_per_trigger: int | None = None,
 ):
@@ -172,17 +156,12 @@ def stream_incremental_neardup(
         fresh = incremental_neardup_dedup(
             batch_df,
             index_path,
-            id_col=id_col,
-            text_col=text_col,
-            threshold=threshold,
             update_index=False,
         ).localCheckpoint()  # pin: the plan reads the index we append to
         fresh.write.mode("append").parquet(out_dir)
         # recomputed from the survivors: deterministic, so identical to
         # the signatures the in-batch probe used
-        neardup_signatures(fresh, id_col, text_col).write.mode(
-            "append"
-        ).parquet(index_path)
+        neardup_signatures(fresh).write.mode("append").parquet(index_path)
         _maybe_compact(
             spark,
             index_path,

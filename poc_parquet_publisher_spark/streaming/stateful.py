@@ -43,12 +43,7 @@ def _update_totals(
     )
 
 
-def running_event_totals(
-    stream: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def running_event_totals(stream: DataFrame) -> DataFrame:
     """Per-key running event totals, one output row per key per batch.
 
     Emits (event_type, batch_rows, running_total): the consumer-side
@@ -58,9 +53,9 @@ def running_event_totals(
     timeout tied to the watermark instead.
     """
     return (
-        event_time(stream, ts_col)
-        .withWatermark(ts_col, watermark)
-        .groupBy(key_col)
+        event_time(stream, "ts")
+        .withWatermark("ts", "1 hour")
+        .groupBy("event_type")
         .applyInPandasWithState(
             _update_totals,
             outputStructType=OUTPUT_SCHEMA,
@@ -143,13 +138,7 @@ def _session_update(gap_s: int):
     return update
 
 
-def sessionize_stateful(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = 30,
-    watermark: str = "0 seconds",
-) -> DataFrame:
+def sessionize_stateful(stream: DataFrame) -> DataFrame:
     """Hand-rolled session windows via ``applyInPandasWithState`` with
     an EVENT-TIME TIMEOUT -- the custom-stateful-operator pattern for
     semantics the built-ins lack (x48 uses the native session_window;
@@ -157,8 +146,8 @@ def sessionize_stateful(
     you'd use for custom session rules: per-key dynamic gaps, session
     caps, value-dependent closure).
 
-    Semantics match x21's lag method: a gap STRICTLY GREATER than
-    ``gap_minutes`` closes the session. Sessions close two ways: a
+    Semantics match x21's lag method: a gap STRICTLY GREATER than 30
+    minutes closes the session. Sessions close two ways: a
     later event for the same key arrives past the gap (in-stream
     closure, emitted immediately), or the watermark passes the open
     session's close point (timeout closure -- state is evicted, so
@@ -170,11 +159,11 @@ def sessionize_stateful(
     n_events), one row per CLOSED session.
     """
     return (
-        event_time(stream, ts_col)
-        .withWatermark(ts_col, watermark)
-        .groupBy(key_col)
+        event_time(stream, "ts")
+        .withWatermark("ts", "0 seconds")
+        .groupBy("user_id")
         .applyInPandasWithState(
-            _session_update(gap_minutes * 60),
+            _session_update(30 * 60),
             outputStructType=SESSION_OUTPUT_SCHEMA,
             stateStructType=SESSION_STATE_SCHEMA,
             outputMode="append",

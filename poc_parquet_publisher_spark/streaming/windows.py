@@ -90,12 +90,7 @@ def event_time(df: DataFrame, ts_col: str) -> DataFrame:
     return df
 
 
-def windowed_event_counts(
-    df: DataFrame,
-    ts_col: str = "ts",
-    window_duration: str = "1 hour",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def windowed_event_counts(df: DataFrame) -> DataFrame:
     """(window_start, event_type, n_events, sum_value) per tumbling window.
 
     Works identically on a batch or streaming DataFrame (withWatermark is
@@ -105,10 +100,10 @@ def windowed_event_counts(
     associative.
     """
     return (
-        event_time(df, ts_col)
-        .withWatermark(ts_col, watermark)
+        event_time(df, "ts")
+        .withWatermark("ts", "1 hour")
         .groupBy(
-            F.window(ts_col, window_duration).alias("w"),
+            F.window("ts", "1 hour").alias("w"),
             F.col("event_type"),
         )
         .agg(
@@ -126,40 +121,34 @@ def windowed_event_counts(
     )
 
 
-def session_event_counts(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def session_event_counts(df: DataFrame) -> DataFrame:
     """Per-key SESSION windows via Spark's native ``session_window``:
-    events merge while consecutive gaps stay UNDER ``gap``; the window
-    closes ``gap`` after its last event. The dynamic-window operator the
-    x21 lag/gap method emulates relationally -- here state merging is
-    native (and streaming-capable: with the watermark, closed sessions
-    are finalized and state is evicted, keeping memory flat on an
-    unbounded stream).
+    events merge while consecutive gaps stay UNDER 30 minutes; the
+    window closes 30 minutes after its last event. The dynamic-window
+    operator the x21 lag/gap method emulates relationally -- here state
+    merging is native (and streaming-capable: with the watermark, closed
+    sessions are finalized and state is evicted, keeping memory flat on
+    an unbounded stream).
 
     Output: (key, session_start, session_end, n_events) where
-    session_end = last event + gap (the operator's window end).
+    session_end = last event + 30 minutes (the operator's window end).
 
     Works identically on batch and streaming input (withWatermark is a
     batch no-op), so tests assert stream == batch on one code path.
     Session-window semantics note for the oracle: a gap EXACTLY equal to
-    ``gap`` starts a new session (window ends are exclusive), so the
+    the 30 minutes starts a new session (window ends are exclusive), so the
     relational mirror must split on ``>=``, not ``>``.
     """
     return (
-        event_time(df, ts_col)
-        .withWatermark(ts_col, watermark)
+        event_time(df, "ts")
+        .withWatermark("ts", "1 hour")
         .groupBy(
-            F.col(key_col),
-            F.session_window(F.col(ts_col), gap).alias("sw"),
+            F.col("user_id"),
+            F.session_window(F.col("ts"), "30 minutes").alias("sw"),
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            key_col,
+            "user_id",
             F.col("sw.start").alias("session_start"),
             F.col("sw.end").alias("session_end"),
             "n_events",
@@ -170,9 +159,6 @@ def session_event_counts(
 def enriched_segment_counts(
     events: DataFrame,
     customer: DataFrame,
-    ts_col: str = "ts",
-    window_duration: str = "1 hour",
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """STREAM-STATIC enrichment join + windowed rollup: events (stream
     or batch) LEFT-join a broadcast customer dimension on user_id, then
@@ -194,11 +180,11 @@ def enriched_segment_counts(
         F.col("c_mktsegment").alias("segment"),
     )
     return (
-        event_time(events, ts_col)
-        .withWatermark(ts_col, watermark)
+        event_time(events, "ts")
+        .withWatermark("ts", "1 hour")
         .join(F.broadcast(dim), "user_id", "left")
         .groupBy(
-            F.window(ts_col, window_duration).alias("w"),
+            F.window("ts", "1 hour").alias("w"),
             F.coalesce(F.col("segment"), F.lit("unknown")).alias(
                 "segment"
             ),
@@ -224,12 +210,10 @@ def enriched_segment_counts(
     )
 
 
-def view_click_attribution(
-    views: DataFrame,
-    clicks: DataFrame,
-    attribution_window: str = "24 hours",
-    watermark: str = "48 hours",
-) -> DataFrame:
+ATTRIBUTION_WATERMARK = "48 hours"
+
+
+def view_click_attribution(views: DataFrame, clicks: DataFrame) -> DataFrame:
     """STREAM-STREAM interval join: attribute each click to every view
     by the same user within the trailing attribution window -- the
     ad-attribution / funnel-stitching shape that needs state on BOTH
@@ -251,7 +235,7 @@ def view_click_attribution(
             F.col("user_id").alias("v_user"),
             F.col("ts").alias("v_ts"),
         )
-        .withWatermark("v_ts", watermark)
+        .withWatermark("v_ts", ATTRIBUTION_WATERMARK)
     )
     c = (
         event_time(clicks, "ts")
@@ -260,14 +244,14 @@ def view_click_attribution(
             F.col("user_id").alias("user_id"),
             F.col("ts").alias("c_ts"),
         )
-        .withWatermark("c_ts", watermark)
+        .withWatermark("c_ts", ATTRIBUTION_WATERMARK)
     )
     cond = (
         (F.col("user_id") == F.col("v_user"))
         & (F.col("v_ts") <= F.col("c_ts"))
         & (
             F.col("v_ts")
-            >= F.col("c_ts") - F.expr(f"INTERVAL {attribution_window}")
+            >= F.col("c_ts") - F.expr("INTERVAL 24 hours")
         )
     )
     return c.join(v, cond).select(

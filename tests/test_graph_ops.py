@@ -19,7 +19,7 @@ def test_bfs_levels_path_graph(spark):
     e = _edges(spark, [(1, 2), (2, 3), (3, 4), (4, 5)])
     out = {
         r["dist"]: r["n_nodes"]
-        for r in graph.bfs_levels(e, hops=3).collect()
+        for r in graph.bfs_levels(e).collect()
     }
     assert out == {0: 1, 1: 1, 2: 1, 3: 1}
 
@@ -31,7 +31,7 @@ def test_bfs_levels_star_plus_unreachable(spark):
     e = _edges(spark, [(1, 2), (1, 3), (1, 4), (10, 11)])
     out = {
         r["dist"]: r["n_nodes"]
-        for r in graph.bfs_levels(e, hops=3).collect()
+        for r in graph.bfs_levels(e).collect()
     }
     assert out == {0: 1, 1: 3, 2: 0, 3: 0}
 
@@ -41,7 +41,7 @@ def test_bfs_levels_no_revisit_on_cycle(spark):
     e = _edges(spark, [(1, 2), (2, 3), (1, 3)])
     out = {
         r["dist"]: r["n_nodes"]
-        for r in graph.bfs_levels(e, hops=3).collect()
+        for r in graph.bfs_levels(e).collect()
     }
     assert out == {0: 1, 1: 2, 2: 0, 3: 0}
 

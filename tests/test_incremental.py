@@ -62,11 +62,11 @@ def test_incremental_neardup_across_batches(spark, tmp_path):
     b1 = docs.filter(F.col("doc_id") % 5 < 3)
     b2 = docs.filter(F.col("doc_id") % 5 >= 3)
 
-    s1 = incremental_neardup_dedup(b1, idx, threshold=0.7)
+    s1 = incremental_neardup_dedup(b1, idx)
     ids1 = {r.doc_id for r in s1.select("doc_id").collect()}
     assert ids1 and len(ids1) < b1.count()  # something was near-dupped
 
-    s2 = incremental_neardup_dedup(b2, idx, threshold=0.7)
+    s2 = incremental_neardup_dedup(b2, idx)
     ids2 = {r.doc_id for r in s2.select("doc_id").collect()}
     assert ids2
 

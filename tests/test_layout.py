@@ -170,7 +170,7 @@ def test_zorder_layout_tightens_file_envelopes(spark, tmp_path):
             (F.col("l_orderkey") % 256).alias("px"),
             (F.col("l_partkey") % 256).alias("sx"),
         )
-        .withColumn("zkey", zorder_key(["px", "sx"], 8))
+        .withColumn("zkey", zorder_key(["px", "sx"]))
     )
     n_files = 16
 
@@ -223,7 +223,7 @@ def test_zorder_key_is_a_bijection(spark):
         (F.col("id") % 256).alias("x"),
         (F.col("id") / 256).cast("long").alias("y"),
     )
-    keys = dom.select(zorder_key(["x", "y"], 8).alias("z"))
+    keys = dom.select(zorder_key(["x", "y"]).alias("z"))
     row = keys.agg(
         F.count_distinct("z").alias("n"),
         F.min("z").alias("lo"),

@@ -23,7 +23,7 @@ def test_metadata_expressions(media):
 
 
 def test_decode_features_contract(media):
-    out = mm.decode_features(media, dim=8)
+    out = mm.decode_features(media)
     assert out.schema.simpleString() == (
         "struct<media_id:bigint,kind:string,byte_len:bigint,"
         "sha256:string,feature:array<float>>"
@@ -34,7 +34,7 @@ def test_decode_features_contract(media):
         assert len(r.feature) == 8
         assert all(0.0 <= x <= 1.0 for x in r.feature)
     # deterministic fake: same payload -> same feature on re-run
-    again = {r.media_id: r.feature for r in mm.decode_features(media, dim=8).collect()}
+    again = {r.media_id: r.feature for r in mm.decode_features(media).collect()}
     assert all(again[r.media_id] == r.feature for r in rows)
 
 
@@ -73,15 +73,6 @@ def test_frame_sha_matches_reference_kernel(media):
             (payloads[r.media_id] or b"") + r.frame_idx.to_bytes(4, "big")
         ).hexdigest()
         assert r.frame_sha == want
-
-
-def test_real_codec_slots_are_marked(media):
-    with pytest.raises(NotImplementedError):
-        mm.decode_features(media, real_codecs=True)
-    with pytest.raises(NotImplementedError):
-        mm.resize_images(media, real_codecs=True)
-    with pytest.raises(NotImplementedError):
-        mm.sample_frames(media, real_codecs=True)
 
 
 def test_metadata_query_prunes_payload(spark, media, tmp_path):

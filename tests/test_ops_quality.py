@@ -48,14 +48,13 @@ def test_minhash_recovers_exact_jaccard_pairs(docs):
     exact = {
         (r.id_a, r.id_b)
         for r in dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", k=3, threshold=0.5
+            docs, "doc_id", "text", threshold=0.5
         ).collect()
     }
     approx = {
         (r.id_a, r.id_b)
         for r in dedup.minhash_lsh_pairs(
             docs, "doc_id", "text",
-            num_hash_tables=8, jaccard_distance_threshold=0.5,
         ).collect()
     }
     assert exact, "fixture should contain planted near-dups"
@@ -69,7 +68,7 @@ def test_simhash_banding_is_complete(spark, docs):
     Ground truth is an exact all-pairs hamming over the collected 64-bit
     signatures (500 docs -> 125k pairs, trivial in numpy).
     """
-    sim = dedup.simhash(docs, "doc_id", "text")
+    sim = dedup.simhash(docs)
     rows = sim.collect()
     ids = np.array([r.doc_id for r in rows])
     bits = np.array(
@@ -85,7 +84,7 @@ def test_simhash_banding_is_complete(spark, docs):
     got = {
         (r.id_a, r.id_b, r.hamming)
         for r in dedup.simhash_hamming_pairs(
-            sim, max_hamming=3, max_docs_per_band=None
+            sim, max_docs_per_band=None
         ).collect()
     }
     assert got == truth
@@ -96,16 +95,11 @@ def test_lsh_topk_recall_vs_brute_force(emb):
     q = emb.filter(F.col("vec_id") < 20)
     bf = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.brute_force_topk(
-            emb, q, "vec_id", "embedding", k=3
-        ).collect()
+        for r in similarity.brute_force_topk(emb, q, k=3).collect()
     }
     lsh = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.lsh_topk(
-            emb, q, "vec_id", "embedding",
-            dim=64, k=3, n_planes=16, n_bands=4,
-        ).collect()
+        for r in similarity.lsh_topk(emb, q).collect()
     }
     assert len(bf) == 60  # 20 queries x k=3
     recall = len(bf & lsh) / len(bf)
@@ -119,16 +113,11 @@ def test_ivf_topk_recall_vs_brute_force(emb):
     q = emb.filter(F.col("vec_id") < 20)
     bf = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.brute_force_topk(
-            emb, q, "vec_id", "embedding", k=3
-        ).collect()
+        for r in similarity.brute_force_topk(emb, q, k=3).collect()
     }
     ivf = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.ivf_topk(
-            emb, q, "vec_id", "embedding",
-            k=3, n_centroids=16, n_probe=4,
-        ).collect()
+        for r in similarity.ivf_topk(emb, q).collect()
     }
     assert len(ivf) == 60  # probed clusters always yield k candidates here
     recall = len(bf & ivf) / len(bf)
@@ -146,9 +135,7 @@ def test_lsh_neardup_recall_and_exactness_vs_exact_scan(emb):
     the schedule's analytic 0.95-survival bound with margin."""
     exact = {
         (r.id_a, r.id_b): r.sim
-        for r in similarity.cosine_neardup_pairs(
-            emb, "vec_id", "embedding", threshold=0.4
-        ).collect()
+        for r in similarity.cosine_neardup_pairs(emb, threshold=0.4).collect()
     }
     n_planes, n_bands = similarity.lsh_params_for(
         emb.count(), threshold=0.4, target_recall=0.95
@@ -156,8 +143,7 @@ def test_lsh_neardup_recall_and_exactness_vs_exact_scan(emb):
     approx = {
         (r.id_a, r.id_b): r.sim
         for r in similarity.lsh_neardup_pairs(
-            emb, "vec_id", "embedding",
-            dim=64, threshold=0.4, n_planes=n_planes, n_bands=n_bands,
+            emb, n_planes=n_planes, n_bands=n_bands,
         ).collect()
     }
     assert exact, "fixture should contain near-dup pairs at 0.4"
@@ -178,15 +164,12 @@ def test_lsh_neardup_fixed_params_retired_form_still_subset(emb):
     hand; the scheduled form's candidate set is the scale-safe one."""
     exact = {
         (r.id_a, r.id_b): r.sim
-        for r in similarity.cosine_neardup_pairs(
-            emb, "vec_id", "embedding", threshold=0.4
-        ).collect()
+        for r in similarity.cosine_neardup_pairs(emb, threshold=0.4).collect()
     }
     fixed = {
         (r.id_a, r.id_b): r.sim
         for r in similarity.lsh_neardup_pairs(
-            emb, "vec_id", "embedding",
-            dim=64, threshold=0.4, n_planes=16, n_bands=8,
+            emb, n_planes=16, n_bands=8,
         ).collect()
     }
     for pair, sim in fixed.items():
@@ -210,15 +193,9 @@ def test_ann_scoring_never_collects_corpus(monkeypatch, emb):
         return ids, mat
 
     monkeypatch.setattr(similarity, "_normalized_matrix", spy)
-    similarity.lsh_topk(
-        emb, q, "vec_id", "embedding", dim=64, k=3, n_planes=16, n_bands=4
-    ).collect()
-    similarity.ivf_topk(
-        emb, q, "vec_id", "embedding", k=3, n_centroids=16, n_probe=4
-    ).collect()
-    similarity.lsh_neardup_pairs(
-        emb, "vec_id", "embedding", dim=64, threshold=0.4
-    ).collect()
+    similarity.lsh_topk(emb, q).collect()
+    similarity.ivf_topk(emb, q).collect()
+    similarity.lsh_neardup_pairs(emb).collect()
     assert seen, "spy should have observed the query-side materialization"
     assert max(seen) <= n_queries, (
         f"corpus-sized collect detected: {seen}"
@@ -267,21 +244,15 @@ def test_edge_cases_empty_and_null_inputs(spark, emb):
     assert dedup.exact_dedup(null_docs, "doc_id", "text").count() == 3
 
     empty_vecs = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    out = similarity.brute_force_topk(
-        emb, empty_vecs, "vec_id", "embedding", k=3
-    )
+    out = similarity.brute_force_topk(emb, empty_vecs, k=3)
     assert out.count() == 0
     assert out.columns == ["query_id", "neighbor_id", "rank", "sim"]
     assert (
-        similarity.cosine_neardup_pairs(
-            empty_vecs, "vec_id", "embedding", threshold=0.4
-        ).count()
+        similarity.cosine_neardup_pairs(empty_vecs, threshold=0.4).count()
         == 0
     )
     assert (
-        similarity.lsh_topk(
-            emb, empty_vecs, "vec_id", "embedding", dim=64, k=3
-        ).count()
+        similarity.lsh_topk(emb, empty_vecs).count()
         == 0
     )
 
@@ -351,9 +322,7 @@ def test_sampling_fraction_one_keeps_all_rows(spark, docs):
 def test_curate_pipeline_invariants(spark, docs):
     from poc_parquet_publisher_spark.ops import curate, dedup
 
-    out = curate.curate(
-        docs, "doc_id", "text", languages=("en", "es", "fr", "de")
-    ).cache()
+    out = curate.curate(docs, languages=("en", "es", "fr", "de")).cache()
     n_in, n_out = docs.count(), out.count()
     assert 0 < n_out <= n_in
     assert set(out.columns) == {"doc_id", "text", "pred_lang", "split"}
@@ -363,9 +332,7 @@ def test_curate_pipeline_invariants(spark, docs):
     )
     # no near-dup pair at the threshold survives
     assert (
-        dedup.ngram_jaccard_pairs(
-            out, "doc_id", "text", k=3, threshold=0.8
-        ).count()
+        dedup.ngram_jaccard_pairs(out, "doc_id", "text", threshold=0.8).count()
         == 0
     )
     # split column is only train/test and reruns identically
@@ -373,9 +340,7 @@ def test_curate_pipeline_invariants(spark, docs):
         "train",
         "test",
     }
-    again = curate.curate(
-        docs, "doc_id", "text", languages=("en", "es", "fr", "de")
-    )
+    again = curate.curate(docs, languages=("en", "es", "fr", "de"))
     assert {tuple(r) for r in again.collect()} == {
         tuple(r) for r in out.collect()
     }
@@ -388,16 +353,11 @@ def test_lsh_scored_sims_are_exact(emb):
     q = emb.filter(F.col("vec_id") < 20)
     bf = {
         (r.query_id, r.neighbor_id): r.sim
-        for r in similarity.brute_force_topk(
-            emb, q, "vec_id", "embedding", k=3
-        ).collect()
+        for r in similarity.brute_force_topk(emb, q, k=3).collect()
     }
     lsh = {
         (r.query_id, r.neighbor_id): r.sim
-        for r in similarity.lsh_topk(
-            emb, q, "vec_id", "embedding",
-            dim=64, k=3, n_planes=16, n_bands=4,
-        ).collect()
+        for r in similarity.lsh_topk(emb, q).collect()
     }
     for pair, sim in lsh.items():
         if pair in bf:
@@ -419,7 +379,7 @@ def test_duplicate_clusters_transitive_closure(spark):
 
 def test_duplicate_clusters_fixture_invariants(docs):
     pairs = dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", k=3, threshold=0.5
+        docs, "doc_id", "text", threshold=0.5
     ).cache()
     labels = dedup.duplicate_clusters(pairs)
     rep = {r.node: r.rep for r in labels.collect()}
@@ -489,9 +449,7 @@ def test_semantic_dedup_precision_and_coverage(emb):
     any same-cluster pair at >= threshold drops the higher id; (d) the
     assignment is stable under repartitioning."""
     thr = 0.4
-    res = similarity.semantic_dedup(
-        emb, "vec_id", "embedding", threshold=thr, n_centroids=4
-    )
+    res = similarity.semantic_dedup(emb, threshold=thr, n_centroids=4)
     rows = res.collect()
     n = emb.count()
     assert len(rows) == n and len({r.id for r in rows}) == n
@@ -522,8 +480,7 @@ def test_semantic_dedup_precision_and_coverage(emb):
             assert b in dropped, f"co-clustered dup ({a},{b}) kept {b}"
 
     again = similarity.semantic_dedup(
-        emb.repartition(7), "vec_id", "embedding",
-        threshold=thr, n_centroids=4,
+        emb.repartition(7), threshold=thr, n_centroids=4,
     ).collect()
     assert {(r.id, r.centroid, r.keep) for r in again} == {
         (r.id, r.centroid, r.keep) for r in rows
@@ -554,14 +511,12 @@ def test_minhash_deterministic_candidates_cover_high_jaccard(docs):
     strong = {
         (r.id_a, r.id_b)
         for r in dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", k=3, threshold=0.7
+            docs, "doc_id", "text", threshold=0.7
         ).collect()
     }
     cand = {
         (r.id_a, r.id_b)
-        for r in dedup.minhash_banded_pairs(
-            docs, "doc_id", "text", k=3
-        ).collect()
+        for r in dedup.minhash_banded_pairs(docs, "doc_id", "text").collect()
     }
     assert strong, "fixture should contain strong near-dups"
     recall = len(strong & cand) / len(strong)
@@ -569,7 +524,7 @@ def test_minhash_deterministic_candidates_cover_high_jaccard(docs):
     again = {
         (r.id_a, r.id_b)
         for r in dedup.minhash_banded_pairs(
-            docs.repartition(5), "doc_id", "text", k=3
+            docs.repartition(5), "doc_id", "text"
         ).collect()
     }
     assert cand == again
@@ -578,9 +533,7 @@ def test_minhash_deterministic_candidates_cover_high_jaccard(docs):
 def test_duplicate_clusters_distributed_matches_unionfind(docs):
     """The small-graph union-find fast path and the distributed
     min-label rounds must produce identical (node, rep) sets."""
-    pairs = dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", k=3, threshold=0.5
-    )
+    pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5)
     fast = {
         (r.node, r.rep) for r in dedup.duplicate_clusters(pairs).collect()
     }
@@ -603,7 +556,7 @@ def test_round3_ops_edge_cases(spark, docs, emb):
 
     # contamination vs an EMPTY benchmark: all scores 0, all docs present
     scores = dedup.contamination_scores(
-        docs, empty_docs, "doc_id", "text", k=3
+        docs, empty_docs, "doc_id", "text"
     ).collect()
     n_eligible = docs.filter(
         F.size(F.split(F.lower("text"), " ")) >= 3
@@ -613,7 +566,7 @@ def test_round3_ops_edge_cases(spark, docs, emb):
 
     # chunking: a doc shorter than one chunk yields exactly one chunk
     one = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    chunks = packing.chunk_documents(one, "doc_id", "text", 64, 48).collect()
+    chunks = packing.chunk_documents(one, "doc_id", "text").collect()
     assert len(chunks) == 1 and chunks[0].n_chunk_toks == 3
 
     # weighted sample with n > corpus: everything kept once
@@ -1124,13 +1077,13 @@ def test_lsh_verified_pairs_recall_vs_exact(docs):
     exact = {
         (r.id_a, r.id_b)
         for r in dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", k=3, threshold=0.5
+            docs, "doc_id", "text", threshold=0.5
         ).collect()
     }
     verified = {
         (r.id_a, r.id_b)
         for r in dedup.lsh_verified_pairs(
-            docs, "doc_id", "text", k=3, threshold=0.5
+            docs, "doc_id", "text", threshold=0.5
         ).collect()
     }
     assert verified <= exact
@@ -1294,7 +1247,7 @@ def test_int8_quantization_error_bound(emb):
     [-127, 127]."""
     from poc_parquet_publisher_spark.ops import similarity
 
-    q = similarity.quantize_embeddings_int8(emb, "vec_id", "embedding")
+    q = similarity.quantize_embeddings_int8(emb)
     orig = {
         r.vec_id: [float(x) for x in r.embedding]
         for r in emb.select("vec_id", "embedding").collect()
@@ -1326,7 +1279,7 @@ def test_round4_ops_edge_cases(spark):
         [(1, [0.5, -1.0, 0.25]), (2, [0.0, 0.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
-    q = similarity.quantize_embeddings_int8(emb, "vec_id", "embedding")
+    q = similarity.quantize_embeddings_int8(emb)
     rows = {r.vec_id: r for r in q.collect()}
     assert set(rows) == {1}
     assert rows[1].codes == "64,-127,32"  # 0.5/(1/127)=63.5 -> 64
@@ -1346,9 +1299,7 @@ def test_round4_ops_edge_cases(spark):
     )
     out = {
         r.doc_id: r
-        for r in text.line_dedup_stats(
-            docs, "doc_id", "text", line_tokens=8, min_docs=3
-        ).collect()
+        for r in text.line_dedup_stats(docs, "doc_id", "text").collect()
     }
     assert {d: (r.n_lines, r.n_dropped) for d, r in out.items()} == {
         1: (2, 1), 2: (2, 1), 3: (2, 1), 4: (1, 0), 5: (1, 1),
@@ -1447,7 +1398,7 @@ def test_pagerank_small_graph_hand_check(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (3, 2)], ["u", "v"]
     )
-    r = {row["node"]: row["rank"] for row in G.pagerank(edges, 3).collect()}
+    r = {row["node"]: row["rank"] for row in G.pagerank(edges).collect()}
     assert r[2] > r[1] and r[1] == r[3]
     assert abs(sum(r.values()) - 1.0) < 1e-9
 
@@ -1461,7 +1412,7 @@ def test_pagerank_mass_conserved_on_fixture(spark):
 
     li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
     edges = G.symmetric_copurchase_edges(li)
-    rows = G.pagerank(edges, 3).collect()
+    rows = G.pagerank(edges).collect()
     total = sum(r["rank"] for r in rows)
     assert abs(total - 1.0) < 1e-6
     floor = 0.15 / len(rows)
@@ -1477,7 +1428,7 @@ def test_bpe_learn_rewrites_between_iterations(spark):
     from poc_parquet_publisher_spark.ops import text as T
 
     df = spark.createDataFrame([("aaab aaab aaab",)], ["text"])
-    rows = {r["it"]: r for r in T.bpe_learn_merges(df, "text", 3).collect()}
+    rows = {r["it"]: r for r in T.bpe_learn_merges(df, "text").collect()}
     assert rows[1]["pair"] == "<a> <a>" and rows[1]["n"] == 6
     assert rows[2]["pair"] == "<a> <b>" and rows[2]["n"] == 3
     assert rows[3]["pair"] == "<aa> <ab>" and rows[3]["n"] == 3
@@ -2178,7 +2129,7 @@ def test_prefix_filter_complete_vs_brute_force(spark):
     docs = load_table(spark, SF, "documents")
     sets = {
         r["doc"]: frozenset(r["sh"])
-        for r in dedup.shingle_arrays(docs, "doc_id", "text", k=3).collect()
+        for r in dedup.shingle_arrays(docs, "doc_id", "text").collect()
     }
     want = {}
     for a, b in itertools.combinations(sorted(sets), 2):
@@ -3902,7 +3853,7 @@ def test_dedup_tier_containment_law(spark):
     bands = {
         (r["id_a"], r["id_b"])
         for r in dd.minhash_banded_pairs(
-            corpus_df, "doc_id", "text", k=3, max_docs_per_band=None,
+            corpus_df, "doc_id", "text", max_docs_per_band=None,
         ).collect()
     }
     r = x420_dedup_tier_containment(spark, SF).collect()[0]
@@ -7798,7 +7749,7 @@ def test_rrf_fusion_matches_bruteforce(spark):
     )
 
     docs = load_table(spark, SF, "documents")
-    b = text_ops.bm25_topk(docs, "doc_id", "text", top_k=20).collect()
+    b = text_ops.bm25_topk(docs, "doc_id", "text").collect()
     r1 = {
         row["doc_id"]: i + 1
         for i, row in enumerate(

@@ -101,13 +101,8 @@ def test_ann_scoring_plans_are_join_based(spark):
     emb = load_table(spark, SF, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
     for df in (
-        similarity.lsh_topk(
-            emb, q, "vec_id", "embedding", dim=64, k=3,
-            n_planes=16, n_bands=4,
-        ),
-        similarity.lsh_neardup_pairs(
-            emb, "vec_id", "embedding", dim=64, threshold=0.4
-        ),
+        similarity.lsh_topk(emb, q),
+        similarity.lsh_neardup_pairs(emb),
     ):
         plan = plan_of(df)
         assert "CartesianProduct" not in plan
@@ -139,9 +134,7 @@ def test_contamination_broadcasts_benchmark(spark):
 
     docs = load_table(spark, SF, "documents")
     bench = docs.filter(F.col("doc_id") % 25 == 0)
-    plan = plan_of(
-        dedup.contamination_scores(docs, bench, "doc_id", "text", k=3)
-    )
+    plan = plan_of(dedup.contamination_scores(docs, bench, "doc_id", "text"))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -180,9 +173,7 @@ def test_semantic_dedup_no_cartesian(spark):
 
     emb = load_table(spark, SF, "embeddings")
     plan = plan_of(
-        similarity.semantic_dedup(
-            emb, "vec_id", "embedding", threshold=0.4, n_centroids=4
-        )
+        similarity.semantic_dedup(emb, threshold=0.4, n_centroids=4)
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

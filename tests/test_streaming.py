@@ -81,7 +81,7 @@ def test_stream_dedup_drops_cross_batch_duplicates(spark, events_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    deduped = dedup_stream(stream, ["event_id"], ts_col="ts", watermark="2 hours")
+    deduped = dedup_stream(stream, ["event_id"], watermark="2 hours")
     out = drain_to_memory(deduped, "append", ckpt)
     assert out.count() == n
     assert out.select("event_id").distinct().count() == n
